@@ -104,19 +104,13 @@ object CosineSimilarity {
     * peel removed. */
   def compute(x: ArrayData, y: ArrayData, xFloat: Boolean, yFloat: Boolean): Double = {
     val n = x.numElements()
-    if (n != y.numElements()) {
-      throw new SparkException(
-        s"cosine_sim: vectors must be of equal length (got $n vs ${y.numElements()})")
-    }
+    if (n != y.numElements()) throw lengthMismatch(n, y.numElements())
     var dot = 0.0
     var nx = 0.0
     var ny = 0.0
     var i = 0
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) {
-        throw new SparkException(
-          s"cosine_sim: vectors must not contain NULL elements (at index $i)")
-      }
+      if (x.isNullAt(i) || y.isNullAt(i)) throw nullElement(i)
       val a = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
       val b = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
       dot += a * b
@@ -124,7 +118,20 @@ object CosineSimilarity {
       ny += b * b
       i += 1
     }
+    fromParts(dot, nx, ny)
+  }
+
+  /** Cosine from a dot product and the two squared norms, each accumulated
+    * in index order as [[compute]] does; either vector zero-norm → 0.0.
+    * Callers that score one vector against many accumulate a norm once and
+    * reuse it — the result is bit-identical to [[compute]]. */
+  def fromParts(dot: Double, nx: Double, ny: Double): Double =
     if (nx == 0.0 || ny == 0.0) 0.0
     else dot / (math.sqrt(nx) * math.sqrt(ny))
-  }
+
+  def lengthMismatch(n: Int, m: Int): SparkException =
+    new SparkException(s"cosine_sim: vectors must be of equal length (got $n vs $m)")
+
+  def nullElement(i: Int): SparkException =
+    new SparkException(s"cosine_sim: vectors must not contain NULL elements (at index $i)")
 }

@@ -132,8 +132,8 @@ object Ann {
     * reporting `hits = |ANN ∩ exact|` and `recall = hits / k` per query.
     *
     * Scale shape: the exact arm is the batch similarity join (broadcast
-    * query set, partial WindowGroupLimit before the exchange); the ANN arm
-    * is an EQUI-join of exploded corpus band keys against the broadcast
+    * query set, per-partition k-best selection before the exchange); the
+    * ANN arm is an EQUI-join of exploded corpus band keys against the broadcast
     * query keys — no cartesian product anywhere, so the audit runs at
     * corpus scale for any query sample that fits a broadcast. At 100 TB
     * this runs over a hash-sampled query set
@@ -183,7 +183,7 @@ object Ann {
     while (i < x.length) {
       dot += x(i) * y(i); nx += x(i) * x(i); ny += y(i) * y(i); i += 1
     }
-    if (nx == 0.0 || ny == 0.0) 0.0 else dot / (math.sqrt(nx) * math.sqrt(ny))
+    graft.functions.CosineSimilarity.fromParts(dot, nx, ny)
   }
 
   /** IVF-style approximate top-k: assign every vector to its most-similar

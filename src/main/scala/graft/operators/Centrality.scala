@@ -93,9 +93,9 @@ object Centrality {
     * vector is a near neighbor of many others = prototypical region.
     *
     * The edge build here is the exact all-pairs scoring with the query
-    * side broadcast — the [[Similarity.similarityJoin]] shape, right for
-    * a corpus whose QUERY side fits an executor. At 100 TB build the edge
-    * table from the stored ANN index instead ([[Ann.annTopkIndexed]] /
+    * side broadcast, right for a corpus whose QUERY side fits an
+    * executor. At 100 TB build the edge table from the stored ANN index
+    * instead ([[Ann.annTopkIndexed]] /
     * [[Ann.ivfTopkTrained]] per shard) and feed it to [[pageRank]]
     * directly — the centrality core is edge-source-agnostic. */
   /** Directed kNN edge table from IVF-probed candidates — the 100 TB edge

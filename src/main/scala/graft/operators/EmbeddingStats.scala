@@ -316,25 +316,19 @@ object EmbeddingStats {
     * a truncated layout (and after embedder upgrades, which can silently
     * reorder component importance).
     *
-    * Same two-arm shape as [[graft.operators.Ann.annRecall]]: one scored
-    * corpus pass per arm against the broadcast query set, per-query
-    * top-k windows bounded by WindowGroupLimit, and an anchors-sized
-    * rank-set join. The truncated arm scores `slice(embedding)` inside
-    * codegen — no rewrite of the stored table is needed to evaluate. */
+    * Both arms are [[Similarity.similarityJoin]] against the same query
+    * set: one scoring pass each over the corpus, bounded candidates, and an
+    * anchors-sized rank-set join. The truncated arm scores `slice`d vectors
+    * on both sides — no rewrite of the stored table is needed to evaluate. */
   def dimRecall(embeddings: DataFrame, nQueries: Int = 8, k: Int = 10,
                 dims: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val queries = embeddings.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-    val scored = embeddings.crossJoin(broadcast(queries))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("score"), asc("vec_id"))
-    def topIds(scoreCol: org.apache.spark.sql.Column) = scored
-      .select(col("query_id"), col("vec_id"), scoreCol.as("score"))
-      .withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"))
-    val full = topIds(round(cosine_sim(col("embedding"), col("query_vec")), 6))
-    val trunc = topIds(round(cosine_sim(
-      slice(col("embedding"), 1, dims), slice(col("query_vec"), 1, dims)), 6))
+    def topIds(corpus: DataFrame, qs: DataFrame) =
+      Similarity.similarityJoin(corpus, qs, k).select(col("query_id"), col("vec_id"))
+    val full = topIds(embeddings, queries)
+    val trunc = topIds(embeddings.withColumn("embedding", slice(col("embedding"), 1, dims)),
+      queries.withColumn("query_vec", slice(col("query_vec"), 1, dims)))
     val hits = full.join(trunc, Seq("query_id", "vec_id"))
       .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
     queries.select(col("query_id"))

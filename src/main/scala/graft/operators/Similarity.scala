@@ -1,10 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.core.Tables
+import graft.functions.CosineSimilarity
 import graft.functions.VectorFunctions._
 
 /** Exact similarity search — the reference's flagship operator family
@@ -17,10 +23,11 @@ import graft.functions.VectorFunctions._
   *    data, embarrassingly parallel across executors;
   *  - the query vector travels as a literal inside the codegen'd expression
   *    (constant-folded), not as a joined row;
-  *  - batch similarity join broadcasts the (small) query side and computes a
-  *    per-query top-k window partitioned by query id — the shuffle is over
-  *    k·Q candidate rows, not the full cross product, when combined with the
-  *    per-partition `row_number` pre-filter Catalyst applies after AQE.
+  *  - batch similarity join broadcasts the (small) query side and scores
+  *    the corpus in one `mapPartitions` pass with a k-slot selection per
+  *    query — no (corpus, query) pair is ever a row, the corpus never
+  *    shuffles, and the only shuffle carries ≤ Q·k candidates per partition
+  *    to the per-query `row_number` window.
   *
   * Determinism: reference tie behavior is nondeterministic
   * (`collection/collection.go:105-146`); we pin `score DESC, id ASC` and rank
@@ -86,15 +93,15 @@ object Similarity {
       .select(col("vec_id"), col("label"), round(l2_norm(col("embedding")), 6).as("norm"))
 
   /** X2 — batch similarity join: Q query vectors × N records, per-query exact
-    * top-k. The query side (small) is broadcast — explicitly, because the
-    * correctness of this plan depends on Q ≪ N (the broadcast side must fit
-    * in executor memory; with the 64-dim doubles here that's ~1 KB/query, so
-    * even 10^6 queries broadcast in ~1 GB). Scoring happens map-side with no
-    * shuffle of the big side, and Spark 4 inserts a partial WindowGroupLimit
-    * BEFORE the exchange, so the shuffle carries ≤ k rows per partition per
-    * query, not the cross product. At 100 TB the remaining exposure is
-    * O(N·Q·d) compute; [[graft.operators.Ann.annTopk]] is the LSH-bucketed
-    * pre-filter for that regime. */
+    * top-k. The query side (small) is collected and broadcast, because the
+    * plan depends on Q ≪ N (the packed block must fit in driver and executor
+    * memory; with the 64-dim doubles here that's ~0.5 KB/query, so even
+    * 10^6 queries pack into ~0.5 GB). Scoring happens map-side in one pass
+    * over the corpus with no shuffle of the big side, and each partition
+    * keeps only its k best rows per query, so the shuffle carries ≤ k rows
+    * per partition per query, not the cross product. At 100 TB the
+    * remaining exposure is O(N·Q·d) compute; [[graft.operators.Ann.annTopk]]
+    * is the LSH-bucketed pre-filter for that regime. */
   def batchSimilarityJoin(spark: SparkSession, dir: String,
                           numQueries: Int = 8, k: Int = 5): DataFrame = {
     val e = Tables.embeddings(spark, dir)
@@ -107,16 +114,205 @@ object Similarity {
     * (`query_id`, `query_vec`) against `corpus` (`vec_id`, `label`,
     * `embedding`). Also the per-micro-batch body of the stream-static
     * enrichment ([[graft.streaming.Streaming.streamSimilarity]]) — one
-    * code path owns the scoring semantics. */
+    * code path owns the scoring semantics.
+    *
+    * Shape: the query side is collected once on the driver and broadcast
+    * packed ([[QueryBlock]]); the corpus is scored in ONE `mapPartitions`
+    * pass that keeps a k-slot selection per query, so each partition emits
+    * at most Q·k candidates and no (corpus, query) pair is ever a row. The
+    * `row_number` window below ranks those candidates — the same ranking
+    * contract the selection pre-applies, so the result is the exact top-k
+    * of the full cross product, scores bit-identical to
+    * `round(cosine_sim(embedding, query_vec), 6)`. */
   def similarityJoin(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val scored = corpus.crossJoin(broadcast(queries))
-      .select(col("query_id"), col("vec_id"), col("label"),
-              score(col("embedding"), col("query_vec")).as("score"))
+    val c = corpus.select(col("vec_id"), col("label"), col("embedding"))
+    val q = queries.select(col("query_id"), col("query_vec"))
+    val block = c.sparkSession.sparkContext.broadcast(QueryBlock(q.collect()))
+    val idType = c.schema("vec_id").dataType
+    val candidateSchema = StructType(Seq(q.schema("query_id"), c.schema("vec_id"),
+      c.schema("label"), StructField("score", DoubleType)))
+    val candidates = c.mapPartitions(rows => block.value.topK(rows, k, idType))(
+      Encoders.row(candidateSchema))
     val w = Window.partitionBy(col("query_id")).orderBy(desc("score"), asc("vec_id"))
-    scored
+    candidates
       .withColumn("rnk", row_number().over(w).cast("bigint")) // bigint: matches DuckDB row_number
       .where(col("rnk") <= k)
       .select(col("query_id"), col("rnk"), col("vec_id"), col("label"), col("score"))
       .orderBy(asc("query_id"), asc("rnk"))
   }
+}
+
+/** The query side of [[Similarity.similarityJoin]], broadcast once: Q query
+  * vectors packed row-major in one `double[Q·d]` with each query's squared
+  * norm. Elements are read with `Number.doubleValue`, which for FLOAT and
+  * DOUBLE vectors is exactly `cosine_sim`'s widening cast. `lens(j)` is -1
+  * for a NULL query vector; `firstNull(j)` is the index of its first NULL
+  * element (its length if none). A query set whose vectors disagree in
+  * length is not packed (`dim` -1): every non-NULL corpus row then fails
+  * the pair check, as `cosine_sim` would. */
+private[operators] final class QueryBlock(
+    ids: Array[Any], dim: Int, vecs: Array[Double], sqNorms: Array[Double],
+    lens: Array[Int], firstNull: Array[Int]) extends Serializable {
+
+  import QueryBlock._
+
+  /** Every non-NULL query has length `dim` and no NULL element — a corpus
+    * row of length `dim` with no NULL element then needs no pair check. */
+  private val clean = lens.indices.forall(j => lens(j) < 0 || firstNull(j) == dim)
+
+  /** One partition's candidates: each query's best k corpus rows in the
+    * window's order — rounded score descending, NULL scores last, then
+    * `vec_id` ascending with NULLs first. */
+  def topK(rows: Iterator[Row], k: Int, idType: DataType): Iterator[Row] = {
+    val nq = ids.length
+    if (k <= 0 || nq == 0) return Iterator.empty
+    val keyOf = CatalystTypeConverters.createToCatalystConverter(idType)
+    val rank = ranking(TypeUtils.getInterpretedOrdering(idType))
+    // head = the current k-th; `bar(j)` = its score less 1e-6 once full:
+    // rounding to 6 places moves a score by at most 5e-7 and is monotone,
+    // so a raw score below the bar cannot reach the k-th and is skipped
+    // unrounded. NaN (not full, or a NULL / NaN k-th) forces the full check.
+    val slots = Array.fill(nq)(new java.util.PriorityQueue[Candidate](
+      math.min(k, 1024) + 1, rank.reverse))
+    val bar = Array.fill(nq)(Double.NaN)
+    val dots = new Array[Double](nq)
+    var x = new Array[Double](math.max(dim, 0))
+
+    def offer(j: Int, c: Candidate): Unit = {
+      val s = slots(j)
+      if (s.size < k) s.add(c)
+      else if (rank.lt(c, s.peek)) { s.poll(); s.add(c) }
+      if (s.size == k) bar(j) = if (s.peek.isNull) Double.NaN else s.peek.score - 1e-6
+    }
+
+    rows.foreach { r =>
+      val vecId = r.get(0)
+      def candidate(score: Double, isNull: Boolean) =
+        new Candidate(score, isNull, keyOf(vecId), vecId, r.get(1))
+      def offerNull(j: Int): Unit = {
+        val s = slots(j)
+        if (s.size < k || s.peek.isNull) offer(j, candidate(0.0, isNull = true))
+      }
+      if (r.isNullAt(2)) {
+        var j = 0
+        while (j < nq) { offerNull(j); j += 1 }
+      } else {
+        val seq = r.getSeq[Any](2)
+        val n = seq.length
+        if (x.length != n) x = new Array[Double](n)
+        var fx = n
+        var nx = 0.0
+        var i = 0
+        val it = seq.iterator
+        while (i < n) {
+          val e = it.next()
+          if (e == null) { if (fx == n) fx = i; x(i) = 0.0 }
+          else { val a = e.asInstanceOf[Number].doubleValue(); x(i) = a; nx += a * a }
+          i += 1
+        }
+        if (!(clean && n == dim && fx == n)) checkPairs(n, fx)
+        if (n == dim) dotAll(x, dots)
+        var j = 0
+        while (j < nq) {
+          if (lens(j) < 0) offerNull(j)
+          else {
+            val raw = CosineSimilarity.fromParts(dots(j), nx, sqNorms(j))
+            if (!(raw < bar(j))) offer(j, candidate(round6(raw), isNull = false))
+          }
+          j += 1
+        }
+      }
+    }
+    slots.iterator.zipWithIndex.flatMap { case (s, j) =>
+      s.iterator.asScala.map(c => Row(ids(j), c.vecId, c.label,
+        if (c.isNull) null else c.score))
+    }
+  }
+
+  /** `cosine_sim`'s checks for one corpus row against each non-NULL query
+    * in order: the length check first, then the first NULL element of
+    * either vector. */
+  private def checkPairs(n: Int, fx: Int): Unit = {
+    var j = 0
+    while (j < lens.length) {
+      if (lens(j) >= 0) {
+        if (lens(j) != n) throw CosineSimilarity.lengthMismatch(n, lens(j))
+        val f = math.min(fx, firstNull(j))
+        if (f < n) throw CosineSimilarity.nullElement(f)
+      }
+      j += 1
+    }
+  }
+
+  /** `dots(j) = x · query j` for every query, accumulated in index order as
+    * `cosine_sim` does. */
+  private def dotAll(x: Array[Double], dots: Array[Double]): Unit = {
+    var j = 0
+    while (j < dots.length) {
+      val o = j * dim
+      var acc = 0.0
+      var i = 0
+      while (i < dim) { acc += x(i) * vecs(o + i); i += 1 }
+      dots(j) = acc
+      j += 1
+    }
+  }
+}
+
+private[operators] object QueryBlock {
+
+  /** Pack collected (`query_id`, `query_vec`) rows. */
+  def apply(rows: Array[Row]): QueryBlock = {
+    val nq = rows.length
+    val ids = rows.map(_.get(0))
+    val vs: Array[scala.collection.Seq[Any]] =
+      rows.map(r => if (r.isNullAt(1)) null else r.getSeq[Any](1))
+    val lens = vs.map(v => if (v == null) -1 else v.length)
+    val firstNull = vs.map { v =>
+      if (v == null) -1 else { val f = v.indexOf(null); if (f < 0) v.length else f }
+    }
+    val present = lens.filter(_ >= 0).distinct
+    val dim = if (present.length == 1) present.head else if (present.isEmpty) 0 else -1
+    val vecs = new Array[Double](nq * math.max(dim, 0))
+    val sqNorms = new Array[Double](nq)
+    if (dim >= 0) for (j <- 0 until nq if vs(j) != null) {
+      var ny = 0.0
+      var i = 0
+      vs(j).foreach { e =>
+        val b = if (e == null) 0.0 else e.asInstanceOf[Number].doubleValue()
+        vecs(j * dim + i) = b
+        ny += b * b
+        i += 1
+      }
+      sqNorms(j) = ny
+    }
+    new QueryBlock(ids, dim, vecs, sqNorms, lens, firstNull)
+  }
+
+  /** One retained corpus row of a query's selection. `key` is `vec_id` in
+    * Catalyst form, compared with Spark's own ordering for its type. */
+  final class Candidate(val score: Double, val isNull: Boolean, val key: Any,
+                        val vecId: Any, val label: Any)
+
+  /** The window's order: `score DESC` (NULLs last; NaN above every number
+    * and 0.0 = -0.0, as Spark compares doubles), then `vec_id ASC` (NULLs
+    * first). */
+  def ranking(idOrder: Ordering[Any]): Ordering[Candidate] = new Ordering[Candidate] {
+    def compare(a: Candidate, b: Candidate): Int =
+      if (a.isNull != b.isNull) { if (a.isNull) 1 else -1 }
+      else {
+        val s = if (a.isNull || a.score == b.score) 0
+          else java.lang.Double.compare(b.score, a.score)
+        if (s != 0) s
+        else if (a.key == null) { if (b.key == null) 0 else -1 }
+        else if (b.key == null) 1
+        else idOrder.compare(a.key, b.key)
+      }
+  }
+
+  /** Spark's `round(_, 6)` on a double: HALF_UP over `Double.toString`'s
+    * decimal; NaN and infinities pass through. */
+  def round6(d: Double): Double =
+    if (d.isNaN || d.isInfinite) d
+    else java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 }

@@ -187,8 +187,10 @@ object Streaming {
     * embedding corpus, emitting each query's exact top-k. The scoring is
     * the SAME operator as the batch path
     * ([[graft.operators.Similarity.similarityJoin]]): the micro-batch is
-    * the broadcast side, the corpus never shuffles, and the per-query
-    * rank limit bounds the output at k rows per query. */
+    * collected and broadcast as the query block, the corpus is scored in
+    * one pass and never shuffles, each corpus partition keeps only k
+    * candidates per query, and the rank limit bounds the output at k rows
+    * per query. */
   def streamSimilarity(queryStream: DataFrame, corpus: DataFrame, k: Int,
                        checkpointDir: String)(sink: DataFrame => Unit): StreamingQuery =
     queryStream.writeStream

@@ -97,15 +97,25 @@ class PlanShapeSpec extends SparkSpec {
 
   test("sim_join_topk: broadcast query side + rank limit before the exchange") {
     val p = plan(Similarity.batchSimilarityJoin(spark, dir, 8, 5))
-    assert(p.contains("BroadcastNestedLoopJoin"), p)
-    assert(p.contains("WindowGroupLimit"), s"rank-limit pushdown missing:\n$p")
-    // partial WindowGroupLimit must appear below the shuffle: first
-    // occurrence in the bottom-up string is after the Exchange line
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+      s"pair-producing join:\n$p")
+    // top-down string: the lines after the scoring pass are its input side
     val lines = p.linesIterator.toSeq
-    val firstWgl = lines.lastIndexWhere(_.contains("WindowGroupLimit"))
-    val exchange = lines.indexWhere(_.contains("Exchange"))
-    assert(exchange >= 0 && firstWgl > exchange,
-      s"no partial WindowGroupLimit below the exchange:\n$p")
+    val pass = lines.indexWhere(_.contains("MapPartitions"))
+    assert(pass >= 0, s"no scoring pass:\n$p")
+    val below = lines.drop(pass + 1)
+    assert(below.exists(_.contains("Scan parquet")), s"scoring pass not fed by the scan:\n$p")
+    assert(!below.exists(l => l.contains("Exchange") || l.contains("Sort")),
+      s"corpus shuffled or sorted before scoring:\n$p")
+    // above it: ONE hash exchange, on query_id, carrying the ≤ Q·k per-partition
+    // candidates; the only other exchange is the final ORDER BY's range
+    // partitioning of the ≤ Q·k result rows
+    val exchanges = lines.take(pass).filter(_.contains("Exchange"))
+    val hashed = exchanges.filter(_.contains("hashpartitioning"))
+    assert(hashed.size == 1 && hashed.head.contains("hashpartitioning(query_id#"),
+      s"candidates not shuffled once by query_id:\n$p")
+    assert(exchanges.diff(hashed).forall(_.contains("rangepartitioning(query_id#")),
+      s"unexpected exchange above the scoring pass:\n$p")
   }
 
   test("token_topk: bounded-heap k-selection, not a global vocabulary sort") {
@@ -171,8 +181,9 @@ class PlanShapeSpec extends SparkSpec {
   test("ann_recall: the ANN arm is a band-key EQUI-join — never a cartesian") {
     val p = plan(Ann.annRecall(spark, dir, nQueries = 4, k = 5))
     assert(!p.contains("CartesianProduct"), s"cartesian in recall audit:\n$p")
-    // broadcast sides: exact arm's query set (BNLJ by design) and the ANN
-    // arm's exploded key list (hash join) — the corpus is never built
+    // the exact arm scores the corpus against its broadcast query set in
+    // one pass; the ANN arm hash-joins the broadcast exploded key list —
+    // the corpus is never built
     assert(p.contains("BroadcastHashJoin"), s"ANN arm lost the key equi-join:\n$p")
     assert(p.contains("WindowGroupLimit"), s"rank-limit pushdown missing:\n$p")
   }
