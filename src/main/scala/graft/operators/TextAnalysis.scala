@@ -847,11 +847,13 @@ object TextAnalysis {
           .otherwise(lit(alpha * m * m) / col("z")).as("e"))
   }
 
-  /** Zipf-safe LEFT join of a key-hot probe stream against a count table:
-    * the bounded head (top-`headSize` rows by count) broadcasts so hot
-    * keys resolve map-side; only head-miss rows (tail + unseen, per-key
-    * multiplicity capped by the rank-`headSize` count) reach the shuffled
-    * tail join. Exactness is independent of where the cut falls. Null
+  /** LEFT join of a key-hot probe stream against a count table: the
+    * bounded head (top-`headSize` rows by count) broadcasts so hot keys
+    * resolve map-side. In the union form (`linear = false`) only head-miss
+    * rows (tail + unseen, per-key multiplicity capped by the
+    * rank-`headSize` count) reach the shuffled tail join, so that form is
+    * Zipf-safe; the linear form trades that away (below). Exactness is
+    * independent of where the cut falls in either form. Null
     * probe keys never match (standard left-join semantics) and keep their
     * row with a null count.
     *
@@ -867,7 +869,12 @@ object TextAnalysis {
     *    keys on the columns AND `head-missed` (a head-hit row satisfies no
     *    tail condition, keeps a null tail count, and the coalesce picks its
     *    broadcast-resolved head count). Hit rows do cross the tail exchange
-    *    as already-resolved passengers, but the subtree is evaluated ONCE:
+    *    as already-resolved passengers, and the exchange hashes on the
+    *    join keys, so every occurrence of one hot key lands in ONE
+    *    partition: this form is NOT Zipf-safe — it brings back the key
+    *    skew the head/tail split exists to avoid, and its measured win at
+    *    sf0.1 may not hold at corpus scale. What it buys is that the
+    *    subtree is evaluated ONCE:
     *    under the union form each chained level DOUBLES the upstream, so
     *    the bigram LM's three levels re-ran the tokenize/explode base
     *    2³ = 8 times (214 Exchanges in the lm_score_bigram plan, 67 cpu-s

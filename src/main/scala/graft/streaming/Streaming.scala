@@ -2,14 +2,14 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 
-import graft.core.GraftDatabase
-import graft.operators.{Ingest, Sampling}
+import graft.core.{GraftDatabase, IndexPolicy}
+import graft.operators.{CatalogOps, Dedup, Ingest, Multimodal, Sampling}
 
 /** Structured Streaming surface — beyond-reference (SURVEY.md §7.5: the
   * reference is fully synchronous; streaming is engine-native surface a
@@ -193,13 +193,23 @@ object Streaming {
     * per query. */
   def streamSimilarity(queryStream: DataFrame, corpus: DataFrame, k: Int,
                        checkpointDir: String)(sink: DataFrame => Unit): StreamingQuery =
-    queryStream.writeStream
+    eachBatch(queryStream, checkpointDir) { (batch, _) =>
+      sink(graft.operators.Similarity.similarityJoin(corpus, batch, k))
+    }
+
+  /** The micro-batch sink contract every `foreachBatch` stream here runs
+    * under: checkpointed at `checkpointDir`, triggered `AvailableNow`
+    * (drain what is available, then stop), and an EMPTY micro-batch is
+    * skipped before `body` runs — no sink call, state write or listing
+    * happens for it. `body` gets the batch and its id; per-batch state
+    * goes through the batch-state store ([[appendBatchState]]). */
+  private def eachBatch(stream: DataFrame, checkpointDir: String)
+                       (body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          sink(graft.operators.Similarity.similarityJoin(corpus, batch, k))
-        }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) body(batch, batchId)
       }
       .start()
 
@@ -235,42 +245,35 @@ object Streaming {
     * needed, is the periodic batch [[graft.operators.Dedup.exact]] pass. */
   def streamIngestDeduped(db: GraftDatabase, collectionId: String, chunks: DataFrame,
                           embedderId: String, checkpointDir: String): StreamingQuery =
-    chunks.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // persisted for the batch: `existing` (the collection scan — the
-          // side that grows without bound) is consumed by three subplans
-          // (id anti-join, fingerprint index, addRecords' own dup check)
-          // and `uniq` by two; uncached, each consumer re-scans parquet.
-          // At warehouse scale the persisted existing IS the maintained
-          // dedup index the exactIncremental scaladoc describes.
-          val existing = db.records(collectionId)
-            .select(col("id"), decode(col("blob"), "UTF-8").as("chunk")).persist()
-          // idempotence needs BOTH axes deduped, or a replay poisons the
-          // checkpoint (addRecords throws, every restart replays the same
-          // batch): ids — collapse in-batch repeats deterministically
-          // (min chunk) and left-anti away ids already stored, even under
-          // changed text; texts — the incremental dedup admits only
-          // corpus-fresh, batch-first content
-          val uniq = batch.groupBy(col("id")).agg(min(col("chunk")).as("chunk"))
-            .join(existing.select(col("id")), Seq("id"), "left_anti").persist()
-          val records = Ingest.makeRecords(batch.sparkSession,
-            uniq.join(
-              graft.operators.Dedup.exactIncremental(uniq, existing,
-                  idCol = "id", textCol = "chunk")
-                .where(col("keep")).select(col("id")),
-              Seq("id"), "left_semi"),
-            embedderId).persist() // embed ONCE, not once per addRecords stage
-          try {
-            if (!records.isEmpty) db.addRecords(collectionId, records)
-          } finally {
-            records.unpersist(); uniq.unpersist(); existing.unpersist()
-          }
-        }
+    eachBatch(chunks, checkpointDir) { (batch, _) =>
+      // persisted for the batch: `existing` (the collection scan — the
+      // side that grows without bound) is consumed by three subplans
+      // (id anti-join, fingerprint index, addRecords' own dup check)
+      // and `uniq` by two; uncached, each consumer re-scans parquet.
+      // At warehouse scale the persisted existing IS the maintained
+      // dedup index the exactIncremental scaladoc describes.
+      val existing = db.records(collectionId)
+        .select(col("id"), decode(col("blob"), "UTF-8").as("chunk")).persist()
+      // idempotence needs BOTH axes deduped, or a replay poisons the
+      // checkpoint (addRecords throws, every restart replays the same
+      // batch): ids — collapse in-batch repeats deterministically
+      // (min chunk) and left-anti away ids already stored, even under
+      // changed text; texts — the incremental dedup admits only
+      // corpus-fresh, batch-first content
+      val uniq = batch.groupBy(col("id")).agg(min(col("chunk")).as("chunk"))
+        .join(existing.select(col("id")), Seq("id"), "left_anti").persist()
+      val records = Ingest.makeRecords(batch.sparkSession,
+        uniq.join(
+          Dedup.exactIncremental(uniq, existing, idCol = "id", textCol = "chunk")
+            .where(col("keep")).select(col("id")),
+          Seq("id"), "left_semi"),
+        embedderId).persist() // embed ONCE, not once per addRecords stage
+      try {
+        if (!records.isEmpty) db.addRecords(collectionId, records)
+      } finally {
+        records.unpersist(); uniq.unpersist(); existing.unpersist()
       }
-      .start()
+    }
 
   /** Continuous NEAR-dedup admission gate: per micro-batch, (1) mine
     * near-dup pairs WITHIN the batch and keep one representative per
@@ -302,41 +305,50 @@ object Streaming {
                            refBucketMax: Int = 100, // whole corpus — the oracle's 50-bucket split is a test device
                            n: Int = 8, seeds: Int = 12, bands: Int = 4,
                            jaccardThreshold: Double = 0.5,
-                           policy: graft.core.IndexPolicy = graft.core.IndexPolicy.FailIfMissing)
+                           policy: IndexPolicy = IndexPolicy.FailIfMissing)
                           (sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val D = graft.operators.Dedup
-          val pairs = D.ngramNear(batch, n = n, seeds = seeds, bands = bands,
-            jaccardThreshold = jaccardThreshold)
-          val batchKept = batch.join(
-            D.resolveKeepers(batch, pairs).where(col("keep")).select(col("doc_id")),
-            Seq("doc_id"), "left_semi")
-          val admitted = batchKept.join(
-            D.ngramNearIncrementalIndexed(spark, dir, batchKept,
-                refBucketMax = refBucketMax, n = n, seeds = seeds, bands = bands,
-                jaccardThreshold = jaccardThreshold, policy = policy)
-              .where(col("keep")).select(col("doc_id")),
-            Seq("doc_id"), "left_semi")
-          sink(admitted)
-          // Under RebuildIfStale a long-running gate replaces the index
-          // whenever the corpus fingerprint moves, and rebuilds never
-          // delete (buildIndex retains superseded versions for in-flight
-          // readers) — so without GC here the gate accumulates one full
-          // index copy per rebuild, unbounded. After the sink has consumed
-          // the batch (this batch only ever read the CURRENT version — a
-          // rebuild this batch means the probe resolved the new one), the
-          // gate vacuums ITS OWN index name only: other indexes on the
-          // database keep their quiet-window vacuum contract.
-          if (policy == graft.core.IndexPolicy.RebuildIfStale)
-            graft.operators.CatalogOps.indexRegistry(spark, dir)
-              .vacuumIndex(graft.operators.Dedup.ngramBandIndexName(refBucketMax, n))
-        }
-      }
-      .start()
+    indexedTextGate(spark, dir, docs, checkpointDir, policy,
+        Dedup.ngramBandIndexName(refBucketMax, n))(
+      batch => Dedup.ngramNear(batch, n = n, seeds = seeds, bands = bands,
+        jaccardThreshold = jaccardThreshold),
+      kept => Dedup.ngramNearIncrementalIndexed(spark, dir, kept,
+        refBucketMax = refBucketMax, n = n, seeds = seeds, bands = bands,
+        jaccardThreshold = jaccardThreshold, policy = policy))(sink)
+
+  /** The shared per-batch body of the index-backed text gates
+    * ([[streamNearDedupAdmit]], [[streamSigDedupAdmit]],
+    * [[streamVerbatimDedupAdmit]]): `inBatchPairs` mines the batch and
+    * `resolveKeepers` keeps one representative per family; `indexedAdmit`
+    * judges those keepers against the stored index (its `keep` column);
+    * the admitted documents go to `sink`; then [[vacuumIfRebuilt]]. */
+  private def indexedTextGate(spark: SparkSession, dir: String, docs: DataFrame,
+                              checkpointDir: String, policy: IndexPolicy,
+                              indexName: String)
+                             (inBatchPairs: DataFrame => DataFrame,
+                              indexedAdmit: DataFrame => DataFrame)
+                             (sink: DataFrame => Unit): StreamingQuery =
+    eachBatch(docs, checkpointDir) { (batch, _) =>
+      def keep(rows: DataFrame, verdicts: DataFrame): DataFrame =
+        rows.join(verdicts.where(col("keep")).select(col("doc_id")),
+          Seq("doc_id"), "left_semi")
+      val batchKept = keep(batch, Dedup.resolveKeepers(batch, inBatchPairs(batch)))
+      sink(keep(batchKept, indexedAdmit(batchKept)))
+      vacuumIfRebuilt(spark, dir, policy, indexName)
+    }
+
+  /** Under RebuildIfStale a long-running gate replaces its index whenever
+    * the corpus fingerprint moves, and rebuilds never delete (buildIndex
+    * retains superseded versions for in-flight readers) — so without GC
+    * the gate accumulates one full index copy per rebuild, unbounded.
+    * Called after the sink has consumed the batch (this batch only ever
+    * read the CURRENT version — a rebuild this batch means the probe
+    * resolved the new one); the gate vacuums ITS OWN index name only:
+    * other indexes on the database keep their quiet-window vacuum
+    * contract. */
+  private def vacuumIfRebuilt(spark: SparkSession, dir: String,
+                              policy: IndexPolicy, indexName: String): Unit =
+    if (policy == IndexPolicy.RebuildIfStale)
+      CatalogOps.indexRegistry(spark, dir).vacuumIndex(indexName)
 
   /** [[streamNearDedupAdmit]]'s SIGNATURE-ONLY twin: the same two-stage
     * admission (in-batch near-dedup, then admission against the stored
@@ -352,33 +364,16 @@ object Streaming {
                           refBucketMax: Int = 100,
                           shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6,
                           estThreshold: Double = 0.5,
-                          policy: graft.core.IndexPolicy = graft.core.IndexPolicy.FailIfMissing)
+                          policy: IndexPolicy = IndexPolicy.FailIfMissing)
                          (sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val D = graft.operators.Dedup
-          val pairs = D.minhashNearApprox(batch, shingleSize = shingleSize,
-            seeds = seeds, bands = bands, estThreshold = estThreshold)
-          val batchKept = batch.join(
-            D.resolveKeepers(batch, pairs).where(col("keep")).select(col("doc_id")),
-            Seq("doc_id"), "left_semi")
-          val admitted = batchKept.join(
-            D.minhashNearIncrementalApproxIndexed(spark, dir, batchKept,
-                refBucketMax = refBucketMax, shingleSize = shingleSize,
-                seeds = seeds, bands = bands, estThreshold = estThreshold,
-                policy = policy)
-              .where(col("keep")).select(col("doc_id")),
-            Seq("doc_id"), "left_semi")
-          sink(admitted)
-          if (policy == graft.core.IndexPolicy.RebuildIfStale)
-            graft.operators.CatalogOps.indexRegistry(spark, dir)
-              .vacuumIndex(graft.operators.Dedup.wordSigIndexName(refBucketMax, shingleSize))
-        }
-      }
-      .start()
+    indexedTextGate(spark, dir, docs, checkpointDir, policy,
+        Dedup.wordSigIndexName(refBucketMax, shingleSize))(
+      batch => Dedup.minhashNearApprox(batch, shingleSize = shingleSize,
+        seeds = seeds, bands = bands, estThreshold = estThreshold),
+      kept => Dedup.minhashNearIncrementalApproxIndexed(spark, dir, kept,
+        refBucketMax = refBucketMax, shingleSize = shingleSize,
+        seeds = seeds, bands = bands, estThreshold = estThreshold,
+        policy = policy))(sink)
 
   /** [[streamNearDedupAdmit]]'s RUN-LENGTH twin — the verbatim admission
     * gate: per micro-batch, (1) in-batch verbatim dedup (documents sharing
@@ -398,32 +393,15 @@ object Streaming {
                                checkpointDir: String,
                                refBucketMax: Int = 100,
                                shingleSize: Int = 5, minRunTokens: Int = 20,
-                               policy: graft.core.IndexPolicy = graft.core.IndexPolicy.FailIfMissing)
+                               policy: IndexPolicy = IndexPolicy.FailIfMissing)
                               (sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val D = graft.operators.Dedup
-          val pairs = D.verbatimOverlap(batch, shingleSize = shingleSize,
-            minRunTokens = minRunTokens)
-          val batchKept = batch.join(
-            D.resolveKeepers(batch, pairs).where(col("keep")).select(col("doc_id")),
-            Seq("doc_id"), "left_semi")
-          val admitted = batchKept.join(
-            D.verbatimIncrementalIndexed(spark, dir, batchKept,
-                refBucketMax = refBucketMax, shingleSize = shingleSize,
-                minRunTokens = minRunTokens, policy = policy)
-              .where(col("keep")).select(col("doc_id")),
-            Seq("doc_id"), "left_semi")
-          sink(admitted)
-          if (policy == graft.core.IndexPolicy.RebuildIfStale)
-            graft.operators.CatalogOps.indexRegistry(spark, dir)
-              .vacuumIndex(graft.operators.Dedup.verbatimPosIndexName(refBucketMax, shingleSize))
-        }
-      }
-      .start()
+    indexedTextGate(spark, dir, docs, checkpointDir, policy,
+        Dedup.verbatimPosIndexName(refBucketMax, shingleSize))(
+      batch => Dedup.verbatimOverlap(batch, shingleSize = shingleSize,
+        minRunTokens = minRunTokens),
+      kept => Dedup.verbatimIncrementalIndexed(spark, dir, kept,
+        refBucketMax = refBucketMax, shingleSize = shingleSize,
+        minRunTokens = minRunTokens, policy = policy))(sink)
 
   /** Continuous DECONTAMINATION gate — the [[streamVerbatimDedupAdmit]]
     * shape pointed at the EVAL suite: per micro-batch every incoming doc
@@ -456,32 +434,24 @@ object Streaming {
                           // benchmark's repeated prompt format refuses every
                           // doc that shares the FORMAT, not the content
                           maxEvalDf: Int = 0,
-                          policy: graft.core.IndexPolicy = graft.core.IndexPolicy.FailIfMissing)
+                          policy: IndexPolicy = IndexPolicy.FailIfMissing)
                          (sink: DataFrame => Unit,
                           rejects: DataFrame => Unit = _ => ()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val audit = graft.operators.Dedup.decontamAuditAgainstIndex(
-              spark, dir, batch, shingleSize, minRunTokens, evalFromPct,
-              policy, maxEvalDf)
-            // both routes consume the audit (the streamQualityAdmit
-            // discipline); the runs re-mine otherwise
-            .persist()
-          try {
-            sink(batch.join(
-              audit.where(!col("contaminated")).select(col("doc_id")),
-              Seq("doc_id"), "left_semi"))
-            rejects(audit.where(col("contaminated")))
-          } finally audit.unpersist(false)
-          if (policy == graft.core.IndexPolicy.RebuildIfStale)
-            graft.operators.CatalogOps.indexRegistry(spark, dir)
-              .vacuumIndex(graft.operators.Dedup.evalPosIndexName(evalFromPct, shingleSize))
-        }
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, _) =>
+      val audit = Dedup.decontamAuditAgainstIndex(
+          spark, dir, batch, shingleSize, minRunTokens, evalFromPct,
+          policy, maxEvalDf)
+        // both routes consume the audit (the streamQualityAdmit
+        // discipline); the runs re-mine otherwise
+        .persist()
+      try {
+        sink(batch.join(
+          audit.where(!col("contaminated")).select(col("doc_id")),
+          Seq("doc_id"), "left_semi"))
+        rejects(audit.where(col("contaminated")))
+      } finally audit.unpersist(false)
+      vacuumIfRebuilt(spark, dir, policy, Dedup.evalPosIndexName(evalFromPct, shingleSize))
+    }
 
   /** Continuous quality-admission gate: per micro-batch, run the
     * [[graft.operators.CorpusFilter.decisions]] audit (heuristic quality ∧
@@ -506,23 +476,17 @@ object Streaming {
                          minQuality: Double = 0.3)
                         (sink: DataFrame => Unit,
                          rejects: DataFrame => Unit = _ => ()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val audit = graft.operators.CorpusFilter
-            .decisions(batch, minQuality)
-            // both routes consume the audit; the arms re-run otherwise
-            .persist()
-          try {
-            sink(batch.join(audit.where(col("kept")).select(col("doc_id")),
-              Seq("doc_id"), "left_semi"))
-            rejects(audit.where(!col("kept")))
-          } finally audit.unpersist(false)
-        }
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, _) =>
+      val audit = graft.operators.CorpusFilter
+        .decisions(batch, minQuality)
+        // both routes consume the audit; the arms re-run otherwise
+        .persist()
+      try {
+        sink(batch.join(audit.where(col("kept")).select(col("doc_id")),
+          Seq("doc_id"), "left_semi"))
+        rejects(audit.where(!col("kept")))
+      } finally audit.unpersist(false)
+    }
 
   /** Continuous SOURCE-gate admission — the host-level door
     * ([[graft.operators.SourceCurate]]'s streaming rung): per micro-batch
@@ -538,9 +502,9 @@ object Streaming {
     * here); merging is exact ([[graft.operators.SourceCurate
     * .mergeSourceStats]]), so after any batching the accumulated state
     * equals `sourceStats(everything seen)` byte-for-byte — the identity
-    * SourceCurateSpec pins. Replay discipline as every gate: decisions
-    * are a pure function of (state strictly below, batch), per-batch
-    * OVERWRITE state dirs, bounded compaction.
+    * SourceCurateSpec pins. Decisions are a pure function of (state
+    * strictly below, batch) — the batch-state store's replay discipline
+    * ([[appendBatchState]]).
     *
     * DECLARED first-evidence semantics: a source is judged on what has
     * arrived so far, so its early documents can be admitted while the
@@ -560,41 +524,32 @@ object Streaming {
                             compactEvery: Int = 16)
                            (sink: DataFrame => Unit,
                             rejects: DataFrame => Unit = _ => ()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val S = graft.operators.SourceCurate
-          val batchStats = S.sourceStats(batch, minQuality)
-            // two consumers (running merge + state write) — one compute
-            .persist()
-          try {
-            val running = readBatchState(spark, s"$path/_srcstats", batchId)
-              .fold(batchStats)(st => S.mergeSourceStats(st, batchStats))
-            val verdict = S.sourceGateFromStats(running, minAvgQuality,
-                maxRepetitiveShare, maxPiiShare, minDocs)
-              .persist()
-            try {
-              // anti-join against BLOCKED sources (≡ semi-join against kept
-              // for attributed docs, since every seen source gets exactly
-              // one verdict) so NULL-source docs take the cold-start keep
-              // — the [[graft.operators.SourceCurate.sourceFilter]] rule —
-              // instead of vanishing from both sink and rejects
-              sink(batch.join(
-                verdict.where(!col("keep")).select(col("source")),
-                Seq("source"), "left_anti"))
-              rejects(batch.select(col("doc_id"), col("source"))
-                .join(verdict.where(!col("keep")), Seq("source")))
-            } finally verdict.unpersist(false)
-            batchStats.write.mode("overwrite")
-              .parquet(f"$path/_srcstats/b$batchId%020d")
-            compactBatchState(spark, s"$path/_srcstats", batchId, compactEvery)
-          } finally batchStats.unpersist(false)
-        }
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val S = graft.operators.SourceCurate
+      val batchStats = S.sourceStats(batch, minQuality)
+        // two consumers (running merge + state write) — one compute
+        .persist()
+      try {
+        val running = readBatchState(batch.sparkSession, s"$path/_srcstats", batchId)
+          .fold(batchStats)(st => S.mergeSourceStats(st, batchStats))
+        val verdict = S.sourceGateFromStats(running, minAvgQuality,
+            maxRepetitiveShare, maxPiiShare, minDocs)
+          .persist()
+        try {
+          // anti-join against BLOCKED sources (≡ semi-join against kept
+          // for attributed docs, since every seen source gets exactly
+          // one verdict) so NULL-source docs take the cold-start keep
+          // — the [[graft.operators.SourceCurate.sourceFilter]] rule —
+          // instead of vanishing from both sink and rejects
+          sink(batch.join(
+            verdict.where(!col("keep")).select(col("source")),
+            Seq("source"), "left_anti"))
+          rejects(batch.select(col("doc_id"), col("source"))
+            .join(verdict.where(!col("keep")), Seq("source")))
+        } finally verdict.unpersist(false)
+        appendBatchState(batchStats, s"$path/_srcstats", batchId, compactEvery)
+      } finally batchStats.unpersist(false)
+    }
 
   /** Streaming token-budget admission — [[graft.operators.BudgetSelect]]'s
     * running-evidence rung: each micro-batch's documents are scored once
@@ -616,56 +571,47 @@ object Streaming {
     * .selectIncremental]]'s declared rule: a doc-level boundary prefix
     * needs a total order over all history, which an unbounded stream
     * cannot replay) and first-evidence: early admissions under a looser
-    * threshold stay admitted. Decisions are PURE given (state, batch) —
-    * stats write after the sink, reads strictly below `batchId`, so a
-    * replayed batch re-decides identically (StreamingSpec pins replay
-    * and state ≡ scoreHistogram(seen) byte-for-byte). */
+    * threshold stay admitted. Decisions are PURE given (state, batch);
+    * stats write after the sink, and replay follows the batch-state
+    * store ([[appendBatchState]]) — StreamingSpec pins replay and state ≡
+    * scoreHistogram(seen) byte-for-byte. */
   def streamBudgetAdmit(docs: DataFrame, path: String, checkpointDir: String,
                         budgetTokens: Long = Long.MaxValue,
                         keepPct: Option[Int] = None,
                         compactEvery: Int = 16)
                        (sink: DataFrame => Unit,
                         rejects: DataFrame => Unit = _ => ()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val B = graft.operators.BudgetSelect
-          // scored once; three consumers (batch hist, admit, reject)
-          val sc = B.scored(batch).localCheckpoint()
-          val batchHist = B.histogramOf(sc)
-            // two consumers (running merge + state write) — one compute
-            .persist()
-          try {
-            val running = readBatchState(spark, s"$path/_bhist", batchId)
-              .fold(batchHist: DataFrame)(st => B.mergeHistograms(st, batchHist))
-              .persist()
-            try {
-              val budget = keepPct.fold(budgetTokens) { pct =>
-                val total = running.agg(sum(col("n_tokens")).cast("bigint"))
-                  .collect()(0) match {
-                  case r if r.isNullAt(0) => 0L
-                  case r                  => r.getLong(0)
-                }
-                total * pct / 100L
-              }
-              val (t, _) = B.thresholdOf(running, budget)
-              sink(batch.join(
-                sc.where(col("bin") > t).select(col("doc_id")),
-                Seq("doc_id"), "left_semi"))
-              rejects(batch.select(col("doc_id"))
-                .join(sc.where(col("bin") <= t)
-                  .select(col("doc_id"), col("quality"), col("bin")), Seq("doc_id")))
-            } finally running.unpersist(false)
-            batchHist.write.mode("overwrite")
-              .parquet(f"$path/_bhist/b$batchId%020d")
-            compactBatchState(spark, s"$path/_bhist", batchId, compactEvery)
-          } finally batchHist.unpersist(false)
-        }
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val B = graft.operators.BudgetSelect
+      // scored once; three consumers (batch hist, admit, reject)
+      val sc = B.scored(batch).localCheckpoint()
+      val batchHist = B.histogramOf(sc)
+        // two consumers (running merge + state write) — one compute
+        .persist()
+      try {
+        val running = readBatchState(batch.sparkSession, s"$path/_bhist", batchId)
+          .fold(batchHist: DataFrame)(st => B.mergeHistograms(st, batchHist))
+          .persist()
+        try {
+          val budget = keepPct.fold(budgetTokens) { pct =>
+            val total = running.agg(sum(col("n_tokens")).cast("bigint"))
+              .collect()(0) match {
+              case r if r.isNullAt(0) => 0L
+              case r                  => r.getLong(0)
+            }
+            total * pct / 100L
+          }
+          val (t, _) = B.thresholdOf(running, budget)
+          sink(batch.join(
+            sc.where(col("bin") > t).select(col("doc_id")),
+            Seq("doc_id"), "left_semi"))
+          rejects(batch.select(col("doc_id"))
+            .join(sc.where(col("bin") <= t)
+              .select(col("doc_id"), col("quality"), col("bin")), Seq("doc_id")))
+        } finally running.unpersist(false)
+        appendBatchState(batchHist, s"$path/_bhist", batchId, compactEvery)
+      } finally batchHist.unpersist(false)
+    }
 
   /** Continuous mixture planning — [[graft.operators.Sampling.mixtureDraw]]'s
     * streaming twin: each micro-batch's documents get their deterministic
@@ -682,35 +628,25 @@ object Streaming {
     * toward its whole-corpus value as evidence lands (with state = the
     * rest of the corpus the batch rows equal the batch pipeline's draw
     * exactly — the [[graft.operators.Sampling.mixtureDrawIncremental]]
-    * identity StreamingSpec pins). Stats are written FIRST (per-batch
-    * OVERWRITE dirs), reads stay strictly below `batchId`, so a replayed
-    * batch re-draws identically and never self-inflates its evidence. */
+    * identity StreamingSpec pins). Stats are written FIRST; the store's
+    * strictly-below reads ([[appendBatchState]]) keep a replayed batch
+    * from self-inflating its evidence, so it re-draws identically. */
   def streamMixtureDraw(docs: DataFrame, path: String, checkpointDir: String,
                         alpha: Double = 0.5, budgetTokens: Long = 10000000L,
                         compactEvery: Int = 16)
                        (sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val S = graft.operators.Sampling
-          val batchStats = S.sourceTokenStats(batch)
-            // two consumers (running merge + state write) — one compute
-            .persist()
-          try {
-            batchStats.write.mode("overwrite")
-              .parquet(f"$path/_mixstats/b$batchId%020d")
-            compactBatchState(spark, s"$path/_mixstats", batchId, compactEvery)
-            val running = readBatchState(spark, s"$path/_mixstats", batchId)
-              .fold(batchStats: DataFrame)(st => S.mergeTokenStats(st, batchStats))
-            sink(S.mixtureDrawFrom(batch,
-              S.sourceMixtureFromTokenStats(running, alpha, budgetTokens)))
-          } finally batchStats.unpersist(false)
-        }
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val batchStats = Sampling.sourceTokenStats(batch)
+        // two consumers (running merge + state write) — one compute
+        .persist()
+      try {
+        appendBatchState(batchStats, s"$path/_mixstats", batchId, compactEvery)
+        val running = readBatchState(batch.sparkSession, s"$path/_mixstats", batchId)
+          .fold(batchStats: DataFrame)(st => Sampling.mergeTokenStats(st, batchStats))
+        sink(Sampling.mixtureDrawFrom(batch,
+          Sampling.sourceMixtureFromTokenStats(running, alpha, budgetTokens)))
+      } finally batchStats.unpersist(false)
+    }
 
   /** Streaming snapshot diff — [[graft.operators.SnapshotDiff]]'s
     * per-batch rung: the NEW snapshot arrives as micro-batches and each
@@ -734,24 +670,16 @@ object Streaming {
   def streamSnapshotDiff(docs: DataFrame, oldHashes: DataFrame, path: String,
                          checkpointDir: String, compactEvery: Int = 16)
                         (sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          batch.select(col("doc_id")).write.mode("overwrite")
-            .parquet(f"$path/_seenids/b$batchId%020d")
-          compactBatchState(spark, s"$path/_seenids", batchId, compactEvery)
-          // left (not full-outer) join: absent-from-batch old docs are
-          // not this batch's business — removed is the close's fact
-          sink(graft.operators.SnapshotDiff
-            .corpusDiffFromHashes(oldHashes, batch)
-            .join(batch.select(col("doc_id")), Seq("doc_id"), "left_semi")
-            .orderBy(col("doc_id")))
-        }
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      appendBatchState(batch.select(col("doc_id")), s"$path/_seenids", batchId,
+        compactEvery)
+      // left (not full-outer) join: absent-from-batch old docs are
+      // not this batch's business — removed is the close's fact
+      sink(graft.operators.SnapshotDiff
+        .corpusDiffFromHashes(oldHashes, batch)
+        .join(batch.select(col("doc_id")), Seq("doc_id"), "left_semi")
+        .orderBy(col("doc_id")))
+    }
 
   /** The snapshot-CLOSE step for [[streamSnapshotDiff]]: every stored
     * doc whose id never arrived in a committed batch — `(doc_id, status
@@ -790,33 +718,26 @@ object Streaming {
                               checkpointDir: String,
                               weightCol: String = "n_chars",
                               retainVersions: Int = 1): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val prior = readReservoir(spark, reservoirPath)
-            .map(_.select(col("doc_id"), col("w").as(weightCol)))
-            .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", weightCol))
-          val merged = Sampling.weightedSample(
-            batch.select(col("doc_id"), col(weightCol).cast("bigint").as(weightCol))
-              .unionByName(prior)
-              .groupBy(col("doc_id")).agg(max(col(weightCol)).as(weightCol)),
-            k, weightCol)
-          val rows = merged.collect() // bounded: k rows by construction
-            .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-          commitVersion(rows.toDF("doc_id", "w", "key"), reservoirPath, batchId,
-            retainVersions)
-        }
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val prior = readReservoir(spark, reservoirPath)
+        .map(_.select(col("doc_id"), col("w").as(weightCol)))
+        .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", weightCol))
+      val merged = Sampling.weightedSample(
+        batch.select(col("doc_id"), col(weightCol).cast("bigint").as(weightCol))
+          .unionByName(prior)
+          .groupBy(col("doc_id")).agg(max(col(weightCol)).as(weightCol)),
+        k, weightCol)
+      val rows = merged.collect() // bounded: k rows by construction
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      commitVersion(rows.toDF("doc_id", "w", "key"), reservoirPath, batchId,
+        retainVersions)
+    }
 
-  /** The committed reservoir, or None before the first update: the
+  /** The committed reservoir, or None before the first commit: the
     * `_latest` marker's version, falling back to the highest version dir
-    * with a `_SUCCESS` commit if the marker is missing (crash window). */
-  /** Current committed reservoir, or None before the first commit.
+    * with a `_SUCCESS` commit if the marker is missing (crash window).
     * Retention contract: a resolved DataFrame stays readable only while
     * the writer commits fewer than its `retainVersions` (default 1)
     * further micro-batches — consume promptly, or raise the writer's
@@ -844,27 +765,32 @@ object Streaming {
   def streamShardExport(docs: DataFrame, path: String, checkpointDir: String,
                         tokensPerShard: Long,
                         retainVersions: Int = 1): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val prev = readVersionBelow(spark, s"$path/_state", batchId)
-            .map(_.head().getLong(0)).getOrElse(0L)
-          val assigned = graft.operators.Sampling
-            .tokenShards(batch, tokensPerShard, baseTokens = prev)
-          batch.join(assigned.select(col("doc_id"), col("shard")), Seq("doc_id"))
-            .write.mode("overwrite").partitionBy("shard")
-            .parquet(f"$path/b$batchId%020d")
-          val batchTok = assigned.agg(coalesce(sum(col("n_tok")), lit(0L)))
-            .head().getLong(0)
-          commitVersion(Seq(prev + batchTok).toDF("cum_tokens"),
-            s"$path/_state", batchId, retainVersions)
-        }
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val prev = tokensBelow(batch.sparkSession, path, batchId)
+      val assigned = Sampling.tokenShards(batch, tokensPerShard, baseTokens = prev)
+      batch.join(assigned.select(col("doc_id"), col("shard")), Seq("doc_id"))
+        .write.mode("overwrite").partitionBy("shard")
+        .parquet(batchDir(path, batchId))
+      commitTokens(assigned, prev, path, batchId, retainVersions)
+    }
+
+  /** The running token count committed by batches STRICTLY BELOW
+    * `batchId` (the versioned `path/_state`), 0 before the first. */
+  private def tokensBelow(spark: SparkSession, path: String, batchId: Long): Long =
+    readVersionBelow(spark, s"$path/_state", batchId)
+      .map(_.head().getLong(0)).getOrElse(0L)
+
+  /** Commits `prev` plus the tokens of this batch's `assigned` shard rows
+    * as version `batchId` of `path/_state`. */
+  private def commitTokens(assigned: DataFrame, prev: Long, path: String,
+                           batchId: Long, retainVersions: Int): Unit = {
+    val spark = assigned.sparkSession
+    import spark.implicits._
+    val batchTok = assigned.agg(coalesce(sum(col("n_tok")), lit(0L)))
+      .head().getLong(0)
+    commitVersion(Seq(prev + batchTok).toDF("cum_tokens"),
+      s"$path/_state", batchId, retainVersions)
+  }
 
   /** Streaming curation END-TO-END — [[graft.operators.Curate.pipeline]]
     * as a continuous sink: per micro-batch, every gate verdict
@@ -889,14 +815,12 @@ object Streaming {
     * to first-arrival-wins — the standard streaming-dedup semantics, no
     * longer the batch frame's lowest-id-wins.
     *
-    * Exactly-once-equivalence under at-least-once delivery, the
-    * [[streamShardExport]] discipline on every piece of state: per-batch
-    * OVERWRITE dirs for decisions and signatures (a replay replaces its
-    * own output), the cumulative token count read at the STRICT
-    * PREDECESSOR version, and signature-state reads bounded to batch ids
-    * STRICTLY BELOW the current one (a replayed batch can never see its
-    * own failed attempt's signatures — it would self-match and reject
-    * everything).
+    * Exactly-once-equivalence under at-least-once delivery: every piece
+    * of state — decisions, signatures, fingerprints, the cumulative token
+    * count — follows the batch-state store's replay discipline
+    * ([[appendBatchState]]); without the strictly-below reads a replayed
+    * batch would self-match its failed attempt's signatures and reject
+    * everything.
     *
     * Scale shape per batch: the arms' documented shapes on batch-sized
     * inputs; the cross-batch admission shuffles signature-sized rows only
@@ -921,7 +845,7 @@ object Streaming {
                    // set). Replay contract unchanged: given the stored
                    // index the batch decision is pure
                    evalIndexDir: Option[String] = None,
-                   evalIndexPolicy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing,
+                   evalIndexPolicy: IndexPolicy = IndexPolicy.BuildIfMissing,
                    // HOST-level arm — the streamed twin of
                    // Curate.pipeline(sourceGate = true): per batch the
                    // source verdict comes from RUNNING evidence (the
@@ -933,19 +857,14 @@ object Streaming {
                    // blocks its source (StreamingSpec pins both)
                    sourceGate: Boolean = false,
                    minAvgQuality: Double = 0.2): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          curateBatch(batch, evalDocs, path, batchId, minQuality,
-            tokensPerShard, trainPct, benchFromPct, shingleSize, seeds,
-            bands, estThreshold, retainVersions, compactEvery,
-            mediaOk = None, runDecontam = runDecontam,
-            evalIndexDir = evalIndexDir, evalIndexPolicy = evalIndexPolicy,
-            sourceGate = sourceGate, minAvgQuality = minAvgQuality)
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      curateBatch(batch, evalDocs, path, batchId, minQuality,
+        tokensPerShard, trainPct, benchFromPct, shingleSize, seeds,
+        bands, estThreshold, retainVersions, compactEvery,
+        mediaOk = None, runDecontam = runDecontam,
+        evalIndexDir = evalIndexDir, evalIndexPolicy = evalIndexPolicy,
+        sourceGate = sourceGate, minAvgQuality = minAvgQuality)
+    }
 
   /** Streaming MULTIMODAL curation — [[graft.operators.Curate
     * .pipelineMultimodal]] as a continuous sink, closing the round-14
@@ -992,80 +911,62 @@ object Streaming {
                              compactEvery: Int = 16,
                              crossModal: Boolean = false,
                              crossModalStills: Option[DataFrame] = None): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val typed = batch
-            .select(col("doc_id"), col("blob"))
-            .withColumn("__mod",
-              graft.operators.Multimodal.modalityUdf(col("blob")))
-            .localCheckpoint(false)
-          def slice(m: String): DataFrame =
-            typed.where(col("__mod") === m).select(col("doc_id"), col("blob"))
-          // the standalone gates' shared per-batch functions, family-scoped
-          // state — each returns keepers + its own yields-no-verdict
-          // pass-through, which is exactly the batch frame's vacuous-clean set
-          val famAdmitted0 = imageAdmitBatch(slice("image"), s"$path/media/image",
-              batchId, imgBands, maxHamming, agreeBands, compactEvery)
-            .unionByName(audioAdmitBatch(slice("audio"), s"$path/media/audio",
-              batchId, windowSamples, hop, audioMaxBytes, maxDt, fanout,
-              audioMinVotes, compactEvery, keyPeaks))
-            .unionByName(videoAdmitBatch(slice("video"), s"$path/media/video",
-              batchId, maxFrames, videoMaxBytes, videoMinVotes, compactEvery))
-          // the CROSS-MODAL arm: batch videos probed against stills. Both
-          // hash tables are READ BACK from the state dirs the family gates
-          // just wrote for this batch (b{batchId} survives compaction —
-          // only ids < batchId compact; overwrite-mode makes a replayed
-          // batch's read consistent), instead of re-running imagePHash /
-          // videoFrameHashes on the batch slices — the second full
-          // blob-decode pass per modality per micro-batch the r15 advice
-          // flagged, and the recompute cost the batch frame's boundary
-          // hunt measured dominant (584.7 s vs 202.9 s at 250k).
-          //
-          // Still source: `crossModalStills` (a catalog-pinned still-hash
-          // index — [[graft.operators.Dedup.videoStillMatchesIndexed]]'s
-          // table) makes the arm ORDER-INDEPENDENT by construction: the
-          // stills are a build-time fact, so the verdict no longer depends
-          // on whether images arrive before their matching videos. Absent
-          // an index, the arm probes the image gate's accumulated state
-          // (strictly below this batch) plus this batch's image hashes —
-          // the batch frame drops a video on ANY corpus still; the
-          // streamed frame reproduces it exactly whenever no matching
-          // still arrives in a LATER batch than its video (the media
-          // gates' ordered-arrival caveat, cross-modal edition).
-          val famAdmitted =
-            if (!crossModal) famAdmitted0
-            else {
-              val batchFrames =
-                spark.read.parquet(f"$path/media/video/_fr/b$batchId%020d")
-              val stills = crossModalStills match {
-                case Some(idx) => idx.select(col("phash"))
-                case None =>
-                  val batchImg =
-                    spark.read.parquet(f"$path/media/image/_ph/b$batchId%020d")
-                      .select(col("phash"))
-                  readBatchState(spark, s"$path/media/image/_ph", batchId)
-                    .fold(batchImg)(st => batchImg.unionByName(st.select(col("phash"))))
-              }
-              val xm = graft.operators.Dedup.videoStillMatchesAgainst(
-                batchFrames, stills)
-              famAdmitted0.join(xm, Seq("doc_id"), "left_anti")
-            }
-          val mediaOk = typed.where(col("__mod") =!= "none")
-            .select(col("doc_id"))
-            .join(famAdmitted.select(col("doc_id"), lit(true).as("__adm"))
-              .distinct(), Seq("doc_id"), "left")
-            .select(col("doc_id"), coalesce(col("__adm"), lit(false)).as("media_ok"))
-          curateBatch(batch.drop("blob"), evalDocs, path, batchId, minQuality,
-            tokensPerShard, trainPct, benchFromPct, shingleSize, seeds,
-            bands, estThreshold, retainVersions, compactEvery,
-            mediaOk = Some(mediaOk))
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // each family's keepers + its own yields-no-verdict pass-through,
+      // which is exactly the batch frame's vacuous-clean set
+      val (typed, famAdmitted0) = mediaAdmitBatch(batch, s"$path/media",
+        batchId, imgBands, maxHamming, agreeBands, windowSamples, hop,
+        audioMaxBytes, maxDt, fanout, audioMinVotes, keyPeaks, maxFrames,
+        videoMaxBytes, videoMinVotes, compactEvery)
+      // the CROSS-MODAL arm: batch videos probed against stills. Both
+      // hash tables are READ BACK from the state dirs the family gates
+      // just wrote for this batch (b{batchId} survives compaction —
+      // only ids < batchId compact; overwrite-mode makes a replayed
+      // batch's read consistent), instead of re-running imagePHash /
+      // videoFrameHashes on the batch slices — the second full
+      // blob-decode pass per modality per micro-batch the r15 advice
+      // flagged, and the recompute cost the batch frame's boundary
+      // hunt measured dominant (584.7 s vs 202.9 s at 250k).
+      //
+      // Still source: `crossModalStills` (a catalog-pinned still-hash
+      // index — [[graft.operators.Dedup.videoStillMatchesIndexed]]'s
+      // table) makes the arm ORDER-INDEPENDENT by construction: the
+      // stills are a build-time fact, so the verdict no longer depends
+      // on whether images arrive before their matching videos. Absent
+      // an index, the arm probes the image gate's accumulated state
+      // (strictly below this batch) plus this batch's image hashes —
+      // the batch frame drops a video on ANY corpus still; the
+      // streamed frame reproduces it exactly whenever no matching
+      // still arrives in a LATER batch than its video (the media
+      // gates' ordered-arrival caveat, cross-modal edition).
+      val famAdmitted =
+        if (!crossModal) famAdmitted0
+        else {
+          val batchFrames =
+            spark.read.parquet(batchDir(s"$path/media/video/_fr", batchId))
+          val stills = crossModalStills match {
+            case Some(idx) => idx.select(col("phash"))
+            case None =>
+              val batchImg =
+                spark.read.parquet(batchDir(s"$path/media/image/_ph", batchId))
+                  .select(col("phash"))
+              readBatchState(spark, s"$path/media/image/_ph", batchId)
+                .fold(batchImg)(st => batchImg.unionByName(st.select(col("phash"))))
+          }
+          val xm = Dedup.videoStillMatchesAgainst(batchFrames, stills)
+          famAdmitted0.join(xm, Seq("doc_id"), "left_anti")
         }
-      }
-      .start()
+      val mediaOk = typed.where(col("__mod") =!= "none")
+        .select(col("doc_id"))
+        .join(famAdmitted.select(col("doc_id"), lit(true).as("__adm"))
+          .distinct(), Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("__adm"), lit(false)).as("media_ok"))
+      curateBatch(batch.drop("blob"), evalDocs, path, batchId, minQuality,
+        tokensPerShard, trainPct, benchFromPct, shingleSize, seeds,
+        bands, estThreshold, retainVersions, compactEvery,
+        mediaOk = Some(mediaOk))
+    }
 
   /** One micro-batch of [[streamCurate]] / [[streamCurateMultimodal]]:
     * the full text decision frame (gates, cross-batch exact + near
@@ -1082,12 +983,10 @@ object Streaming {
                           mediaOk: Option[DataFrame],
                           runDecontam: Boolean = false,
                           evalIndexDir: Option[String] = None,
-                          evalIndexPolicy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing,
+                          evalIndexPolicy: IndexPolicy = IndexPolicy.BuildIfMissing,
                           sourceGate: Boolean = false,
                           minAvgQuality: Double = 0.2): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    val D = graft.operators.Dedup
     // host-arm reuse (r17 advice, the batch pipeline(sourceGate) fix's
     // streaming twin): with the source gate on, the per-doc gate scans
     // also feed the per-source evidence — run them ONCE as a measures
@@ -1118,13 +1017,13 @@ object Streaming {
           .select(col("doc_id"), coalesce(col("__hit"), lit(true)).as("__fp_ok"))
       case None => batch.select(col("doc_id"), lit(true).as("__fp_ok"))
     }
-    val inKeep = D.resolveKeepers(batch,
-        D.minhashNearApprox(batch, shingleSize = shingleSize,
+    val inKeep = Dedup.resolveKeepers(batch,
+        Dedup.minhashNearApprox(batch, shingleSize = shingleSize,
           seeds = seeds, bands = bands, estThreshold = estThreshold))
       .select(col("doc_id"), col("keep").as("__in_ok"))
     val crossKeep = readBatchState(spark, s"$path/_sigs", batchId) match {
       case Some(state) =>
-        D.sigIncrementalAgainstState(batch, state,
+        Dedup.sigIncrementalAgainstState(batch, state,
             shingleSize = shingleSize, seeds = seeds, bands = bands,
             estThreshold = estThreshold)
           .select(col("doc_id"), col("keep").as("__x_ok"))
@@ -1137,10 +1036,10 @@ object Streaming {
     // and with the index it probes the registry-pinned postings instead of
     // re-shingling the eval corpus every micro-batch
     val deco = (if (runDecontam) evalIndexDir match {
-        case Some(d) => D.decontaminateRunsIndexed(spark, d, batch,
+        case Some(d) => Dedup.decontaminateRunsIndexed(spark, d, batch,
           trainPct = trainPct, evalFromPct = benchFromPct,
           policy = evalIndexPolicy)
-        case None => D.decontaminateRunsAgainst(
+        case None => Dedup.decontaminateRunsAgainst(
           batch, evalDocs, trainPct = trainPct)
       } else graft.operators.Decontaminate
         .contaminationAgainst(batch, evalDocs, trainPct = trainPct))
@@ -1165,9 +1064,7 @@ object Streaming {
       val S = graft.operators.SourceCurate
       val batchStats =
         S.sourceStatsFromMeasures(measures.get, minQuality).persist()
-      batchStats.write.mode("overwrite")
-        .parquet(f"$path/_srcstats/b$batchId%020d")
-      compactBatchState(spark, s"$path/_srcstats", batchId, compactEvery)
+      appendBatchState(batchStats, s"$path/_srcstats", batchId, compactEvery)
       val running = readBatchState(spark, s"$path/_srcstats", batchId)
         .fold(batchStats: DataFrame)(st => S.mergeSourceStats(st, batchStats))
       val verdict = S.sourceGateFromStats(running, minAvgQuality)
@@ -1200,9 +1097,8 @@ object Streaming {
     val flags = withMedia
       .withColumn("kept", gateCols.map(col).reduce(_ && _))
       .localCheckpoint(false)
-    val prev = readVersionBelow(spark, s"$path/_state", batchId)
-      .map(_.head().getLong(0)).getOrElse(0L)
-    val assigned = graft.operators.Sampling.tokenShards(
+    val prev = tokensBelow(spark, path, batchId)
+    val assigned = Sampling.tokenShards(
       batch.join(flags.where(col("kept") && col("__b") < trainPct)
           .select(col("doc_id")), Seq("doc_id"), "left_semi"),
       tokensPerShard, baseTokens = prev)
@@ -1215,17 +1111,12 @@ object Streaming {
           .otherwise(lit("bench")).as("split") :+
         when(col("kept") && col("__b") < trainPct, col("shard"))
           .otherwise(lit(null).cast("bigint")).as("shard"): _*)
-      .write.mode("overwrite").parquet(f"$path/b$batchId%020d")
-    D.wordSignatures(batch, shingleSize = shingleSize, seeds = seeds)
-      .write.mode("overwrite").parquet(f"$path/_sigs/b$batchId%020d")
-    batch.select(sha2(col("text"), 256).as("fp")).distinct()
-      .write.mode("overwrite").parquet(f"$path/_fps/b$batchId%020d")
-    compactBatchState(spark, s"$path/_sigs", batchId, compactEvery)
-    compactBatchState(spark, s"$path/_fps", batchId, compactEvery)
-    val batchTok = assigned.agg(coalesce(sum(col("n_tok")), lit(0L)))
-      .head().getLong(0)
-    commitVersion(Seq(prev + batchTok).toDF("cum_tokens"),
-      s"$path/_state", batchId, retainVersions)
+      .write.mode("overwrite").parquet(batchDir(path, batchId))
+    appendBatchState(Dedup.wordSignatures(batch, shingleSize = shingleSize, seeds = seeds),
+      s"$path/_sigs", batchId, compactEvery)
+    appendBatchState(batch.select(sha2(col("text"), 256).as("fp")).distinct(),
+      s"$path/_fps", batchId, compactEvery)
+    commitTokens(assigned, prev, path, batchId, retainVersions)
   }
 
   /** Streaming IMAGE-dedup admission gate — the continuous twin of
@@ -1244,24 +1135,16 @@ object Streaming {
     *
     * State: distinct phashes of EVERY seen doc (admitted or not — a
     * rejected near-dup must still suppress later copies), one long per
-    * distinct grid, per-batch overwrite dirs read STRICTLY BELOW the
-    * current batch id — the [[streamCurate]] replay discipline (a
-    * replayed batch can never self-match). */
+    * distinct grid, under the batch-state store's replay discipline
+    * ([[appendBatchState]]). */
   def streamImageDedupAdmit(docs: DataFrame, path: String, checkpointDir: String,
                             bands: Int = 8, maxHamming: Int = 6,
                             agreeBands: Int = 2, compactEvery: Int = 16)
                            (sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val admitted = imageAdmitBatch(batch, path, batchId,
-            bands, maxHamming, agreeBands, compactEvery)
-          sink(batch.join(admitted, Seq("doc_id"), "left_semi"))
-        }
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      sink(batch.join(imageAdmitBatch(batch, path, batchId,
+        bands, maxHamming, agreeBands, compactEvery), Seq("doc_id"), "left_semi"))
+    }
 
   /** One micro-batch of [[streamImageDedupAdmit]]: returns the admitted
     * doc ids and writes/compacts this batch's `_ph` state — shared
@@ -1270,33 +1153,38 @@ object Streaming {
                               bands: Int, maxHamming: Int, agreeBands: Int,
                               compactEvery: Int): DataFrame = {
     val spark = batch.sparkSession
-    val D = graft.operators.Dedup
-    val M = graft.operators.Multimodal
-    val hashed = M.imagePHash(spark, batch).localCheckpoint(false)
-    val groups = D.imageDedup(spark, batch,
+    val hashed = Multimodal.imagePHash(spark, batch).localCheckpoint(false)
+    val groups = Dedup.imageDedup(spark, batch,
       bands = bands, maxHamming = maxHamming, agreeBands = agreeBands)
-    val admitted = readBatchState(spark, s"$path/_ph", batchId) match {
-      case Some(state) =>
-        val taintedGroups = D.imageMatchesAgainst(hashed, state,
-            bands, maxHamming, agreeBands)
-          .join(groups, Seq("doc_id"))
-          .select(col("group_id")).distinct()
-        groups.where(col("keep"))
-          .join(taintedGroups, Seq("group_id"), "left_anti")
-          .select(col("doc_id"))
-      case None => groups.where(col("keep")).select(col("doc_id"))
-    }
+    val admitted = untaintedKeepers(groups,
+      readBatchState(spark, s"$path/_ph", batchId).map(state =>
+        Dedup.imageMatchesAgainst(hashed, state, bands, maxHamming, agreeBands)))
     // EAGERLY materialize before touching state: the caller's sink runs
     // after this function writes + compacts, and a lazy admit plan still
     // references the pre-compaction b-dirs — at the first compaction
     // boundary the deferred read hits deleted files (caught by the 50-batch
     // ScaleSmoke run: FAILED_READ_FILE at batch 16, the first compaction)
     val pinned = admitted.localCheckpoint(true)
-    hashed.select(col("phash")).distinct()
-      .write.mode("overwrite").parquet(f"$path/_ph/b$batchId%020d")
-    compactBatchState(spark, s"$path/_ph", batchId, compactEvery)
+    appendBatchState(hashed.select(col("phash")).distinct(), s"$path/_ph",
+      batchId, compactEvery)
     pinned
   }
+
+  /** Cluster-level taint shared by the image, audio and video gates: the
+    * in-batch keepers of `groups` (doc_id, group_id, keep), minus every
+    * group with ANY member among `hits` (doc ids matching cross-batch
+    * state; None when there is no state yet). Tainting whole groups, not
+    * single docs, is what keeps a chain c—b (in batch), b—a (in state)
+    * rejected even when c is far from a. */
+  private def untaintedKeepers(groups: DataFrame,
+                               hits: Option[DataFrame]): DataFrame =
+    hits.fold(groups.where(col("keep")).select(col("doc_id"))) { h =>
+      val taintedGroups = h.join(groups, Seq("doc_id"))
+        .select(col("group_id")).distinct()
+      groups.where(col("keep"))
+        .join(taintedGroups, Seq("group_id"), "left_anti")
+        .select(col("doc_id"))
+    }
 
   /** Streaming AUDIO-dedup admission gate — the continuous twin of
     * [[graft.operators.Dedup.audioDedup]], completing the modality matrix
@@ -1313,9 +1201,8 @@ object Streaming {
     *
     * State per batch: landmark rows of every seen WAV doc (admitted or
     * not — ≤ peaks·fanout bounded rows/doc) in `_lm`, distinct envelope
-    * strings (budget-bounded fingerprints) in `_env`; both read STRICTLY
-    * BELOW the current batch id and compacted on the [[compactBatchState]]
-    * schedule — the [[streamCurate]] replay discipline throughout. Under
+    * strings (budget-bounded fingerprints) in `_env`; both kept in the
+    * batch-state store ([[appendBatchState]]). Under
     * doc_id-ordered arrival the admitted WAV set equals
     * `audioDedup(corpus).where(keep)`; unordered arrival degrades to
     * first-arrival-wins with the same invariants the image gate pins.
@@ -1338,18 +1225,11 @@ object Streaming {
                             fanout: Int = 3, minVotes: Int = 5,
                             compactEvery: Int = 16, keyPeaks: Int = 2)
                            (sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val admitted = audioAdmitBatch(batch, path, batchId,
-            windowSamples, hop, maxBytes, maxDt, fanout, minVotes,
-            compactEvery, keyPeaks)
-          sink(batch.join(admitted, Seq("doc_id"), "left_semi"))
-        }
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      sink(batch.join(audioAdmitBatch(batch, path, batchId,
+        windowSamples, hop, maxBytes, maxDt, fanout, minVotes,
+        compactEvery, keyPeaks), Seq("doc_id"), "left_semi"))
+    }
 
   /** One micro-batch of [[streamAudioDedupAdmit]]: returns the admitted
     * doc ids (keepers plus the non-WAV pass-through) and writes/compacts
@@ -1360,38 +1240,29 @@ object Streaming {
                               maxDt: Int, fanout: Int, minVotes: Int,
                               compactEvery: Int, keyPeaks: Int): DataFrame = {
     val spark = batch.sparkSession
-    val D = graft.operators.Dedup
-    val M = graft.operators.Multimodal
-    val lm = M.audioLandmarks(spark, batch,
+    val lm = Multimodal.audioLandmarks(spark, batch,
       windowSamples = windowSamples, hop = hop, maxBytes = maxBytes,
       maxDt = maxDt, fanout = fanout, keyPeaks = keyPeaks)
       .localCheckpoint(false)
-    val env = M.audioEnvelope(spark, batch,
+    val env = Multimodal.audioEnvelope(spark, batch,
       windowSamples = windowSamples, maxBytes = maxBytes, hop = hop)
       .select(col("doc_id"), col("env")).localCheckpoint(false)
-    val groups = D.audioDedup(spark, batch,
+    val groups = Dedup.audioDedup(spark, batch,
       windowSamples = windowSamples, hop = hop, maxBytes = maxBytes,
       maxDt = maxDt, fanout = fanout, minVotes = minVotes,
       keyPeaks = keyPeaks)
     // a crash between the two state writes may leave one side a batch
     // ahead — a missing side is EMPTY state, not no-state, so the
     // committed side still taints
-    val stateLmOpt = readBatchState(spark, s"$path/_lm", batchId)
-    val stateEnvOpt = readBatchState(spark, s"$path/_env", batchId)
-    val keepers =
-      if (stateLmOpt.isEmpty && stateEnvOpt.isEmpty)
-        groups.where(col("keep")).select(col("doc_id"))
-      else {
-        val taintedGroups = D.audioMatchesAgainst(lm, env,
-            stateLmOpt.getOrElse(lm.limit(0)),
-            stateEnvOpt.getOrElse(env.select(col("env")).limit(0)),
-            minVotes = minVotes)
-          .join(groups, Seq("doc_id"))
-          .select(col("group_id")).distinct()
-        groups.where(col("keep"))
-          .join(taintedGroups, Seq("group_id"), "left_anti")
-          .select(col("doc_id"))
-      }
+    val keepers = untaintedKeepers(groups,
+      (readBatchState(spark, s"$path/_lm", batchId),
+        readBatchState(spark, s"$path/_env", batchId)) match {
+        case (None, None) => None
+        case (stLm, stEnv) => Some(Dedup.audioMatchesAgainst(lm, env,
+          stLm.getOrElse(lm.limit(0)),
+          stEnv.getOrElse(env.select(col("env")).limit(0)),
+          minVotes = minVotes))
+      })
     // pass-through: rows with no envelope are not audio
     val admitted = keepers.unionByName(
       batch.select(col("doc_id"))
@@ -1399,11 +1270,9 @@ object Streaming {
       // eager: pin the admit rows BEFORE compaction deletes the b-dirs the
       // lazy plan reads (see imageAdmitBatch)
       .localCheckpoint(true)
-    lm.write.mode("overwrite").parquet(f"$path/_lm/b$batchId%020d")
-    env.select(col("env")).distinct()
-      .write.mode("overwrite").parquet(f"$path/_env/b$batchId%020d")
-    compactBatchState(spark, s"$path/_lm", batchId, compactEvery)
-    compactBatchState(spark, s"$path/_env", batchId, compactEvery)
+    appendBatchState(lm, s"$path/_lm", batchId, compactEvery)
+    appendBatchState(env.select(col("env")).distinct(), s"$path/_env",
+      batchId, compactEvery)
     admitted
   }
 
@@ -1424,25 +1293,17 @@ object Streaming {
     * other gates is the pipeline's job.
     *
     * State per batch: ≤ `maxFrames` frame-hash rows per seen video in
-    * `_fr`, distinct fingerprints in `_fp` — signature-sized both, read
-    * STRICTLY BELOW the current batch id with [[compactBatchState]]
-    * compaction (the [[streamCurate]] replay discipline). Pixels never
-    * enter state. */
+    * `_fr`, distinct fingerprints in `_fp` — signature-sized both, kept
+    * in the batch-state store ([[appendBatchState]]). Pixels never enter
+    * state. */
   def streamVideoDedupAdmit(docs: DataFrame, path: String, checkpointDir: String,
                             maxFrames: Int = 16, maxBytes: Int = 1 << 20,
                             minVotes: Int = 3, compactEvery: Int = 16)
                            (sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val admitted = videoAdmitBatch(batch, path, batchId,
-            maxFrames, maxBytes, minVotes, compactEvery)
-          sink(batch.join(admitted, Seq("doc_id"), "left_semi"))
-        }
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      sink(batch.join(videoAdmitBatch(batch, path, batchId,
+        maxFrames, maxBytes, minVotes, compactEvery), Seq("doc_id"), "left_semi"))
+    }
 
   /** One micro-batch of [[streamVideoDedupAdmit]]: returns the admitted
     * doc ids (keepers plus the non-MP4 pass-through) and writes/compacts
@@ -1452,32 +1313,22 @@ object Streaming {
                               maxFrames: Int, maxBytes: Int, minVotes: Int,
                               compactEvery: Int): DataFrame = {
     val spark = batch.sparkSession
-    val D = graft.operators.Dedup
-    val fr = graft.operators.Multimodal.videoFrameHashes(spark, batch,
+    val fr = Multimodal.videoFrameHashes(spark, batch,
       maxFrames = maxFrames, maxBytes = maxBytes)
       .localCheckpoint(false)
-    val fp = D.videoFingerprints(fr).localCheckpoint(false)
-    val groups = D.videoDedup(spark, batch,
+    val fp = Dedup.videoFingerprints(fr).localCheckpoint(false)
+    val groups = Dedup.videoDedup(spark, batch,
       maxFrames = maxFrames, maxBytes = maxBytes, minVotes = minVotes)
-    // a crash between the two state writes may leave one side a batch
-    // ahead — a missing side is EMPTY state, not no-state, so the
-    // committed side still taints
-    val stateFrOpt = readBatchState(spark, s"$path/_fr", batchId)
-    val stateFpOpt = readBatchState(spark, s"$path/_fp", batchId)
-    val keepers =
-      if (stateFrOpt.isEmpty && stateFpOpt.isEmpty)
-        groups.where(col("keep")).select(col("doc_id"))
-      else {
-        val taintedGroups = D.videoMatchesAgainst(fr, fp,
-            stateFrOpt.getOrElse(fr.limit(0)),
-            stateFpOpt.getOrElse(fp.select(col("fp")).limit(0)),
-            minVotes = minVotes)
-          .join(groups, Seq("doc_id"))
-          .select(col("group_id")).distinct()
-        groups.where(col("keep"))
-          .join(taintedGroups, Seq("group_id"), "left_anti")
-          .select(col("doc_id"))
-      }
+    // a missing side is EMPTY state, not no-state (see audioAdmitBatch)
+    val keepers = untaintedKeepers(groups,
+      (readBatchState(spark, s"$path/_fr", batchId),
+        readBatchState(spark, s"$path/_fp", batchId)) match {
+        case (None, None) => None
+        case (stFr, stFp) => Some(Dedup.videoMatchesAgainst(fr, fp,
+          stFr.getOrElse(fr.limit(0)),
+          stFp.getOrElse(fp.select(col("fp")).limit(0)),
+          minVotes = minVotes))
+      })
     // pass-through: rows with no extracted frame are not videos
     val admitted = keepers.unionByName(
       batch.select(col("doc_id"))
@@ -1486,11 +1337,9 @@ object Streaming {
       // eager: pin the admit rows BEFORE compaction deletes the b-dirs the
       // lazy plan reads (see imageAdmitBatch)
       .localCheckpoint(true)
-    fr.write.mode("overwrite").parquet(f"$path/_fr/b$batchId%020d")
-    fp.select(col("fp")).distinct()
-      .write.mode("overwrite").parquet(f"$path/_fp/b$batchId%020d")
-    compactBatchState(spark, s"$path/_fr", batchId, compactEvery)
-    compactBatchState(spark, s"$path/_fp", batchId, compactEvery)
+    appendBatchState(fr, s"$path/_fr", batchId, compactEvery)
+    appendBatchState(fp.select(col("fp")).distinct(), s"$path/_fp",
+      batchId, compactEvery)
     admitted
   }
 
@@ -1507,9 +1356,9 @@ object Streaming {
     * admits it; the three families never see each other's rows or state,
     * exactly as in the batch composition.
     *
-    * State/replay: the three families' per-batch overwrite dirs and
-    * strict-below reads are inherited unchanged, so the composed gate
-    * keeps every family's replay-identity contract; a crash between
+    * State/replay: each family keeps its own batch-state store
+    * ([[appendBatchState]]), so the composed gate keeps every family's
+    * replay-identity contract; a crash between
     * family writes leaves the committed families tainting (the two-arm
     * crash argument, one level up). */
   def streamMediaDedupAdmit(docs: DataFrame, path: String, checkpointDir: String,
@@ -1523,31 +1372,45 @@ object Streaming {
                             videoMinVotes: Int = 3,
                             compactEvery: Int = 16)
                            (sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val typed = batch
-            .select(col("doc_id"), col("blob"))
-            .withColumn("__mod",
-              graft.operators.Multimodal.modalityUdf(col("blob")))
-            .localCheckpoint(false)
-          def slice(m: String): DataFrame =
-            typed.where(col("__mod") === m).select(col("doc_id"), col("blob"))
-          val admitted = imageAdmitBatch(slice("image"), s"$path/image",
-              batchId, bands, maxHamming, agreeBands, compactEvery)
-            .unionByName(audioAdmitBatch(slice("audio"), s"$path/audio",
-              batchId, windowSamples, hop, audioMaxBytes, maxDt, fanout,
-              audioMinVotes, compactEvery, keyPeaks))
-            .unionByName(videoAdmitBatch(slice("video"), s"$path/video",
-              batchId, maxFrames, videoMaxBytes, videoMinVotes, compactEvery))
-            .unionByName(typed.where(col("__mod") === "none")
-              .select(col("doc_id")))
-          sink(batch.join(admitted, Seq("doc_id"), "left_semi"))
-        }
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val (typed, families) = mediaAdmitBatch(batch, path, batchId, bands,
+        maxHamming, agreeBands, windowSamples, hop, audioMaxBytes, maxDt,
+        fanout, audioMinVotes, keyPeaks, maxFrames, videoMaxBytes,
+        videoMinVotes, compactEvery)
+      val admitted = families.unionByName(
+        typed.where(col("__mod") === "none").select(col("doc_id")))
+      sink(batch.join(admitted, Seq("doc_id"), "left_semi"))
+    }
+
+  /** One micro-batch of the media dispatch shared by
+    * [[streamMediaDedupAdmit]] and [[streamCurateMultimodal]]: tags each
+    * `(doc_id, blob)` with its `__mod` family (`image`, `audio`, `video`,
+    * or `none` for a null blob) and runs each family's slice through its
+    * standalone gate's per-batch function against `root/{image,audio,
+    * video}` state. Returns the tagged rows and the union of the three
+    * families' admitted doc ids (`none` rows are the caller's call). */
+  private def mediaAdmitBatch(batch: DataFrame, root: String, batchId: Long,
+                              bands: Int, maxHamming: Int, agreeBands: Int,
+                              windowSamples: Int, hop: Int,
+                              audioMaxBytes: Int, maxDt: Int, fanout: Int,
+                              audioMinVotes: Int, keyPeaks: Int,
+                              maxFrames: Int, videoMaxBytes: Int,
+                              videoMinVotes: Int,
+                              compactEvery: Int): (DataFrame, DataFrame) = {
+    val typed = batch
+      .select(col("doc_id"), col("blob"))
+      .withColumn("__mod", Multimodal.modalityUdf(col("blob")))
+      .localCheckpoint(false)
+    def slice(m: String): DataFrame =
+      typed.where(col("__mod") === m).select(col("doc_id"), col("blob"))
+    (typed, imageAdmitBatch(slice("image"), s"$root/image",
+        batchId, bands, maxHamming, agreeBands, compactEvery)
+      .unionByName(audioAdmitBatch(slice("audio"), s"$root/audio",
+        batchId, windowSamples, hop, audioMaxBytes, maxDt, fanout,
+        audioMinVotes, compactEvery, keyPeaks))
+      .unionByName(videoAdmitBatch(slice("video"), s"$root/video",
+        batchId, maxFrames, videoMaxBytes, videoMinVotes, compactEvery)))
+  }
 
   /** Streaming SEMANTIC (embedding-space) admission gate — the continuous
     * twin of [[graft.operators.Dedup.semanticDedup]], completing the gate
@@ -1570,47 +1433,56 @@ object Streaming {
     *
     * State: (cell, embedding) per DISTINCT seen embedding — dim floats
     * per row, cell-keyed so the cross-batch check is the same
-    * co-partitioned equi-join as the batch operator; per-batch overwrite
-    * dirs read STRICTLY BELOW the current batch id (the [[streamCurate]]
-    * replay discipline — a replayed batch can never self-match) with
-    * periodic compaction. */
+    * co-partitioned equi-join as the batch operator; kept in the
+    * batch-state store ([[appendBatchState]]), whose strictly-below reads
+    * keep a replayed batch from self-matching. */
   def streamSemanticDedupAdmit(vecs: DataFrame, cents: Seq[Seq[Double]],
                                path: String, checkpointDir: String,
                                tau: Double = 0.4, compactEvery: Int = 16)
                               (sink: DataFrame => Unit): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import graft.functions.VectorFunctions.cosine_sim
-          val assigned = graft.operators.Ann.assignCells(
-              batch.select(col("vec_id"), col("embedding")), cents)
-            .select(col("vec_id"), col("embedding"),
-              col("cell").cast("bigint").as("cell"))
-            .localCheckpoint(false)
-          val inHit = assigned.as("a").join(assigned.as("b"),
-              col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-            .where(round(cosine_sim(col("a.embedding"), col("b.embedding")), 6) >= tau)
-            .select(col("b.vec_id").as("vec_id")).distinct()
-          val crossHit = readBatchState(spark, s"$path/_vecs", batchId) match {
-            case Some(state) =>
-              assigned.join(state.withColumnRenamed("embedding", "__sv"), Seq("cell"))
-                .where(round(cosine_sim(col("embedding"), col("__sv")), 6) >= tau)
-                .select(col("vec_id")).distinct()
-            case None => assigned.select(col("vec_id")).limit(0)
-          }
-          val admitted = assigned.select(col("vec_id"))
-            .join(inHit, Seq("vec_id"), "left_anti")
-            .join(crossHit, Seq("vec_id"), "left_anti")
-          sink(batch.join(admitted, Seq("vec_id"), "left_semi"))
-          assigned.select(col("cell"), col("embedding")).distinct()
-            .write.mode("overwrite").parquet(f"$path/_vecs/b$batchId%020d")
-          compactBatchState(spark, s"$path/_vecs", batchId, compactEvery)
-        }
-      }
-      .start()
+    eachBatch(vecs, checkpointDir) { (batch, batchId) =>
+      semanticAdmitBatch(batch, batchId, cents, s"$path/_vecs", tau,
+        compactEvery, "embedding", col("embedding"), identity)(sink)
+    }
+
+  /** One micro-batch of the semantic gates ([[streamSemanticDedupAdmit]],
+    * [[streamSemanticDedupAdmitPq]]): cell assignment against the fixed
+    * `cents`, the in-batch hit (a lower-id same-cell vector at cosine ≥
+    * `tau`), the cross-batch hit against the state under `stateRoot`,
+    * the sink, then this batch's state append. The gates differ only in
+    * the stored row encoding — `encode` (over the assigned rows' columns)
+    * stored as `stateCol` — and `decode`, which turns a stored value back
+    * into the vector the cross-batch cosine reads. */
+  private def semanticAdmitBatch(batch: DataFrame, batchId: Long,
+                                 cents: Seq[Seq[Double]], stateRoot: String,
+                                 tau: Double, compactEvery: Int,
+                                 stateCol: String, encode: Column,
+                                 decode: Column => Column)
+                                (sink: DataFrame => Unit): Unit = {
+    import graft.functions.VectorFunctions.cosine_sim
+    val assigned = graft.operators.Ann.assignCells(
+        batch.select(col("vec_id"), col("embedding")), cents)
+      .select(col("vec_id"), col("embedding"),
+        col("cell").cast("bigint").as("cell"))
+      .localCheckpoint(false)
+    val inHit = assigned.as("a").join(assigned.as("b"),
+        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
+      .where(round(cosine_sim(col("a.embedding"), col("b.embedding")), 6) >= tau)
+      .select(col("b.vec_id").as("vec_id")).distinct()
+    val crossHit = readBatchState(batch.sparkSession, stateRoot, batchId) match {
+      case Some(state) =>
+        assigned.join(state.withColumnRenamed(stateCol, "__sv"), Seq("cell"))
+          .where(round(cosine_sim(col("embedding"), decode(col("__sv"))), 6) >= tau)
+          .select(col("vec_id")).distinct()
+      case None => assigned.select(col("vec_id")).limit(0)
+    }
+    val admitted = assigned.select(col("vec_id"))
+      .join(inHit, Seq("vec_id"), "left_anti")
+      .join(crossHit, Seq("vec_id"), "left_anti")
+    sink(batch.join(admitted, Seq("vec_id"), "left_semi"))
+    appendBatchState(assigned.select(col("cell"), encode.as(stateCol)).distinct(),
+      stateRoot, batchId, compactEvery)
+  }
 
   /** [[streamSemanticDedupAdmit]] with PQ-CODED state — the 100 TB
     * posture for the gate's one structural cost: the raw gate's contract
@@ -1653,80 +1525,47 @@ object Streaming {
     * re-flagging mid-stream would re-quantize nothing (history keeps
     * its codes) and silently misread state instead.
     *
-    * StreamingSpec pins: replay identity (strict-below reads, per-batch
-    * overwrite dirs), the measured admission agreement vs the raw gate
+    * StreamingSpec pins: replay identity ([[appendBatchState]]), the
+    * measured admission agreement vs the raw gate
     * on the real embeddings table, and the state-width cut. */
   def streamSemanticDedupAdmitPq(vecs: DataFrame, cents: Seq[Seq[Double]],
                                  codebook: Seq[Seq[Seq[Double]]],
                                  path: String, checkpointDir: String,
                                  tau: Double = 0.4, compactEvery: Int = 16,
                                  residual: Boolean = false)
-                                (sink: DataFrame => Unit): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import graft.functions.VectorFunctions.cosine_sim
-          import org.apache.spark.sql.graft.Bridge
-          // code-GEOMETRY guard (r17; the r16 trainPqCodebook default
-          // change m=8/kCodes=16 → 16/256 made this reachable): stored
-          // codes are M longs over a kCodes alphabet with no self-
-          // describing header, so a resume whose caller re-trained the
-          // codebook under different (m, kCodes, residual) would silently
-          // MISREAD every code already in state — admission verdicts
-          // corrupt, no error. The geometry is recorded beside the state
-          // on the first batch and validated on every subsequent one;
-          // a mismatch is an orchestration error to surface, not paper
-          // over (the index-registry definition-conflict posture).
-          validatePqGeometry(spark, s"$path/_codes_geom",
-            codebook.length, codebook.head.length, residual)
-          // residual = true: codes span v − centroid(cell) (the IVF-PQ
-          // layout — train with Ann.trainResidualPqCodebook), decode adds
-          // the centroid back before the cosine. State schema is identical
-          // either way; like `cents` and the codebook, the flag is
-          // STREAM-CONSTANT — flipping it mid-stream would misread every
-          // code already in state.
-          val cellCent = element_at(typedLit(cents), col("cell").cast("int"))
-          val assigned = graft.operators.Ann.assignCells(
-              batch.select(col("vec_id"), col("embedding")), cents)
-            .select(col("vec_id"), col("embedding"),
-              col("cell").cast("bigint").as("cell"))
-            .localCheckpoint(false)
-          val inHit = assigned.as("a").join(assigned.as("b"),
-              col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-            .where(round(cosine_sim(col("a.embedding"), col("b.embedding")), 6) >= tau)
-            .select(col("b.vec_id").as("vec_id")).distinct()
-          val crossHit = readBatchState(spark, s"$path/_codes", batchId) match {
-            case Some(state) =>
-              val decoded0 = Bridge.column(graft.functions.PqDecode(
-                Bridge.expression(col("__code")), codebook))
-              val decoded =
-                if (residual) zip_with(decoded0, cellCent, (x, y) => x + y)
-                else decoded0
-              assigned.join(state.withColumnRenamed("code", "__code"), Seq("cell"))
-                .where(round(cosine_sim(col("embedding"), decoded), 6) >= tau)
-                .select(col("vec_id")).distinct()
-            case None => assigned.select(col("vec_id")).limit(0)
-          }
-          val admitted = assigned.select(col("vec_id"))
-            .join(inHit, Seq("vec_id"), "left_anti")
-            .join(crossHit, Seq("vec_id"), "left_anti")
-          sink(batch.join(admitted, Seq("vec_id"), "left_semi"))
-          val toCode =
-            if (residual) zip_with(col("embedding").cast("array<double>"),
-              cellCent, (x, y) => x - y)
-            else col("embedding").cast("array<double>")
-          assigned.select(col("cell"),
-              Bridge.column(graft.functions.PqCodes(
-                Bridge.expression(toCode), codebook)).as("code"))
-            .distinct()
-            .write.mode("overwrite").parquet(f"$path/_codes/b$batchId%020d")
-          compactBatchState(spark, s"$path/_codes", batchId, compactEvery)
-        }
-      }
-      .start()
+                                (sink: DataFrame => Unit): StreamingQuery = {
+    import org.apache.spark.sql.graft.Bridge
+    // residual = true: codes span v − centroid(cell) (the IVF-PQ
+    // layout — train with Ann.trainResidualPqCodebook), decode adds
+    // the centroid back before the cosine. State schema is identical
+    // either way; like `cents` and the codebook, the flag is
+    // STREAM-CONSTANT — flipping it mid-stream would misread every
+    // code already in state.
+    val cellCent = element_at(typedLit(cents), col("cell").cast("int"))
+    val raw = col("embedding").cast("array<double>")
+    val code = Bridge.column(graft.functions.PqCodes(Bridge.expression(
+      if (residual) zip_with(raw, cellCent, (x, y) => x - y) else raw), codebook))
+    def decode(c: Column): Column = {
+      val d = Bridge.column(graft.functions.PqDecode(Bridge.expression(c), codebook))
+      if (residual) zip_with(d, cellCent, (x, y) => x + y) else d
+    }
+    eachBatch(vecs, checkpointDir) { (batch, batchId) =>
+      // code-GEOMETRY guard (r17; the r16 trainPqCodebook default
+      // change m=8/kCodes=16 → 16/256 made this reachable): stored
+      // codes are M longs over a kCodes alphabet with no self-
+      // describing header, so a resume whose caller re-trained the
+      // codebook under different (m, kCodes, residual) would silently
+      // MISREAD every code already in state — admission verdicts
+      // corrupt, no error. The geometry is recorded beside the state
+      // on the first batch and validated on every subsequent one;
+      // a mismatch is an orchestration error to surface, not paper
+      // over (the index-registry definition-conflict posture).
+      validatePqGeometry(batch.sparkSession, s"$path/_codes_geom",
+        codebook.length, codebook.head.length, residual)
+      semanticAdmitBatch(batch, batchId, cents, s"$path/_codes", tau,
+        compactEvery, "code", code, decode)(sink)
+    }
+  }
 
   /** Streaming BITEXT-MINING sink — the continuous twin of
     * [[graft.operators.Bitext.minePairsIncrementalIndexed]], closing the
@@ -1752,42 +1591,29 @@ object Streaming {
                        path: String, checkpointDir: String,
                        k: Int = 4, tau: Double = 1.0, nCells: Int = 8,
                        nProbe: Int = 8,
-                       policy: graft.core.IndexPolicy = graft.core.IndexPolicy.FailIfMissing): StreamingQuery =
-    srcs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Bitext.minePairsIncrementalIndexed(spark, dir,
-              batch, k, tau, nCells, nProbe, policy)
-            .write.mode("overwrite").parquet(f"$path/b$batchId%020d")
-        }
-      }
-      .start()
+                       policy: IndexPolicy = IndexPolicy.FailIfMissing): StreamingQuery =
+    eachBatch(srcs, checkpointDir) { (batch, batchId) =>
+      graft.operators.Bitext.minePairsIncrementalIndexed(spark, dir,
+          batch, k, tau, nCells, nProbe, policy)
+        .write.mode("overwrite").parquet(batchDir(path, batchId))
+    }
 
   /** All committed batches of a [[streamBitextMine]] run as one mined-pair
-    * table (the [[readCurate]] committed-dir union). */
+    * table ([[readCommittedBatches]]). */
   def readMinedPairs(spark: SparkSession, path: String): Option[DataFrame] =
-    readCurate(spark, path)
+    readCommittedBatches(spark, path)
 
-  /** All batches of a [[streamCurate]] run as one decision frame. */
-  def readCurate(spark: SparkSession, path: String): Option[DataFrame] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return None
-    val dirs = fs.listStatus(root).toSeq.map(_.getPath)
-      .filter(p => p.getName.startsWith("b") && fs.exists(new Path(p, "_SUCCESS")))
-      .sortBy(_.getName)
-    if (dirs.isEmpty) None
-    else Some(dirs.map(p => spark.read.parquet(p.toString)).reduce(_ unionByName _))
-  }
+  /** All batches of a [[streamCurate]] run as one decision frame
+    * ([[readCommittedBatches]]). */
+  def readCurate(spark: SparkSession, path: String): Option[DataFrame] =
+    readCommittedBatches(spark, path)
 
-  /** Accumulated per-batch state (signatures, fingerprints): the latest
-    * committed consolidated `c<id>` dir (see [[compactBatchState]]) plus
-    * every committed `b<id>` dir above it — all with id STRICTLY BELOW
-    * `batchId` (replay safety — see [[streamCurate]]). A `b` dir already
-    * covered by the chosen `c` dir is ignored even if its cleanup delete
-    * never ran, so compaction is crash-safe at any interleaving. */
+  /** All batches of a [[streamShardExport]] run as one DataFrame, the
+    * shard column restored from the partition dirs
+    * ([[readCommittedBatches]]). */
+  def readShardExport(spark: SparkSession, path: String): Option[DataFrame] =
+    readCommittedBatches(spark, path)
+
   /** Record-once / validate-always guard for PQ code geometry: the gate's
     * persisted codes carry no header, so the codebook shape that wrote
     * them must be the shape that reads them. Writes `(m, k_codes,
@@ -1796,9 +1622,7 @@ object Streaming {
   private def validatePqGeometry(spark: SparkSession, geomPath: String,
                                  m: Int, kCodes: Int, residual: Boolean): Unit = {
     import spark.implicits._
-    val root = new Path(geomPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(new Path(root, "_SUCCESS"))) {
+    if (isCommitted(fsOf(spark, geomPath), new Path(geomPath))) {
       val r = spark.read.parquet(geomPath).head()
       val (sm, sk, sr) = (r.getInt(0), r.getInt(1), r.getBoolean(2))
       if (sm != m || sk != kCodes || sr != residual)
@@ -1813,32 +1637,99 @@ object Streaming {
         .coalesce(1).write.mode("overwrite").parquet(geomPath)
   }
 
-  private def readBatchState(spark: SparkSession, rootPath: String,
-                             batchId: Long): Option[DataFrame] = {
-    val root = new Path(rootPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return None
-    def idOf(p: Path): Long = p.getName.drop(1).toLong
-    val st = fs.listStatus(root).toSeq.map(_.getPath)
-      .filter(p => fs.exists(new Path(p, "_SUCCESS")))
-    val cBase = st.filter(p => p.getName.startsWith("c") && idOf(p) < batchId)
-      .sortBy(idOf).lastOption
-    val base = cBase.map(idOf).getOrElse(-1L)
-    val dirs = cBase.toSeq ++ st
-      .filter(p => p.getName.startsWith("b") && idOf(p) > base && idOf(p) < batchId)
-      .sortBy(idOf)
+  // ---------------------------------------------------------------------
+  // The batch-state store: the only code that knows the on-disk layout.
+  // ---------------------------------------------------------------------
+
+  /** Appends this micro-batch's state rows to the store under `root` —
+    * the one write path of every stateful gate here — then runs the
+    * [[compactBatchState]] schedule.
+    *
+    * Layout and replay discipline, shared by every sink in this file:
+    *  - each batch's rows land in their own `b<id>` dir written with
+    *    OVERWRITE, so a replayed batch replaces its failed attempt's rows
+    *    instead of appending beside them;
+    *  - a dir exists for readers only once its `_SUCCESS` marker does;
+    *  - reads ([[readBatchState]]) take only ids STRICTLY BELOW the
+    *    current batch, so a replayed batch never sees (self-matches
+    *    against, or double-counts) its own failed attempt's rows;
+    *  - every `compactEvery` batches the `b` dirs fold into one `c<id>`
+    *    dir, which supersedes every `b` dir at or below its id;
+    *  - small versioned state (reservoir, HLL registers, running token
+    *    counts) is one `v<id>` dir per commit plus a `_latest` marker
+    *    swapped last ([[commitVersion]]).
+    * Per-batch OUTPUT dirs (decision frames, shard files, mined pairs)
+    * use the same `b<id>` + `_SUCCESS` layout without compaction, read
+    * back with [[readCommittedBatches]]. Ids are zero-padded to 20 digits
+    * so name order is id order. */
+  private def appendBatchState(df: DataFrame, root: String, batchId: Long,
+                               compactEvery: Int): Unit = {
+    df.write.mode("overwrite").parquet(batchDir(root, batchId))
+    compactBatchState(df.sparkSession, root, batchId, compactEvery)
+  }
+
+  private def dirName(kind: Char, id: Long): String = f"$kind$id%020d"
+
+  /** The `b<batchId>` dir under `root`: a batch's state or output. */
+  private def batchDir(root: String, batchId: Long): String =
+    s"$root/${dirName('b', batchId)}"
+
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+
+  private def isCommitted(fs: FileSystem, dir: Path): Boolean =
+    fs.exists(new Path(dir, "_SUCCESS"))
+
+  private final case class StateDir(kind: Char, id: Long, path: Path)
+
+  /** The committed dirs under `root` whose kind letter is in `kinds`,
+    * ascending by id; empty when `root` does not exist. */
+  private def committed(spark: SparkSession, root: String,
+                        kinds: String): Seq[StateDir] = {
+    val fs = fsOf(spark, root)
+    val r = new Path(root)
+    if (!fs.exists(r)) Nil
+    else fs.listStatus(r).toSeq.map(_.getPath)
+      .filter(p => kinds.contains(p.getName.head) && isCommitted(fs, p))
+      .map(p => StateDir(p.getName.head, p.getName.drop(1).toLong, p))
+      .sortBy(_.id)
+  }
+
+  /** The state visible below `batchId`: the latest committed `c` dir
+    * with id < `batchId`, and the committed `b` dirs above it and below
+    * `batchId`. A `b` dir the `c` dir covers is skipped even if its
+    * cleanup delete never ran. */
+  private def stateBelow(spark: SparkSession, root: String,
+                         batchId: Long): (Option[StateDir], Seq[StateDir]) = {
+    val dirs = committed(spark, root, "bc").filter(_.id < batchId)
+    val base = dirs.filter(_.kind == 'c').lastOption
+    val above = base.fold(-1L)(_.id)
+    (base, dirs.filter(d => d.kind == 'b' && d.id > above))
+  }
+
+  private def unionOf(spark: SparkSession, dirs: Seq[StateDir]): DataFrame =
+    dirs.map(d => spark.read.parquet(d.path.toString)).reduce(_ unionByName _)
+
+  /** Accumulated per-batch state (signatures, fingerprints, stats) under
+    * `rootPath`: the latest committed `c<id>` dir plus every committed
+    * `b<id>` dir above it — all with id STRICTLY BELOW `batchId`, the
+    * replay discipline of [[appendBatchState]]. None before any state. */
+  private[streaming] def readBatchState(spark: SparkSession, rootPath: String,
+                                        batchId: Long): Option[DataFrame] = {
+    val (base, bDirs) = stateBelow(spark, rootPath, batchId)
+    val dirs = base.toSeq ++ bDirs
     if (dirs.isEmpty) None
-    else Some(dirs.map(p => spark.read.parquet(p.toString)).reduce(_ unionByName _)
-      .coalesce(spark.sparkContext.defaultParallelism))
+    else Some(unionOf(spark, dirs).coalesce(spark.sparkContext.defaultParallelism))
   }
 
   /** Fold the committed `b<id>` state dirs with id STRICTLY BELOW
-    * `batchId` into one consolidated `c<maxCoveredId>` dir once more than
-    * `every` of them sit above the previous consolidation. Without this a
-    * long-running stream's state read grows O(B) dirs per batch (O(B²)
-    * driver listings and parquet-read fan-ins over a run) even though the
-    * per-row state is signature-sized. Rows are preserved verbatim (plain
-    * union — admission decisions are replay-identical before/after).
+    * `batchId` into one consolidated `c<maxCoveredId>` dir once `every`
+    * of them sit above the previous consolidation; `every <= 0` never
+    * compacts. Without this a long-running stream's state read grows
+    * O(B) dirs per batch (O(B²) driver listings and parquet-read fan-ins
+    * over a run) even though the per-row state is signature-sized. Rows
+    * are preserved verbatim (plain union — admission decisions are
+    * replay-identical before/after).
     *
     * Crash safety: the new `c` dir becomes visible only with its
     * `_SUCCESS`; [[readBatchState]] ignores dirs the latest `c` covers, so
@@ -1846,42 +1737,29 @@ object Streaming {
     * a readable, non-duplicating state set. The current batch's own dir is
     * never compacted (id < batchId) — a replayed batch still cannot see
     * its failed attempt's state. */
-  private def compactBatchState(spark: SparkSession, rootPath: String,
-                                batchId: Long, every: Int): Unit = {
-    if (every <= 0) return
-    val root = new Path(rootPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return
-    def idOf(p: Path): Long = p.getName.drop(1).toLong
-    val st = fs.listStatus(root).toSeq.map(_.getPath)
-      .filter(p => fs.exists(new Path(p, "_SUCCESS")))
-    val cBase = st.filter(p => p.getName.startsWith("c") && idOf(p) < batchId)
-      .sortBy(idOf).lastOption
-    val base = cBase.map(idOf).getOrElse(-1L)
-    val bDirs = st
-      .filter(p => p.getName.startsWith("b") && idOf(p) > base && idOf(p) < batchId)
-      .sortBy(idOf)
-    if (bDirs.size < every) return
-    val maxId = idOf(bDirs.last)
-    (cBase.toSeq ++ bDirs).map(p => spark.read.parquet(p.toString))
-      .reduce(_ unionByName _)
-      .coalesce(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").parquet(f"$rootPath/c$maxId%020d")
-    (cBase.toSeq ++ bDirs).foreach(p => fs.delete(p, true))
-  }
+  private[streaming] def compactBatchState(spark: SparkSession, rootPath: String,
+                                           batchId: Long, every: Int): Unit =
+    if (every > 0) {
+      val (base, bDirs) = stateBelow(spark, rootPath, batchId)
+      if (bDirs.size >= every) {
+        val dirs = base.toSeq ++ bDirs
+        unionOf(spark, dirs)
+          .coalesce(spark.sparkContext.defaultParallelism)
+          .write.mode("overwrite")
+          .parquet(s"$rootPath/${dirName('c', bDirs.last.id)}")
+        val fs = fsOf(spark, rootPath)
+        dirs.foreach(d => fs.delete(d.path, true))
+      }
+    }
 
-  /** All batches of a [[streamShardExport]] run as one DataFrame (shard
-    * column restored from the partition dirs). Batch-count-bounded driver
-    * listing; each batch dir reads as its own parquet root. */
-  def readShardExport(spark: SparkSession, path: String): Option[DataFrame] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return None
-    val dirs = fs.listStatus(root).toSeq.map(_.getPath)
-      .filter(p => p.getName.startsWith("b") && fs.exists(new Path(p, "_SUCCESS")))
-      .sortBy(_.getName)
-    if (dirs.isEmpty) None
-    else Some(dirs.map(p => spark.read.parquet(p.toString)).reduce(_ unionByName _))
+  /** Every committed `b<id>` dir under `path` — the per-batch output of
+    * [[streamCurate]], [[streamShardExport]] or [[streamBitextMine]] — as
+    * one DataFrame in batch order (each dir reads as its own parquet
+    * root); None before the first committed batch. */
+  private def readCommittedBatches(spark: SparkSession,
+                                   path: String): Option[DataFrame] = {
+    val dirs = committed(spark, path, "b")
+    if (dirs.isEmpty) None else Some(unionOf(spark, dirs))
   }
 
   /** Highest committed version STRICTLY BELOW `batchId` — the replay-safe
@@ -1889,37 +1767,26 @@ object Streaming {
     * not observe the total its own failed attempt committed; contrast the
     * reservoir/HLL sinks, whose merges are idempotent and read latest). */
   private def readVersionBelow(spark: SparkSession, rootPath: String,
-                               batchId: Long): Option[DataFrame] = {
-    val root = new Path(rootPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return None
-    val cutoff = f"v$batchId%020d"
-    fs.listStatus(root).toSeq.map(_.getPath)
-      .filter(p => p.getName.startsWith("v") && p.getName < cutoff &&
-        fs.exists(new Path(p, "_SUCCESS")))
-      .sortBy(_.getName).lastOption
-      .map(p => spark.read.parquet(p.toString))
-  }
+                               batchId: Long): Option[DataFrame] =
+    committed(spark, rootPath, "v").filter(_.id < batchId).lastOption
+      .map(d => spark.read.parquet(d.path.toString))
 
   /** Written-last version-swap read side, shared by every versioned
-    * small-state store here (reservoir, HLL registers). */
+    * small-state store here (reservoir, HLL registers): the `_latest`
+    * marker's version, else the highest committed `v` dir. */
   private def readLatestVersion(spark: SparkSession, rootPath: String): Option[DataFrame] = {
     val root = new Path(rootPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fsOf(spark, rootPath)
     if (!fs.exists(root)) return None
     val marker = new Path(root, "_latest")
     val fromMarker =
       if (fs.exists(marker)) {
         val in = fs.open(marker)
         val v = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-        Some(new Path(root, v)).filter(p => fs.exists(new Path(p, "_SUCCESS")))
+        Some(new Path(root, v)).filter(isCommitted(fs, _))
       } else None
-    val chosen = fromMarker.orElse {
-      fs.listStatus(root).toSeq.map(_.getPath)
-        .filter(p => p.getName.startsWith("v") && fs.exists(new Path(p, "_SUCCESS")))
-        .sortBy(_.getName).lastOption
-    }
-    chosen.map(p => spark.read.parquet(p.toString))
+    fromMarker.orElse(committed(spark, rootPath, "v").lastOption.map(_.path))
+      .map(p => spark.read.parquet(p.toString))
   }
 
   /** Written-last version-swap commit: parquet the version dir, then swap
@@ -1937,10 +1804,9 @@ object Streaming {
     * delete failure never fails the batch — the next commit retries. */
   private def commitVersion(df: DataFrame, rootPath: String, batchId: Long,
                             retain: Int = 1): Unit = {
-    val spark = df.sparkSession
-    val vdir = f"v$batchId%020d"
+    val vdir = dirName('v', batchId)
     df.repartition(1).write.mode("overwrite").parquet(s"$rootPath/$vdir")
-    val fs = new Path(rootPath).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fsOf(df.sparkSession, rootPath)
     val tmp = new Path(rootPath, "_latest.tmp")
     val out = fs.create(tmp, true)
     out.write(vdir.getBytes("UTF-8")); out.close()
@@ -1972,30 +1838,24 @@ object Streaming {
   def streamDistinctMonitor(docs: DataFrame, registersPath: String,
                             checkpointDir: String, p: Int = 10,
                             retainVersions: Int = 1): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val T = graft.operators.TextAnalysis
-          val tok = T.lowerTok(batch).select(col("w"))
-          val prior = readLatestVersion(spark, registersPath)
-            .map { df => requireSameP(df, p, registersPath); df.select(col("bucket"), col("reg")) }
-            .getOrElse(Seq.empty[(Long, Long)].toDF("bucket", "reg"))
-          val merged = T.hllRegisters(tok, p).unionByName(prior)
-            .groupBy(col("bucket")).agg(max(col("reg")).as("reg"))
-          // bounded: <= 2^p rows by construction
-          val rows = merged.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-          // p is persisted WITH the registers: an estimate over registers
-          // built at a different precision is silently wrong, so readers
-          // check it instead of trusting their default
-          commitVersion(rows.toDF("bucket", "reg")
-            .withColumn("p", lit(p)), registersPath, batchId, retainVersions)
-        }
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val T = graft.operators.TextAnalysis
+      val tok = T.lowerTok(batch).select(col("w"))
+      val prior = readLatestVersion(spark, registersPath)
+        .map { df => requireSameP(df, p, registersPath); df.select(col("bucket"), col("reg")) }
+        .getOrElse(Seq.empty[(Long, Long)].toDF("bucket", "reg"))
+      val merged = T.hllRegisters(tok, p).unionByName(prior)
+        .groupBy(col("bucket")).agg(max(col("reg")).as("reg"))
+      // bounded: <= 2^p rows by construction
+      val rows = merged.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      // p is persisted WITH the registers: an estimate over registers
+      // built at a different precision is silently wrong, so readers
+      // check it instead of trusting their default
+      commitVersion(rows.toDF("bucket", "reg")
+        .withColumn("p", lit(p)), registersPath, batchId, retainVersions)
+    }
 
   /** The monitor's current 6-dp distinct estimate, or None before the
     * first committed batch. The stored precision must match `p` — a
@@ -2029,16 +1889,10 @@ object Streaming {
     * duplicate-id validation provides. */
   def streamIngest(db: GraftDatabase, collectionId: String, chunks: DataFrame,
                    embedderId: String, checkpointDir: String): StreamingQuery =
-    chunks.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          db.addRecords(collectionId,
-            Ingest.makeRecords(batch.sparkSession, batch, embedderId))
-        }
-      }
-      .start()
+    eachBatch(chunks, checkpointDir) { (batch, _) =>
+      db.addRecords(collectionId,
+        Ingest.makeRecords(batch.sparkSession, batch, embedderId))
+    }
 
   /** Continuous IVF index maintenance: assign each streamed embedding to
     * its nearest FROZEN centroid (the exact assignment expression the

@@ -17,6 +17,20 @@ class StreamingSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** Commit-crash image: deletes the checkpoint's commit marker for batch
+    * `n` (its offsets entry survives, so a restart replays batch `n`) and
+    * returns the marker's path. The local FS writes the marker and its
+    * checksum sidecar atomically (rename) — a crash loses both, so the
+    * faithful image removes the sidecar too (a stale .crc would fail the
+    * re-write and masquerade as a concurrent-query error). */
+  private def dropCommit(ckpt: String, n: Int): java.nio.file.Path = {
+    val commit = java.nio.file.Paths.get(ckpt, "commits", n.toString)
+    assert(Files.exists(commit), s"expected checkpoint commit marker commits/$n")
+    Files.delete(commit)
+    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", s".$n.crc"))
+    commit
+  }
+
   test("narrow pipeline operators run unchanged over a stream (PII scan)") {
     // Pii.scan is pure narrow codegen expressions, so the SAME operator
     // runs per micro-batch with no streaming-specific code — the
@@ -250,10 +264,7 @@ class StreamingSpec extends SparkSpec {
     // crash image: batch 1's files + state are durable, checkpoint commit
     // marker is not — the restart replays batch 1; the strict-predecessor
     // state read + per-batch overwrite must reproduce identical files
-    val commit1 = java.nio.file.Paths.get(ckpt, "commits", "1")
-    assert(Files.exists(commit1), "expected checkpoint commit marker commits/1")
-    Files.delete(commit1)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    dropCommit(ckpt, 1)
     runToCompletion(Streaming.streamShardExport(
       mem.toDF().toDF("doc_id", "text"), path, ckpt, tokensPerShard = 9L))
     assert(exported() == expect)
@@ -302,10 +313,7 @@ class StreamingSpec extends SparkSpec {
     // durable, the checkpoint commit marker is not — the restart replays
     // batch 1; strict-predecessor state reads + per-batch overwrites must
     // reproduce byte-identical decisions (no self-match, no double count)
-    val commit1 = java.nio.file.Paths.get(ckpt, "commits", "1")
-    assert(Files.exists(commit1), "expected checkpoint commit marker commits/1")
-    Files.delete(commit1)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    dropCommit(ckpt, 1)
     run()
     assert(streamed() == batchFrame)
   }
@@ -479,10 +487,7 @@ class StreamingSpec extends SparkSpec {
     // family media states are durable, the commit marker is not — the
     // replay must reproduce byte-identical decisions (strict-below reads
     // keep a replayed batch from self-matching in ANY family's state)
-    val commit1 = java.nio.file.Paths.get(ckpt, "commits", "1")
-    assert(Files.exists(commit1), "expected checkpoint commit marker commits/1")
-    Files.delete(commit1)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    dropCommit(ckpt, 1)
     run()
     assert(streamed() == batchFrame)
   }
@@ -696,10 +701,7 @@ class StreamingSpec extends SparkSpec {
     // commit-crash replay of batch 1: strict-below state read + per-batch
     // overwrite ⇒ the replayed batch re-admits the same rows, state is
     // byte-identical, and batch 2 was never re-delivered
-    val commit1 = java.nio.file.Paths.get(ckpt, "commits", "1")
-    assert(Files.exists(commit1), "expected checkpoint commit marker commits/1")
-    Files.delete(commit1)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    dropCommit(ckpt, 1)
     admitted.clear()
     run()
     assert(admitted.toSet.subsetOf(Set(2L, 3L, 5L)) || admitted.toSet == Set.empty,
@@ -773,10 +775,7 @@ class StreamingSpec extends SparkSpec {
     assert(admitted.size == admitted.toSet.size)
 
     // commit-crash replay of batch 2: strict-below state reads ⇒ identical
-    val commit1 = java.nio.file.Paths.get(ckpt, "commits", "1")
-    assert(Files.exists(commit1), "expected checkpoint commit marker commits/1")
-    Files.delete(commit1)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    dropCommit(ckpt, 1)
     admitted.clear()
     run()
     assert(admitted.toSet == Set(6L), s"replay admissions drifted: $admitted")
@@ -828,10 +827,7 @@ class StreamingSpec extends SparkSpec {
     // commit-crash replay of the LAST batch, whose state reads now cross
     // the consolidated dir: decisions must stay byte-identical
     val last = chunks.length - 1
-    val commitLast = java.nio.file.Paths.get(ckpt, "commits", last.toString)
-    assert(Files.exists(commitLast), s"expected checkpoint commit marker commits/$last")
-    Files.delete(commitLast)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", s".$last.crc"))
+    dropCommit(ckpt, last)
     run()
     assert(streamed() == batchFrame)
   }
@@ -872,10 +868,7 @@ class StreamingSpec extends SparkSpec {
     // commit-crash replay of the last batch: strict-below state reads +
     // per-batch overwrite dirs ⇒ identical re-admissions, no drift
     val last = batches.length - 1
-    val commit = java.nio.file.Paths.get(ckpt, "commits", last.toString)
-    assert(Files.exists(commit), s"expected commit marker commits/$last")
-    Files.delete(commit)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", s".$last.crc"))
+    dropCommit(ckpt, last)
     val before = admitted.toSet
     admitted.clear(); run()
     val lastIds = batches(last).map(_._1).toSet
@@ -923,10 +916,7 @@ class StreamingSpec extends SparkSpec {
     assert(admitted.toSet == Set(13L, 14L),
       s"batch 2 must reject the re-cut (votes) AND the short re-mux (fp): $admitted")
     // commit-crash replay of batch 2: strict-below reads + overwrite dirs
-    val commit = java.nio.file.Paths.get(ckpt, "commits", "1")
-    assert(Files.exists(commit), "expected commit marker commits/1")
-    Files.delete(commit)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    dropCommit(ckpt, 1)
     admitted.clear(); run()
     assert(admitted.toSet == Set(13L, 14L), s"replay drifted: $admitted")
   }
@@ -978,10 +968,7 @@ class StreamingSpec extends SparkSpec {
     assert(admitted.toSet == Set(14L, 15L),
       s"batch 2 must reject each family's cross-batch dup and keep family state isolated: $admitted")
     // commit-crash replay of batch 2: strict-below reads + overwrite dirs
-    val commit = java.nio.file.Paths.get(ckpt, "commits", "1")
-    assert(Files.exists(commit), "expected commit marker commits/1")
-    Files.delete(commit)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    dropCommit(ckpt, 1)
     admitted.clear(); run()
     assert(admitted.toSet == Set(14L, 15L), s"replay drifted: $admitted")
   }
@@ -1038,10 +1025,7 @@ class StreamingSpec extends SparkSpec {
       s"extra=${streamed -- want} missing=${want -- streamed}")
     // commit-crash replay: stateless given the index ⇒ byte-identical dirs
     val last = batches.length - 1
-    val commit = java.nio.file.Paths.get(ckpt, "commits", last.toString)
-    assert(Files.exists(commit), s"expected commit marker commits/$last")
-    Files.delete(commit)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", s".$last.crc"))
+    dropCommit(ckpt, last)
     run()
     assert(pairs(Streaming.readMinedPairs(spark, path).get) == want,
       "replay changed the mined-pair table")
@@ -1096,10 +1080,7 @@ class StreamingSpec extends SparkSpec {
     assert(folded.collect().map(_.toSeq.toVector).toSeq ==
       S.sourceStats(corpus).collect().map(_.toSeq.toVector).toSeq)
     // commit-crash replay: decisions are pure given (state below, batch)
-    val commit1 = java.nio.file.Paths.get(ckpt, "commits", "1")
-    assert(Files.exists(commit1))
-    Files.delete(commit1)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    dropCommit(ckpt, 1)
     admitted.clear(); refused.clear(); run()
     assert(admitted.toSet == Set(4L, 5L, 21L, 22L) &&
       refused.toSet == Set((13L, "srcB"), (14L, "srcB"), (15L, "srcB")),
@@ -1157,10 +1138,7 @@ class StreamingSpec extends SparkSpec {
     assert(folded == S.sourceTokenStats(whole).orderBy(col("source"))
       .collect().map(_.toSeq.toVector).toSeq)
     // commit-crash replay: the draw is pure given (state below, batch)
-    val commit1 = java.nio.file.Paths.get(ckpt, "commits", "1")
-    assert(Files.exists(commit1))
-    Files.delete(commit1)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    dropCommit(ckpt, 1)
     drawn.clear(); run()
     assert(drawn.toSet == want2, "replayed batch re-draws byte-identically")
   }
@@ -1224,10 +1202,7 @@ class StreamingSpec extends SparkSpec {
     assert(folded == B.scoreHistogram(whole).collect().map(_.toSeq.toVector).toSeq,
       "accumulated state must equal the whole-corpus histogram byte-for-byte")
     // commit-crash replay: admission is pure given (state below, batch)
-    val commit1 = java.nio.file.Paths.get(ckpt, "commits", "1")
-    assert(Files.exists(commit1))
-    Files.delete(commit1)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    dropCommit(ckpt, 1)
     admitted.clear(); refused.clear(); run()
     assert(admitted.toSet == want2 &&
       refused.toSet == b2.map(_._1).toSet -- want2,
@@ -1285,10 +1260,7 @@ class StreamingSpec extends SparkSpec {
     assert(got.toSet ++ removed == whole,
       "streamed verdicts + close-removed must reassemble the batch diff")
     // commit-crash replay: verdicts are pure given (oldHashes, batch)
-    val commit1 = java.nio.file.Paths.get(ckpt, "commits", "1")
-    assert(Files.exists(commit1))
-    Files.delete(commit1)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    dropCommit(ckpt, 1)
     got.clear(); run()
     assert(got.toSet == whole -- removed -- got1,
       "replayed batch re-judges byte-identically")
@@ -1361,10 +1333,7 @@ class StreamingSpec extends SparkSpec {
 
     // (3) commit-crash replay identity: same discipline as the raw gate
     val last = batches.length - 1
-    val commit = java.nio.file.Paths.get(ckptPq, "commits", last.toString)
-    assert(Files.exists(commit), s"expected commit marker commits/$last")
-    Files.delete(commit)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckptPq, "commits", s".$last.crc"))
+    dropCommit(ckptPq, last)
     val before = admPq.toSet
     admPq.clear(); runPq()
     val lastIds = batches(last).map(_._1).toSet
@@ -1816,14 +1785,7 @@ class StreamingSpec extends SparkSpec {
     // Emulate exactly that by deleting commits/1 — offsets/1 survives, so
     // the restarted query replays batch 1's exact data through the sink,
     // and the idempotence claim has to carry the whole batch.
-    val commit1 = java.nio.file.Paths.get(ckpt, "commits", "1")
-    assert(Files.exists(commit1), "test setup: expected checkpoint commit marker commits/1")
-    Files.delete(commit1)
-    // the local FS writes the commit marker and its checksum sidecar
-    // atomically (rename) — a crash loses both, so the faithful image
-    // removes the sidecar too (a stale .crc would fail the re-write and
-    // masquerade as a concurrent-query error)
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    val commit1 = dropCommit(ckpt, 1)
 
     runToCompletion(Streaming.streamIngestDeduped(db, "live",
       mem.toDF().toDF("id", "chunk"), "local/hash-8", ckpt))
