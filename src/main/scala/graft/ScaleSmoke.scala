@@ -110,9 +110,7 @@ object ScaleSmoke {
     }
     // centroid lookup hoisted out of the timed block — it is a separate
     // driver-side point scan, not the operator under measurement
-    val cents = Tables.embeddings(spark, dir).where(col("vec_id") < 16)
-      .orderBy(col("vec_id")).select(col("embedding")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
+    val cents = graft.operators.Ann.seedCentroids(Tables.embeddings(spark, dir), 16)
     stage("ivf cell assignment") {
       graft.operators.Ann.assignCells(e, cents)
         .groupBy(col("cell")).agg(count(lit(1)))
@@ -698,9 +696,7 @@ object ScaleSmoke {
     if (only.forall(_.exists(p =>
         p.startsWith("semantic incr probe") || s"semantic incr probe c$nc".startsWith(p)))) {
       val cellsPath = s"${sys.props("java.io.tmpdir")}/graft-scale-semcells-$dirHash-$factor"
-      val pcents = e.where(col("vec_id") < nc).orderBy(col("vec_id"))
-        .select(col("embedding").cast("array<double>")).collect()
-        .map(_.getSeq[Double](0).toSeq).toSeq
+      val pcents = graft.operators.Ann.seedCentroids(e, nc)
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(cellsPath, "_SUCCESS")))
         graft.operators.Ann.assignCells(e.select(col("vec_id"), col("embedding")), pcents)
           .select(col("cell").cast("bigint").as("cell"), col("embedding"))

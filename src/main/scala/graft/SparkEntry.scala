@@ -670,11 +670,8 @@ object SparkEntry {
     "ann_range" -> ((s, dir) => Ann.annRange(s, dir, 0L, 0.2)),
     "ivf_topk_indexed" -> ((s, dir) => Ann.ivfTopkIndexed(s, dir, 0L, 10, 16, 4)),
     "ivf_train_step" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
       val e = Tables.embeddings(s, dir)
-      val cents = e.where(col("vec_id") < 16).orderBy(col("vec_id"))
-        .select(col("embedding")).collect().map(_.getSeq[Double](0).toSeq).toSeq
-      Ann.kmeansStep(e, cents)
+      Ann.kmeansStep(e, Ann.seedCentroids(e, 16))
     }),
     // full Lloyd training + trained-index probe: with tol = 0 the loop
     // exits only at a 9-dp fixpoint, so the fixed-depth unrolled oracle

@@ -440,29 +440,10 @@ final class GraftDatabase(val spark: SparkSession, val basePath: String) {
   // driver-side metadata in a manifest, immutable versioned data dirs,
   // copy-on-write rebuilds. See [[IndexMeta]]/[[IndexPolicy]].
 
-  /** Content fingerprint of an index source: md5 over the sorted recursive
-    * (relative path, length) listing of its parquet files. Detects appends,
-    * rewrites, and version swaps without reading data — a driver-side
-    * metadata operation even at 100 TB (file listings, not file contents;
-    * the same staleness currency [[compact]]/[[deleteRecord]] use). */
-  def sourceFingerprint(sourcePath: String): String = {
-    val hp = new HPath(sourcePath)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(hp))
-      throw new GraftException(s"Index source $sourcePath does not exist")
-    val base = fs.getFileStatus(hp).getPath.toString // scheme-qualified
-    val it = fs.listFiles(hp, true)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val s = it.next()
-      val p = s.getPath.toString
-      if (p.endsWith(".parquet"))
-        entries += s"${p.stripPrefix(base)}|${s.getLen}"
-    }
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(entries.sorted.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
+  /** Content fingerprint of an index source; see
+    * [[GraftDatabase.sourceFingerprint]]. */
+  def sourceFingerprint(sourcePath: String): String =
+    GraftDatabase.sourceFingerprint(spark, sourcePath)
 
   /** Build (or rebuild) an index: allocate the next writer-private version
     * directory, run `build` into it, then register the entry and persist the
@@ -728,6 +709,38 @@ final class GraftDatabase(val spark: SparkSession, val basePath: String) {
 }
 
 object GraftDatabase {
+  /** Content fingerprint of an index source: md5 over the sorted recursive
+    * (relative path, length) listing of its parquet files. Detects appends,
+    * rewrites, and version swaps without reading data — a driver-side
+    * metadata operation even at 100 TB (file listings, not file contents;
+    * the same staleness currency [[GraftDatabase.compact]] and
+    * [[GraftDatabase.deleteRecord]] use).
+    *
+    * The walk is `listStatus` per directory, not `listFiles(_, true)`:
+    * `listFiles` wraps every file in a `LocatedFileStatus`, whose
+    * constructor loads the file's permissions, and on a local file system
+    * without Hadoop's native library each such load forks an `ls -ld`
+    * process — one fork per file on every staleness check. The
+    * fingerprint needs only the path and the length, which `listStatus`
+    * returns without a fork. Both walks visit the same files (hidden and
+    * `_temporary` dirs included), so the md5 is byte-identical and
+    * fingerprints already stored in index manifests stay valid. */
+  def sourceFingerprint(spark: SparkSession, sourcePath: String): String = {
+    val hp = new HPath(sourcePath)
+    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(hp))
+      throw new GraftException(s"Index source $sourcePath does not exist")
+    val root = fs.getFileStatus(hp)
+    val base = root.getPath.toString // scheme-qualified
+    def files(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files) else Seq(st)
+    val entries = files(root).map(s => (s.getPath.toString, s.getLen))
+      .collect { case (p, len) if p.endsWith(".parquet") => s"${p.stripPrefix(base)}|$len" }
+    val md = java.security.MessageDigest.getInstance("MD5")
+    md.digest(entries.sorted.mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+  }
+
   /** O17 MakeDatabase (`database/database.go:32-35`). */
   def make(spark: SparkSession, basePath: String): GraftDatabase =
     new GraftDatabase(spark, basePath)

@@ -1,15 +1,68 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.graft.CoreBridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.VectorFunctions.as_double_array
 
-/** Loaders for the driver-generated parquet tables (`/root/repo/TESTDATA.md`).
+/** Loaders for the driver-generated parquet tables (`TESTDATA.md`).
   * All math-facing loads normalize the embedding column to ARRAY<DOUBLE>.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(paths*)` without the schema-inference job. A
+    * schema-less parquet read infers its schema in a one-task Spark job that
+    * reads footers; here the schema comes from ONE footer read on the
+    * driver, converted exactly as that job converts it
+    * (`ParquetFileFormat.readSchemaFromFooter` with a session-conf
+    * `ParquetToSparkSchemaConverter`), and is handed to
+    * `spark.read.schema(_).parquet`, which launches no job.
+    *
+    * The footer is the one Spark's non-merging inference picks: among the
+    * leaf files a scan would list (Spark's hidden-name rule: `_`/`.`
+    * prefixes skipped, `k=v` partition dirs kept), a `_common_metadata`
+    * summary, else a `_metadata` summary, else the first data file in path
+    * order. Partition columns are not in the footer, so the scan still
+    * discovers them and their types from the directory names. With no such
+    * file (missing path, glob, only hidden files) the call is a plain
+    * `spark.read.parquet`, so Spark raises its own error. */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    footerSchema(spark, paths) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    def leaves(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => CoreBridge.isHiddenPathName(c.getPath.getName))
+        .flatMap(leaves(fs, _))
+    val files = paths.flatMap { p =>
+      val hp = new Path(p)
+      val fs = hp.getFileSystem(conf)
+      if (fs.exists(hp)) leaves(fs, fs.getFileStatus(hp)) else Nil
+    }.sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    named("_common_metadata").orElse(named("_metadata"))
+      .orElse(files.find(f => f.getPath.getName != "_common_metadata" &&
+        f.getPath.getName != "_metadata"))
+      .map { f =>
+        val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
+  }
 
   /** `vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT` */
   def embeddings(spark: SparkSession, dir: String): DataFrame =

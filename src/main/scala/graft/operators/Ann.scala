@@ -116,7 +116,7 @@ object Ann {
     }
     val qv = Similarity.queryVector(spark, dir, queryVecId)
     val qKeys = bandKeys(qv, bits, bands)
-    spark.read.parquet(idx.path)
+    Tables.read(spark, idx.path)
       .where(col("key").isin(qKeys: _*))
       .dropDuplicates("vec_id")
       .select(col("vec_id"), col("label"),
@@ -250,9 +250,7 @@ object Ann {
   def ivfTopk(spark: SparkSession, dir: String, queryVecId: Long = 0L, k: Int = 10,
               nCells: Int = 16, nProbe: Int = 4): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val cents: Seq[Seq[Double]] = e.where(col("vec_id") < nCells)
-      .orderBy(col("vec_id")).select(col("embedding")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
+    val cents = seedCentroids(e, nCells)
     val qv = Similarity.queryVector(spark, dir, queryVecId)
     ivfProbe(e, cents, qv, k, nProbe)
   }
@@ -270,9 +268,7 @@ object Ann {
                      nCells: Int = 16, nProbe: Int = 4,
                      policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val cents: Seq[Seq[Double]] = e.where(col("vec_id") < nCells)
-      .orderBy(col("vec_id")).select(col("embedding")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
+    val cents = seedCentroids(e, nCells)
 
     val idx = CatalogOps.indexRegistry(spark, dir).resolveIndex(
       name = s"embeddings-ivf-c$nCells", kind = "ivf-cell",
@@ -284,7 +280,7 @@ object Ann {
     }
     val qv = Similarity.queryVector(spark, dir, queryVecId)
     val probeCells = probe(cents, qv, nProbe)
-    spark.read.parquet(idx.path)
+    Tables.read(spark, idx.path)
       .where(col("cell").isin(probeCells: _*))
       .select(col("vec_id"), col("label"),
         round(cosine_sim(col("embedding"), typedLit(qv)), 6).as("score"))
@@ -300,11 +296,15 @@ object Ann {
     * ([[kmeansStep]]'s shape, once per subspace); encode/score are
     * unchanged. */
   private[graft] def pqCodebook(e: DataFrame, m: Int, kCodes: Int,
-                                    dim: Int): Seq[Seq[Seq[Double]]] = {
+                                    dim: Int): Seq[Seq[Seq[Double]]] =
+    subspaces(seedCentroids(e, kCodes), m, dim)
+
+  /** codebook(s)(j) = subspace-`s` slice of `vectors(j)`, for `m`
+    * subspaces of `dim / m` components. */
+  private def subspaces(vectors: Seq[Seq[Double]], m: Int,
+                        dim: Int): Seq[Seq[Seq[Double]]] = {
     val dsub = dim / m
-    val seeds = e.where(col("vec_id") < kCodes).orderBy(col("vec_id"))
-      .select(col("embedding")).collect().map(_.getSeq[Double](0).toArray)
-    (0 until m).map(s => seeds.toSeq.map(_.slice(s * dsub, (s + 1) * dsub).toSeq))
+    (0 until m).map(s => vectors.map(_.slice(s * dsub, (s + 1) * dsub)))
   }
 
   /** The PQ reconstruction column — the ONE place encode+decode lives;
@@ -389,7 +389,7 @@ object Ann {
         .write.mode("overwrite").parquet(out)
     }
     val qv = Similarity.queryVector(spark, dir, queryVecId)
-    spark.read.parquet(idx.path)
+    Tables.read(spark, idx.path)
       .select(col("vec_id"), col("label"),
         round(cosine_sim(
           Bridge.column(graft.functions.PqDecode(
@@ -415,26 +415,21 @@ object Ann {
     * trained on `v − centroid(cell(v))`, not on raw vectors, because inside
     * one cell the residuals are centered near zero and need far less code
     * range than raw corpus positions — better recall at identical M.
-    * Deterministic seeding contract: residual seeds are the `kCodes`
-    * vectors AFTER the centroid seeds (`vec_id ∈ [nCells, nCells+kCodes)`),
-    * each minus its own assigned centroid. The centroid seeds themselves
-    * are unusable here — their residual is exactly zero by construction
-    * (each is its own nearest centroid at cosine 1.0), which would
-    * degenerate every subquantizer codebook to K copies of the zero
-    * vector. */
-  private[operators] def residualCodebook(e: DataFrame, cents: Seq[Seq[Double]],
-                                          m: Int, kCodes: Int,
-                                          dim: Int): Seq[Seq[Seq[Double]]] = {
-    val dsub = dim / m
-    val nCells = cents.length
-    val seeds = e.where(col("vec_id") >= nCells && col("vec_id") < nCells + kCodes)
-      .orderBy(col("vec_id")).select(col("embedding")).collect()
-      .map(_.getSeq[Double](0).toArray)
-    val resid = seeds.map { s =>
+    * Deterministic seeding contract: `seeds` are the `kCodes` vectors AFTER
+    * the centroid seeds (`vec_id ∈ [nCells, nCells+kCodes)`, a
+    * [[seedVectors]] range), each minus its own assigned centroid. The
+    * centroid seeds themselves are unusable here — their residual is
+    * exactly zero by construction (each is its own nearest centroid at
+    * cosine 1.0), which would degenerate every subquantizer codebook to K
+    * copies of the zero vector. */
+  private def residualCodebook(seeds: Seq[Seq[Double]], cents: Seq[Seq[Double]],
+                               m: Int, dim: Int): Seq[Seq[Seq[Double]]] = {
+    val resid = seeds.map { seed =>
+      val s = seed.toArray
       val c = cents(nearestCell(cents, s) - 1)
-      Array.tabulate(s.length)(i => s(i) - c(i))
+      Array.tabulate(s.length)(i => s(i) - c(i)).toSeq
     }
-    (0 until m).map(sub => resid.toSeq.map(_.slice(sub * dsub, (sub + 1) * dsub).toSeq))
+    subspaces(resid, m, dim)
   }
 
   /** IVF-PQ: the standard billion-scale ANN layout (coarse cell probe ×
@@ -453,10 +448,11 @@ object Ann {
                 nCells: Int = 16, nProbe: Int = 4, m: Int = 8,
                 dim: Int = 64): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val cents: Seq[Seq[Double]] = e.where(col("vec_id") < nCells)
-      .orderBy(col("vec_id")).select(col("embedding")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
-    val rcb = residualCodebook(e, cents, m, kCodes = nCells, dim = dim)
+    // one read for both layers: centroids [0, nCells), residual seeds
+    // [nCells, 2·nCells) — the residualCodebook contract with kCodes = nCells
+    val seeds = seedVectors(e, Long.MinValue, 2L * nCells)
+    val cents = seedsIn(seeds, Long.MinValue, nCells)
+    val rcb = residualCodebook(seedsIn(seeds, nCells, 2L * nCells), cents, m, dim)
     val qv = Similarity.queryVector(spark, dir, queryVecId)
     val probeCells = probe(cents, qv, nProbe)
     val cellCent = element_at(typedLit(cents), col("cell").cast("int"))
@@ -490,16 +486,15 @@ object Ann {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
-    val cents: Seq[Seq[Double]] = e.where(col("vec_id") < nCells)
-      .orderBy(col("vec_id")).select(col("embedding")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
-    val rawCb = pqCodebook(e, m, nCells, dim)
-    val rcb = residualCodebook(e, cents, m, kCodes = nCells, dim = dim)
-    val qRows = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val queries = qRows.toSeq.toDF("query_id", "query_vec")
-    val probeDf = qRows.toSeq.flatMap { case (qid, qv) =>
+    // one read for every layer: centroids and raw PQ seeds [0, nCells),
+    // residual seeds [nCells, 2·nCells), queries [0, nQueries)
+    val seeds = seedVectors(e, Long.MinValue, math.max(2L * nCells, nQueries))
+    val cents = seedsIn(seeds, Long.MinValue, nCells)
+    val rawCb = subspaces(cents, m, dim)
+    val rcb = residualCodebook(seedsIn(seeds, nCells, 2L * nCells), cents, m, dim)
+    val qRows = seeds.filter(_._1 < nQueries)
+    val queries = qRows.toDF("query_id", "query_vec")
+    val probeDf = qRows.flatMap { case (qid, qv) =>
       probe(cents, qv.toArray, nProbe).map(ci => (qid, ci.toLong, qv))
     }.toDF("query_id", "cell", "query_vec")
     val cellCent = element_at(typedLit(cents), col("cell").cast("int"))
@@ -572,9 +567,7 @@ object Ann {
     * oracle cannot reproduce. */
   def trainCentroids(e: DataFrame, nCells: Int = 16, maxIters: Int = 10,
                      tol: Double = 0.0): (Seq[Seq[Double]], Int) = {
-    var cents: Array[Array[Double]] = e.where(col("vec_id") < nCells)
-      .orderBy(col("vec_id")).select(col("embedding")).collect()
-      .map(_.getSeq[Double](0).toArray)
+    var cents: Array[Array[Double]] = seedCentroids(e, nCells).map(_.toArray).toArray
     require(cents.nonEmpty, "cannot seed centroids from an empty corpus")
     var iters = 0
     var shift = Double.MaxValue
@@ -658,7 +651,9 @@ object Ann {
                               m: Int = 16, kCodes: Int = 64,
                               dim: Int = 64, maxIters: Int = 10,
                               tol: Double = 0.0): (Seq[Seq[Seq[Double]]], Int) =
-    trainPqLoop(residualsOf(e, cents), residualCodebook(e, cents, m, kCodes, dim),
+    trainPqLoop(residualsOf(e, cents),
+      residualCodebook(seedVectors(e, cents.length, cents.length + kCodes).map(_._2),
+        cents, m, dim),
       dim, maxIters, tol)
 
   /** `(vec_id, embedding = v − centroid(cell(v)))` — the residual view of
@@ -781,14 +776,14 @@ object Ann {
       centroidsToDF(spark, trained)
         .coalesce(1).write.mode("overwrite").parquet(s"$out/_centroids")
     }
-    val rows = spark.read.parquet(s"${idx.path}/_centroids").collect()
+    val rows = Tables.read(spark, s"${idx.path}/_centroids").collect()
     val dim = rows.iterator.map(_.getLong(1)).max.toInt + 1
     val a = Array.ofDim[Double](rows.iterator.map(_.getLong(0)).max.toInt, dim)
     rows.foreach(r => a(r.getLong(0).toInt - 1)(r.getLong(1).toInt) = r.getDouble(2))
     val cents: Seq[Seq[Double]] = a.map(_.toSeq).toSeq
     val qv = Similarity.queryVector(spark, dir, queryVecId)
     val probeCells = probe(cents, qv, nProbe)
-    spark.read.parquet(idx.path)
+    Tables.read(spark, idx.path)
       .where(col("cell").isin(probeCells: _*))
       .select(col("vec_id"), col("label"),
         round(cosine_sim(col("embedding"), typedLit(qv)), 6).as("score"))
@@ -820,16 +815,34 @@ object Ann {
       Bridge.expression(col("embedding").cast("array<double>")), cents)))
   }
 
-  /** First `n` stored vectors as a driver-side centroid seed matrix — the
-    * deterministic seeding contract every IVF operator here shares
-    * (reference point: the in-memory store scores ALL records per query,
-    * `/root/reference/collection/collection.go:64-151`; seeding makes the
-    * sub-linear probe oracle-reproducible). Driver state is `n × dim`
-    * doubles — callers must keep `n` at the COARSE layer's size. */
-  private[graft] def seedCentroids(e: DataFrame, n: Int): Seq[Seq[Double]] =
-    e.where(col("vec_id") < n).orderBy(col("vec_id"))
-      .select(col("embedding").cast("array<double>")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
+  /** The stored vectors with `from <= vec_id < until` as `(vec_id, vector)`
+    * pairs in ascending `vec_id` order, widened to DOUBLE — the ONE reader
+    * of the deterministic seeding contract every IVF/PQ operator here
+    * shares (reference point: the in-memory store scores ALL records per
+    * query, `collection/collection.go:64-151`; seeding makes the
+    * sub-linear probe oracle-reproducible). The range is a filter the scan
+    * pushes down and the order is a driver sort of the collected rows, so
+    * the read is one job with no sampling pass, no exchange and no Sort.
+    * NULL ids never match; fewer rows come back when fewer exist. Driver
+    * state is `(until − from) × dim` doubles — callers must keep the range
+    * at the COARSE layer's size. A caller that needs several ranges reads
+    * their span once and slices it with [[seedsIn]]. */
+  private[graft] def seedVectors(e: DataFrame, from: Long,
+                                 until: Long): Seq[(Long, Seq[Double])] =
+    e.where(col("vec_id") >= from && col("vec_id") < until)
+      .select(col("vec_id").cast("bigint"), col("embedding").cast("array<double>"))
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).toSeq
+
+  /** The first `n` stored vectors (`vec_id < n`) as a driver-side centroid
+    * seed matrix — [[seedVectors]] without the ids. */
+  private[graft] def seedCentroids(e: DataFrame, n: Long): Seq[Seq[Double]] =
+    seedVectors(e, Long.MinValue, n).map(_._2)
+
+  /** The vectors of one [[seedVectors]] read with `from <= vec_id < until`. */
+  private[graft] def seedsIn(seeds: Seq[(Long, Seq[Double])], from: Long,
+                             until: Long): Seq[Seq[Double]] =
+    seeds.collect { case (id, v) if id >= from && id < until => v }
 
   /** The fine layer of the TWO-LEVEL coarse quantizer as a TABLE, never
     * driver state: one row per fine centroid — `(fcell, ccell, fv)` where
@@ -950,7 +963,7 @@ object Ann {
       centroidsToDF(spark, coarse)
         .coalesce(1).write.mode("overwrite").parquet(s"$out/_coarse_centroids")
     }
-    val crows = spark.read.parquet(s"${idx.path}/_coarse_centroids").collect()
+    val crows = Tables.read(spark, s"${idx.path}/_coarse_centroids").collect()
     val dim = crows.iterator.map(_.getLong(1)).max.toInt + 1
     val a = Array.ofDim[Double](crows.iterator.map(_.getLong(0)).max.toInt, dim)
     crows.foreach(r => a(r.getLong(0).toInt - 1)(r.getLong(1).toInt) = r.getDouble(2))
@@ -959,13 +972,13 @@ object Ann {
     val qc = probe(coarse, qv, wCoarse)
     // ≤ nProbe fine ids — bounded driver state, and the literal the scan's
     // partition pruning needs
-    val fineIds = spark.read.parquet(s"${idx.path}/_fine_centroids")
+    val fineIds = Tables.read(spark, s"${idx.path}/_fine_centroids")
       .where(col("ccell").isin(qc: _*))
       .select(col("fcell"),
         round(cosine_sim(col("fv"), typedLit(qv.toSeq)), 6).as("s"))
       .orderBy(desc("s"), asc("fcell")).limit(nProbe)
       .collect().map(_.getLong(0))
-    spark.read.parquet(idx.path)
+    Tables.read(spark, idx.path)
       .where(col("fcell").isin(fineIds: _*))
       .select(col("vec_id"), col("label"),
         round(cosine_sim(col("embedding"), typedLit(qv.toSeq)), 6).as("score"))
@@ -1012,22 +1025,21 @@ object Ann {
     * list — an equi-join on the cell id, so with cells as partition
     * columns the audit reads only probed partitions. Exact arm and final
     * rank-set join as in [[annRecall]]. */
-  /** Per-query hit counts of the IVF probe vs the exact scan over the
-    * first `nQueries` stored vectors, for a GIVEN centroid matrix — the
+  /** Per-query hit counts of the IVF probe vs the exact scan for the
+    * query rows `qRows` (the first `nQueries` stored vectors, as the caller
+    * read them with [[seedVectors]]), for a GIVEN centroid matrix — the
     * shared measurement core of [[ivfRecall]] (seeded centroids, per-query
     * report) and [[ivfRetrainOnRecall]] (stale trained centroids, summed
     * to the integer rebuild trigger). Returns `(query_id, hits)` with a
     * row for every query (zero-hit queries included via the left join). */
-  private def probeHits(e: DataFrame, cents: Seq[Seq[Double]], nQueries: Int,
-                        k: Int, nProbe: Int): DataFrame = {
+  private def probeHits(e: DataFrame, cents: Seq[Seq[Double]],
+                        qRows: Seq[(Long, Seq[Double])], k: Int,
+                        nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = e.sparkSession
     import spark.implicits._
-    val qRows = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val queries = qRows.toSeq.toDF("query_id", "query_vec")
-    val probeDf = qRows.toSeq.flatMap { case (qid, qv) =>
+    val queries = qRows.toDF("query_id", "query_vec")
+    val probeDf = qRows.flatMap { case (qid, qv) =>
       probe(cents, qv.toArray, nProbe).map(ci => (qid, ci.toLong, qv))
     }.toDF("query_id", "cell", "query_vec")
     val exact = Similarity.similarityJoin(e, queries, k)
@@ -1048,10 +1060,10 @@ object Ann {
   def ivfRecall(spark: SparkSession, dir: String, nQueries: Int = 8, k: Int = 10,
                 nCells: Int = 16, nProbe: Int = 4): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val cents: Seq[Seq[Double]] = e.where(col("vec_id") < nCells)
-      .orderBy(col("vec_id")).select(col("embedding")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
-    probeHits(e, cents, nQueries, k, nProbe)
+    // one read serves both the centroids and the queries
+    val seeds = seedVectors(e, Long.MinValue, math.max(nCells, nQueries).toLong)
+    probeHits(e, seedsIn(seeds, Long.MinValue, nCells), seeds.filter(_._1 < nQueries),
+      k, nProbe)
       .select(col("query_id"), col("hits"),
         round(col("hits") / lit(k.toDouble), 6).as("recall"))
       .orderBy(asc("query_id"))
@@ -1143,7 +1155,7 @@ object Ann {
     val base = e.where(col("vec_id") < splitId)
     val delta = e.where(col("vec_id") >= splitId)
     val (stale, _) = trainCentroids(base, nCells, maxIters)
-    val totalHits = probeHits(e, stale, nQueries, k, nProbe)
+    val totalHits = probeHits(e, stale, seedVectors(e, Long.MinValue, nQueries), k, nProbe)
       .agg(sum(col("hits"))).collect()(0).getLong(0)
     val qv = Similarity.queryVector(spark, dir, queryVecId)
     val rebuilt = totalHits < minHits

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Tables
 import graft.functions.VectorFunctions.cosine_sim
 
 /** Margin-based parallel-pair mining over two embedding sets — the
@@ -327,11 +328,11 @@ object Bitext {
         .coalesce(1).write.mode("overwrite").parquet(s"$out/cents")
       tgtCellsOf(y, cents).write.mode("overwrite").parquet(s"$out/cells")
     }
-    val cents: Seq[Seq[Double]] = spark.read.parquet(s"${idx.path}/cents")
+    val cents: Seq[Seq[Double]] = Tables.read(spark, s"${idx.path}/cents")
       .orderBy(col("cidx")).select(col("cv")).collect()
       .map(_.getSeq[Double](0).toSeq).toSeq
     mineFromCandidates(candidatesAgainst(x, cents,
-      spark.read.parquet(s"${idx.path}/cells"), nProbe), k, tau)
+      Tables.read(spark, s"${idx.path}/cells"), nProbe), k, tau)
   }
 
   /** TWO-LEVEL [[minePairsIncremental]] — the hierarchical rung for the
@@ -393,12 +394,12 @@ object Bitext {
       tgtCells2Of(y, coarse, fineTab)
         .write.mode("overwrite").parquet(s"$out/cells2")
     }
-    val coarse: Seq[Seq[Double]] = spark.read.parquet(s"${idx.path}/coarse")
+    val coarse: Seq[Seq[Double]] = Tables.read(spark, s"${idx.path}/coarse")
       .orderBy(col("cidx")).select(col("cv")).collect()
       .map(_.getSeq[Double](0).toSeq).toSeq
     mineFromCandidates(candidatesAgainst2(x, coarse,
-      spark.read.parquet(s"${idx.path}/fine"),
-      spark.read.parquet(s"${idx.path}/cells2"), wCoarse, nProbe), k, tau)
+      Tables.read(spark, s"${idx.path}/fine"),
+      Tables.read(spark, s"${idx.path}/cells2"), wCoarse, nProbe), k, tau)
   }
 
   /** [[minePairsIncremental]] with the flat-vs-two-level rung SELF-DIALED

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Tables
 
 /** TOKEN-BUDGET quality selection — the "keep the best documents up to a
   * token budget" stage of the published LLM-data pipelines (FineWeb-Edu's
@@ -297,7 +298,7 @@ object BudgetSelect {
                             policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame =
     selectByBudgetFromHistogram(
       graft.core.Tables.documents(spark, dir),
-      spark.read.parquet(
+      Tables.read(spark,
         s"${scoreHistogramIndex(spark, dir, policy).path}/hist"),
       budgetTokens)
 }

@@ -125,10 +125,7 @@ object Centrality {
     * (no BroadcastNestedLoopJoin / CartesianProduct anywhere). */
   def annEdges(embeddings: DataFrame, k: Int = 5, nCells: Int = 16,
                nProbe: Int = 4): DataFrame = {
-    val cents: Seq[Seq[Double]] = embeddings.where(col("vec_id") < nCells)
-      .orderBy(col("vec_id"))
-      .select(col("embedding").cast("array<double>")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
+    val cents = Ann.seedCentroids(embeddings, nCells)
     require(cents.nonEmpty, "cannot seed probe centroids from an empty corpus")
     // top-nProbe cells per src as one fused primitive pass — the composed
     // transform/array_sort/slice form runs nCells INTERPRETED cosines per

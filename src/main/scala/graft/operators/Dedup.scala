@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
 import graft.functions.LshFunctions
 import graft.functions.VectorFunctions.cosine_sim
 
@@ -117,7 +118,7 @@ object Dedup {
         .select(sha2(col(textCol), 256).as("fp")).distinct()
         .write.mode("overwrite").parquet(out)
     }
-    val stored = spark.read.parquet(idx.path)
+    val stored = Tables.read(spark, idx.path)
     if (bloomFpp <= 0) admitAgainstFps(incoming, stored, idCol, textCol)
     else {
       // localCheckpoint materializes the batch fingerprints ONCE: the
@@ -384,13 +385,13 @@ object Dedup {
           .where(Sampling.hashBucket(col(idCol)) < refBucketMax),
         idCol, textCol, shingleSize, seeds)
       sig.write.mode("overwrite").parquet(s"$out/sig")
-      sigBandKeys(spark.read.parquet(s"$out/sig"), seeds, bands)
+      sigBandKeys(Tables.read(spark, s"$out/sig"), seeds, bands)
         .write.mode("overwrite").parquet(s"$out/bands")
     }
     sigIncrementalAgainst(incoming, idCol,
       wordSig(incoming, idCol, textCol, shingleSize, seeds),
-      spark.read.parquet(s"${idx.path}/bands"),
-      spark.read.parquet(s"${idx.path}/sig"), seeds, bands, estThreshold)
+      Tables.read(spark, s"${idx.path}/bands"),
+      Tables.read(spark, s"${idx.path}/sig"), seeds, bands, estThreshold)
   }
 
   private[graft] def wordSigIndexName(refBucketMax: Int, shingleSize: Int): String =
@@ -892,7 +893,7 @@ object Dedup {
         idCol, textCol, shingleSize)
         .write.mode("overwrite").parquet(s"$out/pos")
     }
-    verbatimIncrementalFrom(incoming, spark.read.parquet(s"${idx.path}/pos"),
+    verbatimIncrementalFrom(incoming, Tables.read(spark, s"${idx.path}/pos"),
       shingleSize, minRunTokens, idCol, textCol)
   }
 
@@ -977,7 +978,7 @@ object Dedup {
                                policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame =
     decontaminateRunsFrom(
       docs.where(Sampling.hashBucket(col(idCol)) < trainPct),
-      spark.read.parquet(
+      Tables.read(spark,
         s"${evalPosIndex(spark, dir, evalFromPct, shingleSize, idCol, textCol, policy).path}/pos"),
       shingleSize, minRunTokens, idCol, textCol, maxEvalDf)
 
@@ -1037,7 +1038,7 @@ object Dedup {
                                                policy: graft.core.IndexPolicy,
                                                maxEvalDf: Int = 0): DataFrame =
     decontaminateRunsFrom(docs,
-      spark.read.parquet(
+      Tables.read(spark,
         s"${evalPosIndex(spark, dir, evalFromPct, shingleSize, policy = policy).path}/pos"),
       shingleSize, minRunTokens, "doc_id", "text", maxEvalDf)
 
@@ -1095,7 +1096,7 @@ object Dedup {
                             policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
     val b = Sampling.hashBucket(col(idCol))
     evalLeakReportFrom(docs.where(b >= evalFromPct),
-      spark.read.parquet(
+      Tables.read(spark,
         s"${evalPosIndex(spark, dir, evalFromPct, shingleSize, idCol, textCol, policy).path}/pos"),
       positionalShingles(docs.where(b < trainPct), idCol, textCol, shingleSize),
       shingleSize, minRunTokens, idCol, maxTrainDf)
@@ -1170,7 +1171,7 @@ object Dedup {
                                policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame =
     decontaminateTrimFrom(
       docs.where(Sampling.hashBucket(col(idCol)) < trainPct),
-      spark.read.parquet(
+      Tables.read(spark,
         s"${evalPosIndex(spark, dir, evalFromPct, shingleSize, idCol, textCol, policy).path}/pos"),
       shingleSize, minRunTokens, idCol, textCol, maxEvalDf)
 
@@ -1534,12 +1535,12 @@ object Dedup {
           .where(Sampling.hashBucket(col(idCol)) < refBucketMax),
         idCol, textCol, shingleSize)
       sh.write.mode("overwrite").parquet(s"$out/hs")
-      ngramBandKeys(spark.read.parquet(s"$out/hs"), seeds, bands)
+      ngramBandKeys(Tables.read(spark, s"$out/hs"), seeds, bands)
         .write.mode("overwrite").parquet(s"$out/bands")
     }
-    nearIncrementalAgainst(incoming, spark.read.parquet(s"${idx.path}/bands"),
+    nearIncrementalAgainst(incoming, Tables.read(spark, s"${idx.path}/bands"),
       idCol, minhashShingled(_, idCol, textCol, shingleSize),
-      sbFromStored(spark.read.parquet(s"${idx.path}/hs")),
+      sbFromStored(Tables.read(spark, s"${idx.path}/hs")),
       seeds, bands, jaccardThreshold)
   }
 
@@ -1570,12 +1571,12 @@ object Dedup {
           .where(Sampling.hashBucket(col(idCol)) < refBucketMax),
         idCol, textCol, n)
       sh.write.mode("overwrite").parquet(s"$out/hs")
-      ngramBandKeys(spark.read.parquet(s"$out/hs"), seeds, bands)
+      ngramBandKeys(Tables.read(spark, s"$out/hs"), seeds, bands)
         .write.mode("overwrite").parquet(s"$out/bands")
     }
-    nearIncrementalAgainst(incoming, spark.read.parquet(s"${idx.path}/bands"),
+    nearIncrementalAgainst(incoming, Tables.read(spark, s"${idx.path}/bands"),
       idCol, ngramShingled(_, idCol, textCol, n),
-      sbFromStored(spark.read.parquet(s"${idx.path}/hs")),
+      sbFromStored(Tables.read(spark, s"${idx.path}/hs")),
       seeds, bands, jaccardThreshold)
   }
 
@@ -1960,7 +1961,7 @@ object Dedup {
       dedupGroups(docs, ngramNear(docs).select(col("a_id"), col("b_id")))
         .write.mode("overwrite").parquet(out)
     }
-    spark.read.parquet(idx.path).orderBy(col("doc_id"))
+    Tables.read(spark, idx.path).orderBy(col("doc_id"))
   }
 
   /** Deterministic Rademacher hyperplanes — see
@@ -2315,7 +2316,7 @@ object Dedup {
                               policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame =
     imageIncrementalFrom(
       Multimodal.imagePHash(spark, incoming, idCol, blobCol),
-      spark.read.parquet(
+      Tables.read(spark,
         documentsPhashIndex(spark, dir, refBucketMax, idCol, policy).path),
       idCol, bands, maxHamming, agreeBands)
 
@@ -2742,8 +2743,8 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$out/env")
     }
     audioIncrementalFrom(spark, incoming,
-      spark.read.parquet(s"${idx.path}/lm"),
-      spark.read.parquet(s"${idx.path}/env"),
+      Tables.read(spark, s"${idx.path}/lm"),
+      Tables.read(spark, s"${idx.path}/env"),
       idCol, blobCol, windowSamples, hop, maxBytes, maxDt, fanout,
       minVotes, keyPeaks)
   }
@@ -3303,8 +3304,8 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$out/fp")
     }
     videoIncrementalFrom(spark, incoming,
-      spark.read.parquet(s"${idx.path}/fr"),
-      spark.read.parquet(s"${idx.path}/fp"),
+      Tables.read(spark, s"${idx.path}/fr"),
+      Tables.read(spark, s"${idx.path}/fp"),
       idCol, blobCol, maxFrames, maxBytes, minVotes)
   }
 
@@ -3501,7 +3502,7 @@ object Dedup {
                                bands: Int = 8, maxHamming: Int = 3,
                                agreeBands: Int = 0, minFrames: Int = 1,
                                policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val stills = spark.read.parquet(
+    val stills = Tables.read(spark,
       documentsPhashIndex(spark, dir, refBucketMax, idCol, policy).path)
     val counts = videoStillMatchCounts(
       Multimodal.videoFrameHashes(spark, videos, idCol, blobCol, maxFrames, maxBytes),
@@ -3606,9 +3607,7 @@ object Dedup {
     * key before pairing — [[semanticDedupSplit]] is that form.
     * Output is one row per input vector: (vec_id, cell, keep, dup_of). */
   def semanticDedup(e: DataFrame, nCells: Int = 16, tau: Double = 0.4): DataFrame = {
-    val cents: Seq[Seq[Double]] = e.where(col("vec_id") < nCells)
-      .orderBy(col("vec_id")).select(col("embedding")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
+    val cents = Ann.seedCentroids(e, nCells)
     val assigned = Ann.assignCells(e, cents)
       .select(col("vec_id"), col("embedding"), col("cell").cast("bigint").as("cell"))
     val dups = assigned.as("a")
@@ -3807,11 +3806,11 @@ object Dedup {
         .select(col("cell").cast("bigint").as("cell"), col("embedding"))
         .write.mode("overwrite").parquet(s"$out/cells")
     }
-    val cents: Seq[Seq[Double]] = spark.read.parquet(s"${idx.path}/cents")
+    val cents: Seq[Seq[Double]] = Tables.read(spark, s"${idx.path}/cents")
       .orderBy(col("cidx")).select(col("cv")).collect()
       .map(_.getSeq[Double](0).toSeq).toSeq
     semanticIncrementalAgainst(incoming, cents,
-      spark.read.parquet(s"${idx.path}/cells"), tau)
+      Tables.read(spark, s"${idx.path}/cells"), tau)
   }
 
   /** [[semanticDedup]] with the HOT-CELL RE-SPLIT the Σ|cell|² scale note
@@ -3853,9 +3852,7 @@ object Dedup {
   def semanticDedupSplit(e: DataFrame, nCells: Int = 16, tau: Double = 0.4,
                          maxCell: Long = 32, subBits: Int = 8,
                          dim: Int = 64, subBands: Int = 1): DataFrame = {
-    val cents: Seq[Seq[Double]] = e.where(col("vec_id") < nCells)
-      .orderBy(col("vec_id")).select(col("embedding")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
+    val cents = Ann.seedCentroids(e, nCells)
     val assigned = Ann.assignCells(e, cents)
       .select(col("vec_id"), col("embedding"), col("cell").cast("bigint").as("cell"))
     dedupWithinCells(assigned, nCells, tau, maxCell, subBits, dim, subBands)

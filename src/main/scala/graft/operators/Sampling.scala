@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Tables
 
 /** Deterministic data selection — the sampling/splitting surface of a
   * training-data pipeline. Everything here derives from a content-stable
@@ -306,7 +307,7 @@ object Sampling {
                            minQuality: Double = 0.3,
                            policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame =
     sourceMixtureFromTokenStats(
-      spark.read.parquet(
+      Tables.read(spark,
         s"${SourceCurate.sourceStatsIndex(spark, dir, minQuality, policy).path}/stats")
         .select(col("source"), col("n_docs").as("docs"),
           col("n_tokens").as("tokens")),
@@ -412,9 +413,7 @@ object Sampling {
                          perCell: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(perCell > 0, s"perCell must be positive, got $perCell")
-    val cents: Seq[Seq[Double]] = e.where(col("vec_id") < nCells)
-      .orderBy(col("vec_id")).select(col("embedding")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
+    val cents = Ann.seedCentroids(e, nCells)
     val w = Window.partitionBy(col("cell"))
       .orderBy(hashBucket(col("vec_id"), 1000000), col("vec_id"))
     Ann.assignCells(e, cents)

@@ -45,23 +45,36 @@ object Similarity {
   /** Fetch one stored embedding to use as the query vector (driver-side point
     * lookup of a single 64-dim row — the "query text → query vector" step;
     * reference embeds the query with the collection's embedder,
-    * `collection/collection.go:66-73`). Memoized per (dir, vecId): several
-    * operators probe with the same vector, and the source parquet is
-    * immutable — one point-scan job instead of one per query. */
+    * `collection/collection.go:66-73`). Memoized per (dir, vecId) together
+    * with the [[graft.core.GraftDatabase.sourceFingerprint]] of
+    * `embeddings.parquet` it was read under: several operators probe with the
+    * same vector, so an unchanged source costs one file listing instead of a
+    * point-scan job, while a changed source (an append or rewrite, the case
+    * `RebuildIfStale` exists for) misses and re-reads, replacing the stale
+    * entry — at most one vector per (dir, vecId). The fingerprint is taken
+    * before the read, so a change racing the read can only force a re-read,
+    * never pin an old vector. */
   private val queryVectorCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Array[Double]]
+    scala.collection.concurrent.TrieMap.empty[(String, Long), (String, Array[Double])]
 
-  def queryVector(spark: SparkSession, dir: String, vecId: Long): Array[Double] =
-    queryVectorCache.getOrElseUpdate((dir, vecId),
-      Tables.embeddings(spark, dir)
-        .where(col("vec_id") === vecId)
-        .select("embedding")
-        .collect()
-        .headOption
-        .getOrElse(throw new graft.core.GraftException(
-          s"query vector $vecId not found in $dir/embeddings.parquet"))
-        .getSeq[Double](0)
-        .toArray)
+  def queryVector(spark: SparkSession, dir: String, vecId: Long): Array[Double] = {
+    val fp = graft.core.GraftDatabase.sourceFingerprint(spark, s"$dir/embeddings.parquet")
+    queryVectorCache.get((dir, vecId)) match {
+      case Some((`fp`, v)) => v
+      case _ =>
+        val v = Tables.embeddings(spark, dir)
+          .where(col("vec_id") === vecId)
+          .select("embedding")
+          .collect()
+          .headOption
+          .getOrElse(throw new graft.core.GraftException(
+            s"query vector $vecId not found in $dir/embeddings.parquet"))
+          .getSeq[Double](0)
+          .toArray
+        queryVectorCache.put((dir, vecId), (fp, v))
+        v
+    }
+  }
 
   /** O1/X1 — exact top-k cosine search against a single query vector. */
   def topKSingle(spark: SparkSession, dir: String, queryVecId: Long = 0L, k: Int = 10): DataFrame = {

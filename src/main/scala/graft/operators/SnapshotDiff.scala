@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Tables
 
 /** SNAPSHOT DIFF — the recrawl delta family: what changed between corpus
   * snapshot N and snapshot N+1, and the consequence a pipeline acts on
@@ -116,7 +117,7 @@ object SnapshotDiff {
                         textCol: String = "text",
                         policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame =
     corpusDiffFromHashes(
-      spark.read.parquet(
+      Tables.read(spark,
         s"${contentHashIndex(spark, dir, idCol, textCol, policy).path}/hashes"),
       newDocs, idCol, textCol)
 

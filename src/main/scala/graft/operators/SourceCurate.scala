@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Tables
 
 /** SOURCE-level curation — the host-level discipline of the published
   * web-corpus pipelines (C4's blocklist, Gopher's per-domain rules,
@@ -292,7 +293,7 @@ object SourceCurate {
                         minDocs: Long = 5L,
                         policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame =
     sourceGateFromStats(
-      spark.read.parquet(
+      Tables.read(spark,
         s"${sourceStatsIndex(spark, dir, minQuality, policy).path}/stats"),
       minAvgQuality, maxRepetitiveShare, maxPiiShare, minDocs)
 
@@ -318,11 +319,11 @@ object SourceCurate {
     // otherwise read back `source` as an integer partition column —
     // `isin(strings)` would then compare across types and the schema
     // would diverge from the written frame. Inference happens eagerly at
-    // the spark.read call, so the conf toggle brackets exactly it.
+    // the read call, so the conf toggle brackets exactly it.
     val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "false")
-    try spark.read.parquet(path).where(col("source").isin(keptSources: _*))
+    try Tables.read(spark, path).where(col("source").isin(keptSources: _*))
     finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
   }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import graft.core.{GraftDatabase, IndexPolicy}
+import graft.core.{GraftDatabase, IndexPolicy, Tables}
 import graft.operators.{CatalogOps, Dedup, Ingest, Multimodal, Sampling}
 
 /** Structured Streaming surface — beyond-reference (SURVEY.md §7.5: the
@@ -944,12 +944,12 @@ object Streaming {
         if (!crossModal) famAdmitted0
         else {
           val batchFrames =
-            spark.read.parquet(batchDir(s"$path/media/video/_fr", batchId))
+            Tables.read(spark, batchDir(s"$path/media/video/_fr", batchId))
           val stills = crossModalStills match {
             case Some(idx) => idx.select(col("phash"))
             case None =>
               val batchImg =
-                spark.read.parquet(batchDir(s"$path/media/image/_ph", batchId))
+                Tables.read(spark, batchDir(s"$path/media/image/_ph", batchId))
                   .select(col("phash"))
               readBatchState(spark, s"$path/media/image/_ph", batchId)
                 .fold(batchImg)(st => batchImg.unionByName(st.select(col("phash"))))
@@ -1623,7 +1623,7 @@ object Streaming {
                                  m: Int, kCodes: Int, residual: Boolean): Unit = {
     import spark.implicits._
     if (isCommitted(fsOf(spark, geomPath), new Path(geomPath))) {
-      val r = spark.read.parquet(geomPath).head()
+      val r = Tables.read(spark, geomPath).head()
       val (sm, sk, sr) = (r.getInt(0), r.getInt(1), r.getBoolean(2))
       if (sm != m || sk != kCodes || sr != residual)
         throw new graft.core.GraftException(
@@ -1708,7 +1708,7 @@ object Streaming {
   }
 
   private def unionOf(spark: SparkSession, dirs: Seq[StateDir]): DataFrame =
-    dirs.map(d => spark.read.parquet(d.path.toString)).reduce(_ unionByName _)
+    dirs.map(d => Tables.read(spark, d.path.toString)).reduce(_ unionByName _)
 
   /** Accumulated per-batch state (signatures, fingerprints, stats) under
     * `rootPath`: the latest committed `c<id>` dir plus every committed
@@ -1769,7 +1769,7 @@ object Streaming {
   private def readVersionBelow(spark: SparkSession, rootPath: String,
                                batchId: Long): Option[DataFrame] =
     committed(spark, rootPath, "v").filter(_.id < batchId).lastOption
-      .map(d => spark.read.parquet(d.path.toString))
+      .map(d => Tables.read(spark, d.path.toString))
 
   /** Written-last version-swap read side, shared by every versioned
     * small-state store here (reservoir, HLL registers): the `_latest`
@@ -1786,7 +1786,7 @@ object Streaming {
         Some(new Path(root, v)).filter(isCommitted(fs, _))
       } else None
     fromMarker.orElse(committed(spark, rootPath, "v").lastOption.map(_.path))
-      .map(p => spark.read.parquet(p.toString))
+      .map(p => Tables.read(spark, p.toString))
   }
 
   /** Written-last version-swap commit: parquet the version dir, then swap

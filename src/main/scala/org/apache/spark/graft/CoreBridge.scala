@@ -59,4 +59,11 @@ object CoreBridge {
       m.setAccessible(true)
       m.invoke(gen).asInstanceOf[org.apache.spark.util.NonFateSharingCache[_, _]].size()
     } catch { case _: Throwable => -1L }
+
+  /** Whether file-source listing skips a file or directory of this name:
+    * Spark's own rule (`_`/`.` prefixes, except partition dirs and parquet
+    * summary files), so a reader that picks a file by hand sees the same
+    * leaves a `spark.read` scan does. */
+  def isHiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }
