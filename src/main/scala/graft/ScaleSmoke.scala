@@ -44,9 +44,9 @@ object ScaleSmoke {
         : org.apache.spark.sql.DataFrame = {
       val path = s"${sys.props("java.io.tmpdir")}/graft-scale-$tag-$dirHash-$f"
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS"))) {
-        reps(base.crossJoin(spark.range(f).toDF("rep")), base.count())
-          .repartition(32)
-          .write.mode("overwrite").parquet(path)
+        Tables.write(reps(base.crossJoin(spark.range(f).toDF("rep")), base.count())
+          .repartition(32))
+          .mode("overwrite").parquet(path)
       }
       spark.read.parquet(path)
     }
@@ -622,8 +622,8 @@ object ScaleSmoke {
       val hp = s"${sys.props("java.io.tmpdir")}/graft-scale-snaphash-$dirHash-$docFactor"
       if (only.forall(_.exists("snapshot delta probe".startsWith)) &&
           !java.nio.file.Files.exists(java.nio.file.Paths.get(hp, "_SUCCESS")))
-        graft.operators.SnapshotDiff.contentHashes(docs)
-          .write.mode("overwrite").parquet(hp)
+        Tables.write(graft.operators.SnapshotDiff.contentHashes(docs))
+          .mode("overwrite").parquet(hp)
       stage("snapshot delta probe") {
         // the cycle pays one hash scan of the new snapshot + a narrow
         // left join against the stored table — old text never read
@@ -641,8 +641,8 @@ object ScaleSmoke {
       val ep = s"${sys.props("java.io.tmpdir")}/graft-scale-gateev-$dirHash-$docFactor"
       if (only.forall(_.exists("gate delta".startsWith)) &&
           !java.nio.file.Files.exists(java.nio.file.Paths.get(ep, "_SUCCESS")))
-        graft.operators.CorpusFilter.gateEvidence(docs)
-          .write.mode("overwrite").parquet(ep)
+        Tables.write(graft.operators.CorpusFilter.gateEvidence(docs))
+          .mode("overwrite").parquet(ep)
       stage("gate full (250k)") {
         graft.operators.CorpusFilter.decisions(newSnap)
           .queryExecution.toRdd.count()
@@ -698,9 +698,9 @@ object ScaleSmoke {
       val cellsPath = s"${sys.props("java.io.tmpdir")}/graft-scale-semcells-$dirHash-$factor"
       val pcents = graft.operators.Ann.seedCentroids(e, nc)
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(cellsPath, "_SUCCESS")))
-        graft.operators.Ann.assignCells(e.select(col("vec_id"), col("embedding")), pcents)
-          .select(col("cell").cast("bigint").as("cell"), col("embedding"))
-          .write.mode("overwrite").parquet(cellsPath)
+        Tables.write(graft.operators.Ann.assignCells(e.select(col("vec_id"), col("embedding")), pcents)
+          .select(col("cell").cast("bigint").as("cell"), col("embedding")))
+          .mode("overwrite").parquet(cellsPath)
       val incoming = e.where(col("vec_id") % 100 === 0)
         .withColumn("vec_id", col("vec_id") + lit(1L << 40))
       stage(s"semantic incr probe c$nc") {
@@ -1004,12 +1004,12 @@ object ScaleSmoke {
         // audioIncrementalIndexed registers and streamAudioDedupAdmit
         // accumulates)
         val ref = au.where(b < 90)
-        graft.operators.Multimodal.audioLandmarks(spark, ref, "doc_id", "blob",
-            16, 4, 1 << 20, 8, 3, 3)
-          .write.mode("overwrite").parquet(s"$statePath/lm")
-        graft.operators.Multimodal.audioEnvelope(spark, ref, "doc_id", "blob", 16, 1 << 20, 4)
-          .select(col("env")).distinct()
-          .write.mode("overwrite").parquet(s"$statePath/env")
+        Tables.write(graft.operators.Multimodal.audioLandmarks(spark, ref, "doc_id", "blob",
+            16, 4, 1 << 20, 8, 3, 3))
+          .mode("overwrite").parquet(s"$statePath/lm")
+        Tables.write(graft.operators.Multimodal.audioEnvelope(spark, ref, "doc_id", "blob", 16, 1 << 20, 4)
+          .select(col("env")).distinct())
+          .mode("overwrite").parquet(s"$statePath/env")
         spark.read.parquet(s"$statePath/lm").count()
       }
       stage("audio incr probe (stored)") {

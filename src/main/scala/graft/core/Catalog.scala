@@ -174,7 +174,7 @@ final class GraftDatabase(val spark: SparkSession, val basePath: String) {
   private def manifestPath = new HPath(s"$basePath/_catalog.json")
 
   private def saveManifest(): Unit = {
-    val fs = manifestPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = manifestPath.getFileSystem(Tables.writeConf(spark))
     val entries = collections.values.toSeq.sortBy(_.id).map { m =>
       s"""{"id":${jstr(m.id)},"embedderId":${jstr(m.embedderId)},"path":${jstr(m.path)},"version":${m.version}}"""
     }
@@ -276,15 +276,19 @@ final class GraftDatabase(val spark: SparkSession, val basePath: String) {
         throw new GraftException(
           s"Record ${dupExisting.head.getString(0)} already exists in collection ${meta.id}\n")
 
-      batch.select(Record.schema.fieldNames.map(col).toIndexedSeq: _*)
-        .write.mode("append").parquet(getCollection(collectionId).path)
+      Tables.write(batch.select(Record.schema.fieldNames.map(col).toIndexedSeq: _*))
+        .mode("append").parquet(getCollection(collectionId).path)
     }
   }
 
   /** O7/O8 GetRecord — predicate-pushdown point scan
-    * (`collection/collection.go:56-62`). */
+    * (`collection/collection.go:56-62`). A plain filtered `collect()`: ids
+    * are unique within a collection (appends reject duplicates), so it
+    * returns at most one row, in ONE job over all files — a `limit(1)`
+    * would scan partitions incrementally and take a second job after a
+    * miss in the first. */
   def getRecord(collectionId: String, recordId: String): Record = {
-    val rows = records(collectionId).where(col("id") === recordId).limit(1).collect()
+    val rows = records(collectionId).where(col("id") === recordId).collect()
     val row = rows.headOption.getOrElse(throw new GraftException(
       s"Could not get record - record with ID $recordId does not exist in collection"))
     Record(
@@ -321,8 +325,8 @@ final class GraftDatabase(val spark: SparkSession, val basePath: String) {
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val next = meta.copy(path = s"$basePath/${meta.id}/v${meta.version + 1}-d$nonce",
                          version = meta.version + 1)
-    existing.where(col("id") =!= recordId)
-      .write.mode("overwrite").parquet(next.path)
+    Tables.write(existing.where(col("id") =!= recordId))
+      .mode("overwrite").parquet(next.path)
     mutationLockFor(meta.id).synchronized {
       // a concurrent deleteCollection (or delete+recreate) can remove the
       // source path out from under the listing re-check: FileNotFound IS
@@ -404,9 +408,8 @@ final class GraftDatabase(val spark: SparkSession, val basePath: String) {
     val next = meta.copy(path = s"$basePath/${meta.id}/v${meta.version + 1}-c$nonce",
                          version = meta.version + 1)
     val nextHp = new HPath(next.path)
-    records(collectionId)
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(next.path)
+    Tables.write(records(collectionId).repartition(nFiles))
+      .mode("overwrite").parquet(next.path)
     afterRewrite()
     // swap under the mutation lock: appends/deletes cannot land between
     // the re-check and the pointer swap. TWO staleness checks — the
@@ -618,7 +621,7 @@ final class GraftDatabase(val spark: SparkSession, val basePath: String) {
         case None    => disk.remove(name)
       }
       disk.foreach { case (n, m) => if (n != name) indexes.put(n, m) }
-      val fs = indexManifestPath.getFileSystem(spark.sessionState.newHadoopConf())
+      val fs = indexManifestPath.getFileSystem(Tables.writeConf(spark))
       val entries = disk.values.toSeq.sortBy(_.name).map { m =>
         val ps = m.params.toSeq.sorted
           .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
@@ -703,7 +706,7 @@ final class GraftDatabase(val spark: SparkSession, val basePath: String) {
     // version swap between validation and write would otherwise strand
     // this append in the abandoned old directory
     mutationLockFor(meta.id).synchronized {
-      df.write.mode("append").parquet(getCollection(meta.id).path)
+      Tables.write(df).mode("append").parquet(getCollection(meta.id).path)
     }
   }
 }

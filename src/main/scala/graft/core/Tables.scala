@@ -1,11 +1,12 @@
 package graft.core
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.graft.CoreBridge
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -33,25 +34,46 @@ object Tables {
     * order. Partition columns are not in the footer, so the scan still
     * discovers them and their types from the directory names. With no such
     * file (missing path, glob, only hidden files) the call is a plain
-    * `spark.read.parquet`, so Spark raises its own error. */
-  def read(spark: SparkSession, paths: String*): DataFrame =
-    footerSchema(spark, paths) match {
-      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
-
-  private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] = {
+    * `spark.read.parquet`, so Spark raises its own error.
+    *
+    * A single root whose own name is hidden (an index's `_centroids` side
+    * table) is read as its listed data files with the root as `basePath`:
+    * the same rows and partition columns, without the `All paths were
+    * ignored` warning Spark logs when the root it is given has a hidden
+    * name. */
+  def read(spark: SparkSession, paths: String*): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
+    val files = leafFiles(conf, paths)
+    footerSchema(spark, conf, files) match {
+      case None => spark.read.parquet(paths: _*)
+      case Some(schema) =>
+        val data = files.map(_.getPath).filterNot { p =>
+          CoreBridge.isHiddenPathName(p.getName) || p.getName.startsWith("_")
+        }
+        paths match {
+          case Seq(root) if CoreBridge.isHiddenPathName(new Path(root).getName) && data.nonEmpty =>
+            spark.read.schema(schema).option("basePath", root).parquet(data.map(_.toString): _*)
+          case _ => spark.read.schema(schema).parquet(paths: _*)
+        }
+    }
+  }
+
+  /** The leaf files a scan of `paths` would list, in path order. */
+  private def leafFiles(conf: Configuration, paths: Seq[String]): Seq[FileStatus] = {
     def leaves(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
       if (!st.isDirectory) Seq(st)
       else fs.listStatus(st.getPath).toSeq
         .filterNot(c => CoreBridge.isHiddenPathName(c.getPath.getName))
         .flatMap(leaves(fs, _))
-    val files = paths.flatMap { p =>
+    paths.flatMap { p =>
       val hp = new Path(p)
       val fs = hp.getFileSystem(conf)
       if (fs.exists(hp)) leaves(fs, fs.getFileStatus(hp)) else Nil
     }.sortBy(_.getPath.toString)
+  }
+
+  private def footerSchema(spark: SparkSession, conf: Configuration,
+                           files: Seq[FileStatus]): Option[StructType] = {
     def named(n: String) = files.find(_.getPath.getName == n)
     named("_common_metadata").orElse(named("_metadata"))
       .orElse(files.find(f => f.getPath.getName != "_common_metadata" &&
@@ -62,6 +84,29 @@ object Tables {
         ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
           new ParquetToSparkSchemaConverter(spark.sessionState.conf))
       }
+  }
+
+  /** `df.write` for every engine write: a `DataFrameWriter` whose options
+    * carry [[LocalFs.Settings]], so `file:` output goes through [[LocalFs]]
+    * and creating its directories and files forks no `chmod`. The write
+    * twin of [[read]].
+    *
+    * Writer options, not session conf: Spark copies a writer's options into
+    * the write job's own Hadoop conf (`newHadoopConfWithOptions`), which
+    * the driver's job setup and commit and every task's writer use. The
+    * session's Hadoop conf and the process-wide cached `file:` filesystem
+    * are left as they are, so nothing outside this write changes. The
+    * settings name only the `file` scheme: a write to HDFS or S3 is
+    * unaffected. */
+  def write(df: DataFrame): DataFrameWriter[Row] = df.write.options(LocalFs.Settings)
+
+  /** The session's Hadoop conf plus [[LocalFs.Settings]] — for the raw
+    * `fs.create` writers (manifests, pointers) that [[write]] cannot reach.
+    * A fresh copy: the session's own conf is not touched. */
+  def writeConf(spark: SparkSession): Configuration = {
+    val conf = spark.sessionState.newHadoopConf()
+    LocalFs.Settings.foreach { case (k, v) => conf.set(k, v) }
+    conf
   }
 
   /** `vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT` */

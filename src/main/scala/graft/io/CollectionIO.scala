@@ -3,7 +3,7 @@ package graft.io
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{GraftDatabase, GraftException, Record}
+import graft.core.{GraftDatabase, GraftException, Record, Tables}
 
 /** Distributed collection import/export across Spark's built-in storage
   * formats. Parquet/ORC carry the canonical schema natively; the text
@@ -33,7 +33,7 @@ object CollectionIO {
           base64(col("blob")).as("blob_b64"),
           concat_ws(";", col("embedding").cast("array<string>")).as("embedding_str"))
     }
-    val w = out.write.mode("overwrite")
+    val w = Tables.write(out).mode("overwrite")
     (if (format == "csv") w.option("header", "true") else w).format(format).save(path)
   }
 
@@ -78,7 +78,7 @@ object CollectionIO {
     * metastore entry carries the bucket spec Catalyst plans against). */
   def writeBucketed(df: DataFrame, table: String, path: String,
                     key: String, buckets: Int): Unit =
-    df.write.mode("overwrite")
+    Tables.write(df).mode("overwrite")
       .option("path", path)
       .bucketBy(buckets, key)
       .sortBy(key)

@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
 import graft.operators.Sampling
 
 /** Training-data shard export: the file-layout step a pretraining run
@@ -32,8 +33,8 @@ object Export {
     require(format == "json" || format == "parquet",
       s"Unsupported shard format: $format (supported: json, parquet)")
     val assigned = Sampling.tokenShards(docs, tokensPerShard)
-    docs.join(assigned.select(col("doc_id"), col("shard")), Seq("doc_id"))
-      .write.partitionBy("shard").mode("overwrite").format(format).save(path)
+    Tables.write(docs.join(assigned.select(col("doc_id"), col("shard")), Seq("doc_id")))
+      .partitionBy("shard").mode("overwrite").format(format).save(path)
     val manifest = assigned.groupBy(col("shard"))
       .agg(count(lit(1)).as("docs"), sum(col("n_tok")).as("tokens"))
       .orderBy(col("shard"))
@@ -49,7 +50,7 @@ object Export {
     // manifest-written-last completeness contract only holds if the
     // manifest lands on the SAME filesystem.
     val manifestPath = new Path(path, "manifest.json")
-    val fs = manifestPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = manifestPath.getFileSystem(Tables.writeConf(spark))
     val out = fs.create(manifestPath, true)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
     manifest

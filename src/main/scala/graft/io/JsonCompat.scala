@@ -7,7 +7,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.{Row, SparkSession}
 
-import graft.core.{CollectionMeta, GraftDatabase, GraftException, Record}
+import graft.core.{CollectionMeta, GraftDatabase, GraftException, Record, Tables}
 
 /** JSON persistence compatibility layer — O18–O21.
   *
@@ -144,11 +144,11 @@ object JsonCompat {
     * same record shape as O20, written distributed. */
   def exportJsonl(db: GraftDatabase, collectionId: String, path: String): Unit = {
     import org.apache.spark.sql.functions._
-    db.records(collectionId)
+    Tables.write(db.records(collectionId)
       .select(
         col("blob").cast("string").as("blob"),
-        col("embedding"), col("embedderId"), col("id"))
-      .write.mode("overwrite").json(path)
+        col("embedding"), col("embedderId"), col("id")))
+      .mode("overwrite").json(path)
   }
 
   /** Distributed JSONL import into an existing collection. */

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructField, StructType}
 
 import graft.core.Tables
 import graft.functions.VectorFunctions.cosine_sim
@@ -109,10 +110,10 @@ object Ann {
       params = Map("bits" -> bits.toString, "bands" -> bands.toString,
         "dim" -> dim.toString),
       policy = policy) { out =>
-      Tables.embeddings(spark, dir)
+      Tables.write(Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("label"), col("embedding"),
-          explode(bandKeysCol(col("embedding"), bits, bands, dim)).as("key"))
-        .write.mode("overwrite").partitionBy("key").parquet(out)
+          explode(bandKeysCol(col("embedding"), bits, bands, dim)).as("key")))
+        .mode("overwrite").partitionBy("key").parquet(out)
     }
     val qv = Similarity.queryVector(spark, dir, queryVecId)
     val qKeys = bandKeys(qv, bits, bands)
@@ -275,8 +276,8 @@ object Ann {
       sourcePath = s"$dir/embeddings.parquet",
       params = Map("nCells" -> nCells.toString),
       policy = policy) { out =>
-      assignCells(e, cents)
-        .write.mode("overwrite").partitionBy("cell").parquet(out)
+      Tables.write(assignCells(e, cents))
+        .mode("overwrite").partitionBy("cell").parquet(out)
     }
     val qv = Similarity.queryVector(spark, dir, queryVecId)
     val probeCells = probe(cents, qv, nProbe)
@@ -383,10 +384,10 @@ object Ann {
       params = Map("m" -> m.toString, "kCodes" -> kCodes.toString,
         "dim" -> dim.toString),
       policy = policy) { out =>
-      e.select(col("vec_id"), col("label"),
+      Tables.write(e.select(col("vec_id"), col("label"),
           Bridge.column(graft.functions.PqCodes(
-            Bridge.expression(col("embedding").cast("array<double>")), cb)).as("codes"))
-        .write.mode("overwrite").parquet(out)
+            Bridge.expression(col("embedding").cast("array<double>")), cb)).as("codes")))
+        .mode("overwrite").parquet(out)
     }
     val qv = Similarity.queryVector(spark, dir, queryVecId)
     Tables.read(spark, idx.path)
@@ -771,10 +772,10 @@ object Ann {
         "tol" -> "0"),
       policy = policy) { out =>
       val (trained, _) = trainCentroids(Tables.embeddings(spark, dir), nCells, maxIters)
-      assignCells(Tables.embeddings(spark, dir), trained)
-        .write.mode("overwrite").partitionBy("cell").parquet(out)
-      centroidsToDF(spark, trained)
-        .coalesce(1).write.mode("overwrite").parquet(s"$out/_centroids")
+      Tables.write(assignCells(Tables.embeddings(spark, dir), trained))
+        .mode("overwrite").partitionBy("cell").parquet(out)
+      Tables.write(centroidsToDF(spark, trained).coalesce(1))
+        .mode("overwrite").parquet(s"$out/_centroids")
     }
     val rows = Tables.read(spark, s"${idx.path}/_centroids").collect()
     val dim = rows.iterator.map(_.getLong(1)).max.toInt + 1
@@ -957,11 +958,11 @@ object Ann {
       val e = Tables.embeddings(spark, dir)
       val coarse = seedCentroids(e, nCoarse)
       val fineTab = fineCentroids(e, coarse, nFine)
-      assignCells2(e, coarse, fineTab)
-        .write.mode("overwrite").partitionBy("fcell").parquet(out)
-      fineTab.coalesce(1).write.mode("overwrite").parquet(s"$out/_fine_centroids")
-      centroidsToDF(spark, coarse)
-        .coalesce(1).write.mode("overwrite").parquet(s"$out/_coarse_centroids")
+      Tables.write(assignCells2(e, coarse, fineTab))
+        .mode("overwrite").partitionBy("fcell").parquet(out)
+      Tables.write(fineTab.coalesce(1)).mode("overwrite").parquet(s"$out/_fine_centroids")
+      Tables.write(centroidsToDF(spark, coarse).coalesce(1))
+        .mode("overwrite").parquet(s"$out/_coarse_centroids")
     }
     val crows = Tables.read(spark, s"${idx.path}/_coarse_centroids").collect()
     val dim = crows.iterator.map(_.getLong(1)).max.toInt + 1
@@ -1012,51 +1013,66 @@ object Ann {
       ivfTopk2Indexed(spark, dir, queryVecId, k, nCells, coarseFor(nCells),
         coarseFor(nCells), nProbe, policy)
 
+  /** Per-query hit counts of the IVF probe vs the exact scan for the
+    * query rows `qRows` (the first `nQueries` stored vectors, as the caller
+    * read them with [[seedVectors]]), for a GIVEN centroid matrix — the
+    * shared measurement core of [[ivfRecall]] (seeded centroids, per-query
+    * report) and [[ivfRetrainOnRecall]] (stale trained centroids, summed
+    * to the integer rebuild trigger). Returns `(query_id, hits)`, one row
+    * per query row in `query_id` order, zero-hit queries included.
+    *
+    * `hits` is the size of the equi-join on `vec_id` of the query's exact
+    * top-k and its IVF top-k (rows in the query's `nProbe` cells only),
+    * both ranked as [[Similarity.similarityJoin]] ranks: a NULL `vec_id`
+    * never matches, and a duplicated id counts as that join counts it.
+    *
+    * Shape: ONE corpus pass — [[assignCells]] (the one assignment
+    * expression) feeds a `mapPartitions` over the broadcast
+    * [[QueryBlock]] that scores each row once per query and keeps two
+    * k-slot selections per query, one over all rows and one over the rows
+    * whose cell the query probes ([[QueryBlock.probedTopK]]); ONE exchange
+    * on `query_id` brings each query's ≤ 2·k·P candidates together, where
+    * [[QueryBlock.recallHits]] merges them into the two top-k lists and
+    * counts their intersection. The final single-partition step adds the
+    * queries with no candidate (k = 0, an empty corpus) and orders at most
+    * `qRows.size` rows, so no range exchange follows. */
+  private[operators] def probeHits(e: DataFrame, cents: Seq[Seq[Double]],
+                                   qRows: Seq[(Long, Seq[Double])], k: Int,
+                                   nProbe: Int): DataFrame = {
+    val block = QueryBlock(qRows.map { case (q, v) => Row(q, v) }.toArray)
+    val probes = qRows.map { case (_, v) =>
+      val cells = new java.util.BitSet
+      probe(cents, v.toArray, nProbe).foreach(cells.set)
+      cells
+    }.toArray
+    val shared = e.sparkSession.sparkContext.broadcast((block, probes))
+    val idType = e.schema("vec_id").dataType
+    val candidateSchema = StructType(Seq(StructField("query_id", LongType, nullable = false),
+      StructField("vec_id", idType), StructField("score", DoubleType),
+      StructField("probed", BooleanType, nullable = false)))
+    val hitsSchema = StructType(Seq(StructField("query_id", LongType, nullable = false),
+      StructField("hits", LongType, nullable = false)))
+    val queryIds = qRows.map(_._1).sorted.toArray
+    assignCells(e, cents)
+      .select(col("vec_id"), col("label"), col("embedding"), col("cell"))
+      .mapPartitions(rows => shared.value._1.probedTopK(rows, k, idType, shared.value._2))(
+        Encoders.row(candidateSchema))
+      .repartition(col("query_id"))
+      .mapPartitions(rows => QueryBlock.recallHits(rows, k, idType))(Encoders.row(hitsSchema))
+      .coalesce(1)
+      .mapPartitions { rows =>
+        val hits = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+        queryIds.iterator.map(q => Row(q, hits.getOrElse(q, 0L)))
+      }(Encoders.row(hitsSchema))
+  }
+
   /** Recall@k audit of the IVF probe against the exact scan — the
     * [[annRecall]] twin for the centroid index, and the tool that picks
     * `nProbe`: sweep it, read the recall/cost curve, deploy the knee. With
     * `nProbe = nCells` the probe degenerates to the exact scan (recall
     * 1.0 by construction — pinned in the spec); production recall decays
     * as the corpus drifts from the trained centroids, and this measurement
-    * is the retrain trigger.
-    *
-    * Scale shape: ONE corpus assignment pass (fused [[graft.functions.NearestCentroid]]);
-    * the candidate arm joins it against the broadcast (query, probe-cell)
-    * list — an equi-join on the cell id, so with cells as partition
-    * columns the audit reads only probed partitions. Exact arm and final
-    * rank-set join as in [[annRecall]]. */
-  /** Per-query hit counts of the IVF probe vs the exact scan for the
-    * query rows `qRows` (the first `nQueries` stored vectors, as the caller
-    * read them with [[seedVectors]]), for a GIVEN centroid matrix — the
-    * shared measurement core of [[ivfRecall]] (seeded centroids, per-query
-    * report) and [[ivfRetrainOnRecall]] (stale trained centroids, summed
-    * to the integer rebuild trigger). Returns `(query_id, hits)` with a
-    * row for every query (zero-hit queries included via the left join). */
-  private def probeHits(e: DataFrame, cents: Seq[Seq[Double]],
-                        qRows: Seq[(Long, Seq[Double])], k: Int,
-                        nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = e.sparkSession
-    import spark.implicits._
-    val queries = qRows.toDF("query_id", "query_vec")
-    val probeDf = qRows.flatMap { case (qid, qv) =>
-      probe(cents, qv.toArray, nProbe).map(ci => (qid, ci.toLong, qv))
-    }.toDF("query_id", "cell", "query_vec")
-    val exact = Similarity.similarityJoin(e, queries, k)
-      .select(col("query_id"), col("vec_id"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("score"), asc("vec_id"))
-    val cand = assignCells(e, cents).join(broadcast(probeDf), Seq("cell"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine_sim(col("embedding"), col("query_vec")), 6).as("score"))
-      .withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"))
-    val hits = exact.join(cand, Seq("query_id", "vec_id"))
-      .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
-    queries.select(col("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"), coalesce(col("hits"), lit(0L)).as("hits"))
-  }
-
+    * is the retrain trigger. Scale shape: [[probeHits]]. */
   def ivfRecall(spark: SparkSession, dir: String, nQueries: Int = 8, k: Int = 10,
                 nCells: Int = 16, nProbe: Int = 4): DataFrame = {
     val e = Tables.embeddings(spark, dir)

@@ -324,9 +324,9 @@ object Bitext {
       val y = tgtSide(spark, dir)
       val cents = seedTgtCentroids(y, nCells)
       import spark.implicits._
-      cents.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cidx", "cv")
-        .coalesce(1).write.mode("overwrite").parquet(s"$out/cents")
-      tgtCellsOf(y, cents).write.mode("overwrite").parquet(s"$out/cells")
+      Tables.write(cents.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cidx", "cv").coalesce(1))
+        .mode("overwrite").parquet(s"$out/cents")
+      Tables.write(tgtCellsOf(y, cents)).mode("overwrite").parquet(s"$out/cells")
     }
     val cents: Seq[Seq[Double]] = Tables.read(spark, s"${idx.path}/cents")
       .orderBy(col("cidx")).select(col("cv")).collect()
@@ -387,12 +387,12 @@ object Bitext {
       val y = tgtSide(spark, dir)
       val coarse = seedTgtCentroids(y, nCoarse)
       import spark.implicits._
-      coarse.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cidx", "cv")
-        .coalesce(1).write.mode("overwrite").parquet(s"$out/coarse")
+      Tables.write(coarse.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cidx", "cv").coalesce(1))
+        .mode("overwrite").parquet(s"$out/coarse")
       val fineTab = tgtFineTab(y, coarse, nFine)
-      fineTab.coalesce(1).write.mode("overwrite").parquet(s"$out/fine")
-      tgtCells2Of(y, coarse, fineTab)
-        .write.mode("overwrite").parquet(s"$out/cells2")
+      Tables.write(fineTab.coalesce(1)).mode("overwrite").parquet(s"$out/fine")
+      Tables.write(tgtCells2Of(y, coarse, fineTab))
+        .mode("overwrite").parquet(s"$out/cells2")
     }
     val coarse: Seq[Seq[Double]] = Tables.read(spark, s"${idx.path}/coarse")
       .orderBy(col("cidx")).select(col("cv")).collect()

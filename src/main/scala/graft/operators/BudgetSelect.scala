@@ -284,8 +284,8 @@ object BudgetSelect {
       sourcePath = s"$dir/documents.parquet",
       params = Map("bins" -> (MaxBin + 1L).toString),
       policy = policy) { out =>
-      scoreHistogram(graft.core.Tables.documents(spark, dir))
-        .write.mode("overwrite").parquet(s"$out/hist")
+      Tables.write(scoreHistogram(graft.core.Tables.documents(spark, dir)))
+        .mode("overwrite").parquet(s"$out/hist")
     }
 
   /** [[selectByBudget]] with the threshold served from the stored

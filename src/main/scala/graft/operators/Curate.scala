@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** The assembled end-to-end curation pipeline — what a user actually runs
   * over a raw crawl before training: per document, every gate's verdict,
   * the final keep decision, the leak-bucketed split, and the token-budget
@@ -337,11 +339,11 @@ object Curate {
       decisions.where(col("kept") && col("split") === "train").select(col("doc_id")),
       Seq("doc_id"), "left_semi")
     graft.io.Export.writeShards(spark, trainDocs, s"$path/train", tokensPerShard)
-    decisions.where(!col("kept"))
-      .write.mode("overwrite").parquet(s"$path/quarantine")
-    CorpusFilter.report(docs.join(
-        decisions.where(col("kept")).select(col("doc_id")), Seq("doc_id"), "left_semi"))
-      .write.mode("overwrite").parquet(s"$path/card")
+    Tables.write(decisions.where(!col("kept")))
+      .mode("overwrite").parquet(s"$path/quarantine")
+    Tables.write(CorpusFilter.report(docs.join(
+        decisions.where(col("kept")).select(col("doc_id")), Seq("doc_id"), "left_semi")))
+      .mode("overwrite").parquet(s"$path/card")
     decisions
   }
 }

@@ -113,10 +113,10 @@ object Dedup {
       params = Map("refBucketMax" -> refBucketMax.toString, "algo" -> "sha256",
         "idCol" -> idCol, "textCol" -> textCol),
       policy = policy) { out =>
-      graft.core.Tables.documents(spark, dir)
+      Tables.write(graft.core.Tables.documents(spark, dir)
         .where(Sampling.hashBucket(col(idCol)) < refBucketMax)
-        .select(sha2(col(textCol), 256).as("fp")).distinct()
-        .write.mode("overwrite").parquet(out)
+        .select(sha2(col(textCol), 256).as("fp")).distinct())
+        .mode("overwrite").parquet(out)
     }
     val stored = Tables.read(spark, idx.path)
     if (bloomFpp <= 0) admitAgainstFps(incoming, stored, idCol, textCol)
@@ -384,9 +384,9 @@ object Dedup {
         graft.core.Tables.documents(spark, dir)
           .where(Sampling.hashBucket(col(idCol)) < refBucketMax),
         idCol, textCol, shingleSize, seeds)
-      sig.write.mode("overwrite").parquet(s"$out/sig")
-      sigBandKeys(Tables.read(spark, s"$out/sig"), seeds, bands)
-        .write.mode("overwrite").parquet(s"$out/bands")
+      Tables.write(sig).mode("overwrite").parquet(s"$out/sig")
+      Tables.write(sigBandKeys(Tables.read(spark, s"$out/sig"), seeds, bands))
+        .mode("overwrite").parquet(s"$out/bands")
     }
     sigIncrementalAgainst(incoming, idCol,
       wordSig(incoming, idCol, textCol, shingleSize, seeds),
@@ -887,11 +887,11 @@ object Dedup {
         "shingleSize" -> shingleSize.toString,
         "layout" -> "pos", "idCol" -> idCol, "textCol" -> textCol),
       policy = policy) { out =>
-      positionalShingles(
+      Tables.write(positionalShingles(
         graft.core.Tables.documents(spark, dir)
           .where(Sampling.hashBucket(col(idCol)) < refBucketMax),
-        idCol, textCol, shingleSize)
-        .write.mode("overwrite").parquet(s"$out/pos")
+        idCol, textCol, shingleSize))
+        .mode("overwrite").parquet(s"$out/pos")
     }
     verbatimIncrementalFrom(incoming, Tables.read(spark, s"${idx.path}/pos"),
       shingleSize, minRunTokens, idCol, textCol)
@@ -1019,11 +1019,11 @@ object Dedup {
         "shingleSize" -> shingleSize.toString,
         "layout" -> "pos", "idCol" -> idCol, "textCol" -> textCol),
       policy = policy) { out =>
-      positionalShingles(
+      Tables.write(positionalShingles(
         graft.core.Tables.documents(spark, dir)
           .where(Sampling.hashBucket(col(idCol)) >= evalFromPct),
-        idCol, textCol, shingleSize)
-        .write.mode("overwrite").parquet(s"$out/pos")
+        idCol, textCol, shingleSize))
+        .mode("overwrite").parquet(s"$out/pos")
     }
 
   /** [[decontaminateRunsFrom]] against the STORED eval index over an
@@ -1534,9 +1534,9 @@ object Dedup {
         graft.core.Tables.documents(spark, dir)
           .where(Sampling.hashBucket(col(idCol)) < refBucketMax),
         idCol, textCol, shingleSize)
-      sh.write.mode("overwrite").parquet(s"$out/hs")
-      ngramBandKeys(Tables.read(spark, s"$out/hs"), seeds, bands)
-        .write.mode("overwrite").parquet(s"$out/bands")
+      Tables.write(sh).mode("overwrite").parquet(s"$out/hs")
+      Tables.write(ngramBandKeys(Tables.read(spark, s"$out/hs"), seeds, bands))
+        .mode("overwrite").parquet(s"$out/bands")
     }
     nearIncrementalAgainst(incoming, Tables.read(spark, s"${idx.path}/bands"),
       idCol, minhashShingled(_, idCol, textCol, shingleSize),
@@ -1570,9 +1570,9 @@ object Dedup {
         graft.core.Tables.documents(spark, dir)
           .where(Sampling.hashBucket(col(idCol)) < refBucketMax),
         idCol, textCol, n)
-      sh.write.mode("overwrite").parquet(s"$out/hs")
-      ngramBandKeys(Tables.read(spark, s"$out/hs"), seeds, bands)
-        .write.mode("overwrite").parquet(s"$out/bands")
+      Tables.write(sh).mode("overwrite").parquet(s"$out/hs")
+      Tables.write(ngramBandKeys(Tables.read(spark, s"$out/hs"), seeds, bands))
+        .mode("overwrite").parquet(s"$out/bands")
     }
     nearIncrementalAgainst(incoming, Tables.read(spark, s"${idx.path}/bands"),
       idCol, ngramShingled(_, idCol, textCol, n),
@@ -1958,8 +1958,8 @@ object Dedup {
         "cc" -> "min-label"),
       policy = policy) { out =>
       val docs = graft.core.Tables.documents(spark, dir)
-      dedupGroups(docs, ngramNear(docs).select(col("a_id"), col("b_id")))
-        .write.mode("overwrite").parquet(out)
+      Tables.write(dedupGroups(docs, ngramNear(docs).select(col("a_id"), col("b_id"))))
+        .mode("overwrite").parquet(out)
     }
     Tables.read(spark, idx.path).orderBy(col("doc_id"))
   }
@@ -2338,13 +2338,13 @@ object Dedup {
       params = Map("refBucketMax" -> refBucketMax.toString, "algo" -> "dhash56",
         "idCol" -> idCol, "blob" -> "text-as-binary"),
       policy = policy) { out =>
-      Multimodal.imagePHash(spark,
+      Tables.write(Multimodal.imagePHash(spark,
           graft.core.Tables.documents(spark, dir)
             .where(Sampling.hashBucket(col(idCol)) < refBucketMax)
             .select(col(idCol), col("text").cast("binary").as("blob")),
           idCol, "blob")
-        .select(col("phash")).distinct()
-        .write.mode("overwrite").parquet(out)
+        .select(col("phash")).distinct())
+        .mode("overwrite").parquet(out)
     }
 
   /** The admission half of [[imageIncremental]], shared with the indexed
@@ -2734,13 +2734,13 @@ object Dedup {
           Sampling.hashBucket(col(idCol)) < refBucketMax)
         .select(col(idCol),
           concat(lit(header), col("text").cast("binary")).as("blob"))
-      Multimodal.audioLandmarks(spark, ref, idCol, "blob",
-          windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks)
-        .write.mode("overwrite").parquet(s"$out/lm")
-      Multimodal.audioEnvelope(spark, ref, idCol, "blob",
+      Tables.write(Multimodal.audioLandmarks(spark, ref, idCol, "blob",
+          windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks))
+        .mode("overwrite").parquet(s"$out/lm")
+      Tables.write(Multimodal.audioEnvelope(spark, ref, idCol, "blob",
           windowSamples, maxBytes, hop)
-        .select(col("env")).distinct()
-        .write.mode("overwrite").parquet(s"$out/env")
+        .select(col("env")).distinct())
+        .mode("overwrite").parquet(s"$out/env")
     }
     audioIncrementalFrom(spark, incoming,
       Tables.read(spark, s"${idx.path}/lm"),
@@ -3299,9 +3299,9 @@ object Dedup {
           concat(lit(header), col("text").cast("binary")).as("blob"))
       val fr = Multimodal.videoFrameHashes(spark, ref, idCol, "blob",
         maxFrames, maxBytes).localCheckpoint(false)
-      fr.write.mode("overwrite").parquet(s"$out/fr")
-      videoFingerprints(fr, idCol).select(col("fp")).distinct()
-        .write.mode("overwrite").parquet(s"$out/fp")
+      Tables.write(fr).mode("overwrite").parquet(s"$out/fr")
+      Tables.write(videoFingerprints(fr, idCol).select(col("fp")).distinct())
+        .mode("overwrite").parquet(s"$out/fp")
     }
     videoIncrementalFrom(spark, incoming,
       Tables.read(spark, s"${idx.path}/fr"),
@@ -3800,11 +3800,11 @@ object Dedup {
         .where(Sampling.hashBucket(col("vec_id")) < refBucketMax)
       val cents = Ann.seedCentroids(ref, nCells)
       import spark.implicits._
-      cents.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cidx", "cv")
-        .coalesce(1).write.mode("overwrite").parquet(s"$out/cents")
-      Ann.assignCells(ref.select(col("vec_id"), col("embedding")), cents)
-        .select(col("cell").cast("bigint").as("cell"), col("embedding"))
-        .write.mode("overwrite").parquet(s"$out/cells")
+      Tables.write(cents.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cidx", "cv").coalesce(1))
+        .mode("overwrite").parquet(s"$out/cents")
+      Tables.write(Ann.assignCells(ref.select(col("vec_id"), col("embedding")), cents)
+        .select(col("cell").cast("bigint").as("cell"), col("embedding")))
+        .mode("overwrite").parquet(s"$out/cells")
     }
     val cents: Seq[Seq[Double]] = Tables.read(spark, s"${idx.path}/cents")
       .orderBy(col("cidx")).select(col("cv")).collect()

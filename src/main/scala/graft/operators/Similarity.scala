@@ -1,5 +1,6 @@
 package graft.operators
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
@@ -175,37 +176,55 @@ private[operators] final class QueryBlock(
 
   /** One partition's candidates: each query's best k corpus rows in the
     * window's order — rounded score descending, NULL scores last, then
-    * `vec_id` ascending with NULLs first. */
-  def topK(rows: Iterator[Row], k: Int, idType: DataType): Iterator[Row] = {
+    * `vec_id` ascending with NULLs first. Rows are (`vec_id`, `label`,
+    * `embedding`); candidates are (`query_id`, `vec_id`, `label`, `score`). */
+  def topK(rows: Iterator[Row], k: Int, idType: DataType): Iterator[Row] =
+    if (k <= 0 || ids.isEmpty) Iterator.empty
+    else select(rows, k, idType, null)._1
+      .rows((j, c) => Row(ids(j), c.vecId, c.label, c.scoreOrNull))
+
+  /** [[topK]]'s selection plus, per query, a second k-slot selection over
+    * only the rows whose cell is in that query's probe list — the exact and
+    * the IVF arm of a recall audit in one pass. Rows are (`vec_id`,
+    * `label`, `embedding`, `cell`); `probes(j)` holds query j's cells.
+    * Candidates are (`query_id`, `vec_id`, `score`, `probed`), one per
+    * retained row and arm. A NULL cell is in no probe list. */
+  def probedTopK(rows: Iterator[Row], k: Int, idType: DataType,
+                 probes: Array[java.util.BitSet]): Iterator[Row] =
+    if (k <= 0 || ids.isEmpty) Iterator.empty
+    else {
+      val (all, probed) = select(rows, k, idType, probes)
+      all.rows((j, c) => Row(ids(j), c.vecId, c.scoreOrNull, false)) ++
+        probed.rows((j, c) => Row(ids(j), c.vecId, c.scoreOrNull, true))
+    }
+
+  /** Scores every row against every query, offering it to `all` and, when
+    * `probes` is given and the row's cell (column 3) is in query j's
+    * list, to `probed` — one score per (row, query) serves both. */
+  private def select(rows: Iterator[Row], k: Int, idType: DataType,
+                     probes: Array[java.util.BitSet]): (Selection, Selection) = {
     val nq = ids.length
-    if (k <= 0 || nq == 0) return Iterator.empty
     val keyOf = CatalystTypeConverters.createToCatalystConverter(idType)
     val rank = ranking(TypeUtils.getInterpretedOrdering(idType))
-    // head = the current k-th; `bar(j)` = its score less 1e-6 once full:
-    // rounding to 6 places moves a score by at most 5e-7 and is monotone,
-    // so a raw score below the bar cannot reach the k-th and is skipped
-    // unrounded. NaN (not full, or a NULL / NaN k-th) forces the full check.
-    val slots = Array.fill(nq)(new java.util.PriorityQueue[Candidate](
-      math.min(k, 1024) + 1, rank.reverse))
-    val bar = Array.fill(nq)(Double.NaN)
+    val all = new Selection(nq, k, rank)
+    val probed = if (probes == null) null else new Selection(nq, k, rank)
     val dots = new Array[Double](nq)
     var x = new Array[Double](math.max(dim, 0))
 
-    def offer(j: Int, c: Candidate): Unit = {
-      val s = slots(j)
-      if (s.size < k) s.add(c)
-      else if (rank.lt(c, s.peek)) { s.poll(); s.add(c) }
-      if (s.size == k) bar(j) = if (s.peek.isNull) Double.NaN else s.peek.score - 1e-6
-    }
-
     rows.foreach { r =>
       val vecId = r.get(0)
-      def candidate(score: Double, isNull: Boolean) =
-        new Candidate(score, isNull, keyOf(vecId), vecId, r.get(1))
-      def offerNull(j: Int): Unit = {
-        val s = slots(j)
-        if (s.size < k || s.peek.isNull) offer(j, candidate(0.0, isNull = true))
-      }
+      val cell = if (probed == null || r.isNullAt(3)) -1 else r.getLong(3).toInt
+      def inCell(j: Int) = cell >= 0 && probes(j).get(cell)
+      // one candidate per (row, query), rounded only once admitted
+      def offer(j: Int, toAll: Boolean, toProbed: Boolean, raw: Double, isNull: Boolean): Unit =
+        if (toAll || toProbed) {
+          val c = new Candidate(if (isNull) 0.0 else round6(raw), isNull, keyOf(vecId), vecId,
+            r.get(1))
+          if (toAll) all.offer(j, c)
+          if (toProbed) probed.offer(j, c)
+        }
+      def offerNull(j: Int): Unit =
+        offer(j, all.admitsNull(j), inCell(j) && probed.admitsNull(j), 0.0, isNull = true)
       if (r.isNullAt(2)) {
         var j = 0
         while (j < nq) { offerNull(j); j += 1 }
@@ -230,16 +249,13 @@ private[operators] final class QueryBlock(
           if (lens(j) < 0) offerNull(j)
           else {
             val raw = CosineSimilarity.fromParts(dots(j), nx, sqNorms(j))
-            if (!(raw < bar(j))) offer(j, candidate(round6(raw), isNull = false))
+            offer(j, all.admits(j, raw), inCell(j) && probed.admits(j, raw), raw, isNull = false)
           }
           j += 1
         }
       }
     }
-    slots.iterator.zipWithIndex.flatMap { case (s, j) =>
-      s.iterator.asScala.map(c => Row(ids(j), c.vecId, c.label,
-        if (c.isNull) null else c.score))
-    }
+    (all, probed)
   }
 
   /** `cosine_sim`'s checks for one corpus row against each non-NULL query
@@ -305,7 +321,61 @@ private[operators] object QueryBlock {
   /** One retained corpus row of a query's selection. `key` is `vec_id` in
     * Catalyst form, compared with Spark's own ordering for its type. */
   final class Candidate(val score: Double, val isNull: Boolean, val key: Any,
-                        val vecId: Any, val label: Any)
+                        val vecId: Any, val label: Any) {
+    def scoreOrNull: Any = if (isNull) null else score
+  }
+
+  /** Each query's best k candidates so far, as a bounded heap whose head is
+    * the current k-th. `admits(j, raw)` skips a raw score below the bar —
+    * the k-th's score less 1e-6 once full: rounding to 6 places moves a
+    * score by at most 5e-7 and is monotone, so such a score cannot reach
+    * the k-th. NaN (not full, or a NULL / NaN k-th) forces the full check. */
+  final class Selection(nq: Int, k: Int, rank: Ordering[Candidate]) {
+    private val slots = Array.fill(nq)(new java.util.PriorityQueue[Candidate](
+      math.min(k, 1024) + 1, rank.reverse))
+    private val bar = Array.fill(nq)(Double.NaN)
+
+    def admits(j: Int, raw: Double): Boolean = !(raw < bar(j))
+
+    /** A NULL score ranks below every number: it enters only a slot that
+      * is not full or whose k-th is NULL too. */
+    def admitsNull(j: Int): Boolean = slots(j).size < k || slots(j).peek.isNull
+
+    def offer(j: Int, c: Candidate): Unit = {
+      val s = slots(j)
+      if (s.size < k) s.add(c)
+      else if (rank.lt(c, s.peek)) { s.poll(); s.add(c) }
+      if (s.size == k) bar(j) = if (s.peek.isNull) Double.NaN else s.peek.score - 1e-6
+    }
+
+    def rows(row: (Int, Candidate) => Row): Iterator[Row] =
+      slots.iterator.zipWithIndex.flatMap { case (s, j) => s.iterator.asScala.map(row(j, _)) }
+  }
+
+  /** The reduce side of a recall audit: [[QueryBlock.probedTopK]]
+    * candidates (`query_id`, `vec_id`, `score`, `probed`) of one exchange
+    * partition, grouped by query, become each query's exact and probed
+    * top-k lists and then (`query_id`, `hits`) — the size of their
+    * equi-join on `vec_id`: a NULL id never matches, and an id held n times
+    * in one list and m times in the other counts n·m. A query with no
+    * candidate here emits no row. */
+  def recallHits(rows: Iterator[Row], k: Int, idType: DataType): Iterator[Row] = {
+    val keyOf = CatalystTypeConverters.createToCatalystConverter(idType)
+    val rank = ranking(TypeUtils.getInterpretedOrdering(idType))
+    val byQuery = scala.collection.mutable.LinkedHashMap.empty[Any,
+      (ArrayBuffer[Candidate], ArrayBuffer[Candidate])]
+    rows.foreach { r =>
+      val (exact, probed) = byQuery.getOrElseUpdate(r.get(0), (ArrayBuffer.empty, ArrayBuffer.empty))
+      val isNull = r.isNullAt(2)
+      (if (r.getBoolean(3)) probed else exact) +=
+        new Candidate(if (isNull) 0.0 else r.getDouble(2), isNull, keyOf(r.get(1)), r.get(1), null)
+    }
+    def topKeys(cs: ArrayBuffer[Candidate]) = cs.sorted(rank).take(k).map(_.key).filter(_ != null)
+    byQuery.iterator.map { case (q, (exact, probed)) =>
+      val counts = topKeys(probed).groupMapReduce(identity)(_ => 1L)(_ + _)
+      Row(q, topKeys(exact).map(counts.getOrElse(_, 0L)).sum)
+    }
+  }
 
   /** The window's order: `score DESC` (NULLs last; NaN above every number
     * and 0.0 = -0.0, as Spark compares doubles), then `vec_id ASC` (NULLs

@@ -102,8 +102,8 @@ object SnapshotDiff {
       sourcePath = s"$dir/documents.parquet",
       params = Map("idCol" -> idCol, "textCol" -> textCol),
       policy = policy) { out =>
-      contentHashes(graft.core.Tables.documents(spark, dir), idCol, textCol)
-        .write.mode("overwrite").parquet(s"$out/hashes")
+      Tables.write(contentHashes(graft.core.Tables.documents(spark, dir), idCol, textCol))
+        .mode("overwrite").parquet(s"$out/hashes")
     }
 
   /** [[corpusDiff]] with the OLD side served from the catalog-pinned

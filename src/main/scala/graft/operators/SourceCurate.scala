@@ -277,8 +277,8 @@ object SourceCurate {
       sourcePath = s"$dir/documents.parquet",
       params = Map("minQuality" -> minQuality.toString),
       policy = policy) { out =>
-      sourceStats(graft.core.Tables.documents(spark, dir), minQuality)
-        .write.mode("overwrite").parquet(s"$out/stats")
+      Tables.write(sourceStats(graft.core.Tables.documents(spark, dir), minQuality))
+        .mode("overwrite").parquet(s"$out/stats")
     }
 
   /** [[sourceGate]] served from the stored stats index — per-snapshot
@@ -305,7 +305,7 @@ object SourceCurate {
     * the PartitionFilters). One directory per source; within a source the
     * writer keeps the incoming partitioning. */
   def writeBySource(docs: DataFrame, path: String): Unit =
-    docs.write.mode("overwrite").partitionBy("source").parquet(path)
+    Tables.write(docs).mode("overwrite").partitionBy("source").parquet(path)
 
   /** Scan a [[writeBySource]] layout restricted to the gate's kept
     * sources: the `IN` predicate on the partition column resolves to

@@ -768,8 +768,8 @@ object Streaming {
     eachBatch(docs, checkpointDir) { (batch, batchId) =>
       val prev = tokensBelow(batch.sparkSession, path, batchId)
       val assigned = Sampling.tokenShards(batch, tokensPerShard, baseTokens = prev)
-      batch.join(assigned.select(col("doc_id"), col("shard")), Seq("doc_id"))
-        .write.mode("overwrite").partitionBy("shard")
+      Tables.write(batch.join(assigned.select(col("doc_id"), col("shard")), Seq("doc_id")))
+        .mode("overwrite").partitionBy("shard")
         .parquet(batchDir(path, batchId))
       commitTokens(assigned, prev, path, batchId, retainVersions)
     }
@@ -1102,7 +1102,7 @@ object Streaming {
       batch.join(flags.where(col("kept") && col("__b") < trainPct)
           .select(col("doc_id")), Seq("doc_id"), "left_semi"),
       tokensPerShard, baseTokens = prev)
-    flags.join(assigned.select(col("doc_id"), col("shard")), Seq("doc_id"), "left")
+    Tables.write(flags.join(assigned.select(col("doc_id"), col("shard")), Seq("doc_id"), "left")
       .select(col("doc_id") +: gateCols.map(col) :+
         col("kept") :+
         when(!col("kept"), lit(null).cast("string"))
@@ -1110,8 +1110,8 @@ object Streaming {
           .when(col("__b") < benchFromPct, lit("val"))
           .otherwise(lit("bench")).as("split") :+
         when(col("kept") && col("__b") < trainPct, col("shard"))
-          .otherwise(lit(null).cast("bigint")).as("shard"): _*)
-      .write.mode("overwrite").parquet(batchDir(path, batchId))
+          .otherwise(lit(null).cast("bigint")).as("shard"): _*))
+      .mode("overwrite").parquet(batchDir(path, batchId))
     appendBatchState(Dedup.wordSignatures(batch, shingleSize = shingleSize, seeds = seeds),
       s"$path/_sigs", batchId, compactEvery)
     appendBatchState(batch.select(sha2(col("text"), 256).as("fp")).distinct(),
@@ -1593,9 +1593,9 @@ object Streaming {
                        nProbe: Int = 8,
                        policy: IndexPolicy = IndexPolicy.FailIfMissing): StreamingQuery =
     eachBatch(srcs, checkpointDir) { (batch, batchId) =>
-      graft.operators.Bitext.minePairsIncrementalIndexed(spark, dir,
-          batch, k, tau, nCells, nProbe, policy)
-        .write.mode("overwrite").parquet(batchDir(path, batchId))
+      Tables.write(graft.operators.Bitext.minePairsIncrementalIndexed(spark, dir,
+          batch, k, tau, nCells, nProbe, policy))
+        .mode("overwrite").parquet(batchDir(path, batchId))
     }
 
   /** All committed batches of a [[streamBitextMine]] run as one mined-pair
@@ -1633,8 +1633,8 @@ object Streaming {
             "the original codebook (note: trainPqCodebook defaults changed " +
             "m=8/kCodes=16 -> 16/256) or start a fresh state path")
     } else
-      Seq((m, kCodes, residual)).toDF("m", "k_codes", "residual")
-        .coalesce(1).write.mode("overwrite").parquet(geomPath)
+      Tables.write(Seq((m, kCodes, residual)).toDF("m", "k_codes", "residual").coalesce(1))
+        .mode("overwrite").parquet(geomPath)
   }
 
   // ---------------------------------------------------------------------
@@ -1664,7 +1664,7 @@ object Streaming {
     * so name order is id order. */
   private def appendBatchState(df: DataFrame, root: String, batchId: Long,
                                compactEvery: Int): Unit = {
-    df.write.mode("overwrite").parquet(batchDir(root, batchId))
+    Tables.write(df).mode("overwrite").parquet(batchDir(root, batchId))
     compactBatchState(df.sparkSession, root, batchId, compactEvery)
   }
 
@@ -1743,9 +1743,9 @@ object Streaming {
       val (base, bDirs) = stateBelow(spark, rootPath, batchId)
       if (bDirs.size >= every) {
         val dirs = base.toSeq ++ bDirs
-        unionOf(spark, dirs)
-          .coalesce(spark.sparkContext.defaultParallelism)
-          .write.mode("overwrite")
+        Tables.write(unionOf(spark, dirs)
+          .coalesce(spark.sparkContext.defaultParallelism))
+          .mode("overwrite")
           .parquet(s"$rootPath/${dirName('c', bDirs.last.id)}")
         val fs = fsOf(spark, rootPath)
         dirs.foreach(d => fs.delete(d.path, true))
@@ -1805,8 +1805,8 @@ object Streaming {
   private def commitVersion(df: DataFrame, rootPath: String, batchId: Long,
                             retain: Int = 1): Unit = {
     val vdir = dirName('v', batchId)
-    df.repartition(1).write.mode("overwrite").parquet(s"$rootPath/$vdir")
-    val fs = fsOf(df.sparkSession, rootPath)
+    Tables.write(df.repartition(1)).mode("overwrite").parquet(s"$rootPath/$vdir")
+    val fs = new Path(rootPath).getFileSystem(Tables.writeConf(df.sparkSession))
     val tmp = new Path(rootPath, "_latest.tmp")
     val out = fs.create(tmp, true)
     out.write(vdir.getBytes("UTF-8")); out.close()

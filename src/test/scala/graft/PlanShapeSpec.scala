@@ -189,10 +189,24 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("ivf_recall: candidates come from a cell equi-join on the fused assignment") {
-    val p = plan(Ann.ivfRecall(spark, dir, nQueries = 4, k = 5, nCells = 8, nProbe = 2))
+    val df = Ann.ivfRecall(spark, dir, nQueries = 4, k = 5, nCells = 8, nProbe = 2)
+    val p = plan(df)
     assert(!p.contains("CartesianProduct"), s"cartesian in recall audit:\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"probe-list equi-join missing:\n$p")
     assert(p.contains("nearest_centroid"), s"fused assignment expression missing:\n$p")
+    // one corpus pass: both arms are selected in a MapPartitions over the
+    // scan, with no join, window or shuffle of corpus rows before it
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("Window"), p)
+    val root = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+      case other => other
+    }
+    assert(root.collect { case m: org.apache.spark.sql.execution.MapPartitionsExec => m }
+      .exists(m => m.find(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec]).isDefined &&
+        m.find(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]).isEmpty),
+      s"no MapPartitions fed directly by the scan:\n$p")
+    // one shuffle, of candidates keyed by query; the final order is local
+    assert("hashpartitioning\\(query_id".r.findAllIn(p).size == 1, p)
+    assert(!p.contains("rangepartitioning"), s"range exchange for <= nQueries rows:\n$p")
   }
 
   test("hard_negatives / knn_label_audit: rank limit runs before the exchange") {

@@ -3,6 +3,8 @@ package graft.core
 import java.nio.file.{Files, Path => JPath}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.graft.CoreBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
@@ -67,6 +69,42 @@ class TablesReadSpec extends SparkSpec {
     def rows(df: DataFrame) = df.orderBy("vec_id").collect().toSeq
     assert(rows(mine) == rows(theirs))
     assert(mine.count() == 40)
+  }
+
+  test("a hidden-named side table reads the same rows without Spark's ignored-paths warning") {
+    val dir = tmp().toString
+    spark.range(0, 40).withColumnRenamed("id", "vec_id").selectExpr("vec_id",
+        "transform(sequence(0, 7), i -> cast(cos(vec_id * 5 + i) AS FLOAT)) AS embedding",
+        "cast(vec_id % 3 AS INT) AS label")
+      .repartition(2).write.parquet(s"$dir/embeddings.parquet")
+    Ann.ivfTopkTrained(spark, dir, 0L, k = 3, nCells = 4, nProbe = 2, maxIters = 2).collect()
+    val side = CatalogOps.indexRegistry(spark, dir).getIndex("embeddings-ivf-trained-c4-i2")
+      .path + "/_centroids"
+    val warned = new java.util.concurrent.CopyOnWriteArrayList[String]
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender("ignored-paths",
+        null, null, true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        warned.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    def warnings(read: => DataFrame): Int = {
+      warned.clear()
+      read
+      warned.asScala.count(_.contains("All paths were ignored"))
+    }
+    appender.start()
+    logger.addAppender(appender)
+    try {
+      assert(warnings(spark.read.parquet(side)) == 1) // the warning being removed
+      assert(warnings(Tables.read(spark, side)) == 0)
+    } finally logger.removeAppender(appender)
+    val mine = Tables.read(spark, side)
+    val theirs = spark.read.parquet(side)
+    assert(mine.schema == theirs.schema)
+    def rows(df: DataFrame) = df.collect().toSeq.map(_.toString).sorted
+    assert(rows(mine) == rows(theirs) && rows(mine).size == 4 * 8) // (cell, dim, value)
   }
 
   test("a missing path and a dir of hidden files raise Spark's own errors") {
