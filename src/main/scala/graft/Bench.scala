@@ -192,11 +192,6 @@ object Bench {
       // the contamination instead of discarding it (measured: identical
       // code, 39.9s vs 76.3s totals run-to-run without this)
       System.gc()
-      // diagnostic knob (round-16 curate adjudication): drop every cached
-      // plan the earlier queries' internal persists left in the
-      // CacheManager, so each query measures against a clean block manager
-      if (sys.env.contains("SPARK_GRAFT_BENCH_CLEARCACHE"))
-        spark.sharedState.cacheManager.clearCache()
       // drain ZOMBIE work before opening the window (round-16 bad-mode
       // record): the contaminated suite runs flood the log with
       // "non-existent accumulator" task completions — work from an earlier

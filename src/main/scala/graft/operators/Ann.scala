@@ -144,6 +144,7 @@ object Ann {
   def annRecall(spark: SparkSession, dir: String, nQueries: Int = 8, k: Int = 10,
                 bits: Int = DefaultBits, bands: Int = DefaultBands,
                 dim: Int = 64): DataFrame = {
+    require(k > 0, s"k must be > 0 (recall divides by k), got $k")
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(spark, dir)
     val queries = e.where(col("vec_id") < nQueries)
@@ -484,6 +485,7 @@ object Ann {
   def ivfPqRecall(spark: SparkSession, dir: String, nQueries: Int = 8, k: Int = 10,
                   nCells: Int = 16, nProbe: Int = 4, m: Int = 8,
                   dim: Int = 64): DataFrame = {
+    require(k > 0, s"k must be > 0 (recall divides by k), got $k")
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
@@ -1075,6 +1077,7 @@ object Ann {
     * is the retrain trigger. Scale shape: [[probeHits]]. */
   def ivfRecall(spark: SparkSession, dir: String, nQueries: Int = 8, k: Int = 10,
                 nCells: Int = 16, nProbe: Int = 4): DataFrame = {
+    require(k > 0, s"k must be > 0 (recall divides by k), got $k")
     val e = Tables.embeddings(spark, dir)
     // one read serves both the centroids and the queries
     val seeds = seedVectors(e, Long.MinValue, math.max(nCells, nQueries).toLong)

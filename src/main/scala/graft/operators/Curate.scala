@@ -88,7 +88,7 @@ object Curate {
       // the corpus-sized-but-narrow rows once for the two lineages.
       val measures = CorpusFilter.decisionsWithMeasures(docs, minQuality)
         .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .localCheckpoint(sys.env.contains("SPARK_GRAFT_EAGER_CHECKPOINT"))
+        .localCheckpoint(false)
       val verdict = SourceCurate.sourceGateFromStats(
           SourceCurate.sourceStatsFromMeasures(measures, minQuality),
           minAvgQuality)
@@ -184,8 +184,7 @@ object Curate {
     // conjunction and the shard scan so a budget-dropped doc never
     // consumes shard budget.
     val (flagged, gateCols) = budgetTokens.fold((flagged0, gateCols0)) { b =>
-      val pre = flagged0.localCheckpoint(
-        sys.env.contains("SPARK_GRAFT_EAGER_CHECKPOINT"))
+      val pre = flagged0.localCheckpoint(false)
       val sel = BudgetSelect.selectByBudget(
           docs.join(pre.where(col("kept") && col("__b") < trainPct)
             .select(col("doc_id")), Seq("doc_id"), "left_semi"), b)
@@ -207,16 +206,7 @@ object Curate {
     // first action; conditional-prefix-scan formulations that avoid the
     // fan-out still consume the frame twice (offsets aggregation + final
     // join), so the boundary is the fix, not a rewrite.
-    // SPARK_GRAFT_EAGER_CHECKPOINT (diagnostic knob, r17 stall hunt —
-    // the SPARK_GRAFT_BENCH_CLEARCACHE precedent): a LAZY checkpoint
-    // leaves a race window in which concurrent consumers can each
-    // recompute the full gates lineage before the checkpoint takes; the
-    // eager form closes that window. VERDICT (r17 A/B + r18 task-count
-    // instrument): the race is NOT the suite's stall mechanism — eager
-    // still stalled 2/6, and stalled windows run the byte-identical task
-    // set (PLANS r18). Knob kept as a documented diagnostic.
-    val matFlags = flagged.localCheckpoint(
-      sys.env.contains("SPARK_GRAFT_EAGER_CHECKPOINT"))
+    val matFlags = flagged.localCheckpoint(false)
     // running token sums over kept-train docs only; the conditional-zero
     // contribution equals tokenShards over the kept-train SUBSET, which
     // is what the oracle computes

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -107,15 +107,11 @@ object Dedup {
                               idCol: String = "doc_id", textCol: String = "text",
                               policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing,
                               bloomFpp: Double = 0.01): DataFrame = {
-    val idx = CatalogOps.indexRegistry(spark, dir).resolveIndex(
-      name = s"documents-dedup-fp2-b$refBucketMax", kind = "dedup-fp",
-      sourcePath = s"$dir/documents.parquet",
-      params = Map("refBucketMax" -> refBucketMax.toString, "algo" -> "sha256",
+    val idx = documentsIndex(spark, dir, s"documents-dedup-fp2-b$refBucketMax", "dedup-fp",
+      Map("refBucketMax" -> refBucketMax.toString, "algo" -> "sha256",
         "idCol" -> idCol, "textCol" -> textCol),
-      policy = policy) { out =>
-      Tables.write(graft.core.Tables.documents(spark, dir)
-        .where(Sampling.hashBucket(col(idCol)) < refBucketMax)
-        .select(sha2(col(textCol), 256).as("fp")).distinct())
+      policy, Sampling.hashBucket(col(idCol)) < refBucketMax) { (ref, out) =>
+      Tables.write(ref.select(sha2(col(textCol), 256).as("fp")).distinct())
         .mode("overwrite").parquet(out)
     }
     val stored = Tables.read(spark, idx.path)
@@ -134,6 +130,20 @@ object Dedup {
       admitFps(withFp, stored.where(mightContain(col("fp"))), idCol)
     }
   }
+
+  /** The catalog-managed index over one slice of `dir`'s documents table:
+    * the resolver owns both the source path the registry fingerprints and
+    * the table `build` reads, so the two cannot drift apart. Each caller
+    * passes its own slice predicate and its own build, which receives the
+    * sliced documents and the output path. */
+  private def documentsIndex(spark: SparkSession, dir: String, name: String,
+                             kind: String, params: Map[String, String],
+                             policy: graft.core.IndexPolicy, slice: Column)
+                            (build: (DataFrame, String) => Unit): graft.core.IndexMeta =
+    CatalogOps.indexRegistry(spark, dir).resolveIndex(name = name, kind = kind,
+      sourcePath = s"$dir/documents.parquet", params = params, policy = policy) { out =>
+      build(Tables.documents(spark, dir).where(slice), out)
+    }
 
   /** Candidate pairs from LSH buckets, shared by every near-dup family:
     * one shuffle on the two-part bucket id, ids collected and sorted per
@@ -214,6 +224,41 @@ object Dedup {
           |END""".stripMargin)).as("p"))
       .select(col("p.a_id"), col("p.b_id"))
       .distinct()
+  }
+
+  /** The one-row KEY-SPACE saturation audit behind every public
+    * `*KeyAudit`: over a keyed table it reports the item count
+    * (`Σ|bucket| / rowsPerItem` — a banded table carries one row per band
+    * per item), the distinct key count, `max`/`mean` bucket size, and
+    * `est_candidates` = Σ_keys |bucket|² — the exact row count of the key
+    * self-join the family's mine runs (ordered pairs, self included). The
+    * square is computed in decimal(38,0) and reported as DOUBLE (exact
+    * below 2⁵³): a single bucket past ~3·10⁹ rows overflows long under
+    * ANSI arithmetic — precisely the saturated regime the audit exists to
+    * diagnose, so the audit must not be the thing that dies there. Each
+    * public audit names its own columns. An empty input yields one row
+    * with NULL sizes and 0 keys. */
+  private def keyAudit(keyed: DataFrame, keyCols: Seq[String],
+                       nName: String, keysName: String,
+                       maxName: String = "max_bucket", meanName: String = "mean_bucket",
+                       rowsPerItem: Int = 1): DataFrame =
+    keyed.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("bn"))
+      .agg((sum(col("bn")) / lit(rowsPerItem)).cast("bigint").as(nName),
+        count(lit(1)).as(keysName),
+        max(col("bn")).as(maxName),
+        round(sum(col("bn")).cast("double") / count(lit(1)), 6).as(meanName),
+        sum(col("bn").cast("decimal(38,0)") * col("bn"))
+          .cast("double").as("est_candidates"))
+
+  /** The escalation rule every audited `*Auto` gates on: the corpus is
+    * saturated iff the expected candidate fan-out per item,
+    * `est_candidates / max(n, 1)`, strictly exceeds `fanoutMax`. An empty
+    * input (NULL item count) is never saturated, so it runs the explicit
+    * arm. */
+  private[graft] def saturated(audit: DataFrame, fanoutMax: Double): Boolean = {
+    val a = audit.head
+    !a.isNullAt(0) &&
+      a.getAs[Double]("est_candidates") > fanoutMax * math.max(a.getLong(0), 1L)
   }
 
   /** X3b — MinHash LSH near-duplicate text pairs.
@@ -372,18 +417,13 @@ object Dedup {
                                           shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6,
                                           estThreshold: Double = 0.5,
                                           policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val idx = CatalogOps.indexRegistry(spark, dir).resolveIndex(
-      name = wordSigIndexName(refBucketMax, shingleSize), kind = "dedup-sig",
-      sourcePath = s"$dir/documents.parquet",
-      params = Map("refBucketMax" -> refBucketMax.toString,
+    val idx = documentsIndex(spark, dir, wordSigIndexName(refBucketMax, shingleSize), "dedup-sig",
+      Map("refBucketMax" -> refBucketMax.toString,
         "shingleSize" -> shingleSize.toString, "shingles" -> "word",
         "seeds" -> seeds.toString, "bands" -> bands.toString,
         "layout" -> "bands+sig", "idCol" -> idCol, "textCol" -> textCol),
-      policy = policy) { out =>
-      val sig = wordSig(
-        graft.core.Tables.documents(spark, dir)
-          .where(Sampling.hashBucket(col(idCol)) < refBucketMax),
-        idCol, textCol, shingleSize, seeds)
+      policy, Sampling.hashBucket(col(idCol)) < refBucketMax) { (ref, out) =>
+      val sig = wordSig(ref, idCol, textCol, shingleSize, seeds)
       Tables.write(sig).mode("overwrite").parquet(s"$out/sig")
       Tables.write(sigBandKeys(Tables.read(spark, s"$out/sig"), seeds, bands))
         .mode("overwrite").parquet(s"$out/bands")
@@ -438,16 +478,24 @@ object Dedup {
       .join(sigRef.select(col("doc_id").as("ref_id"), col("sig").as("gb")), Seq("ref_id"))
       .select(col("inc_id"), sigEstimate(col("ga"), col("gb"), seeds).as("j"))
       .where(col("j") >= estThreshold)
-      .groupBy(col("inc_id"))
-      .agg(count(lit(1)).as("n_near"), max(col("j")).as("max_est_jaccard"))
+    admitRestore(incoming, idCol, near, "max_est_jaccard")
+  }
+
+  /** The admit-restore tail shared by the near-dup admissions: `near`
+    * holds `(inc_id, j)` verified matches at or above the threshold; every
+    * incoming row reports its match count `n_near`, best score `scoreCol`
+    * (0 when unmatched) and `keep` = no match. */
+  private def admitRestore(incoming: DataFrame, idCol: String, near: DataFrame,
+                           scoreCol: String): DataFrame =
     incoming.select(col(idCol).as("inc_id"))
-      .join(near, Seq("inc_id"), "left")
+      .join(near.groupBy(col("inc_id"))
+        .agg(count(lit(1)).as("n_near"), max(col("j")).as(scoreCol)),
+        Seq("inc_id"), "left")
       .select(col("inc_id").as(idCol),
         coalesce(col("n_near"), lit(0L)).as("n_near"),
-        coalesce(col("max_est_jaccard"), lit(0.0)).as("max_est_jaccard"),
+        coalesce(col(scoreCol), lit(0.0)).as(scoreCol),
         (coalesce(col("n_near"), lit(0L)) === 0L).as("keep"))
       .orderBy(col(idCol))
-  }
 
   /** X3e — duplicated-span audit, the shingle-granular reading of exact
     * substring dedup (Lee et al. 2022, "Deduplicating Training Data Makes
@@ -543,6 +591,17 @@ object Dedup {
         explode(sequence(col("pos"), col("pos") + lit(shingleSize - 1))).as("ti"))
       .distinct()
     val tokens = eligible.select(col("doc_id"), posexplode(col("t")).as(Seq("ti", "w")))
+    trimCovered(base, tokens, covered, shingleSize)
+  }
+
+  /** The covered-token restore tail shared by [[trimSpans]] and
+    * [[decontaminateTrim]]: `tokens` `(doc_id, ti, w)` minus the
+    * `covered` `(doc_id, ti)` positions reassemble in token order with ONE
+    * doc-keyed aggregation, and every `base` `(doc_id, __text, t)` row
+    * reports its trimmed text and accounting. Documents with fewer than
+    * `shingleSize` tokens pass through untouched. */
+  private def trimCovered(base: DataFrame, tokens: DataFrame, covered: DataFrame,
+                          shingleSize: Int): DataFrame = {
     val trimmed = tokens.join(covered, Seq("doc_id", "ti"), "left_anti")
       .groupBy(col("doc_id"))
       .agg(concat_ws(" ",
@@ -626,11 +685,7 @@ object Dedup {
           .union(p.select(col("b_id").as("doc_id"))).distinct(),
         Seq("doc_id"), "left_semi")
     }
-    val pos = if (maxOcc <= 0) posP else
-      posP.join(
-        posP.groupBy(col("h")).agg(count(lit(1)).as("__occ"))
-          .where(col("__occ") > maxOcc).select(col("h")),
-        Seq("h"), "left_anti")
+    val pos = dropHot(posP, maxOcc)
     val co0 = pos.select(col("doc_id").as("a_id"), col("h"), col("pos").as("pa"))
       .join(pos.select(col("doc_id").as("b_id"), col("h"), col("pos").as("pb")),
         Seq("h"))
@@ -650,6 +705,17 @@ object Dedup {
           .as("max_run_tokens"),
         sum(col("__len")).cast("bigint").as("n_cooccurrences"))
   }
+
+  /** The boilerplate cut shared by the positional family: `maxOcc > 0`
+    * drops every posting whose shingle hash occurs more than `maxOcc`
+    * times in `pos`, as an anti-join against the tiny HOT-hash list (see
+    * [[sharedRunsFrom]]); `maxOcc <= 0` passes `pos` through. */
+  private def dropHot(pos: DataFrame, maxOcc: Int): DataFrame =
+    if (maxOcc <= 0) pos else
+      pos.join(
+        pos.groupBy(col("h")).agg(count(lit(1)).as("__occ"))
+          .where(col("__occ") > maxOcc).select(col("h")),
+        Seq("h"), "left_anti")
 
   /** X3e'' — VERBATIM-OVERLAP pairs: document pairs sharing a contiguous
     * token run of ≥ `minRunTokens`, with the longest shared run's exact
@@ -754,21 +820,16 @@ object Dedup {
     * [[verbatimOverlap]]'s EXACT pre-cut co-occurrence volume (position
     * multiplicity included: a shingle repeated within one document
     * multiplies the join like any other occurrence, which is why the
-    * audit counts occurrences, not documents). decimal(38,0) square
-    * reported as DOUBLE — the overflow regime is the diagnosis.
-    * `est_candidates / n_positions` is the expected co-occurrence fan-out
+    * audit counts occurrences, not documents); aggregation and overflow
+    * contract: [[keyAudit]]. `est_candidates / n_positions` is the expected co-occurrence fan-out
     * per posting; ~1–2 on healthy prose, quadratic under replica crawls
     * or corpus-wide boilerplate. */
   def overlapKeyAudit(docs: DataFrame, shingleSize: Int = 5,
                       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    positionalShingles(docs, idCol, textCol, shingleSize)
-      .groupBy(col("h")).agg(count(lit(1)).as("bn"))
-      .agg(sum(col("bn")).as("n_positions"),
-        count(lit(1)).as("n_shingles"),
-        max(col("bn")).as("max_bucket"),
-        round(sum(col("bn")).cast("double") / count(lit(1)), 6).as("mean_bucket"),
-        sum(col("bn").cast("decimal(38,0)") * col("bn"))
-          .cast("double").as("est_candidates"))
+    postingAudit(positionalShingles(docs, idCol, textCol, shingleSize))
+
+  private def postingAudit(pos: DataFrame): DataFrame =
+    keyAudit(pos, Seq("h"), "n_positions", "n_shingles")
 
   /** The CROSS-SIDE diagonal-run merge: incoming postings × reference
     * postings on the shingle hash, islands per (inc, ref, diagonal) — the
@@ -784,16 +845,23 @@ object Dedup {
     * matches as runs. Same declared fragmentation semantics: a genuine
     * run THROUGH a capped-hot reference region reports its longest
     * surviving segment; a reference-template-only match vanishes. */
-  private def runsAgainst(posInc: DataFrame, posRef0: DataFrame,
-                          shingleSize: Int, maxRefDf: Int = 0): DataFrame = {
-    val posRef = if (maxRefDf <= 0) posRef0 else
-      posRef0.join(
-        posRef0.groupBy(col("h")).agg(count(lit(1)).as("__occ"))
-          .where(col("__occ") > maxRefDf).select(col("h")),
-        Seq("h"), "left_anti")
+  private def runsAgainst(posInc: DataFrame, posRef: DataFrame,
+                          shingleSize: Int, maxRefDf: Int = 0): DataFrame =
+    islandsAgainst(posInc, posRef, maxRefDf)
+      .groupBy(col("inc_id"), col("ref_id"))
+      .agg((max(col("__len")) + lit(shingleSize - 1)).cast("bigint")
+        .as("max_run_tokens"))
+
+  /** The cross-side islands under [[runsAgainst]] and
+    * [[decontaminateTrim]]: the [[dropHot]] cut on the reference side,
+    * the hash equi-join, and one `(inc_id, ref_id, diag, __grp)` row per
+    * island with its length `__len` (in positional shingles) and start
+    * position `__p0`. */
+  private def islandsAgainst(posInc: DataFrame, posRef: DataFrame,
+                             maxRefDf: Int): DataFrame = {
     val co = posInc.select(col("doc_id").as("inc_id"), col("h"),
         col("pos").as("pa"))
-      .join(posRef.select(col("doc_id").as("ref_id"), col("h"),
+      .join(dropHot(posRef, maxRefDf).select(col("doc_id").as("ref_id"), col("h"),
         col("pos").as("pb")), Seq("h"))
     val w = Window.partitionBy(col("inc_id"), col("ref_id"), col("diag"))
       .orderBy(col("pa"))
@@ -801,10 +869,7 @@ object Dedup {
         col("pa"))
       .withColumn("__grp", col("pa") - row_number().over(w))
       .groupBy(col("inc_id"), col("ref_id"), col("diag"), col("__grp"))
-      .agg(count(lit(1)).as("__len"))
-      .groupBy(col("inc_id"), col("ref_id"))
-      .agg((max(col("__len")) + lit(shingleSize - 1)).cast("bigint")
-        .as("max_run_tokens"))
+      .agg(count(lit(1)).as("__len"), min(col("pa")).as("__p0"))
   }
 
   /** Incremental VERBATIM dedup — the [[verbatimOverlap]] family's
@@ -880,17 +945,13 @@ object Dedup {
                                  shingleSize: Int = 5, minRunTokens: Int = 20,
                                  idCol: String = "doc_id", textCol: String = "text",
                                  policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val idx = CatalogOps.indexRegistry(spark, dir).resolveIndex(
-      name = verbatimPosIndexName(refBucketMax, shingleSize), kind = "verbatim-pos",
-      sourcePath = s"$dir/documents.parquet",
-      params = Map("refBucketMax" -> refBucketMax.toString,
+    val idx = documentsIndex(spark, dir, verbatimPosIndexName(refBucketMax, shingleSize),
+      "verbatim-pos",
+      Map("refBucketMax" -> refBucketMax.toString,
         "shingleSize" -> shingleSize.toString,
         "layout" -> "pos", "idCol" -> idCol, "textCol" -> textCol),
-      policy = policy) { out =>
-      Tables.write(positionalShingles(
-        graft.core.Tables.documents(spark, dir)
-          .where(Sampling.hashBucket(col(idCol)) < refBucketMax),
-        idCol, textCol, shingleSize))
+      policy, Sampling.hashBucket(col(idCol)) < refBucketMax) { (ref, out) =>
+      Tables.write(positionalShingles(ref, idCol, textCol, shingleSize))
         .mode("overwrite").parquet(s"$out/pos")
     }
     verbatimIncrementalFrom(incoming, Tables.read(spark, s"${idx.path}/pos"),
@@ -1011,18 +1072,12 @@ object Dedup {
                                   dir: String, evalFromPct: Int, shingleSize: Int,
                                   idCol: String = "doc_id", textCol: String = "text",
                                   policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): graft.core.IndexMeta =
-    CatalogOps.indexRegistry(spark, dir).resolveIndex(
-      name = evalPosIndexName(evalFromPct, shingleSize),
-      kind = "verbatim-pos",
-      sourcePath = s"$dir/documents.parquet",
-      params = Map("evalFromPct" -> evalFromPct.toString,
+    documentsIndex(spark, dir, evalPosIndexName(evalFromPct, shingleSize), "verbatim-pos",
+      Map("evalFromPct" -> evalFromPct.toString,
         "shingleSize" -> shingleSize.toString,
         "layout" -> "pos", "idCol" -> idCol, "textCol" -> textCol),
-      policy = policy) { out =>
-      Tables.write(positionalShingles(
-        graft.core.Tables.documents(spark, dir)
-          .where(Sampling.hashBucket(col(idCol)) >= evalFromPct),
-        idCol, textCol, shingleSize))
+      policy, Sampling.hashBucket(col(idCol)) >= evalFromPct) { (ev, out) =>
+      Tables.write(positionalShingles(ev, idCol, textCol, shingleSize))
         .mode("overwrite").parquet(s"$out/pos")
     }
 
@@ -1137,11 +1192,11 @@ object Dedup {
     * `shingleSize` tokens pass through untouched; a fully-contaminated
     * document trims to "" (the [[trimSpans]] coalesce contract).
     *
-    * Scale shape: the [[runsAgainst]] merge keeps per-island `min(pa)` so
-    * coverage expands to ≤ (island length + shingleSize − 1) token ids
-    * per qualifying island — never a per-token join against eval; the
-    * reassembly is [[trimSpans]]' one doc-keyed aggregation (per-doc
-    * state = the doc's own tokens). */
+    * Scale shape: the [[islandsAgainst]] merge keeps per-island
+    * `min(pa)` so coverage expands to ≤ (island length + shingleSize − 1)
+    * token ids per qualifying island — never a per-token join against
+    * eval; the reassembly is [[trimCovered]]'s one doc-keyed aggregation
+    * (per-doc state = the doc's own tokens). */
   def decontaminateTrim(docs: DataFrame, shingleSize: Int = 5,
                         minRunTokens: Int = 13,
                         trainPct: Int = 80, benchFromPct: Int = 90,
@@ -1178,30 +1233,14 @@ object Dedup {
   /** The treatment tail shared by [[decontaminateTrim]] and
     * [[decontaminateTrimIndexed]] — `posRef0` is the eval suite's posting
     * table, inline-shingled or read from the stored index. */
-  private def decontaminateTrimFrom(train: DataFrame, posRef0: DataFrame,
+  private def decontaminateTrimFrom(train: DataFrame, posRef: DataFrame,
                                     shingleSize: Int, minRunTokens: Int,
                                     idCol: String, textCol: String,
                                     maxEvalDf: Int): DataFrame = {
-    val posInc = positionalShingles(train, idCol, textCol, shingleSize)
-    val posRef = if (maxEvalDf <= 0) posRef0 else
-      posRef0.join(
-        posRef0.groupBy(col("h")).agg(count(lit(1)).as("__occ"))
-          .where(col("__occ") > maxEvalDf).select(col("h")),
-        Seq("h"), "left_anti")
-    // islands WITH their start position (runsAgainst keeps only lengths)
-    val co = posInc.select(col("doc_id").as("inc_id"), col("h"),
-        col("pos").as("pa"))
-      .join(posRef.select(col("doc_id").as("ref_id"), col("h"),
-        col("pos").as("pb")), Seq("h"))
-    val w = Window.partitionBy(col("inc_id"), col("ref_id"), col("diag"))
-      .orderBy(col("pa"))
-    val isl = co.select(col("inc_id"), col("ref_id"),
-        (col("pa") - col("pb")).as("diag"), col("pa"))
-      .withColumn("__grp", col("pa") - row_number().over(w))
-      .groupBy(col("inc_id"), col("ref_id"), col("diag"), col("__grp"))
-      .agg(count(lit(1)).as("__len"), min(col("pa")).as("__p0"))
+    val covered = islandsAgainst(positionalShingles(train, idCol, textCol, shingleSize),
+        posRef, maxEvalDf)
       .where(col("__len") + lit(shingleSize - 1) >= minRunTokens)
-    val covered = isl.select(col("inc_id").as("doc_id"),
+      .select(col("inc_id").as("doc_id"),
         explode(sequence(col("__p0"),
           col("__p0") + col("__len") + lit(shingleSize - 2))).as("ti"))
       .distinct()
@@ -1211,24 +1250,7 @@ object Dedup {
     val tokens = eligible.select(col("doc_id"),
       posexplode(col("t")).as(Seq("ti", "w")))
       .select(col("doc_id"), col("ti").cast("bigint").as("ti"), col("w"))
-    val trimmed = tokens.join(covered, Seq("doc_id", "ti"), "left_anti")
-      .groupBy(col("doc_id"))
-      .agg(concat_ws(" ",
-        transform(sort_array(collect_list(struct(col("ti"), col("w")))),
-          s => s.getField("w"))).as("__kept"),
-        count(lit(1)).as("__n_kept"))
-    base.select(col("doc_id"), col("__text"), size(col("t")).as("n_tokens"))
-      .join(trimmed, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("n_tokens") < shingleSize, col("__text"))
-          .otherwise(coalesce(col("__kept"), lit(""))).as("kept_text"),
-        col("n_tokens").cast("bigint").as("n_tokens"),
-        when(col("n_tokens") < shingleSize, lit(0L))
-          .otherwise(col("n_tokens") - coalesce(col("__n_kept"), lit(0L)))
-          .as("n_removed"))
-      .withColumn("removed_ratio",
-        round(col("n_removed").cast("double") / greatest(col("n_tokens"), lit(1L)), 6))
-      .orderBy(col("doc_id"))
+    trimCovered(base, tokens, covered, shingleSize)
   }
 
   /** [[verbatimOverlap]] with the quadratic-co-occurrence escape
@@ -1260,18 +1282,9 @@ object Dedup {
     // accumulate cached postings until eviction)
     val pos = positionalShingles(docs, idCol, textCol, shingleSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = pos.groupBy(col("h")).agg(count(lit(1)).as("bn"))
-      .agg(sum(col("bn")).as("np"),
-        sum(col("bn").cast("decimal(38,0)") * col("bn")).cast("double").as("ec"))
-      .head
-    val saturated = !a.isNullAt(0) &&
-      a.getAs[Double]("ec") > fanoutMax * math.max(a.getLong(0), 1L).toDouble
     val minePos =
-      if (saturated)
-        pos.join(docs.select(col(idCol).as("doc_id"), sha2(col(textCol), 256).as("fp"))
-            .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-            .select(col("doc_id")),
-          Seq("doc_id"), "left_semi")
+      if (saturated(postingAudit(pos), fanoutMax))
+        pos.join(textReps(docs, idCol, textCol), Seq("doc_id"), "left_semi")
       else pos
     sharedRunsFrom(minePos, None, shingleSize)
       .where(col("max_run_tokens") >= minRunTokens)
@@ -1373,18 +1386,12 @@ object Dedup {
     * crawls, the dominant 100 TB web-text regime, where N byte-identical
     * documents share EVERY band key — each duplicate class contributes
     * `bands · N²` rows that no banding parameter can cut (the key carries
-    * no information within the class). decimal(38,0) square reported as
-    * DOUBLE — the overflow regime IS the regime the audit diagnoses.
-    * `est_candidates / n_docs` is the expected candidate fan-out per
-    * document, the decision quantity [[minhashNearAuto]] gates on. */
+    * no information within the class). Aggregation and overflow
+    * contract: [[keyAudit]]. `est_candidates / n_docs` is the expected
+    * candidate fan-out per document, the decision quantity
+    * [[minhashNearAuto]] gates on. */
   def bandKeyAudit(banded: DataFrame, bands: Int): DataFrame =
-    banded.groupBy(col("band"), col("key")).agg(count(lit(1)).as("bn"))
-      .agg((sum(col("bn")) / lit(bands)).cast("bigint").as("n_docs"),
-        count(lit(1)).as("n_keys"),
-        max(col("bn")).as("max_bucket"),
-        round(sum(col("bn")).cast("double") / count(lit(1)), 6).as("mean_bucket"),
-        sum(col("bn").cast("decimal(38,0)") * col("bn"))
-          .cast("double").as("est_candidates"))
+    keyAudit(banded, Seq("band", "key"), "n_docs", "n_keys", rowsPerItem = bands)
 
   /** [[bandKeyAudit]] over [[minhashNear]]'s word-shingle band keys —
     * the one-row saturation probe a pipeline runs before pointing the
@@ -1421,19 +1428,19 @@ object Dedup {
                                jaccardThreshold: Double,
                                fanoutMax: Double): DataFrame = {
     val sh = sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = bandKeyAudit(ngramBandKeys(sh, seeds, bands), bands).head
-    val saturated = !a.isNullAt(0) &&
-      a.getAs[Double]("est_candidates") >
-        fanoutMax * math.max(a.getLong(0), 1L).toDouble
     val mineSh =
-      if (saturated)
-        sh.join(docs.select(col(idCol).as("doc_id"), sha2(col(textCol), 256).as("fp"))
-            .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-            .select(col("doc_id")),
-          Seq("doc_id"))
+      if (saturated(bandKeyAudit(ngramBandKeys(sh, seeds, bands), bands), fanoutMax))
+        sh.join(textReps(docs, idCol, textCol), Seq("doc_id"))
       else sh
     jaccardPairsFrom(mineSh, seeds, bands, jaccardThreshold)
   }
+
+  /** The min-id `doc_id` of every sha-256 text group ([[exact]]'s key) —
+    * the representative slice the saturated text autos mine. */
+  private def textReps(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).as("doc_id"), sha2(col(textCol), 256).as("fp"))
+      .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
+      .select(col("doc_id"))
 
   /** [[minhashNear]] with the quadratic-candidate escape SELF-DIALED from
     * the measured band-key saturation — [[imageNearAuto]]'s
@@ -1522,18 +1529,13 @@ object Dedup {
                                     shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6,
                                     jaccardThreshold: Double = 0.3,
                                     policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val idx = CatalogOps.indexRegistry(spark, dir).resolveIndex(
-      name = wordBandIndexName(refBucketMax, shingleSize), kind = "dedup-band",
-      sourcePath = s"$dir/documents.parquet",
-      params = Map("refBucketMax" -> refBucketMax.toString,
+    val idx = documentsIndex(spark, dir, wordBandIndexName(refBucketMax, shingleSize), "dedup-band",
+      Map("refBucketMax" -> refBucketMax.toString,
         "shingleSize" -> shingleSize.toString, "shingles" -> "word",
         "seeds" -> seeds.toString, "bands" -> bands.toString,
         "layout" -> "bands+hs", "idCol" -> idCol, "textCol" -> textCol),
-      policy = policy) { out =>
-      val sh = minhashShingled(
-        graft.core.Tables.documents(spark, dir)
-          .where(Sampling.hashBucket(col(idCol)) < refBucketMax),
-        idCol, textCol, shingleSize)
+      policy, Sampling.hashBucket(col(idCol)) < refBucketMax) { (ref, out) =>
+      val sh = minhashShingled(ref, idCol, textCol, shingleSize)
       Tables.write(sh).mode("overwrite").parquet(s"$out/hs")
       Tables.write(ngramBandKeys(Tables.read(spark, s"$out/hs"), seeds, bands))
         .mode("overwrite").parquet(s"$out/bands")
@@ -1559,17 +1561,12 @@ object Dedup {
                                   n: Int = 8, seeds: Int = 12, bands: Int = 4,
                                   jaccardThreshold: Double = 0.5,
                                   policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val idx = CatalogOps.indexRegistry(spark, dir).resolveIndex(
-      name = ngramBandIndexName(refBucketMax, n), kind = "dedup-band",
-      sourcePath = s"$dir/documents.parquet",
-      params = Map("refBucketMax" -> refBucketMax.toString, "n" -> n.toString,
+    val idx = documentsIndex(spark, dir, ngramBandIndexName(refBucketMax, n), "dedup-band",
+      Map("refBucketMax" -> refBucketMax.toString, "n" -> n.toString,
         "seeds" -> seeds.toString, "bands" -> bands.toString,
         "layout" -> "bands+hs", "idCol" -> idCol, "textCol" -> textCol),
-      policy = policy) { out =>
-      val sh = ngramShingled(
-        graft.core.Tables.documents(spark, dir)
-          .where(Sampling.hashBucket(col(idCol)) < refBucketMax),
-        idCol, textCol, n)
+      policy, Sampling.hashBucket(col(idCol)) < refBucketMax) { (ref, out) =>
+      val sh = ngramShingled(ref, idCol, textCol, n)
       Tables.write(sh).mode("overwrite").parquet(s"$out/hs")
       Tables.write(ngramBandKeys(Tables.read(spark, s"$out/hs"), seeds, bands))
         .mode("overwrite").parquet(s"$out/bands")
@@ -1653,15 +1650,7 @@ object Dedup {
       .select(col("inc_id"),
         round(LshFunctions.jaccard(col("sa"), col("sb")), 6).as("j"))
       .where(col("j") >= jaccardThreshold)
-      .groupBy(col("inc_id"))
-      .agg(count(lit(1)).as("n_near"), max(col("j")).as("max_jaccard"))
-    incoming.select(col(idCol).as("inc_id"))
-      .join(near, Seq("inc_id"), "left")
-      .select(col("inc_id").as(idCol),
-        coalesce(col("n_near"), lit(0L)).as("n_near"),
-        coalesce(col("max_jaccard"), lit(0.0)).as("max_jaccard"),
-        (coalesce(col("n_near"), lit(0L)) === 0L).as("keep"))
-      .orderBy(col(idCol))
+    admitRestore(incoming, idCol, near, "max_jaccard")
   }
 
   /** Cross-source overlap matrix via per-source MinHash sketches — the
@@ -1951,13 +1940,10 @@ object Dedup {
     * is the `dedup_groups` recursive-walk SQL verbatim. */
   def dedupGroupsIndexed(spark: SparkSession, dir: String,
                          policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val idx = CatalogOps.indexRegistry(spark, dir).resolveIndex(
-      name = "documents-dedup-groups-ngram8", kind = "dedup-groups",
-      sourcePath = s"$dir/documents.parquet",
-      params = Map("pairs" -> "ngramNear(n=8,seeds=12,bands=4,jaccard=0.5)",
+    val idx = documentsIndex(spark, dir, "documents-dedup-groups-ngram8", "dedup-groups",
+      Map("pairs" -> "ngramNear(n=8,seeds=12,bands=4,jaccard=0.5)",
         "cc" -> "min-label"),
-      policy = policy) { out =>
-      val docs = graft.core.Tables.documents(spark, dir)
+      policy, lit(true)) { (docs, out) =>
       Tables.write(dedupGroups(docs, ngramNear(docs).select(col("a_id"), col("b_id"))))
         .mode("overwrite").parquet(out)
     }
@@ -2095,12 +2081,8 @@ object Dedup {
       df.select(col("vec_id"),
         posexplode(LshFunctions.band_keys(col("bs"), bands, bits / bands))
           .as(Seq("band", "key")))
-    val a = bandKeyAudit(bandedOf(withBits), bands).head
-    val saturated = !a.isNullAt(0) &&
-      a.getAs[Double]("est_candidates") >
-        fanoutMax * math.max(a.getLong(0), 1L).toDouble
     val mine =
-      if (saturated)
+      if (saturated(bandKeyAudit(bandedOf(withBits), bands), fanoutMax))
         withBits.join(
           withBits.groupBy(col("bs")).agg(min(col("vec_id")).as("vec_id"))
             .select(col("vec_id")),
@@ -2226,19 +2208,12 @@ object Dedup {
     * [[imageNear]] on hash-identical groups before any banding can help
     * (N copies of one image are N² ordered pairs of nothing the banding
     * parameters cannot cut: the key carries no information within the
-    * group). decimal(38,0) square reported as DOUBLE — the overflow
-    * regime IS the regime the audit diagnoses.
+    * group). Aggregation and overflow contract: [[keyAudit]].
     * `est_candidates / n_images` is the expected pair fan-out per image;
     * ~1–2 on a healthy near-distinct corpus, quadratic-ish under heavy
     * exact duplication (replica crawls, boilerplate grids). */
   def phashKeyAudit(hashed: DataFrame): DataFrame =
-    hashed.groupBy(col("phash")).agg(count(lit(1)).as("bn"))
-      .agg(sum(col("bn")).as("n_images"),
-        count(lit(1)).as("n_hashes"),
-        max(col("bn")).as("max_bucket"),
-        round(sum(col("bn")).cast("double") / count(lit(1)), 6).as("mean_bucket"),
-        sum(col("bn").cast("decimal(38,0)") * col("bn"))
-          .cast("double").as("est_candidates"))
+    keyAudit(hashed, Seq("phash"), "n_images", "n_hashes")
 
   /** [[imageNear]] with the quadratic-output escape SELF-DIALED from the
     * measured hash saturation — [[videoNearHammingAuto]]'s
@@ -2262,11 +2237,7 @@ object Dedup {
                     fanoutMax: Double = 16.0): DataFrame = {
     val hashed = Multimodal.imagePHash(spark, docs, idCol, blobCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = phashKeyAudit(hashed).head
-    val saturated = !a.isNullAt(0) &&
-      a.getAs[Double]("est_candidates") >
-        fanoutMax * math.max(a.getLong(0), 1L).toDouble
-    if (saturated)
+    if (saturated(phashKeyAudit(hashed), fanoutMax))
       hammingPhashPairs(
         hashed.groupBy(col("phash")).agg(min(col(idCol)).as(idCol)),
         idCol, bands, maxHamming, agreeBands)
@@ -2332,16 +2303,12 @@ object Dedup {
                                   dir: String, refBucketMax: Int,
                                   idCol: String,
                                   policy: graft.core.IndexPolicy): graft.core.IndexMeta =
-    CatalogOps.indexRegistry(spark, dir).resolveIndex(
-      name = s"documents-image-phash-b$refBucketMax", kind = "image-phash",
-      sourcePath = s"$dir/documents.parquet",
-      params = Map("refBucketMax" -> refBucketMax.toString, "algo" -> "dhash56",
+    documentsIndex(spark, dir, s"documents-image-phash-b$refBucketMax", "image-phash",
+      Map("refBucketMax" -> refBucketMax.toString, "algo" -> "dhash56",
         "idCol" -> idCol, "blob" -> "text-as-binary"),
-      policy = policy) { out =>
+      policy, Sampling.hashBucket(col(idCol)) < refBucketMax) { (ref, out) =>
       Tables.write(Multimodal.imagePHash(spark,
-          graft.core.Tables.documents(spark, dir)
-            .where(Sampling.hashBucket(col(idCol)) < refBucketMax)
-            .select(col(idCol), col("text").cast("binary").as("blob")),
+          ref.select(col(idCol), col("text").cast("binary").as("blob")),
           idCol, "blob")
         .select(col("phash")).distinct())
         .mode("overwrite").parquet(out)
@@ -2450,25 +2417,40 @@ object Dedup {
       windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks), idCol, minVotes)
       .orderBy(col("a_id"), col("b_id"))
 
+  /** The shift-invariant full 5-column landmark join key (`lc = dt2 = 0`
+    * under pair keys, so the pair semantics are unchanged). */
+  private val landmarkKey = Seq("la", "lb", "lc", "dt", "dt2")
+
   /** The landmark vote join shared by [[audioLandmarkNear]] and
-    * [[audioDedup]]: self-join on the shift-invariant full 5-column key
-    * (`lc = dt2 = 0` under pair keys, so the pair semantics are
-    * unchanged), per-offset count, max-vote threshold. Two-level hash
-    * aggregation with map-side partial collapse — no sort. */
+    * [[audioDedup]]: [[offsetVotes]] on [[landmarkKey]], offsets in
+    * landmark time `ta`. */
   private def landmarkVotes(lm: DataFrame, idCol: String,
-                            minVotes: Int): DataFrame = {
-    val a = lm.select(col(idCol).as("a_id"), col("la"), col("lb"), col("lc"),
-      col("dt"), col("dt2"), col("ta").as("taa"))
-    val b = lm.select(col(idCol).as("b_id"), col("la"), col("lb"), col("lc"),
-      col("dt"), col("dt2"), col("ta").as("tab"))
-    a.join(b, Seq("la", "lb", "lc", "dt", "dt2"))
+                            minVotes: Int): DataFrame =
+    offsetVotes(lm, idCol, landmarkKey, "ta", minVotes)
+
+  /** The offset-vote self-join shared by the landmark, frame and bigram
+    * mines: rows agreeing on `keyCols` pair up (a < b), and
+    * [[maxOffsetVotes]] keeps pairs whose matches concentrate on one
+    * `posCol` offset. */
+  private def offsetVotes(rows: DataFrame, idCol: String, keyCols: Seq[String],
+                          posCol: String, minVotes: Int): DataFrame = {
+    def side(id: String, pos: String) =
+      rows.select((col(idCol).as(id) +: keyCols.map(col)) :+ col(posCol).as(pos): _*)
+    maxOffsetVotes(side("a_id", "__pa").join(side("b_id", "__pb"), keyCols)
       .where(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"), (col("taa") - col("tab")).as("off"))
-      .agg(count(lit(1)).as("v"))
+      .groupBy(col("a_id"), col("b_id"), (col("__pa") - col("__pb")).as("off")),
+      minVotes)
+  }
+
+  /** The vote tail of every offset-voting mine: matches counted per
+    * (a_id, b_id, off) group, `votes` = the max over offsets, pairs at
+    * ≥ `minVotes` kept. Two-level hash aggregation with map-side partial
+    * collapse — no sort. */
+  private def maxOffsetVotes(byOffset: RelationalGroupedDataset, minVotes: Int): DataFrame =
+    byOffset.agg(count(lit(1)).as("v"))
       .groupBy(col("a_id"), col("b_id"))
       .agg(max(col("v")).as("votes"))
       .where(col("votes") >= minVotes)
-  }
 
   /** Landmark KEY-SPACE saturation audit — the measured decision rule for
     * [[audioLandmarkNear]]'s `keyPeaks` dial, as an operator instead of a
@@ -2480,25 +2462,14 @@ object Dedup {
     * self-join before the `a_id < b_id` cut (ordered pairs, self included),
     * i.e. the quantity that blew up the measured saturation regime
     * (250k text-wrapped docs → ~10² distinct keys → a >12-min mine).
-    * The square is computed in decimal(38,0) and reported as DOUBLE
-    * (exact below 2⁵³): a single bucket past ~3·10⁹ rows overflows
-    * long under ANSI arithmetic — precisely the saturated regime this
-    * audit exists to diagnose, so the audit itself must not be the
-    * thing that dies there.
+    * Aggregation and overflow contract: [[keyAudit]].
     * Run the audit on the cheap pair-form landmarks first; if
     * `est_candidates` is quadratic-ish in L (mean_bucket ≫ fanout), the
     * key space is saturated for this corpus — re-extract with
     * `keyPeaks = 3` before mining. One hash aggregation over
     * signature-sized rows; nothing audio-sized. */
   def landmarkKeyAudit(lm: DataFrame): DataFrame =
-    lm.groupBy(col("la"), col("lb"), col("lc"), col("dt"), col("dt2"))
-      .agg(count(lit(1)).as("bn"))
-      .agg(sum(col("bn")).as("n_landmarks"),
-        count(lit(1)).as("n_keys"),
-        max(col("bn")).as("max_bucket"),
-        round(sum(col("bn")).cast("double") / count(lit(1)), 6).as("mean_bucket"),
-        sum(col("bn").cast("decimal(38,0)") * col("bn"))
-          .cast("double").as("est_candidates"))
+    keyAudit(lm, landmarkKey, "n_landmarks", "n_keys")
 
   /** [[audioLandmarkNear]] with the `keyPeaks` dial SELF-DIALED from the
     * measured key saturation — [[landmarkKeyAudit]] turned from a
@@ -2518,25 +2489,35 @@ object Dedup {
                             windowSamples: Int = 16, hop: Int = 4,
                             maxBytes: Int = 1 << 20, maxDt: Int = 8,
                             fanout: Int = 3, minVotes: Int = 5,
-                            meanBucketMax: Double = 16.0): DataFrame = {
-    // persist (not localCheckpoint): there is no iterative loop here, so
-    // lineage truncation buys nothing, and Dataset.unpersist can actually
-    // FREE a persisted block where localCheckpoint blocks stay pinned in
-    // executor storage for the session. The audit's global aggregate fills
-    // the cache (every partition scanned); the kept branch's vote join
-    // then reads it back instead of decoding the audio twice.
-    val lmPairs = Multimodal.audioLandmarks(spark, docs, idCol, blobCol,
-      windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks = 2)
+                            meanBucketMax: Double = 16.0): DataFrame =
+    landmarkVotes(auditedLandmarks(spark, docs, idCol, blobCol, windowSamples, hop,
+      maxBytes, maxDt, fanout, meanBucketMax), idCol, minVotes)
+      .orderBy(col("a_id"), col("b_id"))
+
+  /** The `keyPeaks` self-dial shared by [[audioLandmarkNearAuto]] and
+    * [[audioDedupAuto]]: pair-form landmarks extracted and audited; past
+    * `meanBucketMax` mean bucket the key space is saturated and TRIPLE
+    * landmarks are re-extracted instead. Persist (not localCheckpoint):
+    * there is no iterative loop here, so lineage truncation buys nothing,
+    * and Dataset.unpersist can actually FREE a persisted block where
+    * localCheckpoint blocks stay pinned in executor storage for the
+    * session. The audit's global aggregate fills the cache (every
+    * partition scanned); the kept branch's vote join then reads it back
+    * instead of decoding the audio twice, and the triple branch frees it. */
+  private def auditedLandmarks(spark: SparkSession, docs: DataFrame,
+                               idCol: String, blobCol: String,
+                               windowSamples: Int, hop: Int, maxBytes: Int,
+                               maxDt: Int, fanout: Int,
+                               meanBucketMax: Double): DataFrame = {
+    def extract(keyPeaks: Int) = Multimodal.audioLandmarks(spark, docs, idCol, blobCol,
+      windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks)
+    val lmPairs = extract(2)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val mean = landmarkKeyAudit(lmPairs).head.getAs[Double]("mean_bucket")
-    val lm =
-      if (mean > meanBucketMax) {
-        // triple branch: the pair-form blocks are dead weight from here on
-        lmPairs.unpersist(false)
-        Multimodal.audioLandmarks(spark, docs, idCol, blobCol,
-          windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks = 3)
-      } else lmPairs
-    landmarkVotes(lm, idCol, minVotes).orderBy(col("a_id"), col("b_id"))
+    if (mean > meanBucketMax) {
+      lmPairs.unpersist(false)
+      extract(3)
+    } else lmPairs
   }
 
   /** [[audioLandmarkNear]]'s TREATMENT form with LINEAR output — the
@@ -2560,18 +2541,10 @@ object Dedup {
                  windowSamples: Int = 16, hop: Int = 4,
                  maxBytes: Int = 1 << 20, maxDt: Int = 8,
                  fanout: Int = 3, minVotes: Int = 5,
-                 keyPeaks: Int = 2, starCC: Boolean = false): DataFrame = {
-    val env = Multimodal.audioEnvelope(spark, docs, idCol, blobCol,
-      windowSamples, maxBytes, hop)
-    val reps = env.groupBy(col("env")).agg(min(col(idCol)).as("rep"))
-    val repDocs = docs.select(col(idCol).cast("long").as(idCol), col(blobCol))
-      .join(reps.select(col("rep").as(idCol)), Seq(idCol), "left_semi")
-    val pairs = landmarkVotes(Multimodal.audioLandmarks(spark, repDocs,
-        idCol, blobCol, windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks),
-      idCol, minVotes)
-      .select(col("a_id"), col("b_id"))
-    audioVerdictsFrom(env, reps, pairs, idCol, starCC)
-  }
+                 keyPeaks: Int = 2): DataFrame =
+    audioDedupFrom(spark, docs, idCol, blobCol, windowSamples, hop, maxBytes,
+      minVotes)(Multimodal.audioLandmarks(spark, _, idCol, blobCol,
+        windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks))
 
   /** [[audioDedup]] with the `keyPeaks` dial SELF-DIALED from the measured
     * key saturation — [[audioLandmarkNearAuto]]'s audit-then-branch wired
@@ -2583,51 +2556,47 @@ object Dedup {
     * mine would actually join — so the decision measures exactly the
     * join it gates; if their mean bucket exceeds `meanBucketMax`, the
     * mine re-extracts triple landmarks (one extra linear decode pass
-    * traded against a quadratic join). Verdict tail unchanged:
-    * [[dedupGroups]] components over rep pairs, every doc inherits its
-    * rep's root. */
+    * traded against a quadratic join; [[auditedLandmarks]]). Same body
+    * as [[audioDedup]] ([[audioDedupFrom]]). */
   def audioDedupAuto(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
                      idCol: String = "doc_id", blobCol: String = "blob",
                      windowSamples: Int = 16, hop: Int = 4,
                      maxBytes: Int = 1 << 20, maxDt: Int = 8,
                      fanout: Int = 3, minVotes: Int = 5,
-                     meanBucketMax: Double = 16.0,
-                     starCC: Boolean = false): DataFrame = {
+                     meanBucketMax: Double = 16.0): DataFrame =
+    audioDedupFrom(spark, docs, idCol, blobCol, windowSamples, hop, maxBytes,
+      minVotes)(auditedLandmarks(spark, _, idCol, blobCol, windowSamples, hop,
+        maxBytes, maxDt, fanout, meanBucketMax))
+
+  /** The body of [[audioDedup]] / [[audioDedupAuto]]: envelope collapse,
+    * `landmarks` over the representatives' blobs, the landmark vote mine,
+    * and [[repVerdicts]]. */
+  private def audioDedupFrom(spark: SparkSession, docs: DataFrame,
+                             idCol: String, blobCol: String,
+                             windowSamples: Int, hop: Int, maxBytes: Int,
+                             minVotes: Int)
+                            (landmarks: DataFrame => DataFrame): DataFrame = {
     val env = Multimodal.audioEnvelope(spark, docs, idCol, blobCol,
       windowSamples, maxBytes, hop)
     val reps = env.groupBy(col("env")).agg(min(col(idCol)).as("rep"))
     val repDocs = docs.select(col(idCol).cast("long").as(idCol), col(blobCol))
       .join(reps.select(col("rep").as(idCol)), Seq(idCol), "left_semi")
-    // the audioLandmarkNearAuto persist/unpersist discipline: the audit's
-    // global aggregate fills the cache, the kept branch reads it back, the
-    // triple branch frees it
-    val lmPairs = Multimodal.audioLandmarks(spark, repDocs, idCol, blobCol,
-      windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks = 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mean = landmarkKeyAudit(lmPairs).head.getAs[Double]("mean_bucket")
-    val lm =
-      if (mean > meanBucketMax) {
-        lmPairs.unpersist(false)
-        Multimodal.audioLandmarks(spark, repDocs, idCol, blobCol,
-          windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks = 3)
-      } else lmPairs
-    val pairs = landmarkVotes(lm, idCol, minVotes)
+    val pairs = landmarkVotes(landmarks(repDocs), idCol, minVotes)
       .select(col("a_id"), col("b_id"))
-    audioVerdictsFrom(env, reps, pairs, idCol, starCC)
+    repVerdicts(env, "env", reps, pairs, idCol)
   }
 
-  /** Shared verdict tail of [[audioDedup]] / [[audioDedupAuto]]:
-    * components over rep pairs, every doc inherits its rep's root.
-    * Spliced/offset copies chain the same way phash near-dups do — see
-    * the [[imageDedup]] starCC note; identical fixpoint either way. */
-  private def audioVerdictsFrom(env: DataFrame, reps: DataFrame,
-                                pairs: DataFrame, idCol: String,
-                                starCC: Boolean): DataFrame = {
-    val ccEngine: (DataFrame, DataFrame, String) => DataFrame =
-      if (starCC) dedupGroupsStar(_, _, _) else dedupGroups(_, _, _)
-    val groups = ccEngine(reps.select(col("rep").as(idCol)), pairs, idCol)
+  /** The collapse-first verdict tail shared by [[audioDedup]],
+    * [[videoDedup]] and [[imageDedup]] (and their autos): `reps` maps each
+    * collapse fingerprint `fpCol` to its min-id `rep`; [[dedupGroups]]
+    * components run over the rep pairs, and every row of `keyed` inherits
+    * its rep's root. Output: one `(idCol, group_id, keep)` row per keyed
+    * row, `keep` = doc == root. */
+  private def repVerdicts(keyed: DataFrame, fpCol: String, reps: DataFrame,
+                          pairs: DataFrame, idCol: String): DataFrame = {
+    val groups = dedupGroups(reps.select(col("rep").as(idCol)), pairs, idCol)
       .withColumnRenamed(idCol, "rep").withColumnRenamed("group_id", "__gid")
-    env.join(reps, Seq("env"))
+    keyed.join(reps, Seq(fpCol))
       .join(groups, Seq("rep"))
       .select(col(idCol), col("__gid").as("group_id"),
         (col(idCol) === col("__gid")).as("keep"))
@@ -2719,21 +2688,18 @@ object Dedup {
                               fanout: Int = 3, minVotes: Int = 5,
                               keyPeaks: Int = 2,
                               policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val idx = CatalogOps.indexRegistry(spark, dir).resolveIndex(
-      name = s"documents-audio-state-b$refBucketMax", kind = "audio-landmarks",
-      sourcePath = s"$dir/documents.parquet",
-      params = Map("refBucketMax" -> refBucketMax.toString,
+    val idx = documentsIndex(spark, dir, s"documents-audio-state-b$refBucketMax",
+      "audio-landmarks",
+      Map("refBucketMax" -> refBucketMax.toString,
         "windowSamples" -> windowSamples.toString, "hop" -> hop.toString,
         "maxBytes" -> maxBytes.toString, "maxDt" -> maxDt.toString,
         "fanout" -> fanout.toString, "keyPeaks" -> keyPeaks.toString,
         "idCol" -> idCol, "blob" -> "wav-wrapped-text"),
-      policy = policy) { out =>
+      policy, octet_length(col("text")) === length(col("text")) &&
+        Sampling.hashBucket(col(idCol)) < refBucketMax) { (slice, out) =>
       val header = Multimodal.pcmWavHeader(8000, 1, 0x7FFFFFFFL)
-      val ref = graft.core.Tables.documents(spark, dir)
-        .where(octet_length(col("text")) === length(col("text")) &&
-          Sampling.hashBucket(col(idCol)) < refBucketMax)
-        .select(col(idCol),
-          concat(lit(header), col("text").cast("binary")).as("blob"))
+      val ref = slice.select(col(idCol),
+        concat(lit(header), col("text").cast("binary")).as("blob"))
       Tables.write(Multimodal.audioLandmarks(spark, ref, idCol, "blob",
           windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks))
         .mode("overwrite").parquet(s"$out/lm")
@@ -2850,19 +2816,8 @@ object Dedup {
     * [[videoDedup]] — [[landmarkVotes]]' shape over (id, frame_no, fhash)
     * rows. */
   private def frameVotes(fr: DataFrame, idCol: String,
-                         minVotes: Int): DataFrame = {
-    val a = fr.select(col(idCol).as("a_id"), col("fhash"),
-      col("frame_no").as("fa"))
-    val b = fr.select(col(idCol).as("b_id"), col("fhash"),
-      col("frame_no").as("fb"))
-    a.join(b, Seq("fhash"))
-      .where(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"), (col("fa") - col("fb")).as("off"))
-      .agg(count(lit(1)).as("v"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(max(col("v")).as("votes"))
-      .where(col("votes") >= minVotes)
-  }
+                         minVotes: Int): DataFrame =
+    offsetVotes(fr, idCol, Seq("fhash"), "frame_no", minVotes)
 
   /** [[videoNear]]'s TREATMENT form with LINEAR output — the
     * [[audioDedup]] discipline for the video modality: videos whose
@@ -2870,8 +2825,8 @@ object Dedup {
     * different brands, same stream) collapse to one representative BEFORE
     * the frame-vote mine (the pair form is inherently quadratic on
     * identical-video groups), reps pair by offset-voted frame agreement,
-    * components resolve via [[dedupGroups]] (or [[dedupGroupsStar]] for
-    * long re-cut chains), and every video inherits its rep's verdict.
+    * components resolve via [[dedupGroups]], and every video inherits its
+    * rep's verdict ([[repVerdicts]]).
     * The collapse fingerprint is the ordered frame-hash list — the exact
     * rows the mine sees, so collapse and mine agree on what "the same
     * video" means. Output: one `(doc_id, group_id, keep)` row per MP4
@@ -2881,22 +2836,9 @@ object Dedup {
   def videoDedup(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
                  idCol: String = "doc_id", blobCol: String = "blob",
                  maxFrames: Int = 16, maxBytes: Int = 1 << 20,
-                 minVotes: Int = 3, starCC: Boolean = false): DataFrame = {
-    // persist: fr feeds BOTH the fingerprint collapse and (via repFrames)
-    // the vote mine — separate exchanges, so without a cache the blob
-    // decode runs twice (the videoNearHamming persist discipline)
-    val fr = Multimodal.videoFrameHashes(spark, docs, idCol, blobCol,
-      maxFrames, maxBytes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // collapse fingerprint: frame hashes in frame order, one string per doc
-    val fp = videoFingerprints(fr, idCol)
-    val reps = fp.groupBy(col("fp")).agg(min(col(idCol)).as("rep"))
-    val repFrames = fr
-      .join(reps.select(col("rep").as(idCol)), Seq(idCol), "left_semi")
-    val pairs = frameVotes(repFrames, idCol, minVotes)
-      .select(col("a_id"), col("b_id"))
-    videoVerdictsFrom(fp, reps, pairs, idCol, starCC)
-  }
+                 minVotes: Int = 3): DataFrame =
+    videoDedupFrom(spark, docs, idCol, blobCol, maxFrames, maxBytes)(
+      frameVotes(_, idCol, minVotes))
 
   /** [[videoDedup]] with the rep mine's key SELF-DIALED from the measured
     * frame-hash saturation — [[audioDedupAuto]]'s audit-then-branch for
@@ -2912,48 +2854,40 @@ object Dedup {
     * bigrams ([[bigramVotes]]: one extra linear window pass, losing
     * Hamming-free exact-unigram matches between videos that share only
     * SCATTERED frames — a declared trade; contiguous shared runs, the
-    * re-cut signature, carry m−1 bigram votes). Verdict tail unchanged:
-    * components over rep pairs, every video inherits its rep's root. */
+    * re-cut signature, carry m−1 bigram votes). The rule is
+    * [[saturated]]; the body is [[videoDedup]]'s ([[videoDedupFrom]]). */
   def videoDedupAuto(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
                      idCol: String = "doc_id", blobCol: String = "blob",
                      maxFrames: Int = 16, maxBytes: Int = 1 << 20,
-                     minVotes: Int = 3, fanoutMax: Double = 16.0,
-                     starCC: Boolean = false): DataFrame = {
+                     minVotes: Int = 3, fanoutMax: Double = 16.0): DataFrame =
+    videoDedupFrom(spark, docs, idCol, blobCol, maxFrames, maxBytes) { rf =>
+      // the audit's global aggregate fills this cache; the chosen vote
+      // chain reads the rep frames back instead of re-deriving the
+      // semi-join (fr itself is already cached below the join)
+      val repFrames = rf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (saturated(videoKeyAudit(repFrames), fanoutMax)) bigramVotes(repFrames, idCol, minVotes)
+      else frameVotes(repFrames, idCol, minVotes)
+    }
+
+  /** The body of [[videoDedup]] / [[videoDedupAuto]]: frame-hash
+    * fingerprint collapse, `mine` over the representatives' frames, and
+    * [[repVerdicts]]. */
+  private def videoDedupFrom(spark: SparkSession, docs: DataFrame,
+                             idCol: String, blobCol: String,
+                             maxFrames: Int, maxBytes: Int)
+                            (mine: DataFrame => DataFrame): DataFrame = {
+    // persist: fr feeds BOTH the fingerprint collapse and (via repFrames)
+    // the vote mine — separate exchanges, so without a cache the blob
+    // decode runs twice (the videoNearHamming persist discipline)
     val fr = Multimodal.videoFrameHashes(spark, docs, idCol, blobCol,
       maxFrames, maxBytes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // collapse fingerprint: frame hashes in frame order, one string per doc
     val fp = videoFingerprints(fr, idCol)
     val reps = fp.groupBy(col("fp")).agg(min(col(idCol)).as("rep"))
     val repFrames = fr
       .join(reps.select(col("rep").as(idCol)), Seq(idCol), "left_semi")
-      // the audit's global aggregate fills this cache; the chosen vote
-      // chain reads the rep frames back instead of re-deriving the
-      // semi-join (fr itself is already cached below the join)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = videoKeyAudit(repFrames).head
-    val saturated = !a.isNullAt(0) &&
-      a.getAs[Double]("est_candidates") >
-        fanoutMax * math.max(a.getLong(0), 1L).toDouble
-    val pairs = (if (saturated) bigramVotes(repFrames, idCol, minVotes)
-                 else frameVotes(repFrames, idCol, minVotes))
-      .select(col("a_id"), col("b_id"))
-    videoVerdictsFrom(fp, reps, pairs, idCol, starCC)
-  }
-
-  /** Shared verdict tail of [[videoDedup]] / [[videoDedupAuto]]:
-    * components over rep pairs, every video inherits its rep's root. */
-  private def videoVerdictsFrom(fp: DataFrame, reps: DataFrame,
-                                pairs: DataFrame, idCol: String,
-                                starCC: Boolean): DataFrame = {
-    val ccEngine: (DataFrame, DataFrame, String) => DataFrame =
-      if (starCC) dedupGroupsStar(_, _, _) else dedupGroups(_, _, _)
-    val groups = ccEngine(reps.select(col("rep").as(idCol)), pairs, idCol)
-      .withColumnRenamed(idCol, "rep").withColumnRenamed("group_id", "__gid")
-    fp.join(reps, Seq("fp"))
-      .join(groups, Seq("rep"))
-      .select(col(idCol), col("__gid").as("group_id"),
-        (col(idCol) === col("__gid")).as("keep"))
-      .orderBy(col(idCol))
+    repVerdicts(fp, "fp", reps, mine(repFrames).select(col("a_id"), col("b_id")), idCol)
   }
 
   /** [[videoNear]] with BANDED-HAMMING frame matching — the named
@@ -3064,7 +2998,7 @@ object Dedup {
     val cand = candidatePairs(
       bandSubsetKeys(fr, "fhash", "fid", bands, 56, t), "band", "key", "doc_id",
       maxBucket)
-    cand
+    maxOffsetVotes(cand
       .join(fr.select(col("fid").as("a_id"), col("vid").as("va"),
         col("frame_no").as("na"), col("fhash").as("ha")), Seq("a_id"))
       .join(fr.select(col("fid").as("b_id"), col("vid").as("vb"),
@@ -3074,11 +3008,7 @@ object Dedup {
       .groupBy(least(col("va"), col("vb")).as("a_id"),
         greatest(col("va"), col("vb")).as("b_id"),
         when(col("va") < col("vb"), col("na") - col("nb"))
-          .otherwise(col("nb") - col("na")).as("off"))
-      .agg(count(lit(1)).as("v"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(max(col("v")).as("votes"))
-      .where(col("votes") >= minVotes)
+          .otherwise(col("nb") - col("na")).as("off")), minVotes)
       .orderBy(col("a_id"), col("b_id"))
   }
 
@@ -3092,23 +3022,14 @@ object Dedup {
     * [[frameVotes]]' hash self-join before the `a_id < b_id` cut, and the
     * quantity behind both measured kill regimes of the banded pair form
     * (the >77 GB candidate shuffle at 250k text-wrapped docs; the
-    * corpus-sized constant-band buckets). The square is computed in
-    * decimal(38,0) and reported as DOUBLE (exact below 2⁵³) — a single
-    * bucket past ~3·10⁹ pairs overflows long under ANSI arithmetic, which
-    * is precisely the regime the audit exists to diagnose.
-    * `est_candidates / n_frames` is the expected join fan-out per frame
+    * corpus-sized constant-band buckets). Aggregation and overflow
+    * contract: [[keyAudit]]. `est_candidates / n_frames` is the expected join fan-out per frame
     * probe — ~1–2 on a healthy dHash space, quadratic-ish when hot frames
     * (black lead-ins, letterboxed constants, intro cards) saturate the
     * key. One hash aggregation over signature-sized rows; nothing
     * pixel-sized. */
   def videoKeyAudit(fr: DataFrame): DataFrame =
-    fr.groupBy(col("fhash")).agg(count(lit(1)).as("bn"))
-      .agg(sum(col("bn")).as("n_frames"),
-        count(lit(1)).as("n_keys"),
-        max(col("bn")).as("max_bucket"),
-        round(sum(col("bn")).cast("double") / count(lit(1)), 6).as("mean_bucket"),
-        sum(col("bn").cast("decimal(38,0)") * col("bn"))
-          .cast("double").as("est_candidates"))
+    keyAudit(fr, Seq("fhash"), "n_frames", "n_keys")
 
   /** Video near-dup pairs by consecutive frame-hash BIGRAM voting — the
     * saturation ESCALATION of the video family (the audio triple-landmark
@@ -3146,20 +3067,9 @@ object Dedup {
   /** [[frameVotes]]' shape over bigram keys: equi-join on (fhash, nhash),
     * per-offset count, max-vote threshold. */
   private def bigramVotes(fr: DataFrame, idCol: String,
-                          minVotes: Int): DataFrame = {
-    val bg = frameBigrams(fr, idCol)
-    val a = bg.select(col(idCol).as("a_id"), col("fhash"), col("nhash"),
-      col("frame_no").as("fa"))
-    val b = bg.select(col(idCol).as("b_id"), col("fhash"), col("nhash"),
-      col("frame_no").as("fb"))
-    a.join(b, Seq("fhash", "nhash"))
-      .where(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"), (col("fa") - col("fb")).as("off"))
-      .agg(count(lit(1)).as("v"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(max(col("v")).as("votes"))
-      .where(col("votes") >= minVotes)
-  }
+                          minVotes: Int): DataFrame =
+    offsetVotes(frameBigrams(fr, idCol), idCol, Seq("fhash", "nhash"), "frame_no",
+      minVotes)
 
   /** [[videoNearHamming]] with the saturation escape SELF-DIALED from the
     * measured key distribution — the round-13 weak mark closed in code:
@@ -3192,11 +3102,7 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the audit's global aggregate fills the cache; the chosen arm reads
     // the decoded frames back instead of re-running the blob decode
-    val a = videoKeyAudit(fr0).head
-    val saturated = !a.isNullAt(0) &&
-      a.getAs[Double]("est_candidates") >
-        fanoutMax * math.max(a.getLong(0), 1L).toDouble
-    if (saturated) bigramVotes(fr0, idCol, minVotes).orderBy(col("a_id"), col("b_id"))
+    if (saturated(videoKeyAudit(fr0), fanoutMax)) bigramVotes(fr0, idCol, minVotes).orderBy(col("a_id"), col("b_id"))
     else hammingFrameVotes(fr0, idCol, minVotes, bands, maxHamming, agreeBands, maxBucket)
   }
 
@@ -3284,19 +3190,16 @@ object Dedup {
                               maxFrames: Int = 16, maxBytes: Int = 1 << 20,
                               minVotes: Int = 3,
                               policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val idx = CatalogOps.indexRegistry(spark, dir).resolveIndex(
-      name = s"documents-video-state-b$refBucketMax", kind = "video-frames",
-      sourcePath = s"$dir/documents.parquet",
-      params = Map("refBucketMax" -> refBucketMax.toString,
+    val idx = documentsIndex(spark, dir, s"documents-video-state-b$refBucketMax",
+      "video-frames",
+      Map("refBucketMax" -> refBucketMax.toString,
         "maxFrames" -> maxFrames.toString, "maxBytes" -> maxBytes.toString,
         "idCol" -> idCol, "blob" -> "mp4-frames-wrapped-text"),
-      policy = policy) { out =>
+      policy, octet_length(col("text")) === length(col("text")) &&
+        Sampling.hashBucket(col(idCol)) < refBucketMax) { (slice, out) =>
       val header = Multimodal.mp4VideoFramesHeader()
-      val ref = graft.core.Tables.documents(spark, dir)
-        .where(octet_length(col("text")) === length(col("text")) &&
-          Sampling.hashBucket(col(idCol)) < refBucketMax)
-        .select(col(idCol),
-          concat(lit(header), col("text").cast("binary")).as("blob"))
+      val ref = slice.select(col(idCol),
+        concat(lit(header), col("text").cast("binary")).as("blob"))
       val fr = Multimodal.videoFrameHashes(spark, ref, idCol, "blob",
         maxFrames, maxBytes).localCheckpoint(false)
       Tables.write(fr).mode("overwrite").parquet(s"$out/fr")
@@ -3529,8 +3432,7 @@ object Dedup {
     * cluster (exact-identical ∪ Hamming-chained), `keep` = doc == root. */
   def imageDedup(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
                  idCol: String = "doc_id", blobCol: String = "blob",
-                 bands: Int = 8, maxHamming: Int = 6, agreeBands: Int = 2,
-                 starCC: Boolean = false): DataFrame = {
+                 bands: Int = 8, maxHamming: Int = 6, agreeBands: Int = 2): DataFrame = {
     require(56 % bands == 0, s"bands must divide 56, got $bands")
     require(agreeBands >= 0 && maxHamming >= 0 && maxHamming <= bands - math.max(agreeBands, 1),
       s"need maxHamming in [0, bands - agreeBands] for lossless band-subset keys, " +
@@ -3550,18 +3452,7 @@ object Dedup {
       .join(reps.select(col("rep").as("b_id"), col("phash").as("hb")), Seq("b_id"))
       .where(expr("bit_count(ha ^ hb)") <= maxHamming)
       .select(col("a_id"), col("b_id"))
-    // phash near-dups CHAIN (a≈b≈c, each link within maxHamming) — the
-    // graph family where HashToMin's rounds track chain length; starCC
-    // selects the O(log)-round contraction with the identical fixpoint
-    val ccEngine: (DataFrame, DataFrame, String) => DataFrame =
-      if (starCC) dedupGroupsStar(_, _, _) else dedupGroups(_, _, _)
-    val groups = ccEngine(reps.select(col("rep").as(idCol)), repPairs, idCol)
-      .withColumnRenamed(idCol, "rep").withColumnRenamed("group_id", "__gid")
-    hashed.join(reps, Seq("phash"))
-      .join(groups, Seq("rep"))
-      .select(col(idCol), col("__gid").as("group_id"),
-        (col(idCol) === col("__gid")).as("keep"))
-      .orderBy(col(idCol))
+    repVerdicts(hashed, "phash", reps, repPairs, idCol)
   }
 
   /** Batch docs with ≥ 1 accumulated-state hash within `maxHamming` — the
@@ -3623,16 +3514,6 @@ object Dedup {
       .orderBy(col("vec_id"))
   }
 
-  /** [[semanticDedup]] with the flat-vs-two-level rung SELF-DIALED from
-    * the requested cell count ([[graft.operators.Ann.FlatCellMax]] — the
-    * literal-size dial, not a throughput claim: two-level is measured
-    * SLOWER at 1M vectors and exists for the regime where the flat
-    * `nCells × dim` plan literal + driver collect is untenable). At
-    * `nCells ≤ flatCellMax` this IS [[semanticDedup]]; above, it is
-    * [[semanticDedup2]] with `nFine = nCells`, `nCoarse = ⌈√nCells⌉` and
-    * the same `tau` (the two-level form's hot-cell/auto-cap dials keep
-    * their own defaults — `maxCell = 0` self-caps). RungPickerSpec pins auto ≡
-    * explicit on both sides of the threshold. */
   /** Distinct-embedding group audit — the replica probe for the SEMANTIC
     * family, where the saturation mechanism is the same document embedded
     * N times (re-crawls, re-ingests): N byte-identical vectors land in
@@ -3641,15 +3522,9 @@ object Dedup {
     * within-cell pair volume grows as Σ|group|² and no
     * (nCells, subBits, subBands) dial can cut it. One bounded row:
     * `n_vecs`, `n_distinct`, `max_group`, `mean_group`,
-    * `est_candidates` = Σ|group|² (decimal(38,0) → double). */
+    * `est_candidates` = Σ|group|² ([[keyAudit]]). */
   def embedKeyAudit(e: DataFrame): DataFrame =
-    e.groupBy(col("embedding")).agg(count(lit(1)).as("gn"))
-      .agg(sum(col("gn")).as("n_vecs"),
-        count(lit(1)).as("n_distinct"),
-        max(col("gn")).as("max_group"),
-        round(sum(col("gn")).cast("double") / count(lit(1)), 6).as("mean_group"),
-        sum(col("gn").cast("decimal(38,0)") * col("gn"))
-          .cast("double").as("est_candidates"))
+    keyAudit(e, Seq("embedding"), "n_vecs", "n_distinct", "max_group", "mean_group")
 
   /** [[semanticDedup]] with BOTH self-dialing rungs: the flat-vs-two-level
     * pick from the requested cell count ([[graft.operators.Ann.FlatCellMax]]
@@ -3684,11 +3559,7 @@ object Dedup {
     def rung(x: DataFrame): DataFrame =
       if (nCells <= flatCellMax) semanticDedup(x, nCells, tau)
       else semanticDedup2(x, nCells, Ann.coarseFor(nCells), tau)
-    val a = embedKeyAudit(e).head
-    val saturated = !a.isNullAt(0) &&
-      a.getAs[Double]("est_candidates") >
-        fanoutMax * math.max(a.getLong(0), 1L).toDouble
-    if (!saturated) rung(e)
+    if (!saturated(embedKeyAudit(e), fanoutMax)) rung(e)
     else {
       val groups = e.groupBy(col("embedding")).agg(min(col("vec_id")).as("__rep"))
         .localCheckpoint(false)

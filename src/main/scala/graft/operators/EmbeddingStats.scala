@@ -322,6 +322,7 @@ object EmbeddingStats {
     * on both sides — no rewrite of the stored table is needed to evaluate. */
   def dimRecall(embeddings: DataFrame, nQueries: Int = 8, k: Int = 10,
                 dims: Int = 16): DataFrame = {
+    require(k > 0, s"k must be > 0 (recall divides by k), got $k")
     val queries = embeddings.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
     def topIds(corpus: DataFrame, qs: DataFrame) =

@@ -496,13 +496,10 @@ object Sampling {
     * split for unduplicated docs.
     *
     * Scale shape: [[Dedup.dedupGroups]] over the pair graph only, then one
-    * narrow split projection — no extra shuffle beyond the group join;
-    * `starCC` swaps in [[Dedup.dedupGroupsStar]] for chain-heavy pair
-    * graphs (identical fixpoint, O(log) rounds). */
+    * narrow split projection — no extra shuffle beyond the group join. */
   def leakSafeSplit(docs: DataFrame, pairs: DataFrame, trainPct: Int = 80,
-                    idCol: String = "doc_id", starCC: Boolean = false): DataFrame =
-    (if (starCC) Dedup.dedupGroupsStar(docs, pairs, idCol)
-     else Dedup.dedupGroups(docs, pairs, idCol))
+                    idCol: String = "doc_id"): DataFrame =
+    Dedup.dedupGroups(docs, pairs, idCol)
       .select(col(idCol), col("group_id"),
         when(hashBucket(col("group_id")) < trainPct, lit("train"))
           .otherwise(lit("test")).as("split"))

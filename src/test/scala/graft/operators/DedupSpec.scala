@@ -1229,17 +1229,6 @@ class DedupSpec extends SparkSpec {
     assert(run(1) == run(2))
   }
 
-  test("imageDedup starCC: the star engine lands the identical verdict frame") {
-    import org.apache.spark.sql.functions.col
-    // both CC engines share one fixpoint (component-min star), so the
-    // treatment output must be byte-identical on the real corpus
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text").cast("binary").as("blob"))
-    def run(star: Boolean) = Dedup.imageDedup(spark, docs, starCC = star)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-    assert(run(true) == run(false))
-  }
-
   test("candidatePairs: join expansion for oversized buckets ≡ in-bucket array path; caps respected") {
     import spark.implicits._
     // buckets: size 5 (above a tiny pairExplodeMax → join path), size 2

@@ -207,4 +207,31 @@ class IvfRecallSpec extends SparkSpec {
     empty.parquet(s"$dir/embeddings.parquet")
     assert(Ann.ivfRecall(spark, dir, 4, 5, 3, 2).collect().isEmpty)
   }
+
+  // recall = hits / k: every recall audit rejects k <= 0 at its entry,
+  // before any read or job, instead of failing in execution — so a
+  // warehouse that does not exist is never reached
+  private def assertRejectsK(run: Int => Any): Unit =
+    for (k <- Seq(0, -1)) {
+      val err = intercept[IllegalArgumentException](run(k))
+      assert(err.getMessage.contains(s"k must be > 0") && err.getMessage.contains(s"got $k"))
+    }
+
+  private val noDir = "no-such-warehouse"
+
+  test("ivfRecall rejects k <= 0 up front") {
+    assertRejectsK(k => Ann.ivfRecall(spark, noDir, k = k))
+  }
+
+  test("annRecall rejects k <= 0 up front") {
+    assertRejectsK(k => Ann.annRecall(spark, noDir, k = k))
+  }
+
+  test("ivfPqRecall rejects k <= 0 up front") {
+    assertRejectsK(k => Ann.ivfPqRecall(spark, noDir, k = k))
+  }
+
+  test("dimRecall rejects k <= 0 up front") {
+    assertRejectsK(k => EmbeddingStats.dimRecall(spark.emptyDataFrame, k = k))
+  }
 }
