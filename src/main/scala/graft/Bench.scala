@@ -71,7 +71,7 @@ object Bench {
     val stageN = new java.util.concurrent.atomic.AtomicLong(0)
     // per-window spill volume (r18 stall forensics): the a32 arm killed
     // MORE-tasks (identical task counts) and recompile-storm (identical
-    // janino_n) in stalled vs clean windows — the surviving signature,
+    // Janino compile counts) in stalled vs clean windows — the surviving signature,
     // same tasks burning ~4x cpu in LZ4/ByteBuffer/ObjectInputStream
     // frames, is what execution-memory starvation's aggregation/sort
     // SPILLS produce. Stalled windows spilling while clean ones don't
@@ -135,50 +135,6 @@ object Bench {
     val gcSec = scala.collection.mutable.LinkedHashMap[String, Double]()
     val cpuSec = scala.collection.mutable.LinkedHashMap[String, Double]()
     val cpuMinRun = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // per-window JIT compilation-time delta (round-16 forensics): the
-    // bad-mode signature is ONE repeat burning 20-30x cpu at identical
-    // shuffle/gc — if that window also shows a compilation spike, the
-    // stall is JIT re-compilation (deopt storm / flushed hot method); if
-    // flat, the repeat ran interpreted or spun. One field decides.
-    val jitMs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // guarded: getCompilationMXBean is null on JIT-less JVMs (-Xint) and
-    // getTotalCompilationTime throws when time monitoring is unsupported —
-    // the field degrades to -1 instead of crashing the whole bench
-    val jitBean = Option(java.lang.management.ManagementFactory.getCompilationMXBean)
-      .filter(_.isCompilationTimeMonitoringSupported)
-    // per-window CodeCache occupancy (round-16 stall forensics, the verdict's
-    // named no-JFR instrument): the bad mode's signature — one repeat pinned
-    // at 20-30x cpu with FLAT jit_ms — is what code-cache sweeping produces
-    // (hot methods flushed, execution falls back to interpreted, no
-    // "CodeCache is full" warning is ever printed). Occupancy near the
-    // reserve at the stalled window, or a DROP across it (a sweep), decides;
-    // a flat comfortable number acquits the code cache. JDK 17 segments the
-    // cache into three CodeHeap pools — sum their used bytes.
-    import scala.jdk.CollectionConverters._
-    val codePools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
-      .asScala.filter(p => p.getName.contains("CodeHeap") ||
-        p.getName.contains("Code Cache"))
-    def codeCacheUsedMb(): Double =
-      codePools.map(p => Option(p.getUsage).fold(0L)(_.getUsed)).sum / 1048576.0
-    val codeCacheMb = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // per-window block-manager storage occupancy at window OPEN (r17 stall
-    // forensics): the xm→successor stall profile (compiled frames, 5.5×
-    // real executor work, LZ4/ObjectInputStream/HashedRelation churn, zero
-    // retries — PLANS r17) fits per-task re-materialization of evicted
-    // broadcast/cached blocks under storage pressure the PREVIOUS query
-    // left resident. A stalled window opening on a large storage footprint
-    // confirms the mechanism; a lean one refutes it.
-    val storageMb = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val storageBlocks = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // per-window Janino compile count/time deltas + codegen-cache occupancy
-    // at window CLOSE (r18 stall forensics): decides the degraded-evaluation
-    // theory's recompile arm — a stalled window with a compile-count spike
-    // is cache-eviction recompilation; flat count + elevated cpu + flat
-    // tasks is same-task-set degraded evaluation; elevated tasks is subtree
-    // re-execution. One record now carries all three discriminants.
-    val janinoN = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val janinoMs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val codegenCacheN = scala.collection.mutable.LinkedHashMap[String, Double]()
     val tasksRun = scala.collection.mutable.LinkedHashMap[String, Double]()
     val stagesRun = scala.collection.mutable.LinkedHashMap[String, Double]()
     val spillMemMb = scala.collection.mutable.LinkedHashMap[String, Double]()
@@ -215,14 +171,6 @@ object Bench {
       // accumulator, zombie completions) carry timestamps — this line maps
       // them to the query window they landed in (PLANS r16 forensics)
       System.err.println(s"[bench] ${java.time.Instant.now} window $name")
-      locally {
-        val (mem, disk, nblk) =
-          org.apache.spark.graft.CoreBridge.storageStatus(spark.sparkContext)
-        storageMb(name) = (mem + disk) / 1048576.0
-        storageBlocks(name) = nblk.toDouble
-      }
-      val jit0 = jitBean.fold(0L)(_.getTotalCompilationTime)
-      val (jan0N, jan0Ns) = org.apache.spark.graft.CoreBridge.janinoStats()
       val times = scala.collection.mutable.ArrayBuffer[Double]()
       val cpuRuns = scala.collection.mutable.ArrayBuffer[Double]()
       var failed = false
@@ -252,15 +200,6 @@ object Bench {
         i += 1
       }
       cpuMinRun(name) = if (cpuRuns.nonEmpty) cpuRuns.min else -1.0
-      jitMs(name) = jitBean.fold(-1.0)(b => (b.getTotalCompilationTime - jit0).toDouble)
-      locally {
-        val (janN, janNs) = org.apache.spark.graft.CoreBridge.janinoStats()
-        janinoN(name) = (janN - jan0N).toDouble
-        janinoMs(name) = (janNs - jan0Ns) / 1e6
-        codegenCacheN(name) =
-          org.apache.spark.graft.CoreBridge.codegenCacheEntries().toDouble
-      }
-      codeCacheMb(name) = codeCacheUsedMb()
       // flush again before READING, so this query's own late events are in
       org.apache.spark.graft.CoreBridge.flushListenerBus(spark.sparkContext)
       tasksRun(name) = taskN.get().toDouble
@@ -294,17 +233,10 @@ object Bench {
       ",\"exec_sec\":" + fmtMap(execSec) + ",\"gc_sec\":" + fmtMap(gcSec) +
         ",\"cpu_sec\":" + fmtMap(cpuSec) +
         ",\"cpu_min_run\":" + fmtMap(cpuMinRun) +
-        ",\"jit_ms\":" + fmtMap(jitMs) +
-        ",\"code_cache_mb\":" + fmtMap(codeCacheMb) +
-        ",\"storage_mb\":" + fmtMap(storageMb) +
-        ",\"storage_blocks\":" + fmtMap(storageBlocks) +
         ",\"tasks\":" + fmtMap(tasksRun) +
         ",\"stages\":" + fmtMap(stagesRun) +
         ",\"spill_mem_mb\":" + fmtMap(spillMemMb) +
         ",\"spill_disk_mb\":" + fmtMap(spillDiskMb) +
-        ",\"janino_n\":" + fmtMap(janinoN) +
-        ",\"janino_ms\":" + fmtMap(janinoMs) +
-        ",\"codegen_cache_n\":" + fmtMap(codegenCacheN) +
         ",\"shuffle_read_mb\":" + fmtMap(shufReadMb) +
         ",\"shuffle_write_mb\":" + fmtMap(shufWriteMb)
     val errJson =
@@ -334,7 +266,7 @@ object Bench {
       s"""{"metric":"total_summary","value":$total,"unit":"sec","n_queries":${ok.size},""" +
         s""""warmup_sec":${fmt(warmupSec)},"drain_sec":${fmt(drainMs / 1000.0)},""" +
         s""""top10_wall":$top10,"worst_mom":{${esc(worst._1)}:${fmt(worst._2)}},""" +
-        s""""code_cache_mb":${fmt(codeCacheUsedMb())},"n_errors":${errors.size},""" +
+        s""""n_errors":${errors.size},""" +
         s""""queries_full":"BENCH_SELF.json","repeats":$repeats,"sf":"$sfDir"}"""
     println(summary)
     // Self-reported artifact: the driver's BENCH_r{N}.json captures only the

@@ -2491,7 +2491,7 @@ object SparkEntry {
     * [landmark-vote-arm corpus hits — the audio_shift_near misalignment
     * device], and verbatim copies of bucket >= 18 [in-batch hits]). The
     * full landmark chain re-derived over the tagged union (reference ids
-    * negative), both [[graft.operators.Dedup.audioMatchesAgainst]] arms +
+    * negative), both [[graft.operators.Dedup.crossMatches]] arms +
     * both in-batch arms in SQL. Shared verbatim by the inline and indexed
     * variants (identical admissions contract). */
   private def audioDedupIncrementalSql: String = {
@@ -2559,7 +2559,7 @@ object SparkEntry {
     * copies of bucket < 2 [one md5-hex junk frame prepended — a distinct
     * fingerprint, frame-VOTE-arm corpus hits: the video_dedup re-cut
     * device], and verbatim copies of bucket >= 18 [in-batch hits]). Both
-    * [[graft.operators.Dedup.videoMatchesAgainst]] arms + both in-batch
+    * [[graft.operators.Dedup.crossMatches]] arms + both in-batch
     * arms in SQL; is_video from the frame walk (an empty payload yields
     * no frame and keeps — the pass-through). Shared verbatim by the
     * inline and indexed variants. */

@@ -9,8 +9,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Top-`nProbe` centroid cells by 6-dp-rounded cosine (score desc, lower
   * cell on ties) as ONE fused primitive pass — the probe-side ranking of
-  * [[graft.operators.Centrality.annEdges]], value-identical to the
-  * composed form
+  * every IVF cell-blocking caller ([[graft.operators.Ann.probeCells]]:
+  * the flat and two-level probes of Bitext and Centrality),
+  * value-identical to the composed form
   * `slice(array_sort(transform(sequence(1, nCells), ci -> struct(0.0 -
   * round(cosine_sim(v, cent[ci]), 6), ci))), 1, nProbe).cell` and to the
   * oracle's `row_number() OVER (ORDER BY round(cos, 6) DESC, ci ASC) <=

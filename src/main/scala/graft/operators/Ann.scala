@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructField, StructType}
 
@@ -56,14 +57,8 @@ object Ann {
               bits: Int = DefaultBits, bands: Int = DefaultBands): DataFrame = {
     val qv = Similarity.queryVector(spark, dir, queryVecId)
     val qKeys = bandKeys(qv, bits, bands)
-    val e = Tables.embeddings(spark, dir)
-    e.where(arrays_overlap(
-        bandKeysCol(col("embedding"), bits, bands, qv.length),
-        typedLit(qKeys)))
-      .select(col("vec_id"), col("label"),
-        round(cosine_sim(col("embedding"), typedLit(qv)), 6).as("score"))
-      .orderBy(desc("score"), asc("vec_id"))
-      .limit(k)
+    rerank(Tables.embeddings(spark, dir).where(arrays_overlap(
+      bandKeysCol(col("embedding"), bits, bands, qv.length), typedLit(qKeys))), qv, k)
   }
 
   /** LSH-probed cosine RANGE search: every record scoring ≥ `tau` against
@@ -117,13 +112,8 @@ object Ann {
     }
     val qv = Similarity.queryVector(spark, dir, queryVecId)
     val qKeys = bandKeys(qv, bits, bands)
-    Tables.read(spark, idx.path)
-      .where(col("key").isin(qKeys: _*))
-      .dropDuplicates("vec_id")
-      .select(col("vec_id"), col("label"),
-        round(cosine_sim(col("embedding"), typedLit(qv)), 6).as("score"))
-      .orderBy(desc("score"), asc("vec_id"))
-      .limit(k)
+    rerank(Tables.read(spark, idx.path).where(col("key").isin(qKeys: _*))
+      .dropDuplicates("vec_id"), qv, k)
   }
 
   /** Recall@k audit of the LSH probe against the exact scan — the index-
@@ -145,7 +135,6 @@ object Ann {
                 bits: Int = DefaultBits, bands: Int = DefaultBands,
                 dim: Int = 64): DataFrame = {
     require(k > 0, s"k must be > 0 (recall divides by k), got $k")
-    import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(spark, dir)
     val queries = e.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"),
@@ -281,14 +270,19 @@ object Ann {
         .mode("overwrite").partitionBy("cell").parquet(out)
     }
     val qv = Similarity.queryVector(spark, dir, queryVecId)
-    val probeCells = probe(cents, qv, nProbe)
-    Tables.read(spark, idx.path)
-      .where(col("cell").isin(probeCells: _*))
-      .select(col("vec_id"), col("label"),
-        round(cosine_sim(col("embedding"), typedLit(qv)), 6).as("score"))
+    rerank(Tables.read(spark, idx.path).where(col("cell").isin(probe(cents, qv, nProbe): _*)),
+      qv, k)
+  }
+
+  /** The exact rerank every probe ends in: the candidate rows' `vec_id`,
+    * `label` and 6-dp cosine of `vec` against the query, top `k` by score
+    * desc, `vec_id` asc on ties. */
+  private def rerank(candidates: DataFrame, qv: Array[Double], k: Int,
+                     vec: Column = col("embedding")): DataFrame =
+    candidates
+      .select(col("vec_id"), col("label"), round(cosine_sim(vec, typedLit(qv)), 6).as("score"))
       .orderBy(desc("score"), asc("vec_id"))
       .limit(k)
-  }
 
   /** Product-quantization codebook seeded from the first `kCodes` stored
     * vectors: codebook(m)(j) = subspace-m slice of seed vector j — the
@@ -357,11 +351,7 @@ object Ann {
     val e = Tables.embeddings(spark, dir)
     val cb = pqCodebook(e, m, kCodes, dim)
     val qv = Similarity.queryVector(spark, dir, queryVecId)
-    e.select(col("vec_id"), col("label"),
-        round(cosine_sim(pqReconstructCol(col("embedding"), cb), typedLit(qv)), 6)
-          .as("score"))
-      .orderBy(desc("score"), asc("vec_id"))
-      .limit(k)
+    rerank(e, qv, k, pqReconstructCol(col("embedding"), cb))
   }
 
   /** PQ ADC top-k against a PERSISTED code table — the compressed-store
@@ -391,13 +381,8 @@ object Ann {
         .mode("overwrite").parquet(out)
     }
     val qv = Similarity.queryVector(spark, dir, queryVecId)
-    Tables.read(spark, idx.path)
-      .select(col("vec_id"), col("label"),
-        round(cosine_sim(
-          Bridge.column(graft.functions.PqDecode(
-            Bridge.expression(col("codes")), cb)), typedLit(qv)), 6).as("score"))
-      .orderBy(desc("score"), asc("vec_id"))
-      .limit(k)
+    rerank(Tables.read(spark, idx.path), qv, k,
+      Bridge.column(graft.functions.PqDecode(Bridge.expression(col("codes")), cb)))
   }
 
   /** Driver-side mirror of [[graft.functions.NearestCentroid]]: argmax raw
@@ -458,16 +443,12 @@ object Ann {
     val qv = Similarity.queryVector(spark, dir, queryVecId)
     val probeCells = probe(cents, qv, nProbe)
     val cellCent = element_at(typedLit(cents), col("cell").cast("int"))
-    assignCells(e, cents)
+    rerank(assignCells(e, cents)
       .where(col("cell").isin(probeCells: _*))
       .withColumn("recon", zip_with(
         pqReconstructCol(
           zip_with(col("embedding").cast("array<double>"), cellCent, (x, y) => x - y), rcb),
-        cellCent, (x, y) => x + y))
-      .select(col("vec_id"), col("label"),
-        round(cosine_sim(col("recon"), typedLit(qv)), 6).as("score"))
-      .orderBy(desc("score"), asc("vec_id"))
-      .limit(k)
+        cellCent, (x, y) => x + y)), qv, k, col("recon"))
   }
 
   /** Recall@k audit: residual IVF-PQ vs round-7's raw-vector PQ, both
@@ -486,7 +467,6 @@ object Ann {
                   nCells: Int = 16, nProbe: Int = 4, m: Int = 8,
                   dim: Int = 64): DataFrame = {
     require(k > 0, s"k must be > 0 (recall divides by k), got $k")
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     // one read for every layer: centroids and raw PQ seeds [0, nCells),
@@ -736,9 +716,9 @@ object Ann {
   }
 
   /** The (cell, pos, m) row layout of a centroid matrix — 1-based cells,
-    * 0-based positions. ONE site owns this contract: the persisted
-    * `_centroids` parquet, its reader in [[ivfTopkTrained]], and the
-    * `ivf_train_full` query/oracle all depend on the same layout. */
+    * 0-based positions. The persisted `_centroids` / `_coarse_centroids`
+    * parquet ([[writeCentroids]] / [[readCentroids]]) and the
+    * `ivf_train_full` query/oracle all depend on this one layout. */
   private[graft] def centroidsToDF(spark: SparkSession,
                                    cents: Seq[Seq[Double]]): DataFrame = {
     import spark.implicits._
@@ -747,6 +727,35 @@ object Ann {
         ((i + 1).toLong, p.toLong, v) } }
       .toDF("cell", "pos", "m")
   }
+
+  /** Persist a centroid matrix at `path` in the [[centroidsToDF]] layout. */
+  private def writeCentroids(spark: SparkSession, cents: Seq[Seq[Double]],
+                             path: String): Unit =
+    Tables.write(centroidsToDF(spark, cents).coalesce(1)).mode("overwrite").parquet(path)
+
+  /** The centroid matrix [[writeCentroids]] stored at `path`. */
+  private def readCentroids(spark: SparkSession, path: String): Seq[Seq[Double]] = {
+    val rows = Tables.read(spark, path).collect()
+    val dim = rows.iterator.map(_.getLong(1)).max.toInt + 1
+    val a = Array.ofDim[Double](rows.iterator.map(_.getLong(0)).max.toInt, dim)
+    rows.foreach(r => a(r.getLong(0).toInt - 1)(r.getLong(1).toInt) = r.getDouble(2))
+    a.map(_.toSeq).toSeq
+  }
+
+  /** Persist seed vectors at `path` as `(cidx, cv)` rows — 0-based index,
+    * vector — the layout of the `cents+cells` and `coarse+fine+cells2`
+    * index families. */
+  private[graft] def writeSeedList(spark: SparkSession, cents: Seq[Seq[Double]],
+                                   path: String): Unit = {
+    import spark.implicits._
+    Tables.write(cents.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cidx", "cv").coalesce(1))
+      .mode("overwrite").parquet(path)
+  }
+
+  /** The seed vectors [[writeSeedList]] stored at `path`, in `cidx` order. */
+  private[graft] def readSeedList(spark: SparkSession, path: String): Seq[Seq[Double]] =
+    Tables.read(spark, path).orderBy(col("cidx")).select(col("cv")).collect()
+      .map(_.getSeq[Double](0).toSeq).toSeq
 
   /** IVF probe against an index built from TRAINED centroids — the
     * production realization of [[ivfTopkIndexed]]'s scaladoc note: train
@@ -776,22 +785,12 @@ object Ann {
       val (trained, _) = trainCentroids(Tables.embeddings(spark, dir), nCells, maxIters)
       Tables.write(assignCells(Tables.embeddings(spark, dir), trained))
         .mode("overwrite").partitionBy("cell").parquet(out)
-      Tables.write(centroidsToDF(spark, trained).coalesce(1))
-        .mode("overwrite").parquet(s"$out/_centroids")
+      writeCentroids(spark, trained, s"$out/_centroids")
     }
-    val rows = Tables.read(spark, s"${idx.path}/_centroids").collect()
-    val dim = rows.iterator.map(_.getLong(1)).max.toInt + 1
-    val a = Array.ofDim[Double](rows.iterator.map(_.getLong(0)).max.toInt, dim)
-    rows.foreach(r => a(r.getLong(0).toInt - 1)(r.getLong(1).toInt) = r.getDouble(2))
-    val cents: Seq[Seq[Double]] = a.map(_.toSeq).toSeq
+    val cents = readCentroids(spark, s"${idx.path}/_centroids")
     val qv = Similarity.queryVector(spark, dir, queryVecId)
-    val probeCells = probe(cents, qv, nProbe)
-    Tables.read(spark, idx.path)
-      .where(col("cell").isin(probeCells: _*))
-      .select(col("vec_id"), col("label"),
-        round(cosine_sim(col("embedding"), typedLit(qv)), 6).as("score"))
-      .orderBy(desc("score"), asc("vec_id"))
-      .limit(k)
+    rerank(Tables.read(spark, idx.path).where(col("cell").isin(probe(cents, qv, nProbe): _*)),
+      qv, k)
   }
 
   /** Query-side probe list: top nProbe cells by (rounded) centroid cosine,
@@ -807,16 +806,71 @@ object Ann {
       .sortBy { case (s, i) => (-s, i) }
       .take(nProbe).map(_._2)
 
-  /** Corpus-side cell assignment: argmax centroid cosine, first index on
-    * ties (1-based, matching the oracle's list_position). The ONE place
-    * the assignment expression lives — the stored index, the training
-    * step, and the scan-time probe must agree cell-for-cell. Native fused
-    * expression: see [[graft.functions.NearestCentroid]]. */
-  private[graft] def assignCells(e: DataFrame, cents: Seq[Seq[Double]]): DataFrame = {
+  /** Corpus-side cell assignment of the `vecCol` vectors: argmax centroid
+    * cosine, first index on ties (1-based, matching the oracle's
+    * list_position), as a `cell` column. The ONE place the assignment
+    * expression lives — the stored index, the training step, and the
+    * scan-time probe must agree cell-for-cell. Native fused expression:
+    * see [[graft.functions.NearestCentroid]]. */
+  private[graft] def assignCells(e: DataFrame, cents: Seq[Seq[Double]],
+                                 vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     e.withColumn("cell", Bridge.column(graft.functions.NearestCentroid(
-      Bridge.expression(col("embedding").cast("array<double>")), cents)))
+      Bridge.expression(col(vecCol).cast("array<double>")), cents)))
   }
+
+  /** The probe side of a cell equi-join: one `(idCol, qv, cellCol)` row
+    * per cell among the top `width` of `cents` for the `vecCol` vector,
+    * `qv` the vector widened to DOUBLE. Cells rank by 6-dp cosine desc,
+    * lower cell on ties — the [[probe]] contract as the fused
+    * [[graft.functions.TopCells]] pass, which fails on a `width` outside
+    * `[1, cents.length]`; callers that clamp do so before the call. */
+  private[graft] def probeCells(df: DataFrame, idCol: String, vecCol: String,
+                                cents: Seq[Seq[Double]], width: Int,
+                                cellCol: String = "cell"): DataFrame = {
+    import org.apache.spark.sql.graft.Bridge
+    df.select(col(idCol), col(vecCol).cast("array<double>").as("qv"),
+      explode(Bridge.column(graft.functions.TopCells(
+        Bridge.expression(col(vecCol).cast("array<double>")), cents, width))).as(cellCol))
+  }
+
+  /** The `n` LOWEST-`idCol` vectors of `df` as driver-side seeds, in id
+    * order — the seeding contract for a side whose id space is not dense
+    * (a split or filtered side), where [[seedCentroids]]' `vec_id < n`
+    * range would miss. One bounded top-`n` collect. */
+  private[graft] def lowestIdSeeds(df: DataFrame, idCol: String, vecCol: String,
+                                   n: Int): Seq[Seq[Double]] =
+    df.orderBy(col(idCol)).limit(n).select(col(vecCol).cast("array<double>")).collect()
+      .map(_.getSeq[Double](0).toSeq).toSeq
+
+  /** [[fineCentroids]] over the `nFine` LOWEST-`idCol` vectors of `df` (the
+    * [[lowestIdSeeds]] contract): `(fcell, ccell, fv)` with `fcell` the
+    * 1-based id rank. The `row_number` is the only single-partition
+    * window, bounded by `nFine` rows by construction. */
+  private[graft] def lowestIdFineCentroids(df: DataFrame, idCol: String, vecCol: String,
+                                           coarse: Seq[Seq[Double]], nFine: Int): DataFrame =
+    assignCells(df.orderBy(col(idCol)).limit(nFine)
+        .select(col(idCol), col(vecCol).cast("array<double>").as("fv")), coarse, "fv")
+      .withColumn("fcell", row_number().over(Window.orderBy(col(idCol))).cast("long"))
+      .select(col("fcell"), col("cell").as("ccell"), col("fv"))
+
+  /** The two-level probe side: [[probeCells]] over the top `wCoarse`
+    * COARSE cells, the fine table's children of those cells joined on
+    * `ccell`, and each id's top `nProbe` fine cells kept — one
+    * `(idCol, qv, fcell)` row each, ranked by 6-dp cosine desc, lower
+    * `fcell` on ties (the [[assignCells2]] contract) under a per-id
+    * WindowGroupLimit. A fine cell has one coarse parent, so an id's
+    * probed `fcell`s are distinct. */
+  private[graft] def probeFineCells(df: DataFrame, idCol: String, vecCol: String,
+                                    coarse: Seq[Seq[Double]], wCoarse: Int,
+                                    fineTab: DataFrame, nProbe: Int): DataFrame =
+    probeCells(df, idCol, vecCol, coarse, wCoarse, "ccell")
+      .join(fineTab, Seq("ccell"))
+      .withColumn("fs", round(cosine_sim(col("qv"), col("fv")), 6))
+      .withColumn("frnk", row_number().over(
+        Window.partitionBy(col(idCol)).orderBy(desc("fs"), asc("fcell"))))
+      .where(col("frnk") <= nProbe)
+      .select(col(idCol), col("qv"), col("fcell"))
 
   /** The stored vectors with `from <= vec_id < until` as `(vec_id, vector)`
     * pairs in ascending `vec_id` order, widened to DOUBLE — the ONE reader
@@ -875,6 +929,8 @@ object Ann {
     * contract: 6-dp-rounded cosine desc, lower `fcell` on ties (the
     * [[probe]] contract, which is what keeps the join+aggregate form
     * SQL-oracle-able — the oracle reproduces it as a row_number window).
+    * Output: one `(idCol, carry…, fcell)` row per `idCol`, the `vecCol`
+    * vectors assigned.
     *
     * The per-vector argmax is a `max_by` HASH aggregation, not a window:
     * partial map-side combine keeps ≤1 row per vector per partition before
@@ -887,18 +943,30 @@ object Ann {
     * per vector is nCoarse + nFine/nCoarse cosines vs the flat layer's
     * nFine — at 10¹² vectors / 10⁶ fine cells, ~2·10³ vs 10⁶ per row. */
   private[graft] def assignCells2(e: DataFrame, coarse: Seq[Seq[Double]],
-                                  fineTab: DataFrame): DataFrame =
-    assignCells(e, coarse).withColumnRenamed("cell", "ccell")
+                                  fineTab: DataFrame, idCol: String = "vec_id",
+                                  vecCol: String = "embedding",
+                                  carry: Seq[String] = Seq("label", "embedding")): DataFrame =
+    assignCells(e, coarse, vecCol).withColumnRenamed("cell", "ccell")
       .join(fineTab, Seq("ccell"))
-      .select(col("vec_id"), col("label"), col("embedding"), col("fcell"),
-        round(cosine_sim(col("embedding").cast("array<double>"), col("fv")), 6)
-          .as("fs"))
-      .groupBy(col("vec_id"))
+      .select((col(idCol) +: carry.map(col)) :+ col("fcell") :+
+        round(cosine_sim(col(vecCol).cast("array<double>"), col("fv")), 6).as("fs"): _*)
+      .groupBy(col(idCol))
       .agg(max_by(
-        struct(col("label"), col("embedding"), col("fcell")),
+        struct(carry.map(col) :+ col("fcell"): _*),
         struct(col("fs"), (-col("fcell")).as("nf"))).as("m"))
-      .select(col("vec_id"), col("m.label").as("label"),
-        col("m.embedding").as("embedding"), col("m.fcell").as("fcell"))
+      .select((col(idCol) +: carry.map(c => col(s"m.$c").as(c))) :+
+        col("m.fcell").as("fcell"): _*)
+
+  /** The query's top `nProbe` fine cells among the children of its top
+    * `wCoarse` coarse cells, as an `fcell` table — 6-dp cosine desc, lower
+    * `fcell` on ties (the [[probeFineCells]] contract for one driver-side
+    * query; ≤ wCoarse·nFine/nCoarse rows are ranked). */
+  private def queryFineCells(fineTab: DataFrame, coarse: Seq[Seq[Double]],
+                             qv: Array[Double], wCoarse: Int, nProbe: Int): DataFrame =
+    fineTab.where(col("ccell").isin(probe(coarse, qv, wCoarse): _*))
+      .select(col("fcell"), round(cosine_sim(col("fv"), typedLit(qv.toSeq)), 6).as("s"))
+      .orderBy(desc("s"), asc("fcell")).limit(nProbe)
+      .select(col("fcell"))
 
   /** Two-level IVF top-k — the hierarchical-coarse-quantizer probe: rank
     * the `nCoarse` coarse cells against the query driver-side (coarse
@@ -922,18 +990,9 @@ object Ann {
     val coarse = seedCentroids(e, nCoarse)
     val fineTab = fineCentroids(e, coarse, nFine)
     val qv = Similarity.queryVector(spark, dir, queryVecId)
-    val qc = probe(coarse, qv, wCoarse)
-    val qFine = fineTab.where(col("ccell").isin(qc: _*))
-      .select(col("fcell"),
-        round(cosine_sim(col("fv"), typedLit(qv.toSeq)), 6).as("s"))
-      .orderBy(desc("s"), asc("fcell")).limit(nProbe)
-      .select(col("fcell"))
-    assignCells2(e, coarse, fineTab)
-      .join(broadcast(qFine), Seq("fcell"), "leftsemi")
-      .select(col("vec_id"), col("label"),
-        round(cosine_sim(col("embedding"), typedLit(qv.toSeq)), 6).as("score"))
-      .orderBy(desc("score"), asc("vec_id"))
-      .limit(k)
+    rerank(assignCells2(e, coarse, fineTab).join(
+      broadcast(queryFineCells(fineTab, coarse, qv, wCoarse, nProbe)), Seq("fcell"), "leftsemi"),
+      qv, k)
   }
 
   /** [[ivfTopk2]] against a PERSISTED two-level index: the corpus written
@@ -963,30 +1022,15 @@ object Ann {
       Tables.write(assignCells2(e, coarse, fineTab))
         .mode("overwrite").partitionBy("fcell").parquet(out)
       Tables.write(fineTab.coalesce(1)).mode("overwrite").parquet(s"$out/_fine_centroids")
-      Tables.write(centroidsToDF(spark, coarse).coalesce(1))
-        .mode("overwrite").parquet(s"$out/_coarse_centroids")
+      writeCentroids(spark, coarse, s"$out/_coarse_centroids")
     }
-    val crows = Tables.read(spark, s"${idx.path}/_coarse_centroids").collect()
-    val dim = crows.iterator.map(_.getLong(1)).max.toInt + 1
-    val a = Array.ofDim[Double](crows.iterator.map(_.getLong(0)).max.toInt, dim)
-    crows.foreach(r => a(r.getLong(0).toInt - 1)(r.getLong(1).toInt) = r.getDouble(2))
-    val coarse: Seq[Seq[Double]] = a.map(_.toSeq).toSeq
+    val coarse = readCentroids(spark, s"${idx.path}/_coarse_centroids")
     val qv = Similarity.queryVector(spark, dir, queryVecId)
-    val qc = probe(coarse, qv, wCoarse)
     // ≤ nProbe fine ids — bounded driver state, and the literal the scan's
     // partition pruning needs
-    val fineIds = Tables.read(spark, s"${idx.path}/_fine_centroids")
-      .where(col("ccell").isin(qc: _*))
-      .select(col("fcell"),
-        round(cosine_sim(col("fv"), typedLit(qv.toSeq)), 6).as("s"))
-      .orderBy(desc("s"), asc("fcell")).limit(nProbe)
-      .collect().map(_.getLong(0))
-    Tables.read(spark, idx.path)
-      .where(col("fcell").isin(fineIds: _*))
-      .select(col("vec_id"), col("label"),
-        round(cosine_sim(col("embedding"), typedLit(qv.toSeq)), 6).as("score"))
-      .orderBy(desc("score"), asc("vec_id"))
-      .limit(k)
+    val fineIds = queryFineCells(Tables.read(spark, s"${idx.path}/_fine_centroids"),
+      coarse, qv, wCoarse, nProbe).collect().map(_.getLong(0))
+    rerank(Tables.read(spark, idx.path).where(col("fcell").isin(fineIds: _*)), qv, k)
   }
 
   /** [[ivfTopkIndexed]] with the flat-vs-two-level rung SELF-DIALED from
@@ -1090,13 +1134,7 @@ object Ann {
 
   private def ivfProbe(e: DataFrame, cents: Seq[Seq[Double]], qv: Array[Double],
                        k: Int, nProbe: Int): DataFrame = {
-    val probeCells = probe(cents, qv, nProbe)
-    assignCells(e, cents)
-      .where(col("cell").isin(probeCells: _*))
-      .select(col("vec_id"), col("label"),
-        round(cosine_sim(col("embedding"), typedLit(qv)), 6).as("score"))
-      .orderBy(desc("score"), asc("vec_id"))
-      .limit(k)
+    rerank(assignCells(e, cents).where(col("cell").isin(probe(cents, qv, nProbe): _*)), qv, k)
   }
 
   /** IVF probe over a base index PLUS an un-retrained delta — the batch
@@ -1124,13 +1162,8 @@ object Ann {
     val delta = e.where(col("vec_id") >= splitId)
     val (cents, _) = trainCentroids(base, nCells, maxIters)
     val qv = Similarity.queryVector(spark, dir, queryVecId)
-    val probeCells = probe(cents, qv, nProbe)
-    assignCells(base, cents).unionByName(assignCells(delta, cents))
-      .where(col("cell").isin(probeCells: _*))
-      .select(col("vec_id"), col("label"),
-        round(cosine_sim(col("embedding"), typedLit(qv)), 6).as("score"))
-      .orderBy(desc("score"), asc("vec_id"))
-      .limit(k)
+    rerank(assignCells(base, cents).unionByName(assignCells(delta, cents))
+      .where(col("cell").isin(probe(cents, qv, nProbe): _*)), qv, k)
   }
 
   /** The recall-drop → rebuild loop as an OPERATOR — the composition
@@ -1189,11 +1222,7 @@ object Ann {
         assignCells(base, stale).unionByName(assignCells(delta, stale))
           .where(col("cell").isin(probeCells: _*))
       }
-    served
-      .select(col("vec_id"), col("label"),
-        round(cosine_sim(col("embedding"), typedLit(qv)), 6).as("score"))
-      .orderBy(desc("score"), asc("vec_id"))
-      .limit(k)
+    rerank(served, qv, k)
       .withColumn("rebuilt", lit(rebuilt))
       .withColumn("total_hits", lit(totalHits))
   }

@@ -23,11 +23,113 @@ import graft.functions.VectorFunctions.cosine_sim
   */
 object Bitext {
 
+  /** Hubness audit over the forward k-NN graph — the diagnostic that
+    * MOTIVATES the ratio margin: in high dimensions a few "hub" targets
+    * appear in a disproportionate share of sources' neighbor lists
+    * (Radovanović et al. 2010), and raw-cosine mining pairs everything
+    * with the hubs. Reports the top `topN` targets by how many sources
+    * hold them in their k-NN (same candidate generation and ranking
+    * contract as [[minePairs]]'s forward pass — this IS that pass,
+    * re-aggregated by target). Run it before mining: a heavy tail here is
+    * the signal that raw-cosine thresholds would be miscalibrated.
+    *
+    * Scale shape: the k-NN selection is [[minePairs]]'s (cell-blocked
+    * candidates, WindowGroupLimit); the hub count is one tgt-keyed hash
+    * aggregation with map-side partials; top-N is a bounded-heap
+    * TakeOrdered, never a global sort. */
+  def hubness(x: DataFrame, y: DataFrame, k: Int = 4,
+              nCells: Int = 8, nProbe: Int = 8, topN: Int = 20): DataFrame =
+    hubCounts(srcSeeded(x, y, nCells, nProbe), k, topN)
+
+  /** [[hubness]] over [[srcSeeded2]] — the audit's two-level rung, so the
+    * diagnostic that motivates the margin can itself run without the
+    * `nCells × dim` literal; full-open settings reproduce [[hubness]]'s
+    * exact answer (shared oracle). */
+  def hubness2(x: DataFrame, y: DataFrame, k: Int = 4, nFine: Int = 8,
+               nCoarse: Int = 3, wCoarse: Int = 3, nProbe: Int = 8,
+               topN: Int = 20): DataFrame =
+    hubCounts(srcSeeded2(x, y, nFine, nCoarse, wCoarse, nProbe), k, topN)
+
+  /** The hub-count tail of [[hubness]] and [[hubness2]]: each src's top
+    * `k` candidates by `(c6 desc, tgt_id asc)`, counted per target, the
+    * top `topN` targets ranked. */
+  private def hubCounts(pairs: DataFrame, k: Int, topN: Int): DataFrame = {
+    val wf = Window.partitionBy(col("src_id")).orderBy(desc("c6"), asc("tgt_id"))
+    val wr = Window.orderBy(desc("hub_count"), asc("tgt_id"))
+    pairs
+      .withColumn("rnk", row_number().over(wf))
+      .where(col("rnk") <= k)
+      .groupBy(col("tgt_id"))
+      .agg(count(lit(1)).as("hub_count"))
+      .orderBy(desc("hub_count"), asc("tgt_id")).limit(topN)
+      .withColumn("rnk", row_number().over(wr).cast("bigint"))
+      .select(col("rnk"), col("tgt_id"), col("hub_count"))
+  }
+
+  /** [[hubness]] with the flat-vs-two-level rung SELF-DIALED
+    * ([[graft.operators.Ann.FlatCellMax]] — completes the rung discipline
+    * over every entry point of this object). BitextSpec pins auto ≡
+    * explicit on both sides. */
+  def hubnessAuto(x: DataFrame, y: DataFrame, k: Int = 4, nCells: Int = 8,
+                  nProbe: Int = 8, topN: Int = 20,
+                  flatCellMax: Int = Ann.FlatCellMax): DataFrame =
+    if (nCells <= flatCellMax) hubness(x, y, k, nCells, nProbe, topN)
+    else hubness2(x, y, k, nCells, Ann.coarseFor(nCells),
+      Ann.coarseFor(nCells), nProbe, topN)
+
+  /** Cell-blocked candidate pairs `(src_id, tgt_id, c6)` of [[minePairs]]
+    * and [[hubness]]: the incremental generator ([[candidatesAgainst]])
+    * over a quantizer seeded from the SRC side — centroids = the `nCells`
+    * lowest-src_id vectors ([[Ann.lowestIdSeeds]]: a split side's id
+    * space is not dense), src probes its top `nProbe` cells, tgt sits in
+    * its argmax cell. Neither side is pinned: both are corpus-sized. */
+  private def srcSeeded(x: DataFrame, y: DataFrame, nCells: Int, nProbe: Int): DataFrame = {
+    requireFlat(nCells, nProbe)
+    val cents = seeds(x, "src_id", "src_vec", nCells,
+      "cannot seed probe centroids from an empty src side")
+    candidatesAgainst(flatProbes(x, cents, nProbe), tgtCells(y, cents), "cell")
+  }
+
+  /** Two-level candidate pairs — the hierarchical rung above
+    * [[srcSeeded]], exactly [[graft.operators.Centrality.annEdges2]]'s
+    * shape for the two-set case: only the COARSE layer (`nCoarse` lowest-id
+    * src vectors) is ever a plan literal or driver state; the FINE layer
+    * (`nFine` lowest-id src vectors, parented to their coarse argmax —
+    * [[Ann.lowestIdFineCentroids]]) is a TABLE reached by `ccell`/`fcell`
+    * equi-joins. Src probes `wCoarse` coarse cells then its top `nProbe`
+    * fine cells within them; tgt takes its coarse argmax then the fine
+    * argmax inside it ([[Ann.assignCells2]]). Full-open
+    * (`wCoarse = nCoarse`, `nProbe = nFine`) is EXACT — candidates = all
+    * pairs — so the brute-force oracle carries over; partial settings are
+    * the standard hierarchical-IVF recall dial with the coarse-boundary
+    * caveat stated at [[Ann.assignCells2]]. */
+  private def srcSeeded2(x: DataFrame, y: DataFrame, nFine: Int, nCoarse: Int,
+                         wCoarse: Int, nProbe: Int): DataFrame = {
+    requireTwoLevel(nFine, nCoarse, wCoarse, nProbe)
+    val coarse = seeds(x, "src_id", "src_vec", nCoarse,
+      "cannot seed coarse centroids from an empty src side")
+    val fineTab = Ann.lowestIdFineCentroids(x, "src_id", "src_vec", coarse, nFine)
+    candidatesAgainst(fineProbes(x, coarse, fineTab, wCoarse, nProbe),
+      tgtCells2(y, coarse, fineTab), "fcell")
+  }
+
+  /** [[minePairs]] over [[srcSeeded2]] — ratio-margin mining with
+    * NO corpus-scale plan literal: driver state is nCoarse ≈ N^¼ rows.
+    * Full-open settings reproduce [[minePairs]]'s exact answer (and share
+    * its brute-force oracle); partial settings are the hierarchical
+    * recall/cost dial. */
+  def minePairs2(x: DataFrame, y: DataFrame, k: Int = 4, tau: Double = 1.0,
+                 nFine: Int = 8, nCoarse: Int = 2, wCoarse: Int = 2,
+                 nProbe: Int = 8): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    mineFromCandidates(srcSeeded2(x, y, nFine, nCoarse, wCoarse, nProbe), k, tau)
+  }
+
   /** Mutual-best ratio-margin pairs between `x` (`src_id`, `src_vec`) and
     * `y` (`tgt_id`, `tgt_vec`).
     *
     * Pipeline: candidates from the shared seeded quantizer (centroids =
-    * `x`'s `nCells` lowest-id vectors — the [[Ann.seedCentroids]]
+    * `x`'s `nCells` lowest-id vectors — the [[Ann.lowestIdSeeds]]
     * contract; each src probes its top `nProbe` cells via the fused
     * [[graft.functions.TopCells]] pass, each tgt sits in its argmax cell,
     * candidates = the cell equi-join, so `nProbe = nCells` is EXACT and
@@ -55,173 +157,10 @@ object Bitext {
     * bounded rows per key. Backward k-NN at partial probe is computed on
     * the probed candidate set (the standard ANN-backed mining
     * approximation); `nProbe = nCells` restores the exact definition. */
-  /** Hubness audit over the forward k-NN graph — the diagnostic that
-    * MOTIVATES the ratio margin: in high dimensions a few "hub" targets
-    * appear in a disproportionate share of sources' neighbor lists
-    * (Radovanović et al. 2010), and raw-cosine mining pairs everything
-    * with the hubs. Reports the top `topN` targets by how many sources
-    * hold them in their k-NN (same candidate generation and ranking
-    * contract as [[minePairs]]'s forward pass — this IS that pass,
-    * re-aggregated by target). Run it before mining: a heavy tail here is
-    * the signal that raw-cosine thresholds would be miscalibrated.
-    *
-    * Scale shape: the k-NN selection is [[minePairs]]'s (cell-blocked
-    * candidates, WindowGroupLimit); the hub count is one tgt-keyed hash
-    * aggregation with map-side partials; top-N is a bounded-heap
-    * TakeOrdered, never a global sort. */
-  def hubness(x: DataFrame, y: DataFrame, k: Int = 4,
-              nCells: Int = 8, nProbe: Int = 8, topN: Int = 20): DataFrame = {
-    val wf = Window.partitionBy(col("src_id")).orderBy(desc("c6"), asc("tgt_id"))
-    val wr = Window.orderBy(desc("hub_count"), asc("tgt_id"))
-    candidates(x, y, nCells, nProbe)
-      .withColumn("rnk", row_number().over(wf))
-      .where(col("rnk") <= k)
-      .groupBy(col("tgt_id"))
-      .agg(count(lit(1)).as("hub_count"))
-      .orderBy(desc("hub_count"), asc("tgt_id")).limit(topN)
-      .withColumn("rnk", row_number().over(wr).cast("bigint"))
-      .select(col("rnk"), col("tgt_id"), col("hub_count"))
-  }
-
-  /** [[hubness]] over [[candidates2]] — the audit's two-level rung, so the
-    * diagnostic that motivates the margin can itself run without the
-    * `nCells × dim` literal; full-open settings reproduce [[hubness]]'s
-    * exact answer (shared oracle). */
-  def hubness2(x: DataFrame, y: DataFrame, k: Int = 4, nFine: Int = 8,
-               nCoarse: Int = 3, wCoarse: Int = 3, nProbe: Int = 8,
-               topN: Int = 20): DataFrame = {
-    val wf = Window.partitionBy(col("src_id")).orderBy(desc("c6"), asc("tgt_id"))
-    val wr = Window.orderBy(desc("hub_count"), asc("tgt_id"))
-    candidates2(x, y, nFine, nCoarse, wCoarse, nProbe)
-      .withColumn("rnk", row_number().over(wf))
-      .where(col("rnk") <= k)
-      .groupBy(col("tgt_id"))
-      .agg(count(lit(1)).as("hub_count"))
-      .orderBy(desc("hub_count"), asc("tgt_id")).limit(topN)
-      .withColumn("rnk", row_number().over(wr).cast("bigint"))
-      .select(col("rnk"), col("tgt_id"), col("hub_count"))
-  }
-
-  /** [[hubness]] with the flat-vs-two-level rung SELF-DIALED
-    * ([[graft.operators.Ann.FlatCellMax]] — completes the rung discipline
-    * over every entry point of this object). BitextSpec pins auto ≡
-    * explicit on both sides. */
-  def hubnessAuto(x: DataFrame, y: DataFrame, k: Int = 4, nCells: Int = 8,
-                  nProbe: Int = 8, topN: Int = 20,
-                  flatCellMax: Int = Ann.FlatCellMax): DataFrame =
-    if (nCells <= flatCellMax) hubness(x, y, k, nCells, nProbe, topN)
-    else hubness2(x, y, k, nCells, Ann.coarseFor(nCells),
-      Ann.coarseFor(nCells), nProbe, topN)
-
-  /** Cell-blocked candidate pairs `(src_id, tgt_id, c6)` shared by
-    * [[minePairs]] and [[hubness]]: centroids = the `nCells` LOWEST-id src
-    * vectors (orderBy+limit, not an id-value filter — a split side's id
-    * space is not dense), src probes its top `nProbe` cells via the fused
-    * [[graft.functions.TopCells]] pass, tgt sits in its argmax cell, and
-    * each surviving pair carries the integer micro-unit cosine. */
-  private def candidates(x: DataFrame, y: DataFrame,
-                         nCells: Int, nProbe: Int): DataFrame = {
-    require(nCells >= 1 && nProbe >= 1 && nProbe <= nCells,
-      s"need 1 <= nProbe <= nCells, got nProbe=$nProbe nCells=$nCells")
-    import org.apache.spark.sql.graft.Bridge
-    val cents: Seq[Seq[Double]] = x.orderBy(col("src_id")).limit(nCells)
-      .select(col("src_vec").cast("array<double>")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
-    require(cents.nonEmpty, "cannot seed probe centroids from an empty src side")
-    val par = x.sparkSession.sparkContext.defaultParallelism
-    val probeCells = Bridge.column(graft.functions.TopCells(
-      Bridge.expression(col("src_vec").cast("array<double>")), cents,
-      math.min(nProbe, cents.length)))
-    val probes = x.repartition(par, col("src_id"))
-      .select(col("src_id"), col("src_vec").cast("array<double>").as("qv"),
-        explode(probeCells).as("cell"))
-    val cands = y.repartition(par, col("tgt_id"))
-      .withColumn("cell", Bridge.column(graft.functions.NearestCentroid(
-        Bridge.expression(col("tgt_vec").cast("array<double>")), cents)))
-      .select(col("tgt_id"), col("tgt_vec").cast("array<double>").as("tv"),
-        col("cell"))
-    probes.join(cands, Seq("cell"))
-      .select(col("src_id"), col("tgt_id"),
-        round(cosine_sim(col("qv"), col("tv")) * 1e6, 0).cast("bigint").as("c6"))
-  }
-
-  /** Two-level candidate pairs — the hierarchical rung above
-    * [[candidates]], exactly [[graft.operators.Centrality.annEdges2]]'s
-    * shape for the two-set case: only the COARSE layer (`nCoarse` lowest-id
-    * src vectors) is ever a plan literal or driver state; the FINE layer
-    * (`nFine` lowest-id src vectors, parented to their coarse argmax) is a
-    * TABLE reached by `ccell`/`fcell` equi-joins. Src probes `wCoarse`
-    * coarse cells then its top `nProbe` fine cells within them; tgt takes
-    * its coarse argmax then the fine argmax inside it (`max_by` hash
-    * aggregation — partial map-side collapse, no sort). Full-open
-    * (`wCoarse = nCoarse`, `nProbe = nFine`) is EXACT — candidates = all
-    * pairs — so the brute-force oracle carries over; partial settings are
-    * the standard hierarchical-IVF recall dial with the coarse-boundary
-    * caveat stated at [[Ann.assignCells2]]. The `fcell` id is a
-    * row_number over the `nFine`-row fine base — the only single-partition
-    * window, bounded by construction. */
-  private def candidates2(x: DataFrame, y: DataFrame, nFine: Int, nCoarse: Int,
-                          wCoarse: Int, nProbe: Int): DataFrame = {
-    require(nCoarse >= 1 && wCoarse >= 1 && wCoarse <= nCoarse,
-      s"need 1 <= wCoarse <= nCoarse, got wCoarse=$wCoarse nCoarse=$nCoarse")
-    require(nFine >= nCoarse && nProbe >= 1 && nProbe <= nFine,
-      s"need nCoarse <= nFine and 1 <= nProbe <= nFine")
-    import org.apache.spark.sql.graft.Bridge
-    val coarse: Seq[Seq[Double]] = x.orderBy(col("src_id")).limit(nCoarse)
-      .select(col("src_vec").cast("array<double>")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
-    require(coarse.nonEmpty, "cannot seed coarse centroids from an empty src side")
-    val par = x.sparkSession.sparkContext.defaultParallelism
-    val fineTab = x.orderBy(col("src_id")).limit(nFine)
-      .select(col("src_id"), col("src_vec").cast("array<double>").as("fv"))
-      .withColumn("ccell", Bridge.column(graft.functions.NearestCentroid(
-        Bridge.expression(col("fv")), coarse)))
-      .withColumn("fcell",
-        row_number().over(Window.orderBy(col("src_id"))).cast("long"))
-      .select(col("fcell"), col("ccell"), col("fv"))
-    val wf = Window.partitionBy(col("src_id")).orderBy(desc("fs"), asc("fcell"))
-    val probes = x.repartition(par, col("src_id"))
-      .select(col("src_id"), col("src_vec").cast("array<double>").as("qv"),
-        explode(Bridge.column(graft.functions.TopCells(
-          Bridge.expression(col("src_vec").cast("array<double>")), coarse,
-          math.min(wCoarse, coarse.length)))).as("ccell"))
-      .join(fineTab, Seq("ccell"))
-      .withColumn("fs", round(cosine_sim(col("qv"), col("fv")), 6))
-      .withColumn("frnk", row_number().over(wf))
-      .where(col("frnk") <= nProbe)
-      .select(col("src_id"), col("qv"), col("fcell"))
-    val cands = y.repartition(par, col("tgt_id"))
-      .select(col("tgt_id"), col("tgt_vec").cast("array<double>").as("tv"))
-      .withColumn("ccell", Bridge.column(graft.functions.NearestCentroid(
-        Bridge.expression(col("tv")), coarse)))
-      .join(fineTab, Seq("ccell"))
-      .select(col("tgt_id"), col("tv"), col("fcell"),
-        round(cosine_sim(col("tv"), col("fv")), 6).as("fs"))
-      .groupBy(col("tgt_id"))
-      .agg(max_by(struct(col("tv"), col("fcell")),
-        struct(col("fs"), (-col("fcell")).as("nf"))).as("m"))
-      .select(col("tgt_id"), col("m.tv").as("tv"), col("m.fcell").as("fcell"))
-    probes.join(cands, Seq("fcell"))
-      .select(col("src_id"), col("tgt_id"),
-        round(cosine_sim(col("qv"), col("tv")) * 1e6, 0).cast("bigint").as("c6"))
-  }
-
-  /** [[minePairs]] over [[candidates2]] — ratio-margin mining with
-    * NO corpus-scale plan literal: driver state is nCoarse ≈ N^¼ rows.
-    * Full-open settings reproduce [[minePairs]]'s exact answer (and share
-    * its brute-force oracle); partial settings are the hierarchical
-    * recall/cost dial. */
-  def minePairs2(x: DataFrame, y: DataFrame, k: Int = 4, tau: Double = 1.0,
-                 nFine: Int = 8, nCoarse: Int = 2, wCoarse: Int = 2,
-                 nProbe: Int = 8): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    mineFromCandidates(candidates2(x, y, nFine, nCoarse, wCoarse, nProbe), k, tau)
-  }
-
   def minePairs(x: DataFrame, y: DataFrame, k: Int = 4, tau: Double = 1.0,
                 nCells: Int = 8, nProbe: Int = 8): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    mineFromCandidates(candidates(x, y, nCells, nProbe), k, tau)
+    mineFromCandidates(srcSeeded(x, y, nCells, nProbe), k, tau)
   }
 
   /** [[minePairs]] with the flat-vs-two-level rung SELF-DIALED from the
@@ -275,11 +214,10 @@ object Bitext {
                            tau: Double = 1.0, nCells: Int = 8,
                            nProbe: Int = 8): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    require(nCells >= 1 && nProbe >= 1 && nProbe <= nCells,
-      s"need 1 <= nProbe <= nCells, got nProbe=$nProbe nCells=$nCells")
-    val cents = seedTgtCentroids(y, nCells)
-    mineFromCandidates(
-      candidatesAgainst(x, cents, tgtCellsOf(y, cents), nProbe), k, tau)
+    requireFlat(nCells, nProbe)
+    val cents = tgtSeeds(y, nCells)
+    mineFromCandidates(candidatesAgainst(flatProbes(x, cents, nProbe).hint("broadcast"),
+      tgtCells(y, cents), "cell"), k, tau)
   }
 
   /** [[minePairsIncremental]] against a CATALOG-MANAGED target-cell index
@@ -322,17 +260,13 @@ object Bitext {
         "layout" -> "cents+cells"),
       policy = policy) { out =>
       val y = tgtSide(spark, dir)
-      val cents = seedTgtCentroids(y, nCells)
-      import spark.implicits._
-      Tables.write(cents.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cidx", "cv").coalesce(1))
-        .mode("overwrite").parquet(s"$out/cents")
-      Tables.write(tgtCellsOf(y, cents)).mode("overwrite").parquet(s"$out/cells")
+      val cents = tgtSeeds(y, nCells)
+      Ann.writeSeedList(spark, cents, s"$out/cents")
+      Tables.write(tgtCells(y, cents)).mode("overwrite").parquet(s"$out/cells")
     }
-    val cents: Seq[Seq[Double]] = Tables.read(spark, s"${idx.path}/cents")
-      .orderBy(col("cidx")).select(col("cv")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
-    mineFromCandidates(candidatesAgainst(x, cents,
-      Tables.read(spark, s"${idx.path}/cells"), nProbe), k, tau)
+    val cents = Ann.readSeedList(spark, s"${idx.path}/cents")
+    mineFromCandidates(candidatesAgainst(flatProbes(x, cents, nProbe).hint("broadcast"),
+      Tables.read(spark, s"${idx.path}/cells"), "cell"), k, tau)
   }
 
   /** TWO-LEVEL [[minePairsIncremental]] — the hierarchical rung for the
@@ -349,14 +283,12 @@ object Bitext {
                             nCoarse: Int = 3, wCoarse: Int = 3,
                             nProbe: Int = 8): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    require(nCoarse >= 1 && wCoarse >= 1 && wCoarse <= nCoarse,
-      s"need 1 <= wCoarse <= nCoarse, got wCoarse=$wCoarse nCoarse=$nCoarse")
-    require(nFine >= nCoarse && nProbe >= 1 && nProbe <= nFine,
-      s"need nCoarse <= nFine and 1 <= nProbe <= nFine")
-    val coarse = seedTgtCentroids(y, nCoarse)
-    val fineTab = tgtFineTab(y, coarse, nFine)
-    mineFromCandidates(candidatesAgainst2(x, coarse, fineTab,
-      tgtCells2Of(y, coarse, fineTab), wCoarse, nProbe), k, tau)
+    requireTwoLevel(nFine, nCoarse, wCoarse, nProbe)
+    val coarse = tgtSeeds(y, nCoarse)
+    val fineTab = Ann.lowestIdFineCentroids(y, "tgt_id", "tgt_vec", coarse, nFine)
+    mineFromCandidates(candidatesAgainst(
+      fineProbes(x, coarse, fineTab, wCoarse, nProbe).hint("broadcast"),
+      tgtCells2(y, coarse, fineTab), "fcell"), k, tau)
   }
 
   /** [[minePairsIncremental2]] against the CATALOG-MANAGED two-level
@@ -385,21 +317,18 @@ object Bitext {
         "metric" -> "cosine6", "layout" -> "coarse+fine+cells2"),
       policy = policy) { out =>
       val y = tgtSide(spark, dir)
-      val coarse = seedTgtCentroids(y, nCoarse)
-      import spark.implicits._
-      Tables.write(coarse.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cidx", "cv").coalesce(1))
-        .mode("overwrite").parquet(s"$out/coarse")
-      val fineTab = tgtFineTab(y, coarse, nFine)
+      val coarse = tgtSeeds(y, nCoarse)
+      Ann.writeSeedList(spark, coarse, s"$out/coarse")
+      val fineTab = Ann.lowestIdFineCentroids(y, "tgt_id", "tgt_vec", coarse, nFine)
       Tables.write(fineTab.coalesce(1)).mode("overwrite").parquet(s"$out/fine")
-      Tables.write(tgtCells2Of(y, coarse, fineTab))
+      Tables.write(tgtCells2(y, coarse, fineTab))
         .mode("overwrite").parquet(s"$out/cells2")
     }
-    val coarse: Seq[Seq[Double]] = Tables.read(spark, s"${idx.path}/coarse")
-      .orderBy(col("cidx")).select(col("cv")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
-    mineFromCandidates(candidatesAgainst2(x, coarse,
-      Tables.read(spark, s"${idx.path}/fine"),
-      Tables.read(spark, s"${idx.path}/cells2"), wCoarse, nProbe), k, tau)
+    val coarse = Ann.readSeedList(spark, s"${idx.path}/coarse")
+    mineFromCandidates(candidatesAgainst(
+      fineProbes(x, coarse, Tables.read(spark, s"${idx.path}/fine"), wCoarse, nProbe)
+        .hint("broadcast"),
+      Tables.read(spark, s"${idx.path}/cells2"), "fcell"), k, tau)
   }
 
   /** [[minePairsIncremental]] with the flat-vs-two-level rung SELF-DIALED
@@ -445,73 +374,6 @@ object Bitext {
       minePairsIncrementalIndexed2(spark, dir, x, k, tau, nCells,
         Ann.coarseFor(nCells), Ann.coarseFor(nCells), nProbe, policy, targetSide)
 
-  /** Fine-centroid TABLE anchored to the target side: one row per fine
-    * centroid — `(fcell, ccell, fv)` where fcell is 1-based over the
-    * `nFine` lowest-tgt_id vectors and ccell its coarse argmax (the
-    * [[graft.operators.Ann.fineCentroids]] contract on the corpus side).
-    * The row_number window is the only single-partition pass, bounded by
-    * `nFine` rows by construction. */
-  private def tgtFineTab(y: DataFrame, coarse: Seq[Seq[Double]],
-                         nFine: Int): DataFrame = {
-    import org.apache.spark.sql.graft.Bridge
-    y.orderBy(col("tgt_id")).limit(nFine)
-      .select(col("tgt_id"), col("tgt_vec").cast("array<double>").as("fv"))
-      .withColumn("ccell", Bridge.column(graft.functions.NearestCentroid(
-        Bridge.expression(col("fv")), coarse)))
-      .withColumn("fcell",
-        row_number().over(Window.orderBy(col("tgt_id"))).cast("long"))
-      .select(col("fcell"), col("ccell"), col("fv"))
-  }
-
-  /** The target corpus's FINE-cell assignment under the two-level
-    * quantizer: coarse argmax, then the fine max_by among that coarse
-    * cell's children (6-dp cosine desc, lower fcell on ties — the
-    * [[graft.operators.Ann.assignCells2]] ranking contract). Stored by
-    * [[minePairsIncrementalIndexed2]]; nothing here is driver state. */
-  private def tgtCells2Of(y: DataFrame, coarse: Seq[Seq[Double]],
-                          fineTab: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graft.Bridge
-    val par = y.sparkSession.sparkContext.defaultParallelism
-    y.repartition(par, col("tgt_id"))
-      .select(col("tgt_id"), col("tgt_vec").cast("array<double>").as("tv"))
-      .withColumn("ccell", Bridge.column(graft.functions.NearestCentroid(
-        Bridge.expression(col("tv")), coarse)))
-      .join(fineTab, Seq("ccell"))
-      .select(col("tgt_id"), col("tv"), col("fcell"),
-        round(cosine_sim(col("tv"), col("fv")), 6).as("fs"))
-      .groupBy(col("tgt_id"))
-      .agg(max_by(struct(col("tv"), col("fcell")),
-        struct(col("fs"), (-col("fcell")).as("nf"))).as("m"))
-      .select(col("m.fcell").as("fcell"), col("tgt_id"), col("m.tv").as("tv"))
-  }
-
-  /** Two-level candidate pairs for the incremental family: the batch
-    * probes `wCoarse` coarse cells (literal-sized ranking), opens their
-    * children through the fine TABLE, keeps its top `nProbe` fine cells,
-    * and equi-joins the STORED fine-cell corpus assignment — batch side
-    * broadcast by contract ([[candidatesAgainst]]'s pinned direction). */
-  private def candidatesAgainst2(x: DataFrame, coarse: Seq[Seq[Double]],
-                                 fineTab: DataFrame, tgtCells2: DataFrame,
-                                 wCoarse: Int, nProbe: Int): DataFrame = {
-    require(coarse.nonEmpty, "cannot probe with an empty coarse layer")
-    import org.apache.spark.sql.graft.Bridge
-    val par = x.sparkSession.sparkContext.defaultParallelism
-    val wf = Window.partitionBy(col("src_id")).orderBy(desc("fs"), asc("fcell"))
-    val probes = x.repartition(par, col("src_id"))
-      .select(col("src_id"), col("src_vec").cast("array<double>").as("qv"),
-        explode(Bridge.column(graft.functions.TopCells(
-          Bridge.expression(col("src_vec").cast("array<double>")), coarse,
-          math.min(wCoarse, coarse.length)))).as("ccell"))
-      .join(fineTab, Seq("ccell"))
-      .withColumn("fs", round(cosine_sim(col("qv"), col("fv")), 6))
-      .withColumn("frnk", row_number().over(wf))
-      .where(col("frnk") <= nProbe)
-      .select(col("src_id"), col("qv"), col("fcell"))
-    probes.hint("broadcast").join(tgtCells2, Seq("fcell"))
-      .select(col("src_id"), col("tgt_id"),
-        round(cosine_sim(col("qv"), col("tv")) * 1e6, 0).cast("bigint").as("c6"))
-  }
-
   /** The one target side the indexed incremental twins can mine against —
     * see [[TargetSideConvention]] in their signatures. */
   val TargetSideConvention: String = "vec_id%2=1"
@@ -525,54 +387,78 @@ object Bitext {
       .where(col("vec_id") % 2 === 1)
       .select(col("vec_id").as("tgt_id"), col("embedding").as("tgt_vec"))
 
-  /** Target-side seed centroids: the `nCells` lowest-tgt_id vectors —
-    * [[candidates]]' orderBy+limit seeding contract, anchored to the
-    * STABLE corpus side for the incremental family. */
-  private def seedTgtCentroids(y: DataFrame, nCells: Int): Seq[Seq[Double]] = {
-    val cents: Seq[Seq[Double]] = y.orderBy(col("tgt_id")).limit(nCells)
-      .select(col("tgt_vec").cast("array<double>")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
-    require(cents.nonEmpty, "cannot seed centroids from an empty target side")
-    cents
+  private def requireFlat(nCells: Int, nProbe: Int): Unit =
+    require(nCells >= 1 && nProbe >= 1 && nProbe <= nCells,
+      s"need 1 <= nProbe <= nCells, got nProbe=$nProbe nCells=$nCells")
+
+  private def requireTwoLevel(nFine: Int, nCoarse: Int, wCoarse: Int, nProbe: Int): Unit = {
+    require(nCoarse >= 1 && wCoarse >= 1 && wCoarse <= nCoarse,
+      s"need 1 <= wCoarse <= nCoarse, got wCoarse=$wCoarse nCoarse=$nCoarse")
+    require(nFine >= nCoarse && nProbe >= 1 && nProbe <= nFine,
+      s"need nCoarse <= nFine and 1 <= nProbe <= nFine")
   }
 
-  /** The target corpus's (cell, tgt_id, tv) assignment under `cents` —
-    * computed inline by [[minePairsIncremental]], persisted by
-    * [[minePairsIncrementalIndexed]]'s build. */
-  private def tgtCellsOf(y: DataFrame, cents: Seq[Seq[Double]]): DataFrame = {
-    import org.apache.spark.sql.graft.Bridge
-    val par = y.sparkSession.sparkContext.defaultParallelism
-    y.repartition(par, col("tgt_id"))
-      .withColumn("cell", Bridge.column(graft.functions.NearestCentroid(
-        Bridge.expression(col("tgt_vec").cast("array<double>")), cents)))
-      .select(col("cell"), col("tgt_id"),
-        col("tgt_vec").cast("array<double>").as("tv"))
+  /** The `n` lowest-id vectors of one side ([[Ann.lowestIdSeeds]]); an
+    * empty side fails with `empty`. */
+  private def seeds(side: DataFrame, idCol: String, vecCol: String, n: Int,
+                    empty: String): Seq[Seq[Double]] = {
+    val s = Ann.lowestIdSeeds(side, idCol, vecCol, n)
+    require(s.nonEmpty, empty)
+    s
   }
 
-  /** Candidate pairs for the incremental family — [[candidates]] with the
-    * quantizer anchored to the stored corpus: probes from the batch side
-    * against a PRECOMPUTED target assignment, batch side broadcast by
-    * contract (see [[minePairsIncremental]]'s scale note). */
-  private def candidatesAgainst(x: DataFrame, cents: Seq[Seq[Double]],
-                                tgtCells: DataFrame, nProbe: Int): DataFrame = {
+  /** Target-side seeds for the incremental family — anchored to the
+    * STABLE corpus side. */
+  private def tgtSeeds(y: DataFrame, n: Int): Seq[Seq[Double]] =
+    seeds(y, "tgt_id", "tgt_vec", n, "cannot seed centroids from an empty target side")
+
+  private def par(df: DataFrame): Int = df.sparkSession.sparkContext.defaultParallelism
+
+  /** The src probe side over a flat quantizer: `(src_id, qv, cell)` for
+    * each of the src's top `nProbe` cells (clamped to the centroid count). */
+  private def flatProbes(x: DataFrame, cents: Seq[Seq[Double]], nProbe: Int): DataFrame = {
     require(cents.nonEmpty, "cannot probe with an empty centroid set")
-    import org.apache.spark.sql.graft.Bridge
-    val par = x.sparkSession.sparkContext.defaultParallelism
-    val probes = x.repartition(par, col("src_id"))
-      .select(col("src_id"), col("src_vec").cast("array<double>").as("qv"),
-        explode(Bridge.column(graft.functions.TopCells(
-          Bridge.expression(col("src_vec").cast("array<double>")), cents,
-          math.min(nProbe, cents.length)))).as("cell"))
-    probes.hint("broadcast").join(tgtCells, Seq("cell"))
+    Ann.probeCells(x.repartition(par(x), col("src_id")), "src_id", "src_vec", cents,
+      math.min(nProbe, cents.length))
+  }
+
+  /** The tgt side's `(cell, tgt_id, tv)` flat assignment — computed inline
+    * by the miners, persisted by [[minePairsIncrementalIndexed]]'s build. */
+  private def tgtCells(y: DataFrame, cents: Seq[Seq[Double]]): DataFrame =
+    Ann.assignCells(y.repartition(par(y), col("tgt_id")), cents, "tgt_vec")
+      .select(col("cell"), col("tgt_id"), col("tgt_vec").cast("array<double>").as("tv"))
+
+  /** The src probe side over a two-level quantizer: `(src_id, qv, fcell)`
+    * for the src's top `nProbe` fine cells under its top `wCoarse` coarse
+    * cells (clamped to the coarse count) — [[Ann.probeFineCells]]. */
+  private def fineProbes(x: DataFrame, coarse: Seq[Seq[Double]], fineTab: DataFrame,
+                         wCoarse: Int, nProbe: Int): DataFrame = {
+    require(coarse.nonEmpty, "cannot probe with an empty coarse layer")
+    Ann.probeFineCells(x.repartition(par(x), col("src_id")), "src_id", "src_vec", coarse,
+      math.min(wCoarse, coarse.length), fineTab, nProbe)
+  }
+
+  /** The tgt side's `(fcell, tgt_id, tv)` two-level assignment
+    * ([[Ann.assignCells2]]) — stored by [[minePairsIncrementalIndexed2]]. */
+  private def tgtCells2(y: DataFrame, coarse: Seq[Seq[Double]], fineTab: DataFrame): DataFrame =
+    Ann.assignCells2(y.repartition(par(y), col("tgt_id"))
+        .select(col("tgt_id"), col("tgt_vec").cast("array<double>").as("tv")),
+      coarse, fineTab, "tgt_id", "tv", Seq("tv"))
+      .select(col("fcell"), col("tgt_id"), col("tv"))
+
+  /** Candidate pairs `(src_id, tgt_id, c6)`: the `key` equi-join of a
+    * probe side and a target assignment, each pair carrying the integer
+    * micro-unit cosine. The incremental miners pass their batch probe side
+    * with a broadcast hint (see [[minePairsIncremental]]'s scale note). */
+  private def candidatesAgainst(probes: DataFrame, tgt: DataFrame, key: String): DataFrame =
+    probes.join(tgt, Seq(key))
       .select(col("src_id"), col("tgt_id"),
         round(cosine_sim(col("qv"), col("tv")) * 1e6, 0).cast("bigint").as("c6"))
-  }
 
-  /** The margin/mutual-argmax tail shared by [[minePairs]] and
-    * [[minePairs2]] — everything downstream of candidate generation. */
-  private def mineFromCandidates(pairs0: DataFrame, k: Int,
+  /** The margin/mutual-argmax tail shared by every miner — everything
+    * downstream of candidate generation. */
+  private def mineFromCandidates(pairs: DataFrame, k: Int,
                                  tau: Double): DataFrame = {
-    val pairs = pairs0
     val wf = Window.partitionBy(col("src_id")).orderBy(desc("c6"), asc("tgt_id"))
     val fwd = pairs.withColumn("rnk", row_number().over(wf))
       .where(col("rnk") <= k)

@@ -127,29 +127,31 @@ object Centrality {
                nProbe: Int = 4): DataFrame = {
     val cents = Ann.seedCentroids(embeddings, nCells)
     require(cents.nonEmpty, "cannot seed probe centroids from an empty corpus")
-    // top-nProbe cells per src as one fused primitive pass — the composed
-    // transform/array_sort/slice form runs nCells INTERPRETED cosines per
-    // row (lambdas never codegen), which dominates the build once nCells
-    // grows √N with the corpus; see [[graft.functions.TopCells]]
-    import org.apache.spark.sql.graft.Bridge
-    val probeCells = Bridge.column(graft.functions.TopCells(
-      Bridge.expression(col("embedding").cast("array<double>")), cents, nProbe))
     // explicit hash repartition before the per-row centroid work (nCells
     // cosines/row on both sides): a small parquet read is ONE partition,
     // which would serialize it — the similarityPageRank lesson. At real
     // scale the source has many input splits and this is a no-op-sized
     // shuffle compared to the cell exchange that follows either way.
-    val par = embeddings.sparkSession.sparkContext.defaultParallelism
-    val e = embeddings.repartition(par, col("vec_id"))
-    val probes = e
-      .select(col("vec_id").as("src"),
-        col("embedding").cast("array<double>").as("qv"),
-        explode(probeCells).as("cell"))
+    val e = byVecId(embeddings)
+    val probes = Ann.probeCells(e, "vec_id", "embedding", cents, nProbe)
     val cands = Ann.assignCells(e, cents)
       .select(col("vec_id").as("dst"),
         col("embedding").cast("array<double>").as("tv"), col("cell"))
+    knnEdges(probes.withColumnRenamed("vec_id", "src").join(cands, Seq("cell")), k)
+  }
+
+  /** `embeddings` hash-partitioned on `vec_id` into the default
+    * parallelism. */
+  private def byVecId(embeddings: DataFrame): DataFrame =
+    embeddings.repartition(embeddings.sparkSession.sparkContext.defaultParallelism,
+      col("vec_id"))
+
+  /** The kNN edge tail of [[annEdges]] and [[annEdges2]] over
+    * `(src, qv, dst, tv)` candidate rows: self excluded, each src's top
+    * `k` dsts by 6-dp cosine desc, `dst` asc on ties. */
+  private def knnEdges(candidates: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("src")).orderBy(desc("score"), asc("dst"))
-    probes.join(cands, Seq("cell"))
+    candidates
       .where(col("src") =!= col("dst"))
       .select(col("src"), col("dst"),
         round(cosine_sim(col("qv"), col("tv")), 6).as("score"))
@@ -184,37 +186,17 @@ object Centrality {
     require(nCoarse <= nFine, s"nCoarse ($nCoarse) must be <= nFine ($nFine)")
     val coarse = Ann.seedCentroids(embeddings, nCoarse)
     require(coarse.nonEmpty, "cannot seed probe centroids from an empty corpus")
-    import org.apache.spark.sql.graft.Bridge
-    val probeCoarse = Bridge.column(graft.functions.TopCells(
-      Bridge.expression(col("embedding").cast("array<double>")), coarse, wCoarse))
     // same explicit pre-repartition as annEdges: a small parquet read is ONE
     // partition, which would serialize the per-row coarse ranking
-    val par = embeddings.sparkSession.sparkContext.defaultParallelism
-    val e = embeddings.repartition(par, col("vec_id"))
+    val e = byVecId(embeddings)
     val fineTab = Ann.fineCentroids(e, coarse, nFine)
-    val wf = Window.partitionBy(col("src")).orderBy(desc("fs"), asc("fcell"))
-    val probes = e
-      .select(col("vec_id").as("src"),
-        col("embedding").cast("array<double>").as("qv"),
-        explode(probeCoarse).as("ccell"))
-      .join(fineTab, Seq("ccell"))
-      .withColumn("fs", round(cosine_sim(col("qv"), col("fv")), 6))
-      .withColumn("frnk", row_number().over(wf))
-      .where(col("frnk") <= nProbe)
-      .select(col("src"), col("qv"), col("fcell"))
+    val probes = Ann.probeFineCells(e, "vec_id", "embedding", coarse, wCoarse, fineTab, nProbe)
     // fine cells have exactly one coarse parent, so a src's probed fcells
     // are distinct and each (src, dst) pair occurs at most once
     val cands = Ann.assignCells2(e, coarse, fineTab)
       .select(col("vec_id").as("dst"),
         col("embedding").cast("array<double>").as("tv"), col("fcell"))
-    val w = Window.partitionBy(col("src")).orderBy(desc("score"), asc("dst"))
-    probes.join(cands, Seq("fcell"))
-      .where(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"),
-        round(cosine_sim(col("qv"), col("tv")), 6).as("score"))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("src"), col("dst"))
+    knnEdges(probes.withColumnRenamed("vec_id", "src").join(cands, Seq("fcell")), k)
   }
 
   /** [[pageRank]] over the two-level-quantizer kNN graph ([[annEdges2]]) —

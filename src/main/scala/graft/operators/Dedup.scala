@@ -2419,7 +2419,7 @@ object Dedup {
 
   /** The shift-invariant full 5-column landmark join key (`lc = dt2 = 0`
     * under pair keys, so the pair semantics are unchanged). */
-  private val landmarkKey = Seq("la", "lb", "lc", "dt", "dt2")
+  private[graft] val landmarkKey = Seq("la", "lb", "lc", "dt", "dt2")
 
   /** The landmark vote join shared by [[audioLandmarkNear]] and
     * [[audioDedup]]: [[offsetVotes]] on [[landmarkKey]], offsets in
@@ -2603,30 +2603,33 @@ object Dedup {
       .orderBy(col(idCol))
   }
 
-  /** Batch WAV docs whose landmarks agree with ≥ `minVotes` of ANY single
-    * accumulated-state doc's landmarks on one time offset, OR whose
-    * envelope fingerprint appears verbatim in state — the cross-batch arm
-    * of [[graft.streaming.Streaming.streamAudioDedupAdmit]]. `stateLm`
-    * needs `(doc_id, la, lb, lc, dt, dt2, ta)` landmark rows; `stateEnv` one `env`
-    * string column (distinct envelopes). Both arms are equi-joins on
-    * bounded per-doc state — nothing audio-sized. */
-  private[graft] def audioMatchesAgainst(lm: DataFrame, env: DataFrame,
-                                         stateLm: DataFrame, stateEnv: DataFrame,
-                                         idCol: String = "doc_id",
-                                         minVotes: Int = 5): DataFrame = {
-    val voteHits = lm
-      .select(col(idCol), col("la"), col("lb"), col("lc"), col("dt"),
-        col("dt2"), col("ta").as("taa"))
-      .join(stateLm.select(col(idCol).as("__sid"), col("la"), col("lb"),
-        col("lc"), col("dt"), col("dt2"), col("ta").as("tab")),
-        Seq("la", "lb", "lc", "dt", "dt2"))
-      .groupBy(col(idCol), col("__sid"), (col("taa") - col("tab")).as("off"))
+  /** Batch media docs whose signature rows agree on `keyCols` with
+    * ≥ `minVotes` rows of ANY single accumulated-state doc on one `posCol`
+    * offset, OR whose `fpCol` fingerprint appears verbatim in state — the
+    * cross-batch arm of [[graft.streaming.Streaming.streamAudioDedupAdmit]]
+    * (landmark rows on [[landmarkKey]] at time `ta`, envelope `env`) and
+    * [[graft.streaming.Streaming.streamVideoDedupAdmit]] (frame rows on
+    * `fhash` at `frame_no`, frame-hash fingerprint `fp`), and of
+    * [[audioIncremental]] / [[videoIncremental]]. The exact arm covers
+    * clips with too few rows to carry `minVotes` of vote evidence.
+    * `stateRows` needs `(idCol, keyCols…, posCol)`; `stateFps` one `fpCol`
+    * column (distinct fingerprints). Both arms are equi-joins on bounded
+    * per-doc state — nothing media-sized. */
+  private[graft] def crossMatches(rows: DataFrame, fps: DataFrame,
+                                  stateRows: DataFrame, stateFps: DataFrame,
+                                  idCol: String, keyCols: Seq[String], posCol: String,
+                                  fpCol: String, minVotes: Int): DataFrame = {
+    def side(df: DataFrame, id: Column, pos: String) =
+      df.select((id +: keyCols.map(col)) :+ col(posCol).as(pos): _*)
+    val voteHits = side(rows, col(idCol), "__pa")
+      .join(side(stateRows, col(idCol).as("__sid"), "__pb"), keyCols)
+      .groupBy(col(idCol), col("__sid"), (col("__pa") - col("__pb")).as("off"))
       .agg(count(lit(1)).as("v"))
       .where(col("v") >= minVotes)
       .select(col(idCol))
-    val envHits = env.join(stateEnv.select(col("env")), Seq("env"), "left_semi")
+    val fpHits = fps.join(stateFps.select(col(fpCol)), Seq(fpCol), "left_semi")
       .select(col(idCol))
-    voteHits.unionByName(envHits).distinct()
+    voteHits.unionByName(fpHits).distinct()
   }
 
   /** Incremental AUDIO dedup — [[imageIncremental]]'s contract for the
@@ -2635,7 +2638,7 @@ object Dedup {
     * streaming gate): each incoming blob is flagged `seen_in_corpus` iff
     * it landmark-VOTES ≥ `minVotes` against any single reference clip on
     * one time offset OR repeats a reference envelope verbatim (the
-    * [[audioMatchesAgainst]] two-arm rule — literally that function, the
+    * [[crossMatches]] two-arm rule — literally that function, the
     * streaming gate's cross-batch arm), and `matched_in_batch` iff it
     * votes against a LOWER-ID in-batch clip or repeats a lower-id
     * in-batch envelope. Reference state is SIGNATURE-ONLY: landmark rows
@@ -2736,7 +2739,8 @@ object Dedup {
     val incEnv = Multimodal.audioEnvelope(spark, incoming, idCol, blobCol,
       windowSamples, maxBytes, hop)
       .select(col(idCol), col("env")).localCheckpoint(false)
-    val seen = audioMatchesAgainst(incLm, incEnv, refLm, refEnv, idCol, minVotes)
+    val seen = crossMatches(incLm, incEnv, refLm, refEnv, idCol, landmarkKey, "ta", "env",
+      minVotes)
     val batchVote = landmarkVotes(incLm, idCol, minVotes)
       .select(col("b_id").as(idCol))
     val envReps = incEnv.groupBy(col("env")).agg(min(col(idCol)).as("__rep"))
@@ -3106,33 +3110,6 @@ object Dedup {
     else hammingFrameVotes(fr0, idCol, minVotes, bands, maxHamming, agreeBands, maxBucket)
   }
 
-  /** Batch MP4 docs whose frames agree with ≥ `minVotes` of ANY single
-    * accumulated-state video's frames on one frame-index offset, OR whose
-    * frame-hash fingerprint appears verbatim in state — the cross-batch
-    * arm of [[graft.streaming.Streaming.streamVideoDedupAdmit]], the
-    * [[audioMatchesAgainst]] two-arm design for the video modality (the
-    * exact arm covers clips with too few frames to carry `minVotes` of
-    * vote evidence). `stateFr` needs `(doc_id, frame_no, fhash)` frame
-    * rows; `stateFp` one `fp` string column (distinct fingerprints). Both
-    * arms are equi-joins on bounded per-video state — pixels never
-    * shuffle. */
-  private[graft] def videoMatchesAgainst(fr: DataFrame, fp: DataFrame,
-                                         stateFr: DataFrame, stateFp: DataFrame,
-                                         idCol: String = "doc_id",
-                                         minVotes: Int = 3): DataFrame = {
-    val voteHits = fr
-      .select(col(idCol), col("fhash"), col("frame_no").as("na"))
-      .join(stateFr.select(col(idCol).as("__sid"), col("fhash"),
-        col("frame_no").as("nb")), Seq("fhash"))
-      .groupBy(col(idCol), col("__sid"), (col("na") - col("nb")).as("off"))
-      .agg(count(lit(1)).as("v"))
-      .where(col("v") >= minVotes)
-      .select(col(idCol))
-    val fpHits = fp.join(stateFp.select(col("fp")), Seq("fp"), "left_semi")
-      .select(col(idCol))
-    voteHits.unionByName(fpHits).distinct()
-  }
-
   /** Per-video frame-hash fingerprint (ordered frame-hash list) — the
     * [[videoDedup]] collapse key, shared with the streaming gate's exact
     * arm. */
@@ -3150,7 +3127,7 @@ object Dedup {
     * contract): each incoming blob is flagged `seen_in_corpus` iff it
     * frame-VOTES ≥ `minVotes` against any single reference video on one
     * frame-index offset OR repeats a reference frame-hash FINGERPRINT
-    * verbatim (the [[videoMatchesAgainst]] two-arm rule — literally that
+    * verbatim (the [[crossMatches]] two-arm rule — literally that
     * function, the streaming gate's cross-batch arm), and
     * `matched_in_batch` iff it votes against a LOWER-ID in-batch video or
     * repeats a lower-id in-batch fingerprint. Reference state is
@@ -3228,7 +3205,8 @@ object Dedup {
     val incFr = Multimodal.videoFrameHashes(spark, incoming, idCol, blobCol,
       maxFrames, maxBytes).localCheckpoint(false)
     val incFp = videoFingerprints(incFr, idCol).localCheckpoint(false)
-    val seen = videoMatchesAgainst(incFr, incFp, refFr, refFp, idCol, minVotes)
+    val seen = crossMatches(incFr, incFp, refFr, refFp, idCol, Seq("fhash"), "frame_no", "fp",
+      minVotes)
     val batchVote = frameVotes(incFr, idCol, minVotes)
       .select(col("b_id").as(idCol))
     val fpReps = incFp.groupBy(col("fp")).agg(min(col(idCol)).as("__rep"))
@@ -3670,17 +3648,12 @@ object Dedup {
       val ref = graft.core.Tables.embeddings(spark, dir)
         .where(Sampling.hashBucket(col("vec_id")) < refBucketMax)
       val cents = Ann.seedCentroids(ref, nCells)
-      import spark.implicits._
-      Tables.write(cents.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cidx", "cv").coalesce(1))
-        .mode("overwrite").parquet(s"$out/cents")
+      Ann.writeSeedList(spark, cents, s"$out/cents")
       Tables.write(Ann.assignCells(ref.select(col("vec_id"), col("embedding")), cents)
         .select(col("cell").cast("bigint").as("cell"), col("embedding")))
         .mode("overwrite").parquet(s"$out/cells")
     }
-    val cents: Seq[Seq[Double]] = Tables.read(spark, s"${idx.path}/cents")
-      .orderBy(col("cidx")).select(col("cv")).collect()
-      .map(_.getSeq[Double](0).toSeq).toSeq
-    semanticIncrementalAgainst(incoming, cents,
+    semanticIncrementalAgainst(incoming, Ann.readSeedList(spark, s"${idx.path}/cents"),
       Tables.read(spark, s"${idx.path}/cells"), tau)
   }
 

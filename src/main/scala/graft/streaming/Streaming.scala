@@ -1258,10 +1258,10 @@ object Streaming {
       (readBatchState(spark, s"$path/_lm", batchId),
         readBatchState(spark, s"$path/_env", batchId)) match {
         case (None, None) => None
-        case (stLm, stEnv) => Some(Dedup.audioMatchesAgainst(lm, env,
+        case (stLm, stEnv) => Some(Dedup.crossMatches(lm, env,
           stLm.getOrElse(lm.limit(0)),
           stEnv.getOrElse(env.select(col("env")).limit(0)),
-          minVotes = minVotes))
+          "doc_id", Dedup.landmarkKey, "ta", "env", minVotes))
       })
     // pass-through: rows with no envelope are not audio
     val admitted = keepers.unionByName(
@@ -1324,10 +1324,10 @@ object Streaming {
       (readBatchState(spark, s"$path/_fr", batchId),
         readBatchState(spark, s"$path/_fp", batchId)) match {
         case (None, None) => None
-        case (stFr, stFp) => Some(Dedup.videoMatchesAgainst(fr, fp,
+        case (stFr, stFp) => Some(Dedup.crossMatches(fr, fp,
           stFr.getOrElse(fr.limit(0)),
           stFp.getOrElse(fp.select(col("fp")).limit(0)),
-          minVotes = minVotes))
+          "doc_id", Seq("fhash"), "frame_no", "fp", minVotes))
       })
     // pass-through: rows with no extracted frame are not videos
     val admitted = keepers.unionByName(
