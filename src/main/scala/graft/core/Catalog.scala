@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorFunctions.cosine_sim
 
@@ -231,14 +232,41 @@ final class GraftDatabase(val spark: SparkSession, val basePath: String) {
     * groupBy within the batch plus a broadcast-friendly semi-join against the
     * existing collection (not a per-record point lookup — the reference does
     * one hash probe per record, `collection.go:33`; at 100 TB that must be a
-    * single distributed anti-join). First offending ids are reported. */
+    * single distributed anti-join). First offending ids are reported.
+    *
+    * The batch is evaluated ONCE: its [[Record.schema]] projection is
+    * persisted at entry and the audit, the semi-join and the write all read
+    * that one frame, which is released on return and on every validation
+    * error. A batch is typically a lazy chunk → embed lineage, and without
+    * the cache each of the three actions would re-run it — three embedder
+    * calls per record, where the reference embeds each record once, when it
+    * is made (`records/records.go:81-92`). A batch the caller already
+    * persisted is read as given and left persisted, so the same rows are
+    * never cached twice.
+    *
+    * The cost is a full copy of the projected batch held by the executors
+    * for the call, in memory and spilled to executor-local disk past that:
+    * at 100 TB a batch needs local disk about its own embedded size. That
+    * is traded against re-running the lineage twice more, which wins when
+    * the lineage embeds (measured on `serve_mixed`'s chunk → embed set-up)
+    * and may not when it is a cheap parquet re-read, as for
+    * `CatalogOps.database` and `CollectionIO.importCollection` (not
+    * measured). */
   def addRecords(collectionId: String, batch: DataFrame): Unit = {
     val meta = getCollection(collectionId)
+    val owned = batch.storageLevel == StorageLevel.NONE
+    val projected = batch.select(Record.schema.fieldNames.map(col).toIndexedSeq: _*)
+    val rows = if (owned) projected.persist(StorageLevel.MEMORY_AND_DISK) else projected
+    try appendBatch(meta, rows)
+    finally if (owned) rows.unpersist(false)
+  }
 
+  /** [[addRecords]]' validations and append over its one evaluated frame. */
+  private def appendBatch(meta: CollectionMeta, rows: DataFrame): Unit = {
     // All three in-batch validations in ONE aggregation job (small samples
     // of offending ids collected for the error text), then the
     // duplicate-vs-existing semi-join as a second job, then the write.
-    val audit = batch
+    val audit = rows
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n"),
         max(when(col("embedderId") =!= lit(meta.embedderId), col("embedderId"))).as("badEmb"),
@@ -269,15 +297,14 @@ final class GraftDatabase(val spark: SparkSession, val basePath: String) {
     // pass and both append (the check-then-act race the lock exists for).
     // The path is re-resolved inside too — a concurrent compact may have
     // swapped versions since the batch-internal validation above.
-    mutationLockFor(collectionId).synchronized {
-      val dupExisting = batch.join(records(collectionId), Seq("id"), "left_semi")
+    mutationLockFor(meta.id).synchronized {
+      val dupExisting = rows.join(records(meta.id), Seq("id"), "left_semi")
         .select("id").limit(3).collect()
       if (dupExisting.nonEmpty)
         throw new GraftException(
           s"Record ${dupExisting.head.getString(0)} already exists in collection ${meta.id}\n")
 
-      Tables.write(batch.select(Record.schema.fieldNames.map(col).toIndexedSeq: _*))
-        .mode("append").parquet(getCollection(collectionId).path)
+      Tables.write(rows).mode("append").parquet(getCollection(meta.id).path)
     }
   }
 

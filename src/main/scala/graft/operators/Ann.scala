@@ -823,15 +823,17 @@ object Ann {
     * per cell among the top `width` of `cents` for the `vecCol` vector,
     * `qv` the vector widened to DOUBLE. Cells rank by 6-dp cosine desc,
     * lower cell on ties — the [[probe]] contract as the fused
-    * [[graft.functions.TopCells]] pass, which fails on a `width` outside
-    * `[1, cents.length]`; callers that clamp do so before the call. */
+    * [[graft.functions.TopCells]] pass. `width` is clamped to
+    * `cents.length` here, once for every caller: a side holding fewer
+    * seed vectors than the probe width probes all of its cells. */
   private[graft] def probeCells(df: DataFrame, idCol: String, vecCol: String,
                                 cents: Seq[Seq[Double]], width: Int,
                                 cellCol: String = "cell"): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     df.select(col(idCol), col(vecCol).cast("array<double>").as("qv"),
       explode(Bridge.column(graft.functions.TopCells(
-        Bridge.expression(col(vecCol).cast("array<double>")), cents, width))).as(cellCol))
+        Bridge.expression(col(vecCol).cast("array<double>")), cents,
+        math.min(width, cents.length)))).as(cellCol))
   }
 
   /** The `n` LOWEST-`idCol` vectors of `df` as driver-side seeds, in id

@@ -415,11 +415,11 @@ object Bitext {
   private def par(df: DataFrame): Int = df.sparkSession.sparkContext.defaultParallelism
 
   /** The src probe side over a flat quantizer: `(src_id, qv, cell)` for
-    * each of the src's top `nProbe` cells (clamped to the centroid count). */
+    * each of the src's top `nProbe` cells ([[Ann.probeCells]] clamps the
+    * width to the centroid count). */
   private def flatProbes(x: DataFrame, cents: Seq[Seq[Double]], nProbe: Int): DataFrame = {
     require(cents.nonEmpty, "cannot probe with an empty centroid set")
-    Ann.probeCells(x.repartition(par(x), col("src_id")), "src_id", "src_vec", cents,
-      math.min(nProbe, cents.length))
+    Ann.probeCells(x.repartition(par(x), col("src_id")), "src_id", "src_vec", cents, nProbe)
   }
 
   /** The tgt side's `(cell, tgt_id, tv)` flat assignment — computed inline
@@ -435,7 +435,7 @@ object Bitext {
                          wCoarse: Int, nProbe: Int): DataFrame = {
     require(coarse.nonEmpty, "cannot probe with an empty coarse layer")
     Ann.probeFineCells(x.repartition(par(x), col("src_id")), "src_id", "src_vec", coarse,
-      math.min(wCoarse, coarse.length), fineTab, nProbe)
+      wCoarse, fineTab, nProbe)
   }
 
   /** The tgt side's `(fcell, tgt_id, tv)` two-level assignment

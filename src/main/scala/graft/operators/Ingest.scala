@@ -21,9 +21,14 @@ import graft.core.{Embedders, GraftDatabase, Record, Tables}
   *       needs; the local hash embedder just runs per element)
   *     → vectorized validations + append (GraftDatabase.addRecords)
   *
-  * Nothing in the pipeline shuffles until the final write; chunking and
-  * embedding are narrow transformations, so at 100 TB the job is
-  * scan-bound and embarrassingly parallel.
+  * Chunking and embedding are narrow transformations, so the chunk → embed
+  * stage is embarrassingly parallel and bound by the embedder. `addRecords`
+  * persists the embedded batch and runs its validations and the write over
+  * that one evaluation: each chunk is embedded exactly once, as in the
+  * reference, not once per validation and once more for the write. The
+  * price is executor storage for a full copy of the embedded batch for the
+  * length of the call (memory, spilling to local disk), so at 100 TB the
+  * executors need local disk about the batch's embedded size.
   */
 object Ingest {
 

@@ -262,12 +262,15 @@ object Streaming {
       // corpus-fresh, batch-first content
       val uniq = batch.groupBy(col("id")).agg(min(col("chunk")).as("chunk"))
         .join(existing.select(col("id")), Seq("id"), "left_anti").persist()
+      // embed ONCE: the isEmpty probe and addRecords share this cache;
+      // addRecords reads a caller-persisted batch as given (its
+      // one-evaluation contract) instead of caching it a second time
       val records = Ingest.makeRecords(batch.sparkSession,
         uniq.join(
           Dedup.exactIncremental(uniq, existing, idCol = "id", textCol = "chunk")
             .where(col("keep")).select(col("id")),
           Seq("id"), "left_semi"),
-        embedderId).persist() // embed ONCE, not once per addRecords stage
+        embedderId).persist()
       try {
         if (!records.isEmpty) db.addRecords(collectionId, records)
       } finally {

@@ -131,20 +131,22 @@ class CellBlockingSpec extends SparkSpec {
       .select(col("rnk"), col("tgt_id"), col("hub_count"))
   }
 
-  /** Flat kNN edges: corpus-seeded (`vec_id < nCells`), no probe clamp. */
+  /** Flat kNN edges: corpus-seeded (`vec_id < nCells`), probe width
+    * clamped to the seed count. */
   private def refAnnEdges(emb: DataFrame, k: Int, nCells: Int, nProbe: Int): DataFrame = {
     val cents = Ann.seedCentroids(emb, nCells)
     val e = emb.repartition(par, col("vec_id"))
     val probes = e.select(col("vec_id").as("src"),
       col("embedding").cast("array<double>").as("qv"),
-      explode(top("embedding", cents, nProbe)).as("cell"))
+      explode(top("embedding", cents, math.min(nProbe, cents.length))).as("cell"))
     val cands = e.withColumn("cell", nearest("embedding", cents))
       .select(col("vec_id").as("dst"), col("embedding").cast("array<double>").as("tv"),
         col("cell"))
     edgeTail(probes.join(cands, Seq("cell")), k)
   }
 
-  /** Two-level kNN edges over [[Ann.fineCentroids]] / [[Ann.assignCells2]]. */
+  /** Two-level kNN edges over [[Ann.fineCentroids]] / [[Ann.assignCells2]],
+    * coarse probe width clamped to the coarse seed count. */
   private def refAnnEdges2(emb: DataFrame, k: Int, nFine: Int, nCoarse: Int,
                            wCoarse: Int, nProbe: Int): DataFrame = {
     val coarse = Ann.seedCentroids(emb, nCoarse)
@@ -153,7 +155,7 @@ class CellBlockingSpec extends SparkSpec {
     val wf = Window.partitionBy(col("src")).orderBy(desc("fs"), asc("fcell"))
     val probes = e.select(col("vec_id").as("src"),
         col("embedding").cast("array<double>").as("qv"),
-        explode(top("embedding", coarse, wCoarse)).as("ccell"))
+        explode(top("embedding", coarse, math.min(wCoarse, coarse.length))).as("ccell"))
       .join(fineTab, Seq("ccell"))
       .withColumn("fs", round(cosine_sim(col("qv"), col("fv")), 6))
       .withColumn("frnk", row_number().over(wf))
@@ -305,12 +307,16 @@ class CellBlockingSpec extends SparkSpec {
       Centrality.annEdges2(e.limit(0)) }
     failsWith("nCoarse (5) must be <= nFine (4)") {
       Centrality.annEdges2(e, nFine = 4, nCoarse = 5) }
-    // Centrality does not clamp: a corpus shorter than the probe width
-    // fails in the probe expression itself
-    val tiny = e.where(col("vec_id") < 2)
-    failsWith("nProbe must be in [1, 2], got 4") {
-      Centrality.annEdges(tiny, k = 1, nCells = 16, nProbe = 4) }
-    failsWith("nProbe must be in [1, 2], got 3") {
-      Centrality.annEdges2(tiny, k = 1, nFine = 16, nCoarse = 4, wCoarse = 3, nProbe = 4) }
+  }
+
+  test("a corpus shorter than the probe width: annEdges and annEdges2 clamp it") {
+    val tiny = emb.where(col("vec_id") < 2)
+    val flat = edges(Centrality.annEdges(tiny, k = 1, nCells = 16, nProbe = 4))
+    assert(flat.nonEmpty)
+    assert(flat == edges(refAnnEdges(tiny, 1, 16, 4)))
+    val two = edges(Centrality.annEdges2(tiny, k = 1, nFine = 16, nCoarse = 4,
+      wCoarse = 3, nProbe = 4))
+    assert(two.nonEmpty)
+    assert(two == edges(refAnnEdges2(tiny, 1, 16, 4, 3, 4)))
   }
 }
