@@ -216,7 +216,7 @@ object ScaleSmoke {
     // the drop lives INSIDE the build stage so an isolated probe run
     // (SPARK_GRAFT_SMOKE_ONLY="incr near IDX probe") reuses a prior build
     stage("incr exact IDX build") {
-      dropIfRegistered("documents-dedup-fp2-b50")
+      dropIfRegistered(graft.operators.Dedup.exactFpIndexName(50))
       graft.operators.Dedup.exactIncrementalIndexed(spark, scaleDir, docs.where(!half))
         .queryExecution.toRdd.count()
     }
@@ -225,7 +225,7 @@ object ScaleSmoke {
         .queryExecution.toRdd.count()
     }
     stage("incr near IDX build") {
-      dropIfRegistered("documents-dedup-band2-b50-n8")
+      dropIfRegistered(graft.operators.Dedup.ngramBandIndexName(50, 8))
       graft.operators.Dedup.ngramNearIncrementalIndexed(spark, scaleDir, docs.where(!half))
         .queryExecution.toRdd.count()
     }
@@ -262,7 +262,7 @@ object ScaleSmoke {
       D.minhashNearApprox(docs).queryExecution.toRdd.count()
     }
     lshStats("minhash buckets r2b6",
-      D.ngramBandKeys(D.minhashShingled(docs, "doc_id", "text", 3), 12, 6), "doc_id")
+      D.ngramBandKeys(D.minhashShingled(docs, 3), 12, 6), "doc_id")
     // the replica-crawl saturation regime, TEXT edition (the r15 band-key
     // audit discipline): every doc maps to one of 2000 duplicate classes
     // (two near-twin variants each, word-trigram J = 0.8), so byte-
@@ -423,7 +423,7 @@ object ScaleSmoke {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
-      D.evalPosIndex(spark, dir, 90, 5) // BuildIfMissing, outside the timer loop
+      D.evalPos(spark, dir, 90, 5, graft.core.IndexPolicy.BuildIfMissing) // outside the timer loop
       val rows = docs.select(col("doc_id").cast("long"), col("text"))
         .as[(Long, String)].collect()
       val base = java.nio.file.Files.createTempDirectory("graft-sdadmit-").toString
@@ -655,10 +655,10 @@ object ScaleSmoke {
     }
     stage("ngram near-dup") { D.ngramNear(docs).queryExecution.toRdd.count() }
     lshStats("ngram buckets n8r3b4",
-      D.ngramBandKeys(D.ngramShingled(docs, "doc_id", "text", 8), 12, 4), "doc_id")
+      D.ngramBandKeys(D.ngramShingled(docs, 8), 12, 4), "doc_id")
     stage("simhash near-dup") { D.simhashNear(e).queryExecution.toRdd.count() }
     lshStats("simhash buckets 24/3",
-      D.simhashBandedKeys(e, "vec_id", "embedding", 24, 3, 64), "vec_id")
+      D.simhashBandedKeys(e, 24, 3, 64), "vec_id")
 
     // Round-8 additions. nCells scales with the corpus for the cell-
     // partitioned ops (the granularity contract in their scaladoc): hold
@@ -1003,22 +1003,15 @@ object ScaleSmoke {
         // (landmark rows + distinct envelopes — exactly what
         // audioIncrementalIndexed registers and streamAudioDedupAdmit
         // accumulates)
-        val ref = au.where(b < 90)
-        Tables.write(graft.operators.Multimodal.audioLandmarks(spark, ref, "doc_id", "blob",
-            16, 4, 1 << 20, 8, 3, 3))
-          .mode("overwrite").parquet(s"$statePath/lm")
-        Tables.write(graft.operators.Multimodal.audioEnvelope(spark, ref, "doc_id", "blob", 16, 1 << 20, 4)
-          .select(col("env")).distinct())
-          .mode("overwrite").parquet(s"$statePath/env")
-        spark.read.parquet(s"$statePath/lm").count()
+        D.audioState(spark, au.where(b < 90), 16, 4, 1 << 20, 8, 3, 3,
+          new D.Stored(spark, statePath, build = true))._1.count()
       }
       stage("audio incr probe (stored)") {
         // the steady-state half a pipeline pays per batch: only the
         // incoming 10% decodes; the seen corpus is two parquet reads
-        D.audioIncrementalFrom(spark, au.where(b >= 90),
-          spark.read.parquet(s"$statePath/lm"),
-          spark.read.parquet(s"$statePath/env"),
-          "doc_id", "blob", 16, 4, 1 << 20, 8, 3, 12, 3)
+        val (lm, env) = D.audioState(spark, au.where(b < 90), 16, 4, 1 << 20, 8, 3, 3,
+          new D.Stored(spark, statePath, build = false))
+        D.audioIncrementalFrom(spark, au.where(b >= 90), lm, env, 16, 4, 1 << 20, 8, 3, 12, 3)
           .queryExecution.toRdd.count()
       }
     }

@@ -1191,7 +1191,7 @@ object SparkEntry {
     "eval_leak_report_indexed" -> ((s, dir) =>
       // the report's indexed rung: the benchmark's postings come from the
       // SAME stored table decontaminate_runs_indexed probes (one
-      // evalPosIndex entry, three consumers) — per corpus snapshot only
+      // evalPos entry, three consumers) — per corpus snapshot only
       // the train side re-shingles
       Dedup.evalLeakReportIndexed(s, dir, Tables.documents(s, dir))),
     "verbatim_incremental_indexed" -> ((s, dir) => {

@@ -209,13 +209,16 @@ final class GraftDatabase(val spark: SparkSession, val basePath: String) {
   // --- record CRUD (O5–O10) ---------------------------------------------
 
   /** O5/O6 AddRecord — the reference's three validations, in its order
-    * (`collection/collection.go:32-45`). The whole check+append runs under
-    * the collection's mutation lock (as the reference's mutex does): a duplicate-id
-    * check outside it would let two concurrent adds of the same id both
-    * pass and both append. */
+    * (`collection/collection.go:32-45`), after a NULL-id check: a record
+    * without an id could never be read back by [[getRecord]]. The whole
+    * check+append runs under the collection's mutation lock (as the
+    * reference's mutex does): a duplicate-id check outside it would let two
+    * concurrent adds of the same id both pass and both append. */
   def addRecord(collectionId: String, record: Record): Unit =
     mutationLockFor(collectionId).synchronized {
     val meta = getCollection(collectionId)
+    if (record.id == null)
+      throw new GraftException(s"Record id is null for ${PrettyPrint.record(record)}")
     if (records(collectionId).where(col("id") === record.id).limit(1).count() > 0)
       throw new GraftException(
         s"Record ${record.id} already exists in collection ${meta.id}\n")
@@ -228,11 +231,12 @@ final class GraftDatabase(val spark: SparkSession, val basePath: String) {
   }
 
   /** Bulk AddRecord — the scale path. Validations are vectorized: one pass
-    * flags embedder mismatches and null embeddings; duplicate detection is a
-    * groupBy within the batch plus a broadcast-friendly semi-join against the
-    * existing collection (not a per-record point lookup — the reference does
-    * one hash probe per record, `collection.go:33`; at 100 TB that must be a
-    * single distributed anti-join). First offending ids are reported.
+    * flags NULL ids, embedder mismatches and null embeddings; duplicate
+    * detection is a groupBy within the batch plus a broadcast-friendly
+    * semi-join against the existing collection (not a per-record point
+    * lookup — the reference does one hash probe per record,
+    * `collection.go:33`; at 100 TB that must be a single distributed
+    * anti-join). First offending ids are reported.
     *
     * The batch is evaluated ONCE: its [[Record.schema]] projection is
     * persisted at entry and the audit, the semi-join and the write all read
@@ -263,24 +267,28 @@ final class GraftDatabase(val spark: SparkSession, val basePath: String) {
 
   /** [[addRecords]]' validations and append over its one evaluated frame. */
   private def appendBatch(meta: CollectionMeta, rows: DataFrame): Unit = {
-    // All three in-batch validations in ONE aggregation job (small samples
+    // All four in-batch validations in ONE aggregation job (small samples
     // of offending ids collected for the error text), then the
     // duplicate-vs-existing semi-join as a second job, then the write.
+    // NULL ids group together: `nullIds` is that group's row count.
     val audit = rows
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n"),
         max(when(col("embedderId") =!= lit(meta.embedderId), col("embedderId"))).as("badEmb"),
         max(when(col("embedding").isNull, lit(1)).otherwise(lit(0))).as("nullEmb"))
       .agg(
+        max(when(col("id").isNull, col("n"))).as("nullIds"),
         slice(collect_list(when(col("badEmb").isNotNull, col("badEmb"))), 1, 1).as("mismatch"),
         slice(collect_list(when(col("nullEmb") === 1, col("id"))), 1, 3).as("nulls"),
         slice(collect_list(when(col("n") > 1, col("id"))), 1, 3).as("dups"))
       .collect()
 
     audit.headOption.foreach { r =>
-      val mismatch = r.getSeq[String](0)
-      val nulls = r.getSeq[String](1)
-      val dups = r.getSeq[String](2)
+      val mismatch = r.getSeq[String](1)
+      val nulls = r.getSeq[String](2)
+      val dups = r.getSeq[String](3)
+      if (!r.isNullAt(0))
+        throw new GraftException(s"Record id is null for ${r.getLong(0)} records in batch")
       if (mismatch.nonEmpty)
         throw new GraftException(
           s"Record embedderId ${mismatch.head} != collection embedderId ${meta.embedderId}")

@@ -45,7 +45,7 @@ object Curate {
                // flag makes the assembled frame do the same
                runDecontam: Boolean = false,
                // warehouse dir whose CATALOG-PINNED eval posting index
-               // ([[Dedup.evalPosIndex]]) the run arm probes instead of
+               // ([[Dedup.evalPos]]) the run arm probes instead of
                // re-shingling the eval slice inline every pipeline run —
                // benchmarks are fixed artifacts, shingled once (the r16
                // deployment argument, now wired into the assembled frame).
@@ -147,7 +147,7 @@ object Curate {
     // the left join's null → true
     val deco = (if (runDecontam) evalIndexDir match {
         // the stored-eval-index arm: the benchmark slice's postings are a
-        // build-time fact ([[Dedup.evalPosIndex]]); per pipeline run only
+        // build-time fact ([[Dedup.evalPos]]); per pipeline run only
         // the train side shingles and streams through the hash join
         case Some(d) => Dedup.decontaminateRunsIndexed(docs.sparkSession, d,
           docs, trainPct = trainPct, evalFromPct = benchFromPct,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkS
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{IndexPolicy, Tables}
 import graft.functions.LshFunctions
 import graft.functions.VectorFunctions.cosine_sim
 
@@ -30,13 +30,9 @@ object Dedup {
 
   /** X3a — exact dedup: fingerprint + keeper flag (minimal doc_id wins).
     * One shuffle, partitioned by fingerprint; scales linearly. */
-  def exact(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val byFp = Window.partitionBy(col("fp"))
-    docs
-      .select(col(idCol), sha2(col(textCol), 256).as("fp"))
-      .withColumn("keep", col(idCol) === min(col(idCol)).over(byFp))
-      .select(col(idCol), col("fp"), col("keep"))
-  }
+  def exact(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), sha2(col("text"), 256).as("fp"))
+      .withColumn("keep", col("doc_id") === min(col("doc_id")).over(Window.partitionBy(col("fp"))))
 
   /** X3a' — incremental exact dedup: admit rows of an INCOMING batch whose
     * content fingerprint occurs neither in the existing reference corpus
@@ -49,23 +45,23 @@ object Dedup {
     * pre-computed dedup index a pipeline maintains), then one hash
     * equi-join on the fingerprint marks matches; the within-batch keeper
     * is [[exact]]'s min-id window over the (much smaller) batch. Both
-    * shuffles key on the fingerprint — co-partitioned, AQE-coalesced. */
+    * shuffles key on the fingerprint — co-partitioned, AQE-coalesced.
+    * The column names are parameters because the collection ingest gate
+    * ([[graft.streaming.Streaming.streamIngestDeduped]]) admits `(id, chunk)`
+    * rows. */
   def exactIncremental(incoming: DataFrame, reference: DataFrame,
                        idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    admitAgainstFps(incoming,
-      reference.select(sha2(col(textCol), 256).as("fp")).distinct(),
-      idCol, textCol)
+    admitFps(incoming.select(col(idCol), sha2(col(textCol), 256).as("fp")),
+      fpState(reference, textCol, Inline), idCol)
+
+  /** The exact family's seen-corpus state: the reference's DISTINCT
+    * sha-256 fingerprints, one `fp` column at the index root. */
+  private def fpState(ref: DataFrame, textCol: String, tier: Tier): DataFrame =
+    tier("")(ref.select(sha2(col(textCol), 256).as("fp")).distinct())
 
   /** The admission half of [[exactIncremental]], shared with the indexed
-    * variant: `refFps` is a DISTINCT `fp` column — computed inline or read
-    * from the stored index. */
-  private def admitAgainstFps(incoming: DataFrame, refFps: DataFrame,
-                              idCol: String, textCol: String): DataFrame =
-    admitFps(incoming.select(col(idCol), sha2(col(textCol), 256).as("fp")),
-      refFps, idCol)
-
-  /** [[admitAgainstFps]] over a pre-fingerprinted `(idCol, fp)` batch —
-    * the seam that lets the Bloom path hash the batch exactly once. */
+    * variant: `withFp` is the `(idCol, fp)` batch and `refFps` a DISTINCT
+    * `fp` column — computed inline or read from the stored index. */
   private def admitFps(withFp: DataFrame, refFps: DataFrame,
                        idCol: String): DataFrame = {
     val byFp = Window.partitionBy(col("fp"))
@@ -93,57 +89,96 @@ object Dedup {
     * rebuild-vs-fail).
     *
     * The stored-fp side is additionally pre-filtered with a Bloom filter
-    * built over the BATCH's fingerprints (the small side by contract):
-    * without it, every admission shuffles the full index — O(|corpus|)
-    * bytes per batch at 100 TB, the join's dominant cost. A Bloom pass has
-    * no false negatives, so every genuinely-seen fingerprint still reaches
-    * the exact equi-join and admissions are byte-identical (the oracle is
-    * the same SQL as the inline variant); false positives only cost
-    * ~fpp·|index| extra joined rows. The filter is batch-sized (~1.2 MB
-    * per million batch docs at fpp 0.01) — driver-built and broadcast,
-    * never index-sized. `bloomFpp <= 0` disables the pass. */
+    * (fpp 0.01) built over the BATCH's fingerprints (the small side by
+    * contract): without it, every admission shuffles the full index —
+    * O(|corpus|) bytes per batch at 100 TB, the join's dominant cost. A
+    * Bloom pass has no false negatives, so every genuinely-seen
+    * fingerprint still reaches the exact equi-join and admissions are
+    * byte-identical (the oracle is the same SQL as the inline variant);
+    * false positives only cost ~fpp·|index| extra joined rows. The filter
+    * is batch-sized (~1.2 MB per million batch docs) — driver-built and
+    * broadcast, never index-sized. */
   def exactIncrementalIndexed(spark: SparkSession, dir: String, incoming: DataFrame,
                               refBucketMax: Int = 50,
-                              idCol: String = "doc_id", textCol: String = "text",
-                              policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing,
-                              bloomFpp: Double = 0.01): DataFrame = {
-    val idx = documentsIndex(spark, dir, s"documents-dedup-fp2-b$refBucketMax", "dedup-fp",
-      Map("refBucketMax" -> refBucketMax.toString, "algo" -> "sha256",
-        "idCol" -> idCol, "textCol" -> textCol),
-      policy, Sampling.hashBucket(col(idCol)) < refBucketMax) { (ref, out) =>
-      Tables.write(ref.select(sha2(col(textCol), 256).as("fp")).distinct())
-        .mode("overwrite").parquet(out)
-    }
-    val stored = Tables.read(spark, idx.path)
-    if (bloomFpp <= 0) admitAgainstFps(incoming, stored, idCol, textCol)
-    else {
-      // localCheckpoint materializes the batch fingerprints ONCE: the
-      // count, the Bloom build, and the admission join all read the same
-      // frozen blocks (one hash pass instead of three; and a
-      // non-deterministic incoming can no longer produce a filter that
-      // disagrees with the admitted batch)
-      val withFp = incoming
-        .select(col(idCol), sha2(col(textCol), 256).as("fp")).localCheckpoint()
-      val bloom = withFp.stat.bloomFilter(
-        "fp", math.max(withFp.count(), 1L), bloomFpp)
-      val mightContain = udf((fp: String) => fp != null && bloom.mightContainString(fp))
-      admitFps(withFp, stored.where(mightContain(col("fp"))), idCol)
-    }
+                              policy: IndexPolicy = IndexPolicy.BuildIfMissing): DataFrame = {
+    val stored = documentsIndex(spark, dir, exactFpIndexName(refBucketMax), "dedup-fp",
+      Map("refBucketMax" -> refBucketMax.toString, "algo" -> "sha256") ++ TextIndexParams,
+      policy, docBucket < refBucketMax)(fpState(_, "text", _))
+    // localCheckpoint materializes the batch fingerprints ONCE: the
+    // count, the Bloom build, and the admission join all read the same
+    // frozen blocks (one hash pass instead of three; and a
+    // non-deterministic incoming can no longer produce a filter that
+    // disagrees with the admitted batch)
+    val withFp = incoming
+      .select(col("doc_id"), sha2(col("text"), 256).as("fp")).localCheckpoint()
+    val bloom = withFp.stat.bloomFilter("fp", math.max(withFp.count(), 1L), 0.01)
+    val mightContain = udf((fp: String) => fp != null && bloom.mightContainString(fp))
+    admitFps(withFp, stored.where(mightContain(col("fp"))), "doc_id")
   }
 
-  /** The catalog-managed index over one slice of `dir`'s documents table:
-    * the resolver owns both the source path the registry fingerprints and
-    * the table `build` reads, so the two cannot drift apart. Each caller
-    * passes its own slice predicate and its own build, which receives the
-    * sliced documents and the output path. */
-  private def documentsIndex(spark: SparkSession, dir: String, name: String,
-                             kind: String, params: Map[String, String],
-                             policy: graft.core.IndexPolicy, slice: Column)
-                            (build: (DataFrame, String) => Unit): graft.core.IndexMeta =
-    CatalogOps.indexRegistry(spark, dir).resolveIndex(name = name, kind = kind,
-      sourcePath = s"$dir/documents.parquet", params = params, policy = policy) { out =>
-      build(Tables.documents(spark, dir).where(slice), out)
+  private[graft] def exactFpIndexName(refBucketMax: Int): String =
+    s"documents-dedup-fp2-b$refBucketMax"
+
+  /** The id-hash bucket of a document — the slice key of every
+    * documents index and of the train/eval splits. */
+  private def docBucket: Column = Sampling.hashBucket(col("doc_id"))
+
+  /** The column-name params every text index records — literals, so an
+    * index built before the names became fixed still matches. */
+  private val TextIndexParams = Map("idCol" -> "doc_id", "textCol" -> "text")
+
+  /** Where a seen-corpus state's tables live. Each modality writes its
+    * state ONCE against a tier (`fpState`, `bandState`, …), naming every
+    * table by its sub-directory of the index path ("" = the path itself):
+    * the inline twins compute the tables ([[Inline]], or [[Checkpointed]]
+    * behind a materialization boundary) and [[documentsIndex]] stores them
+    * ([[Stored]]). `seeds` holds a driver-side seed list the same way. */
+  private[graft] trait Tier {
+    def apply(sub: String)(table: => DataFrame): DataFrame
+    def seeds(sub: String)(cents: => Seq[Seq[Double]]): Seq[Seq[Double]] = cents
+  }
+
+  private object Inline extends Tier {
+    def apply(sub: String)(table: => DataFrame): DataFrame = table
+  }
+
+  private object Checkpointed extends Tier {
+    def apply(sub: String)(table: => DataFrame): DataFrame = table.localCheckpoint(false)
+  }
+
+  /** The index tier: a build writes each table under `path` and reads it
+    * back, so a table derived from an earlier one reads the stored rows
+    * (history is shingled or decoded once); a hit only reads. */
+  private[graft] final class Stored(spark: SparkSession, path: String, build: Boolean) extends Tier {
+    private def at(sub: String) = if (sub.isEmpty) path else s"$path/$sub"
+    def apply(sub: String)(table: => DataFrame): DataFrame = {
+      if (build) Tables.write(table).mode("overwrite").parquet(at(sub))
+      Tables.read(spark, at(sub))
     }
+    override def seeds(sub: String)(cents: => Seq[Seq[Double]]): Seq[Seq[Double]] =
+      if (!build) Ann.readSeedList(spark, at(sub))
+      else { val c = cents; Ann.writeSeedList(spark, c, at(sub)); c }
+  }
+
+  /** The catalog-managed index over one slice of `dir`'s `table`
+    * (documents unless stated): the resolver owns both the source path the
+    * registry fingerprints and the rows the build reads, so the two cannot
+    * drift apart. `state` is the modality's state function; the resolver
+    * builds its tables into the index when the registry asks for a build,
+    * then hands back the stored tables. */
+  private def documentsIndex[S](spark: SparkSession, dir: String, name: String,
+                                kind: String, params: Map[String, String],
+                                policy: IndexPolicy, slice: Column,
+                                table: String = "documents")
+                               (state: (DataFrame, Tier) => S): S = {
+    val rows = (if (table == "embeddings") Tables.embeddings(spark, dir)
+      else Tables.documents(spark, dir)).where(slice)
+    val idx = CatalogOps.indexRegistry(spark, dir).resolveIndex(name = name, kind = kind,
+      sourcePath = s"$dir/$table.parquet", params = params, policy = policy) { out =>
+      state(rows, new Stored(spark, out, build = true))
+    }
+    state(rows, new Stored(spark, idx.path, build = false))
+  }
 
   /** Candidate pairs from LSH buckets, shared by every near-dup family:
     * one shuffle on the two-part bucket id, ids collected and sorted per
@@ -298,8 +333,7 @@ object Dedup {
   /** Word-shingle 56-bit hash sets — the minhash family's shingling pass
     * (same (doc_id, hs) contract as [[ngramShingled]], so the banding and
     * verification plumbing is shared). */
-  private[graft] def minhashShingled(docs: DataFrame, idCol: String, textCol: String,
-                                     shingleSize: Int): DataFrame =
+  private[graft] def minhashShingled(docs: DataFrame, shingleSize: Int): DataFrame =
     docs
       // empty-shingle docs are dropped via the PRECONDITION (fewer than n
       // tokens), not `size(hs) > 0`: a filter on the hs alias gets pushed
@@ -310,17 +344,14 @@ object Dedup {
       // Hash56.wordShingles' `m < n` gate exactly — filtering empties here
       // would silently exclude docs whose non-empty count dips below n
       // while the fused hash (and the DuckDB oracle) still shingles them.
-      .where(expr(s"size(split($textCol, ' ')) >= $shingleSize"))
-      .select(col(idCol).as("doc_id"),
-        LshFunctions.word_shingle_hash56(col(textCol), shingleSize).as("hs"))
+      .where(expr(s"size(split(text, ' ')) >= $shingleSize"))
+      .select(col("doc_id"), LshFunctions.word_shingle_hash56(col("text"), shingleSize).as("hs"))
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
 
-  def minhashNear(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-                  shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6,
+  def minhashNear(docs: DataFrame, shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6,
                   jaccardThreshold: Double = 0.3): DataFrame =
     // same banded skeleton + verify tail as ngramNear (shared plan)
-    jaccardPairsFrom(minhashShingled(docs, idCol, textCol, shingleSize),
-      seeds, bands, jaccardThreshold)
+    jaccardPairsFrom(minhashShingled(docs, shingleSize), seeds, bands, jaccardThreshold)
 
   /** X3b-approx — SIGNATURE-ONLY near-duplicate pairs: the [[minhashNear]]
     * banding with the exact-Jaccard verify replaced by the MinHash
@@ -346,13 +377,11 @@ object Dedup {
     * family's shingling pass. The shingle-hash set exists only INSIDE the
     * fused expression (hash → mins in one pass, nothing array-sized is
     * ever a column), so no downstream exchange or join can carry it. */
-  private def wordSig(docs: DataFrame, idCol: String, textCol: String,
-                      shingleSize: Int, seeds: Int): DataFrame =
+  private def wordSig(docs: DataFrame, shingleSize: Int, seeds: Int): DataFrame =
     docs
-      .where(expr(s"size(split($textCol, ' ')) >= $shingleSize"))
-      .select(col(idCol).as("doc_id"),
-        LshFunctions.minhash_signature_fused(
-          LshFunctions.word_shingle_hash56(col(textCol), shingleSize), seeds).as("sig"))
+      .where(expr(s"size(split(text, ' ')) >= $shingleSize"))
+      .select(col("doc_id"), LshFunctions.minhash_signature_fused(
+          LshFunctions.word_shingle_hash56(col("text"), shingleSize), seeds).as("sig"))
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
 
   /** (doc_id, band, key) LSH keys derived from a stored/computed signature
@@ -370,10 +399,9 @@ object Dedup {
     round(aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v).cast("double") / seeds, 6)
 
-  def minhashNearApprox(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-                        shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6,
+  def minhashNearApprox(docs: DataFrame, shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6,
                         estThreshold: Double = 0.5): DataFrame = {
-    val sig = wordSig(docs, idCol, textCol, shingleSize, seeds)
+    val sig = wordSig(docs, shingleSize, seeds)
     val cand = candidatePairs(sigBandKeys(sig, seeds, bands), "band", "key", "doc_id")
     cand // shuffle-hash, cand as build: see ngramNear (same rationale)
       .hint("shuffle_hash")
@@ -397,13 +425,19 @@ object Dedup {
     * for the exact-verify band+hs index, the difference between an index
     * that fits hot storage at 100 TB and one that is itself corpus-sized. */
   def minhashNearIncrementalApprox(incoming: DataFrame, reference: DataFrame,
-                                   idCol: String = "doc_id", textCol: String = "text",
                                    shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6,
                                    estThreshold: Double = 0.5): DataFrame = {
-    val sigRef = wordSig(reference, idCol, textCol, shingleSize, seeds)
-    sigIncrementalAgainst(incoming, idCol,
-      wordSig(incoming, idCol, textCol, shingleSize, seeds),
-      sigBandKeys(sigRef, seeds, bands), sigRef, seeds, bands, estThreshold)
+    val (refBands, sigRef) = sigState(reference, shingleSize, seeds, bands, Inline)
+    sigIncrementalAgainst(incoming, refBands, sigRef, shingleSize, seeds, bands, estThreshold)
+  }
+
+  /** The signature family's seen-corpus state: `(bands, sig)` — the
+    * reference's word-shingle signatures and their band keys, derived
+    * from the signature table. */
+  private def sigState(ref: DataFrame, shingleSize: Int, seeds: Int, bands: Int,
+                       tier: Tier): (DataFrame, DataFrame) = {
+    val sig = tier("sig")(wordSig(ref, shingleSize, seeds))
+    (tier("bands")(sigBandKeys(sig, seeds, bands)), sig)
   }
 
   /** [[minhashNearIncrementalApprox]] against a CATALOG-MANAGED signature
@@ -413,25 +447,17 @@ object Dedup {
     * Same registry contract as [[minhashNearIncrementalIndexed]]. */
   def minhashNearIncrementalApproxIndexed(spark: SparkSession, dir: String, incoming: DataFrame,
                                           refBucketMax: Int = 50,
-                                          idCol: String = "doc_id", textCol: String = "text",
                                           shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6,
                                           estThreshold: Double = 0.5,
-                                          policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val idx = documentsIndex(spark, dir, wordSigIndexName(refBucketMax, shingleSize), "dedup-sig",
+                                          policy: IndexPolicy = IndexPolicy.BuildIfMissing): DataFrame = {
+    val (refBands, sigRef) = documentsIndex(spark, dir,
+      wordSigIndexName(refBucketMax, shingleSize), "dedup-sig",
       Map("refBucketMax" -> refBucketMax.toString,
         "shingleSize" -> shingleSize.toString, "shingles" -> "word",
         "seeds" -> seeds.toString, "bands" -> bands.toString,
-        "layout" -> "bands+sig", "idCol" -> idCol, "textCol" -> textCol),
-      policy, Sampling.hashBucket(col(idCol)) < refBucketMax) { (ref, out) =>
-      val sig = wordSig(ref, idCol, textCol, shingleSize, seeds)
-      Tables.write(sig).mode("overwrite").parquet(s"$out/sig")
-      Tables.write(sigBandKeys(Tables.read(spark, s"$out/sig"), seeds, bands))
-        .mode("overwrite").parquet(s"$out/bands")
-    }
-    sigIncrementalAgainst(incoming, idCol,
-      wordSig(incoming, idCol, textCol, shingleSize, seeds),
-      Tables.read(spark, s"${idx.path}/bands"),
-      Tables.read(spark, s"${idx.path}/sig"), seeds, bands, estThreshold)
+        "layout" -> "bands+sig") ++ TextIndexParams,
+      policy, docBucket < refBucketMax)(sigState(_, shingleSize, seeds, bands, _))
+    sigIncrementalAgainst(incoming, refBands, sigRef, shingleSize, seeds, bands, estThreshold)
   }
 
   private[graft] def wordSigIndexName(refBucketMax: Int, shingleSize: Int): String =
@@ -443,19 +469,16 @@ object Dedup {
     * against the ACCUMULATED state table — [[minhashNearIncrementalApprox]]
     * with the reference side already in signature form, so history text is
     * never re-shingled and the state is `seeds`×8 bytes per seen doc. */
-  private[graft] def wordSignatures(docs: DataFrame, idCol: String = "doc_id",
-                                    textCol: String = "text", shingleSize: Int = 3,
+  private[graft] def wordSignatures(docs: DataFrame, shingleSize: Int = 3,
                                     seeds: Int = 12): DataFrame =
-    wordSig(docs, idCol, textCol, shingleSize, seeds)
+    wordSig(docs, shingleSize, seeds)
 
   private[graft] def sigIncrementalAgainstState(incoming: DataFrame, sigState: DataFrame,
-                                                idCol: String = "doc_id", textCol: String = "text",
                                                 shingleSize: Int = 3, seeds: Int = 12,
                                                 bands: Int = 6,
                                                 estThreshold: Double = 0.5): DataFrame =
-    sigIncrementalAgainst(incoming, idCol,
-      wordSig(incoming, idCol, textCol, shingleSize, seeds),
-      sigBandKeys(sigState, seeds, bands), sigState, seeds, bands, estThreshold)
+    sigIncrementalAgainst(incoming, sigBandKeys(sigState, seeds, bands), sigState,
+      shingleSize, seeds, bands, estThreshold)
 
   /** Signature-only admission core: candidates from the (band, key) equi-
     * join, verify = agreeing-seed estimate between the incoming and
@@ -463,11 +486,11 @@ object Dedup {
     * the verify is proportional to document length), restore to all
     * incoming rows. Shuffle-hash hints as in [[nearIncrementalAgainst]]
     * (candidates are the bounded build side). */
-  private def sigIncrementalAgainst(incoming: DataFrame, idCol: String,
-                                    sigInc: DataFrame, refBands: DataFrame,
-                                    sigRef: DataFrame,
+  private def sigIncrementalAgainst(incoming: DataFrame, refBands: DataFrame,
+                                    sigRef: DataFrame, shingleSize: Int,
                                     seeds: Int, bands: Int,
                                     estThreshold: Double): DataFrame = {
+    val sigInc = wordSig(incoming, shingleSize, seeds)
     val cand = sigBandKeys(sigInc, seeds, bands)
       .withColumnRenamed("doc_id", "inc_id")
       .join(refBands.withColumnRenamed("doc_id", "ref_id"), Seq("band", "key"))
@@ -478,24 +501,24 @@ object Dedup {
       .join(sigRef.select(col("doc_id").as("ref_id"), col("sig").as("gb")), Seq("ref_id"))
       .select(col("inc_id"), sigEstimate(col("ga"), col("gb"), seeds).as("j"))
       .where(col("j") >= estThreshold)
-    admitRestore(incoming, idCol, near, "max_est_jaccard")
+    admitRestore(incoming, near, "max_est_jaccard")
   }
 
   /** The admit-restore tail shared by the near-dup admissions: `near`
     * holds `(inc_id, j)` verified matches at or above the threshold; every
     * incoming row reports its match count `n_near`, best score `scoreCol`
     * (0 when unmatched) and `keep` = no match. */
-  private def admitRestore(incoming: DataFrame, idCol: String, near: DataFrame,
+  private def admitRestore(incoming: DataFrame, near: DataFrame,
                            scoreCol: String): DataFrame =
-    incoming.select(col(idCol).as("inc_id"))
+    incoming.select(col("doc_id").as("inc_id"))
       .join(near.groupBy(col("inc_id"))
         .agg(count(lit(1)).as("n_near"), max(col("j")).as(scoreCol)),
         Seq("inc_id"), "left")
-      .select(col("inc_id").as(idCol),
+      .select(col("inc_id").as("doc_id"),
         coalesce(col("n_near"), lit(0L)).as("n_near"),
         coalesce(col(scoreCol), lit(0.0)).as(scoreCol),
         (coalesce(col("n_near"), lit(0L)) === 0L).as("keep"))
-      .orderBy(col(idCol))
+      .orderBy(col("doc_id"))
 
   /** X3e — duplicated-span audit, the shingle-granular reading of exact
     * substring dedup (Lee et al. 2022, "Deduplicating Training Data Makes
@@ -514,14 +537,13 @@ object Dedup {
     * orders of magnitude flatter than word/bigram keys, and join output
     * per key equals that key's df — AQE's skew split handles a residual
     * boilerplate key; the all-docs restore is a left join on doc_id. */
-  def spanDedup(docs: DataFrame, shingleSize: Int = 5, tau: Double = 0.5,
-                idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def spanDedup(docs: DataFrame, shingleSize: Int = 5, tau: Double = 0.5): DataFrame = {
     // explode_outer + null-filter: a plain explode of the expensive hs
     // alias lets InferFiltersFromGenerate push a duplicate of the whole
     // shingle-hash expression into the pre-repartition scan Filter (an
     // extra corpus pass in a single task); outer generates skip the rule,
     // and hs elements are never null.
-    val ex = minhashShingled(docs, idCol, textCol, shingleSize)
+    val ex = minhashShingled(docs, shingleSize)
       .select(col("doc_id"), explode_outer(col("hs")).as("h"))
       .where(col("h").isNotNull)
     val dfs = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -535,7 +557,7 @@ object Dedup {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),
         sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_dup"))
-    docs.select(col(idCol).as("doc_id"))
+    docs.select(col("doc_id"))
       .join(per, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
@@ -567,11 +589,9 @@ object Dedup {
     * doc's own tokens, never corpus-sized). No per-token lambda over the
     * covered set, so a fully-duplicated document costs O(tokens·n), not
     * O(tokens²). */
-  def trimSpans(docs: DataFrame, shingleSize: Int = 5,
-                idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def trimSpans(docs: DataFrame, shingleSize: Int = 5): DataFrame = {
     val base = docs
-      .select(col(idCol).as("doc_id"), col(textCol).as("__text"),
-        split(col(textCol), " ").as("t"))
+      .select(col("doc_id"), col("text").as("__text"), split(col("text"), " ").as("t"))
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
     val eligible = base.where(size(col("t")) >= shingleSize)
     // positional shingle hashes: (doc_id, pos, h); h identical to
@@ -631,9 +651,8 @@ object Dedup {
     * [[LshFunctions.hash56]]), so the whole span family shares one
     * shingle identity. The pinned repartition is the small-single-split
     * discipline ([[ngramShingled]]'s rationale). */
-  private def positionalShingles(docs: DataFrame, idCol: String,
-                                 textCol: String, shingleSize: Int): DataFrame =
-    docs.select(col(idCol).as("doc_id"), split(col(textCol), " ").as("t"))
+  private def positionalShingles(docs: DataFrame, shingleSize: Int): DataFrame =
+    docs.select(col("doc_id"), split(col("text"), " ").as("t"))
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .where(size(col("t")) >= shingleSize)
       .select(col("doc_id"),
@@ -645,10 +664,7 @@ object Dedup {
         LshFunctions.hash56(col("s")).as("h"))
 
   /** The diagonal-run merge shared by the verbatim-overlap family: hash
-    * co-occurrences `(a, b, pa, pb)` group by DIAGONAL `pa − pb` (a
-    * contiguous shared substring advances both positions in lockstep, so
-    * it lives on one diagonal), islands of consecutive `pa` within a
-    * diagonal merge via the classic `pa − row_number()` key, and a
+    * co-occurrences `(a, b, pa, pb)` merge into [[islands]], and a
     * shared island of m positional shingles IS a verbatim run of
     * `m + shingleSize − 1` tokens — exact both directions (any common
     * token run of length L ≥ shingleSize produces exactly
@@ -693,13 +709,7 @@ object Dedup {
     val co = pairs.fold(co0)(p =>
       co0.join(p.select(col("a_id"), col("b_id")).distinct(),
         Seq("a_id", "b_id"), "left_semi"))
-    val w = Window.partitionBy(col("a_id"), col("b_id"), col("diag"))
-      .orderBy(col("pa"))
-    co.select(col("a_id"), col("b_id"), (col("pa") - col("pb")).as("diag"),
-        col("pa"))
-      .withColumn("__grp", col("pa") - row_number().over(w))
-      .groupBy(col("a_id"), col("b_id"), col("diag"), col("__grp"))
-      .agg(count(lit(1)).as("__len"))
+    islands(co, "a_id", "b_id")
       .groupBy(col("a_id"), col("b_id"))
       .agg((max(col("__len")) + lit(shingleSize - 1)).cast("bigint")
           .as("max_run_tokens"),
@@ -738,10 +748,8 @@ object Dedup {
     * column). For heavy-duplication corpora route candidates through a
     * near mine first and use [[sharedRunsFor]]. */
   def verbatimOverlap(docs: DataFrame, shingleSize: Int = 5,
-                      minRunTokens: Int = 20,
-                      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    sharedRunsFrom(positionalShingles(docs, idCol, textCol, shingleSize),
-      None, shingleSize)
+                      minRunTokens: Int = 20): DataFrame =
+    sharedRunsFrom(positionalShingles(docs, shingleSize), None, shingleSize)
       .where(col("max_run_tokens") >= minRunTokens)
       .orderBy(col("a_id"), col("b_id"))
 
@@ -784,10 +792,8 @@ object Dedup {
     * a live 8-token quote run surviving a header cut that removes ~all
     * pre-cut join volume. */
   def verbatimOverlapDfCap(docs: DataFrame, shingleSize: Int = 5,
-                           minRunTokens: Int = 20, maxDf: Int = 64,
-                           idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    sharedRunsFrom(positionalShingles(docs, idCol, textCol, shingleSize),
-      None, shingleSize, maxOcc = maxDf)
+                           minRunTokens: Int = 20, maxDf: Int = 64): DataFrame =
+    sharedRunsFrom(positionalShingles(docs, shingleSize), None, shingleSize, maxOcc = maxDf)
       .where(col("max_run_tokens") >= minRunTokens)
       .orderBy(col("a_id"), col("b_id"))
 
@@ -799,13 +805,11 @@ object Dedup {
     * report `max_run_tokens = 0` (a pair can be near-duplicate by
     * signature yet share no verbatim run at `shingleSize` granularity —
     * that zero IS the finding). Output one row per input pair. */
-  def sharedRunsFor(docs: DataFrame, pairs: DataFrame, shingleSize: Int = 5,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def sharedRunsFor(docs: DataFrame, pairs: DataFrame, shingleSize: Int = 5): DataFrame = {
     val p = pairs.select(least(col("a_id"), col("b_id")).as("a_id"),
         greatest(col("a_id"), col("b_id")).as("b_id"))
       .where(col("a_id") =!= col("b_id")).distinct()
-    val runs = sharedRunsFrom(
-      positionalShingles(docs, idCol, textCol, shingleSize), Some(p), shingleSize)
+    val runs = sharedRunsFrom(positionalShingles(docs, shingleSize), Some(p), shingleSize)
     p.join(runs, Seq("a_id", "b_id"), "left")
       .select(col("a_id"), col("b_id"),
         coalesce(col("max_run_tokens"), lit(0L)).as("max_run_tokens"),
@@ -824,9 +828,8 @@ object Dedup {
     * contract: [[keyAudit]]. `est_candidates / n_positions` is the expected co-occurrence fan-out
     * per posting; ~1–2 on healthy prose, quadratic under replica crawls
     * or corpus-wide boilerplate. */
-  def overlapKeyAudit(docs: DataFrame, shingleSize: Int = 5,
-                      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    postingAudit(positionalShingles(docs, idCol, textCol, shingleSize))
+  def overlapKeyAudit(docs: DataFrame, shingleSize: Int = 5): DataFrame =
+    postingAudit(positionalShingles(docs, shingleSize))
 
   private def postingAudit(pos: DataFrame): DataFrame =
     keyAudit(pos, Seq("h"), "n_positions", "n_shingles")
@@ -854,21 +857,26 @@ object Dedup {
 
   /** The cross-side islands under [[runsAgainst]] and
     * [[decontaminateTrim]]: the [[dropHot]] cut on the reference side,
-    * the hash equi-join, and one `(inc_id, ref_id, diag, __grp)` row per
-    * island with its length `__len` (in positional shingles) and start
-    * position `__p0`. */
+    * the hash equi-join, and [[islands]] keyed `(inc_id, ref_id)`. */
   private def islandsAgainst(posInc: DataFrame, posRef: DataFrame,
-                             maxRefDf: Int): DataFrame = {
-    val co = posInc.select(col("doc_id").as("inc_id"), col("h"),
-        col("pos").as("pa"))
+                             maxRefDf: Int): DataFrame =
+    islands(posInc.select(col("doc_id").as("inc_id"), col("h"), col("pos").as("pa"))
       .join(dropHot(posRef, maxRefDf).select(col("doc_id").as("ref_id"), col("h"),
-        col("pos").as("pb")), Seq("h"))
-    val w = Window.partitionBy(col("inc_id"), col("ref_id"), col("diag"))
-      .orderBy(col("pa"))
-    co.select(col("inc_id"), col("ref_id"), (col("pa") - col("pb")).as("diag"),
-        col("pa"))
+        col("pos").as("pb")), Seq("h")), "inc_id", "ref_id")
+
+  /** The diagonal islands of hash co-occurrences `(a, b, pa, pb)` of the
+    * pair columns `a`, `b`: they group by DIAGONAL `pa − pb` (a contiguous
+    * shared substring advances both positions in lockstep, so it lives on
+    * one diagonal), and consecutive `pa` within a diagonal merge via the
+    * classic `pa − row_number()` key — one `(a, b, diag, __grp)` row per
+    * island with its length `__len` (in positional shingles) and start
+    * position `__p0`. Windows partition by (pair, diagonal): bounded
+    * frames, never corpus-global. */
+  private def islands(co: DataFrame, a: String, b: String): DataFrame = {
+    val w = Window.partitionBy(col(a), col(b), col("diag")).orderBy(col("pa"))
+    co.select(col(a), col(b), (col("pa") - col("pb")).as("diag"), col("pa"))
       .withColumn("__grp", col("pa") - row_number().over(w))
-      .groupBy(col("inc_id"), col("ref_id"), col("diag"), col("__grp"))
+      .groupBy(col(a), col(b), col("diag"), col("__grp"))
       .agg(count(lit(1)).as("__len"), min(col("pa")).as("__p0"))
   }
 
@@ -892,13 +900,18 @@ object Dedup {
     * and the left-join restore of clean docs. Never incoming × reference. */
   def verbatimIncremental(incoming: DataFrame, reference: DataFrame,
                           shingleSize: Int = 5, minRunTokens: Int = 20,
-                          idCol: String = "doc_id", textCol: String = "text",
                           // cap on REFERENCE-side hash occurrences: the seen
                           // corpus's template boilerplate ([[runsAgainst]])
                           maxRefDf: Int = 0): DataFrame =
-    verbatimIncrementalFrom(incoming,
-      positionalShingles(reference, idCol, textCol, shingleSize),
-      shingleSize, minRunTokens, idCol, textCol, maxRefDf)
+    verbatimIncrementalFrom(incoming, posState(reference, shingleSize, Inline),
+      shingleSize, minRunTokens, maxRefDf)
+
+  /** The positional family's seen-corpus state: the reference's
+    * positional postings ([[positionalShingles]]) under `pos` — the seen
+    * corpus of [[verbatimIncremental]] and the eval suite of the
+    * decontamination family. */
+  private def posState(ref: DataFrame, shingleSize: Int, tier: Tier): DataFrame =
+    tier("pos")(positionalShingles(ref, shingleSize))
 
   /** The probe tail shared by [[verbatimIncremental]] and
     * [[verbatimIncrementalIndexed]] — `posRef` is the reference's
@@ -907,21 +920,19 @@ object Dedup {
     * different scan). */
   private def verbatimIncrementalFrom(incoming: DataFrame, posRef: DataFrame,
                                       shingleSize: Int, minRunTokens: Int,
-                                      idCol: String, textCol: String,
                                       maxRefDf: Int = 0): DataFrame = {
-    val runs = runsAgainst(
-      positionalShingles(incoming, idCol, textCol, shingleSize),
+    val runs = runsAgainst(positionalShingles(incoming, shingleSize),
       posRef, shingleSize, maxRefDf)
       .where(col("max_run_tokens") >= minRunTokens)
       .groupBy(col("inc_id"))
       .agg(count(lit(1)).as("n_ref_runs"), max(col("max_run_tokens")).as("mr"))
-    incoming.select(col(idCol).as("inc_id"))
+    incoming.select(col("doc_id").as("inc_id"))
       .join(runs, Seq("inc_id"), "left")
-      .select(col("inc_id").as(idCol),
+      .select(col("inc_id").as("doc_id"),
         coalesce(col("n_ref_runs"), lit(0L)).as("n_ref_runs"),
         coalesce(col("mr"), lit(0L)).as("max_run_tokens"),
         (coalesce(col("n_ref_runs"), lit(0L)) === 0L).as("keep"))
-      .orderBy(col(idCol))
+      .orderBy(col("doc_id"))
   }
 
   /** Registry name of the catalog-managed positional-posting index — the
@@ -943,20 +954,13 @@ object Dedup {
   def verbatimIncrementalIndexed(spark: SparkSession, dir: String, incoming: DataFrame,
                                  refBucketMax: Int = 50,
                                  shingleSize: Int = 5, minRunTokens: Int = 20,
-                                 idCol: String = "doc_id", textCol: String = "text",
-                                 policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val idx = documentsIndex(spark, dir, verbatimPosIndexName(refBucketMax, shingleSize),
-      "verbatim-pos",
-      Map("refBucketMax" -> refBucketMax.toString,
-        "shingleSize" -> shingleSize.toString,
-        "layout" -> "pos", "idCol" -> idCol, "textCol" -> textCol),
-      policy, Sampling.hashBucket(col(idCol)) < refBucketMax) { (ref, out) =>
-      Tables.write(positionalShingles(ref, idCol, textCol, shingleSize))
-        .mode("overwrite").parquet(s"$out/pos")
-    }
-    verbatimIncrementalFrom(incoming, Tables.read(spark, s"${idx.path}/pos"),
-      shingleSize, minRunTokens, idCol, textCol)
-  }
+                                 policy: IndexPolicy = IndexPolicy.BuildIfMissing): DataFrame =
+    verbatimIncrementalFrom(incoming,
+      documentsIndex(spark, dir, verbatimPosIndexName(refBucketMax, shingleSize), "verbatim-pos",
+        Map("refBucketMax" -> refBucketMax.toString, "shingleSize" -> shingleSize.toString,
+          "layout" -> "pos") ++ TextIndexParams,
+        policy, docBucket < refBucketMax)(posState(_, shingleSize, _)),
+      shingleSize, minRunTokens)
 
   /** RUN-LENGTH decontamination — the verbatim twin of
     * [[graft.operators.Decontaminate.contamination]], and the quantity
@@ -976,19 +980,16 @@ object Dedup {
   def decontaminateRuns(docs: DataFrame, shingleSize: Int = 5,
                         minRunTokens: Int = 13,
                         trainPct: Int = 80, benchFromPct: Int = 90,
-                        idCol: String = "doc_id", textCol: String = "text",
                         // cap on EVAL-side hash occurrences ([[runsAgainst]]'s
                         // maxRefDf): > 0 ignores benchmark boilerplate — an
                         // eval suite's repeated prompt template would
                         // otherwise flag every doc sharing the FORMAT as
                         // contaminated; declared trade: a genuine run through
                         // the capped template region fragments
-                        maxEvalDf: Int = 0): DataFrame = {
-    val b = Sampling.hashBucket(col(idCol))
-    decontaminateRunsFrom(docs.where(b < trainPct),
-      positionalShingles(docs.where(b >= benchFromPct), idCol, textCol, shingleSize),
-      shingleSize, minRunTokens, idCol, textCol, maxEvalDf)
-  }
+                        maxEvalDf: Int = 0): DataFrame =
+    decontaminateRunsFrom(docs.where(docBucket < trainPct),
+      posState(docs.where(docBucket >= benchFromPct), shingleSize, Inline),
+      shingleSize, minRunTokens, maxEvalDf)
 
   /** The audit tail shared by [[decontaminateRuns]] and
     * [[decontaminateRunsIndexed]] — `posEval` is the eval suite's
@@ -997,22 +998,19 @@ object Dedup {
     * different scan). */
   private def decontaminateRunsFrom(train: DataFrame, posEval: DataFrame,
                                     shingleSize: Int, minRunTokens: Int,
-                                    idCol: String, textCol: String,
-                                    maxEvalDf: Int = 0): DataFrame = {
-    val runs = runsAgainst(
-      positionalShingles(train, idCol, textCol, shingleSize),
-      posEval, shingleSize, maxEvalDf)
+                                    maxEvalDf: Int): DataFrame = {
+    val runs = runsAgainst(positionalShingles(train, shingleSize), posEval, shingleSize, maxEvalDf)
       .groupBy(col("inc_id"))
       .agg(max(col("max_run_tokens")).as("mr"),
         sum(when(col("max_run_tokens") >= minRunTokens, 1L).otherwise(0L))
           .as("n_eval_hits"))
-    train.select(col(idCol).as("inc_id"))
+    train.select(col("doc_id").as("inc_id"))
       .join(runs, Seq("inc_id"), "left")
-      .select(col("inc_id").as(idCol),
+      .select(col("inc_id").as("doc_id"),
         coalesce(col("mr"), lit(0L)).as("max_run_tokens"),
         coalesce(col("n_eval_hits"), lit(0L)).as("n_eval_hits"),
         (coalesce(col("mr"), lit(0L)) >= minRunTokens).as("contaminated"))
-      .orderBy(col(idCol))
+      .orderBy(col("doc_id"))
   }
 
   /** [[decontaminateRuns]] against a CATALOG-MANAGED eval-suite posting
@@ -1030,18 +1028,14 @@ object Dedup {
     * (bounded) while the train side streams through the hash join once —
     * at 100 TB the audit's per-snapshot cost is O(train postings), and
     * the eval side is never re-read from text. */
-  def decontaminateRunsIndexed(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, docs: DataFrame,
+  def decontaminateRunsIndexed(spark: SparkSession, dir: String, docs: DataFrame,
                                shingleSize: Int = 5, minRunTokens: Int = 13,
                                trainPct: Int = 80, evalFromPct: Int = 90,
-                               idCol: String = "doc_id", textCol: String = "text",
                                maxEvalDf: Int = 0,
-                               policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame =
-    decontaminateRunsFrom(
-      docs.where(Sampling.hashBucket(col(idCol)) < trainPct),
-      Tables.read(spark,
-        s"${evalPosIndex(spark, dir, evalFromPct, shingleSize, idCol, textCol, policy).path}/pos"),
-      shingleSize, minRunTokens, idCol, textCol, maxEvalDf)
+                               policy: IndexPolicy = IndexPolicy.BuildIfMissing): DataFrame =
+    decontaminateRunsFrom(docs.where(docBucket < trainPct),
+      evalPos(spark, dir, evalFromPct, shingleSize, policy),
+      shingleSize, minRunTokens, maxEvalDf)
 
   /** [[decontaminateRuns]] with an EXPLICIT eval corpus — the
     * [[graft.operators.Decontaminate.contaminationAgainst]] analog for
@@ -1052,50 +1046,37 @@ object Dedup {
     * streamed composition replays byte-identically. */
   def decontaminateRunsAgainst(docs: DataFrame, evalDocs: DataFrame,
                                shingleSize: Int = 5, minRunTokens: Int = 13,
-                               trainPct: Int = 80,
-                               idCol: String = "doc_id", textCol: String = "text",
-                               maxEvalDf: Int = 0): DataFrame =
-    decontaminateRunsFrom(
-      docs.where(Sampling.hashBucket(col(idCol)) < trainPct),
-      positionalShingles(evalDocs, idCol, textCol, shingleSize),
-      shingleSize, minRunTokens, idCol, textCol, maxEvalDf)
+                               trainPct: Int = 80, maxEvalDf: Int = 0): DataFrame =
+    decontaminateRunsFrom(docs.where(docBucket < trainPct),
+      posState(evalDocs, shingleSize, Inline), shingleSize, minRunTokens, maxEvalDf)
 
   /** Registry name of the catalog-managed EVAL-slice posting index. */
   private[graft] def evalPosIndexName(evalFromPct: Int, shingleSize: Int): String =
     s"documents-verbatim-evalpos-ge$evalFromPct-s$shingleSize"
 
-  /** The eval-suite posting index shared by [[decontaminateRunsIndexed]]
-    * and [[graft.streaming.Streaming.streamDecontamAdmit]]: the `dir`
+  /** The stored eval-suite postings shared by [[decontaminateRunsIndexed]],
+    * [[evalLeakReportIndexed]], [[decontaminateTrimIndexed]] and
+    * [[graft.streaming.Streaming.streamDecontamAdmit]]: the `dir`
     * documents table's bucket ≥ `evalFromPct` slice, positionally
-    * shingled once at build. */
-  private[graft] def evalPosIndex(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String, evalFromPct: Int, shingleSize: Int,
-                                  idCol: String = "doc_id", textCol: String = "text",
-                                  policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): graft.core.IndexMeta =
+    * shingled once at build ([[posState]]). */
+  private[graft] def evalPos(spark: SparkSession, dir: String, evalFromPct: Int,
+                             shingleSize: Int, policy: IndexPolicy): DataFrame =
     documentsIndex(spark, dir, evalPosIndexName(evalFromPct, shingleSize), "verbatim-pos",
-      Map("evalFromPct" -> evalFromPct.toString,
-        "shingleSize" -> shingleSize.toString,
-        "layout" -> "pos", "idCol" -> idCol, "textCol" -> textCol),
-      policy, Sampling.hashBucket(col(idCol)) >= evalFromPct) { (ev, out) =>
-      Tables.write(positionalShingles(ev, idCol, textCol, shingleSize))
-        .mode("overwrite").parquet(s"$out/pos")
-    }
+      Map("evalFromPct" -> evalFromPct.toString, "shingleSize" -> shingleSize.toString,
+        "layout" -> "pos") ++ TextIndexParams,
+      policy, docBucket >= evalFromPct)(posState(_, shingleSize, _))
 
   /** [[decontaminateRunsFrom]] against the STORED eval index over an
     * arbitrary candidate frame (no train-bucket cut — a stream's every
     * incoming doc is a training candidate; the bucket split is the batch
     * pipeline's device). The admission half of
     * [[graft.streaming.Streaming.streamDecontamAdmit]]. */
-  private[graft] def decontamAuditAgainstIndex(spark: org.apache.spark.sql.SparkSession,
-                                               dir: String, docs: DataFrame,
+  private[graft] def decontamAuditAgainstIndex(spark: SparkSession, dir: String, docs: DataFrame,
                                                shingleSize: Int, minRunTokens: Int,
-                                               evalFromPct: Int,
-                                               policy: graft.core.IndexPolicy,
+                                               evalFromPct: Int, policy: IndexPolicy,
                                                maxEvalDf: Int = 0): DataFrame =
-    decontaminateRunsFrom(docs,
-      Tables.read(spark,
-        s"${evalPosIndex(spark, dir, evalFromPct, shingleSize, policy = policy).path}/pos"),
-      shingleSize, minRunTokens, "doc_id", "text", maxEvalDf)
+    decontaminateRunsFrom(docs, evalPos(spark, dir, evalFromPct, shingleSize, policy),
+      shingleSize, minRunTokens, maxEvalDf)
 
   /** The FLIP SIDE of [[decontaminateRuns]] — the per-BENCHMARK-doc leak
     * report: for each eval document (id-hash bucket ≥ `benchFromPct`),
@@ -1120,42 +1101,35 @@ object Dedup {
   def evalLeakReport(docs: DataFrame, shingleSize: Int = 5,
                      minRunTokens: Int = 13,
                      trainPct: Int = 80, benchFromPct: Int = 90,
-                     idCol: String = "doc_id", textCol: String = "text",
                      // cap on TRAIN-side hash occurrences (the reference
                      // side here): corpus boilerplate would otherwise
                      // report every eval doc sharing the format as leaked
                      maxTrainDf: Int = 0): DataFrame = {
-    val b = Sampling.hashBucket(col(idCol))
-    evalLeakReportFrom(docs.where(b >= benchFromPct),
-      positionalShingles(docs.where(b >= benchFromPct), idCol, textCol, shingleSize),
-      positionalShingles(docs.where(b < trainPct), idCol, textCol, shingleSize),
-      shingleSize, minRunTokens, idCol, maxTrainDf)
+    val evalDocs = docs.where(docBucket >= benchFromPct)
+    evalLeakReportFrom(evalDocs, posState(evalDocs, shingleSize, Inline),
+      positionalShingles(docs.where(docBucket < trainPct), shingleSize),
+      shingleSize, minRunTokens, maxTrainDf)
   }
 
   /** [[evalLeakReport]] against the CATALOG-MANAGED eval-suite posting
     * index — the report's indexed rung (r16 verdict missing #3): the eval
     * owner re-runs this per corpus SNAPSHOT, and the benchmark is a fixed
     * artifact, so its postings come from the same stored table
-    * [[decontaminateRunsIndexed]] probes ([[evalPosIndex]] — one entry,
+    * [[decontaminateRunsIndexed]] probes ([[evalPos]] — one entry,
     * three consumers) instead of re-shingling the eval slice inline each
     * run. The zero-fill id list still comes from `docs` (an eval doc
     * shorter than `shingleSize` has no postings and exists only there).
     * Same registry citizenship; report byte-identical to the inline form
     * over the same slice (DedupSpec pins it). */
-  def evalLeakReportIndexed(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, docs: DataFrame,
+  def evalLeakReportIndexed(spark: SparkSession, dir: String, docs: DataFrame,
                             shingleSize: Int = 5, minRunTokens: Int = 13,
                             trainPct: Int = 80, evalFromPct: Int = 90,
-                            idCol: String = "doc_id", textCol: String = "text",
                             maxTrainDf: Int = 0,
-                            policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val b = Sampling.hashBucket(col(idCol))
-    evalLeakReportFrom(docs.where(b >= evalFromPct),
-      Tables.read(spark,
-        s"${evalPosIndex(spark, dir, evalFromPct, shingleSize, idCol, textCol, policy).path}/pos"),
-      positionalShingles(docs.where(b < trainPct), idCol, textCol, shingleSize),
-      shingleSize, minRunTokens, idCol, maxTrainDf)
-  }
+                            policy: IndexPolicy = IndexPolicy.BuildIfMissing): DataFrame =
+    evalLeakReportFrom(docs.where(docBucket >= evalFromPct),
+      evalPos(spark, dir, evalFromPct, shingleSize, policy),
+      positionalShingles(docs.where(docBucket < trainPct), shingleSize),
+      shingleSize, minRunTokens, maxTrainDf)
 
   /** The report tail shared by [[evalLeakReport]] and
     * [[evalLeakReportIndexed]] — `posEval` is the eval suite's posting
@@ -1164,20 +1138,19 @@ object Dedup {
     * index; `evalIds` restores zero rows for unquoted eval docs. */
   private def evalLeakReportFrom(evalIds: DataFrame, posEval: DataFrame,
                                  posTrain: DataFrame, shingleSize: Int,
-                                 minRunTokens: Int, idCol: String,
-                                 maxTrainDf: Int): DataFrame = {
+                                 minRunTokens: Int, maxTrainDf: Int): DataFrame = {
     val runs = runsAgainst(posEval, posTrain, shingleSize, maxTrainDf)
       .groupBy(col("inc_id"))
       .agg(sum(when(col("max_run_tokens") >= minRunTokens, 1L).otherwise(0L))
           .as("n_train_leaks"),
         max(col("max_run_tokens")).as("mr"))
-    evalIds.select(col(idCol).as("inc_id"))
+    evalIds.select(col("doc_id").as("inc_id"))
       .join(runs, Seq("inc_id"), "left")
-      .select(col("inc_id").as(idCol),
+      .select(col("inc_id").as("doc_id"),
         coalesce(col("n_train_leaks"), lit(0L)).as("n_train_leaks"),
         coalesce(col("mr"), lit(0L)).as("max_run_tokens"),
         (coalesce(col("n_train_leaks"), lit(0L)) > 0L).as("compromised"))
-      .orderBy(col(idCol))
+      .orderBy(col("doc_id"))
   }
 
   /** RUN-LENGTH decontamination TREATMENT — the trim
@@ -1200,13 +1173,10 @@ object Dedup {
   def decontaminateTrim(docs: DataFrame, shingleSize: Int = 5,
                         minRunTokens: Int = 13,
                         trainPct: Int = 80, benchFromPct: Int = 90,
-                        idCol: String = "doc_id", textCol: String = "text",
-                        maxEvalDf: Int = 0): DataFrame = {
-    val b = Sampling.hashBucket(col(idCol))
-    decontaminateTrimFrom(docs.where(b < trainPct),
-      positionalShingles(docs.where(b >= benchFromPct), idCol, textCol, shingleSize),
-      shingleSize, minRunTokens, idCol, textCol, maxEvalDf)
-  }
+                        maxEvalDf: Int = 0): DataFrame =
+    decontaminateTrimFrom(docs.where(docBucket < trainPct),
+      posState(docs.where(docBucket >= benchFromPct), shingleSize, Inline),
+      shingleSize, minRunTokens, maxEvalDf)
 
   /** [[decontaminateTrim]] against the CATALOG-MANAGED eval-suite posting
     * index — the treatment's indexed rung, completing the matrix beside
@@ -1217,35 +1187,29 @@ object Dedup {
     * out of training documents — only content passages are), same
     * registry citizenship, trim output byte-identical to the inline form
     * over the same slice. */
-  def decontaminateTrimIndexed(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, docs: DataFrame,
+  def decontaminateTrimIndexed(spark: SparkSession, dir: String, docs: DataFrame,
                                shingleSize: Int = 5, minRunTokens: Int = 13,
                                trainPct: Int = 80, evalFromPct: Int = 90,
-                               idCol: String = "doc_id", textCol: String = "text",
                                maxEvalDf: Int = 0,
-                               policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame =
-    decontaminateTrimFrom(
-      docs.where(Sampling.hashBucket(col(idCol)) < trainPct),
-      Tables.read(spark,
-        s"${evalPosIndex(spark, dir, evalFromPct, shingleSize, idCol, textCol, policy).path}/pos"),
-      shingleSize, minRunTokens, idCol, textCol, maxEvalDf)
+                               policy: IndexPolicy = IndexPolicy.BuildIfMissing): DataFrame =
+    decontaminateTrimFrom(docs.where(docBucket < trainPct),
+      evalPos(spark, dir, evalFromPct, shingleSize, policy),
+      shingleSize, minRunTokens, maxEvalDf)
 
   /** The treatment tail shared by [[decontaminateTrim]] and
     * [[decontaminateTrimIndexed]] — `posRef0` is the eval suite's posting
     * table, inline-shingled or read from the stored index. */
   private def decontaminateTrimFrom(train: DataFrame, posRef: DataFrame,
                                     shingleSize: Int, minRunTokens: Int,
-                                    idCol: String, textCol: String,
                                     maxEvalDf: Int): DataFrame = {
-    val covered = islandsAgainst(positionalShingles(train, idCol, textCol, shingleSize),
-        posRef, maxEvalDf)
+    val covered = islandsAgainst(positionalShingles(train, shingleSize), posRef, maxEvalDf)
       .where(col("__len") + lit(shingleSize - 1) >= minRunTokens)
       .select(col("inc_id").as("doc_id"),
         explode(sequence(col("__p0"),
           col("__p0") + col("__len") + lit(shingleSize - 2))).as("ti"))
       .distinct()
-    val base = train.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
-      split(col(textCol), " ").as("t"))
+    val base = train.select(col("doc_id"), col("text").as("__text"),
+      split(col("text"), " ").as("t"))
     val eligible = base.where(size(col("t")) >= shingleSize)
     val tokens = eligible.select(col("doc_id"),
       posexplode(col("t")).as(Seq("ti", "w")))
@@ -1272,19 +1236,18 @@ object Dedup {
     * choice (runs fragment at hot positions) the auto must not make
     * silently. */
   def verbatimOverlapAuto(docs: DataFrame, shingleSize: Int = 5,
-                          minRunTokens: Int = 20, fanoutMax: Double = 16.0,
-                          idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+                          minRunTokens: Int = 20, fanoutMax: Double = 16.0): DataFrame = {
     // persist: the posting pass feeds the audit action AND the mine; no
     // unpersist on the return path — the output is lazy, so the caller
     // materializes after we return; blocks are MEMORY_AND_DISK and freed
     // by LRU or session end (the audioLandmarkNearAuto/videoNearHamming
     // discipline, documented trade: repeated calls in one long session
     // accumulate cached postings until eviction)
-    val pos = positionalShingles(docs, idCol, textCol, shingleSize)
+    val pos = positionalShingles(docs, shingleSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val minePos =
       if (saturated(postingAudit(pos), fanoutMax))
-        pos.join(textReps(docs, idCol, textCol), Seq("doc_id"), "left_semi")
+        pos.join(textReps(docs), Seq("doc_id"), "left_semi")
       else pos
     sharedRunsFrom(minePos, None, shingleSize)
       .where(col("max_run_tokens") >= minRunTokens)
@@ -1313,8 +1276,7 @@ object Dedup {
     * AQE coalescing the byte-tiny exchange back to one partition.
     * Downstream (banding AND verification sides) hangs off the same
     * subtree, so the exchange is computed once and reused. */
-  private[graft] def ngramShingled(docs: DataFrame, idCol: String, textCol: String,
-                                   n: Int): DataFrame =
+  private[graft] def ngramShingled(docs: DataFrame, n: Int): DataFrame =
     docs
       // empty-shingle docs dropped via the PRECONDITION (text shorter than
       // n chars — exactly when the char-shingle set is empty), not
@@ -1322,9 +1284,8 @@ object Dedup {
       // repartition with the whole shingle-hash expression inlined, i.e. a
       // duplicate hashing pass over the corpus inside the (often
       // single-task) scan stage. Same discipline as [[minhashShingled]].
-      .where(length(col(textCol)) >= n)
-      .select(col(idCol).as("doc_id"),
-        LshFunctions.char_shingle_hash56(col(textCol), n).as("hs"))
+      .where(length(col("text")) >= n)
+      .select(col("doc_id"), LshFunctions.char_shingle_hash56(col("text"), n).as("hs"))
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
 
   /** (doc_id, band, key) banded minhash signature keys over a shingled
@@ -1341,11 +1302,9 @@ object Dedup {
         .as(Seq("band", "key")))
   }
 
-  def ngramNear(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-                n: Int = 8, seeds: Int = 12, bands: Int = 4,
+  def ngramNear(docs: DataFrame, n: Int = 8, seeds: Int = 12, bands: Int = 4,
                 jaccardThreshold: Double = 0.5): DataFrame =
-    jaccardPairsFrom(ngramShingled(docs, idCol, textCol, n),
-      seeds, bands, jaccardThreshold)
+    jaccardPairsFrom(ngramShingled(docs, n), seeds, bands, jaccardThreshold)
 
   /** Shared banded-mine verify tail of [[minhashNear]]/[[ngramNear]] (and
     * their [[minhashNearAuto]]/[[ngramNearAuto]] twins): band keys →
@@ -1396,16 +1355,13 @@ object Dedup {
   /** [[bandKeyAudit]] over [[minhashNear]]'s word-shingle band keys —
     * the one-row saturation probe a pipeline runs before pointing the
     * word-level near-dedup at a new crawl snapshot. */
-  def minhashKeyAudit(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-                      shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6): DataFrame =
-    bandKeyAudit(ngramBandKeys(
-      minhashShingled(docs, idCol, textCol, shingleSize), seeds, bands), bands)
+  def minhashKeyAudit(docs: DataFrame, shingleSize: Int = 3, seeds: Int = 12,
+                      bands: Int = 6): DataFrame =
+    bandKeyAudit(ngramBandKeys(minhashShingled(docs, shingleSize), seeds, bands), bands)
 
   /** [[bandKeyAudit]] over [[ngramNear]]'s char-shingle band keys. */
-  def ngramKeyAudit(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-                    n: Int = 8, seeds: Int = 12, bands: Int = 4): DataFrame =
-    bandKeyAudit(ngramBandKeys(
-      ngramShingled(docs, idCol, textCol, n), seeds, bands), bands)
+  def ngramKeyAudit(docs: DataFrame, n: Int = 8, seeds: Int = 12, bands: Int = 4): DataFrame =
+    bandKeyAudit(ngramBandKeys(ngramShingled(docs, n), seeds, bands), bands)
 
   /** The audit-then-branch shared by [[minhashNearAuto]] and
     * [[ngramNearAuto]]: the band-key audit runs off the same persisted
@@ -1423,22 +1379,21 @@ object Dedup {
     * expansion is [[exact]]'s keeper join, which is where a saturated
     * corpus should be routed first anyway. */
   private def textNearAutoFrom(docs: DataFrame, sh0: DataFrame,
-                               idCol: String, textCol: String,
                                seeds: Int, bands: Int,
                                jaccardThreshold: Double,
                                fanoutMax: Double): DataFrame = {
     val sh = sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val mineSh =
       if (saturated(bandKeyAudit(ngramBandKeys(sh, seeds, bands), bands), fanoutMax))
-        sh.join(textReps(docs, idCol, textCol), Seq("doc_id"))
+        sh.join(textReps(docs), Seq("doc_id"))
       else sh
     jaccardPairsFrom(mineSh, seeds, bands, jaccardThreshold)
   }
 
   /** The min-id `doc_id` of every sha-256 text group ([[exact]]'s key) —
     * the representative slice the saturated text autos mine. */
-  private def textReps(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"), sha2(col(textCol), 256).as("fp"))
+  private def textReps(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), sha2(col("text"), 256).as("fp"))
       .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
 
@@ -1447,21 +1402,18 @@ object Dedup {
     * audit-then-branch for the word-level text family (see
     * [[textNearAutoFrom]] for the branch semantics and the declared
     * rep-pair trade). */
-  def minhashNearAuto(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-                      shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6,
+  def minhashNearAuto(docs: DataFrame, shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6,
                       jaccardThreshold: Double = 0.3,
                       fanoutMax: Double = 16.0): DataFrame =
-    textNearAutoFrom(docs, minhashShingled(docs, idCol, textCol, shingleSize),
-      idCol, textCol, seeds, bands, jaccardThreshold, fanoutMax)
+    textNearAutoFrom(docs, minhashShingled(docs, shingleSize),
+      seeds, bands, jaccardThreshold, fanoutMax)
 
   /** [[ngramNear]]'s audit-then-branch twin (char-shingle edition of
     * [[minhashNearAuto]]). */
-  def ngramNearAuto(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-                    n: Int = 8, seeds: Int = 12, bands: Int = 4,
+  def ngramNearAuto(docs: DataFrame, n: Int = 8, seeds: Int = 12, bands: Int = 4,
                     jaccardThreshold: Double = 0.5,
                     fanoutMax: Double = 16.0): DataFrame =
-    textNearAutoFrom(docs, ngramShingled(docs, idCol, textCol, n),
-      idCol, textCol, seeds, bands, jaccardThreshold, fanoutMax)
+    textNearAutoFrom(docs, ngramShingled(docs, n), seeds, bands, jaccardThreshold, fanoutMax)
 
   /** X3b''' — incremental NEAR-dedup: for each incoming document, how many
     * reference-corpus documents its char-n-gram Jaccard reaches `tau`
@@ -1479,15 +1431,23 @@ object Dedup {
     * incoming-doc-keyed aggregation, and a left join restoring unmatched
     * incoming docs as admitted. Never an all-pairs product. */
   def ngramNearIncremental(incoming: DataFrame, reference: DataFrame,
-                           idCol: String = "doc_id", textCol: String = "text",
                            n: Int = 8, seeds: Int = 12, bands: Int = 4,
                            jaccardThreshold: Double = 0.5): DataFrame = {
-    val shRef = ngramShingled(reference, idCol, textCol, n)
-    nearIncrementalAgainst(incoming, ngramBandKeys(shRef, seeds, bands),
-      idCol, ngramShingled(_, idCol, textCol, n),
-      sbFromText(reference, idCol, textCol,
-        LshFunctions.char_shingle_hash56(_, n)),
+    val (refBands, _) = bandState(reference, ngramShingled(_, n), seeds, bands, Inline)
+    // the verify hashes candidate rows from text, not the state's hs: see sbFromText
+    nearIncrementalAgainst(incoming, refBands, ngramShingled(_, n),
+      sbFromText(reference, LshFunctions.char_shingle_hash56(_, n)),
       seeds, bands, jaccardThreshold)
+  }
+
+  /** The exact-verify near family's seen-corpus state: `(bands, hs)` —
+    * the reference's shingle-hash sets (`shingle` is the family's pass:
+    * char n-grams or word shingles) and their band keys, derived from the
+    * set table. */
+  private def bandState(ref: DataFrame, shingle: DataFrame => DataFrame, seeds: Int,
+                        bands: Int, tier: Tier): (DataFrame, DataFrame) = {
+    val hs = tier("hs")(shingle(ref))
+    (tier("bands")(ngramBandKeys(hs, seeds, bands)), hs)
   }
 
   /** Registry names of the catalog-managed dedup band indexes — the
@@ -1507,14 +1467,13 @@ object Dedup {
     * scale shape (batch-side-only shuffle against the reference band keys,
     * verify on candidates only) is identical. */
   def minhashNearIncremental(incoming: DataFrame, reference: DataFrame,
-                             idCol: String = "doc_id", textCol: String = "text",
                              shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6,
                              jaccardThreshold: Double = 0.3): DataFrame = {
-    val shRef = minhashShingled(reference, idCol, textCol, shingleSize)
-    nearIncrementalAgainst(incoming, ngramBandKeys(shRef, seeds, bands),
-      idCol, minhashShingled(_, idCol, textCol, shingleSize),
-      sbFromText(reference, idCol, textCol,
-        LshFunctions.word_shingle_hash56(_, shingleSize)),
+    val (refBands, _) =
+      bandState(reference, minhashShingled(_, shingleSize), seeds, bands, Inline)
+    // the verify hashes candidate rows from text, not the state's hs: see sbFromText
+    nearIncrementalAgainst(incoming, refBands, minhashShingled(_, shingleSize),
+      sbFromText(reference, LshFunctions.word_shingle_hash56(_, shingleSize)),
       seeds, bands, jaccardThreshold)
   }
 
@@ -1525,25 +1484,19 @@ object Dedup {
     * index identity. */
   def minhashNearIncrementalIndexed(spark: SparkSession, dir: String, incoming: DataFrame,
                                     refBucketMax: Int = 50,
-                                    idCol: String = "doc_id", textCol: String = "text",
                                     shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6,
                                     jaccardThreshold: Double = 0.3,
-                                    policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val idx = documentsIndex(spark, dir, wordBandIndexName(refBucketMax, shingleSize), "dedup-band",
+                                    policy: IndexPolicy = IndexPolicy.BuildIfMissing): DataFrame = {
+    val (refBands, hs) = documentsIndex(spark, dir,
+      wordBandIndexName(refBucketMax, shingleSize), "dedup-band",
       Map("refBucketMax" -> refBucketMax.toString,
         "shingleSize" -> shingleSize.toString, "shingles" -> "word",
         "seeds" -> seeds.toString, "bands" -> bands.toString,
-        "layout" -> "bands+hs", "idCol" -> idCol, "textCol" -> textCol),
-      policy, Sampling.hashBucket(col(idCol)) < refBucketMax) { (ref, out) =>
-      val sh = minhashShingled(ref, idCol, textCol, shingleSize)
-      Tables.write(sh).mode("overwrite").parquet(s"$out/hs")
-      Tables.write(ngramBandKeys(Tables.read(spark, s"$out/hs"), seeds, bands))
-        .mode("overwrite").parquet(s"$out/bands")
-    }
-    nearIncrementalAgainst(incoming, Tables.read(spark, s"${idx.path}/bands"),
-      idCol, minhashShingled(_, idCol, textCol, shingleSize),
-      sbFromStored(Tables.read(spark, s"${idx.path}/hs")),
-      seeds, bands, jaccardThreshold)
+        "layout" -> "bands+hs") ++ TextIndexParams,
+      policy, docBucket < refBucketMax)(
+      bandState(_, minhashShingled(_, shingleSize), seeds, bands, _))
+    nearIncrementalAgainst(incoming, refBands, minhashShingled(_, shingleSize),
+      sbFromStored(hs), seeds, bands, jaccardThreshold)
   }
 
   /** [[ngramNearIncremental]] against a CATALOG-MANAGED shingle index,
@@ -1557,24 +1510,16 @@ object Dedup {
     * Same registry contract as [[exactIncrementalIndexed]]. */
   def ngramNearIncrementalIndexed(spark: SparkSession, dir: String, incoming: DataFrame,
                                   refBucketMax: Int = 50,
-                                  idCol: String = "doc_id", textCol: String = "text",
                                   n: Int = 8, seeds: Int = 12, bands: Int = 4,
                                   jaccardThreshold: Double = 0.5,
-                                  policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val idx = documentsIndex(spark, dir, ngramBandIndexName(refBucketMax, n), "dedup-band",
+                                  policy: IndexPolicy = IndexPolicy.BuildIfMissing): DataFrame = {
+    val (refBands, hs) = documentsIndex(spark, dir, ngramBandIndexName(refBucketMax, n), "dedup-band",
       Map("refBucketMax" -> refBucketMax.toString, "n" -> n.toString,
         "seeds" -> seeds.toString, "bands" -> bands.toString,
-        "layout" -> "bands+hs", "idCol" -> idCol, "textCol" -> textCol),
-      policy, Sampling.hashBucket(col(idCol)) < refBucketMax) { (ref, out) =>
-      val sh = ngramShingled(ref, idCol, textCol, n)
-      Tables.write(sh).mode("overwrite").parquet(s"$out/hs")
-      Tables.write(ngramBandKeys(Tables.read(spark, s"$out/hs"), seeds, bands))
-        .mode("overwrite").parquet(s"$out/bands")
-    }
-    nearIncrementalAgainst(incoming, Tables.read(spark, s"${idx.path}/bands"),
-      idCol, ngramShingled(_, idCol, textCol, n),
-      sbFromStored(Tables.read(spark, s"${idx.path}/hs")),
-      seeds, bands, jaccardThreshold)
+        "layout" -> "bands+hs") ++ TextIndexParams,
+      policy, docBucket < refBucketMax)(bandState(_, ngramShingled(_, n), seeds, bands, _))
+    nearIncrementalAgainst(incoming, refBands, ngramShingled(_, n),
+      sbFromStored(hs), seeds, bands, jaccardThreshold)
   }
 
   /** Verify-side `sb` attachment for the INLINE incremental variants: join
@@ -1589,7 +1534,7 @@ object Dedup {
     * fan-out the whole corpus was re-hashed (measured 2.9 s ↔ 12.4 s
     * run-to-run at sf0.1); candidates-only recompute is deterministic
     * either way and strictly cheaper at scale (candidates ≪ corpus). */
-  private def sbFromText(reference: DataFrame, idCol: String, textCol: String,
+  private def sbFromText(reference: DataFrame,
                          shingleOf: Column => Column): DataFrame => DataFrame =
     cand => cand
       // shuffle-hash with the CANDIDATE side as build: without the hint
@@ -1597,7 +1542,7 @@ object Dedup {
       // wrong side to broadcast, and the round-10 GC profile showed the
       // cost even at sf0.1). Candidates are the bounded table here.
       .hint("shuffle_hash")
-      .join(reference.select(col(idCol).as("ref_id"), col(textCol).as("__ref_text")),
+      .join(reference.select(col("doc_id").as("ref_id"), col("text").as("__ref_text")),
         Seq("ref_id"))
       .withColumn("sb", shingleOf(col("__ref_text")))
       .drop("__ref_text")
@@ -1617,7 +1562,7 @@ object Dedup {
     * for indexed). */
   private def nearIncrementalAgainst(incoming: DataFrame,
                                      refBands: DataFrame,
-                                     idCol: String, shingle: DataFrame => DataFrame,
+                                     shingle: DataFrame => DataFrame,
                                      attachSb: DataFrame => DataFrame,
                                      seeds: Int, bands: Int,
                                      jaccardThreshold: Double): DataFrame = {
@@ -1634,7 +1579,7 @@ object Dedup {
     val p = incoming.sparkSession.sparkContext.defaultParallelism
     val spread =
       if (incoming.rdd.getNumPartitions >= p / 2) incoming
-      else incoming.repartition(p, col(idCol))
+      else incoming.repartition(p, col("doc_id"))
     val shInc = shingle(spread)
     val cand = ngramBandKeys(shInc, seeds, bands)
       .withColumnRenamed("doc_id", "inc_id")
@@ -1650,7 +1595,7 @@ object Dedup {
       .select(col("inc_id"),
         round(LshFunctions.jaccard(col("sa"), col("sb")), 6).as("j"))
       .where(col("j") >= jaccardThreshold)
-    admitRestore(incoming, idCol, near, "max_jaccard")
+    admitRestore(incoming, near, "max_jaccard")
   }
 
   /** Cross-source overlap matrix via per-source MinHash sketches — the
@@ -1692,13 +1637,12 @@ object Dedup {
     * set — deterministic, order-free, and one shuffle at any scale. Chains
     * resolve to "keep the smallest id that has no smaller partner", the
     * greedy keeper election a streaming pipeline would make. */
-  def resolveKeepers(docs: DataFrame, pairs: DataFrame,
-                     idCol: String = "doc_id"): DataFrame =
-    docs.select(col(idCol))
+  def resolveKeepers(docs: DataFrame, pairs: DataFrame): DataFrame =
+    docs.select(col("doc_id"))
       .join(pairs.select(col("b_id").as("_dup_id")).distinct(),
-        col(idCol) === col("_dup_id"), "left")
-      .select(col(idCol), col("_dup_id").isNull.as("keep"))
-      .orderBy(col(idCol))
+        col("doc_id") === col("_dup_id"), "left")
+      .select(col("doc_id"), col("_dup_id").isNull.as("keep"))
+      .orderBy(col("doc_id"))
 
   /** Honor a caller's reliable-checkpoint location: the requested dir
     * always WINS (SparkContext.setCheckpointDir applies to RDDs
@@ -1745,8 +1689,7 @@ object Dedup {
     * 2-3 rounds. The driver-side loop holds only the scalar label-sum
     * convergence detector per round (the labels stay distributed);
     * `maxIters` is the runaway bound. */
-  def dedupGroups(docs: DataFrame, pairs: DataFrame, idCol: String = "doc_id",
-                  maxIters: Int = 20,
+  def dedupGroups(docs: DataFrame, pairs: DataFrame, maxIters: Int = 20,
                   checkpointDir: Option[String] = None): DataFrame = {
     // localCheckpoint (lineage-TRUNCATING), not cache: the loop references
     // `edges` every round and `labels` twice per round, so a cached-but-
@@ -1825,10 +1768,10 @@ object Dedup {
         s"dedupGroups did not converge in $maxIters rounds — a component " +
           s"chain longer than $maxIters hops; raise maxIters")
 
-    docs.select(col(idCol))
-      .join(labels, docs(idCol) === labels("id"), "left")
-      .select(col(idCol), coalesce(col("root"), col(idCol)).as("group_id"))
-      .orderBy(col(idCol))
+    docs.select(col("doc_id"))
+      .join(labels, docs("doc_id") === labels("id"), "left")
+      .select(col("doc_id"), coalesce(col("root"), col("doc_id")).as("group_id"))
+      .orderBy(col("doc_id"))
   }
 
   /** [[dedupGroups]] by ALTERNATING STAR contraction (Kiveris et al. 2014,
@@ -1863,8 +1806,7 @@ object Dedup {
     * documented rather than hidden. Same lineage discipline as
     * [[dedupGroups]] (truncate per round; `checkpointDir` opts into
     * reliable FS checkpoints). */
-  def dedupGroupsStar(docs: DataFrame, pairs: DataFrame, idCol: String = "doc_id",
-                      maxIters: Int = 50,
+  def dedupGroupsStar(docs: DataFrame, pairs: DataFrame, maxIters: Int = 50,
                       checkpointDir: Option[String] = None): DataFrame = {
     val sc = docs.sparkSession.sparkContext
     checkpointDir.foreach(setCheckpointDir(sc, _))
@@ -1919,11 +1861,11 @@ object Dedup {
         s"dedupGroupsStar did not converge in $maxIters rounds")
 
     // fixpoint edges are (component min, member); singletons self-label
-    docs.select(col(idCol))
+    docs.select(col("doc_id"))
       .join(edges.select(col("hi").as("__id"), col("lo").as("__root")),
-        docs(idCol) === col("__id"), "left")
-      .select(col(idCol), coalesce(col("__root"), col(idCol)).as("group_id"))
-      .orderBy(col(idCol))
+        docs("doc_id") === col("__id"), "left")
+      .select(col("doc_id"), coalesce(col("__root"), col("doc_id")).as("group_id"))
+      .orderBy(col("doc_id"))
   }
 
   /** [[dedupGroups]] against a CATALOG-MANAGED component index — the
@@ -1939,16 +1881,12 @@ object Dedup {
     * read the stored map. The driver's oracle for `dedup_groups_indexed`
     * is the `dedup_groups` recursive-walk SQL verbatim. */
   def dedupGroupsIndexed(spark: SparkSession, dir: String,
-                         policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val idx = documentsIndex(spark, dir, "documents-dedup-groups-ngram8", "dedup-groups",
-      Map("pairs" -> "ngramNear(n=8,seeds=12,bands=4,jaccard=0.5)",
-        "cc" -> "min-label"),
-      policy, lit(true)) { (docs, out) =>
-      Tables.write(dedupGroups(docs, ngramNear(docs).select(col("a_id"), col("b_id"))))
-        .mode("overwrite").parquet(out)
-    }
-    Tables.read(spark, idx.path).orderBy(col("doc_id"))
-  }
+                         policy: IndexPolicy = IndexPolicy.BuildIfMissing): DataFrame =
+    documentsIndex(spark, dir, "documents-dedup-groups-ngram8", "dedup-groups",
+      Map("pairs" -> "ngramNear(n=8,seeds=12,bands=4,jaccard=0.5)", "cc" -> "min-label"),
+      policy, lit(true)) { (docs, tier) =>
+      tier("")(dedupGroups(docs, ngramNear(docs).select(col("a_id"), col("b_id"))))
+    }.orderBy(col("doc_id"))
 
   /** Deterministic Rademacher hyperplanes — see
     * [[graft.functions.LshFunctions.simhashPlanes]]. */
@@ -1964,25 +1902,21 @@ object Dedup {
   /** (vec_id, band, key) banded SimHash keys over an embedding table — the
     * LSH bucketing [[simhashNear]] joins on, exposed for the dial
     * measurements ScaleSmoke records into PLANS.md. */
-  private[graft] def simhashBandedKeys(embeddings: DataFrame, idCol: String,
-                                       vecCol: String, bits: Int, bands: Int,
+  private[graft] def simhashBandedKeys(embeddings: DataFrame, bits: Int, bands: Int,
                                        dim: Int): DataFrame = {
     require(bits % bands == 0, "bits must divide evenly into bands")
-    embeddings.select(col(idCol).as("vec_id"),
-        LshFunctions.simhash_bits(col(vecCol), bits, dim).as("bs"))
+    embeddings.select(col("vec_id"),
+        LshFunctions.simhash_bits(col("embedding"), bits, dim).as("bs"))
       .select(col("vec_id"),
         posexplode(LshFunctions.band_keys(col("bs"), bands, bits / bands))
           .as(Seq("band", "key")))
   }
 
-  def simhashNear(embeddings: DataFrame, idCol: String = "vec_id",
-                  vecCol: String = "embedding", bits: Int = 24, bands: Int = 3,
+  def simhashNear(embeddings: DataFrame, bits: Int = 24, bands: Int = 3,
                   dim: Int = 64, cosineThreshold: Double = 0.3): DataFrame = {
-    val banded = simhashBandedKeys(embeddings, idCol, vecCol, bits, bands, dim)
-
-    val cand = candidatePairs(banded, "band", "key", "vec_id")
-
-    val e = embeddings.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
+    val cand = candidatePairs(simhashBandedKeys(embeddings, bits, bands, dim),
+      "band", "key", "vec_id")
+    val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
     cand
       .join(e.select(col("vec_id"), col("v").as("va")), col("a_id") === col("vec_id")).drop("vec_id")
       .join(e.select(col("vec_id"), col("v").as("vb")), col("b_id") === col("vec_id")).drop("vec_id")
@@ -2008,56 +1942,50 @@ object Dedup {
     * distinct-text mine — the saturation-proof form a replica crawl
     * should run (and the one [[graft.operators.Curate.pipeline]]'s
     * exact-verify near arm runs). */
-  def minhashDedup(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-                   shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6,
+  def minhashDedup(docs: DataFrame, shingleSize: Int = 3, seeds: Int = 12, bands: Int = 6,
                    jaccardThreshold: Double = 0.3): DataFrame =
-    textDedupFrom(docs, idCol, textCol, reps =>
-      jaccardPairsFrom(minhashShingled(reps, idCol, textCol, shingleSize),
-        seeds, bands, jaccardThreshold))
+    textDedupFrom(docs, reps =>
+      jaccardPairsFrom(minhashShingled(reps, shingleSize), seeds, bands, jaccardThreshold))
 
   /** [[minhashDedup]]'s char-shingle twin — the collapse-first form of
     * `resolveKeepers(docs, ngramNear(docs))`, verdict-identical. */
-  def ngramDedup(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-                 n: Int = 8, seeds: Int = 12, bands: Int = 4,
+  def ngramDedup(docs: DataFrame, n: Int = 8, seeds: Int = 12, bands: Int = 4,
                  jaccardThreshold: Double = 0.5): DataFrame =
-    textDedupFrom(docs, idCol, textCol, reps =>
-      jaccardPairsFrom(ngramShingled(reps, idCol, textCol, n),
-        seeds, bands, jaccardThreshold))
+    textDedupFrom(docs, reps =>
+      jaccardPairsFrom(ngramShingled(reps, n), seeds, bands, jaccardThreshold))
 
   /** The shared collapse/restore frame of [[minhashDedup]]/[[ngramDedup]]:
     * `mine` maps the rep slice to its (a_id, b_id, …) near pairs. The
     * fingerprint pass is materialized once (two consumers: the rep
     * aggregation and the member restore — the imageIncrementalFrom
-    * boundary discipline). Output: one `(idCol, keep)` row per doc,
+    * boundary discipline). Output: one `(doc_id, keep)` row per doc,
     * keep = is-the-rep ∧ rep never the larger side of a rep pair —
     * [[resolveKeepers]]' exact rule through the collapse. */
-  private def textDedupFrom(docs: DataFrame, idCol: String, textCol: String,
-                            mine: DataFrame => DataFrame): DataFrame = {
-    val fp = docs.select(col(idCol), sha2(col(textCol), 256).as("fp"))
+  private def textDedupFrom(docs: DataFrame, mine: DataFrame => DataFrame): DataFrame = {
+    val fp = docs.select(col("doc_id"), sha2(col("text"), 256).as("fp"))
       .localCheckpoint(false)
-    val reps = fp.groupBy(col("fp")).agg(min(col(idCol)).as("__rep"))
+    val reps = fp.groupBy(col("fp")).agg(min(col("doc_id")).as("__rep"))
     // left_semi, not inner: per-group min ids are distinct so the row sets
     // are identical, but the semi form never materializes join output
     // columns and tells the planner the multi-KB text rows are the
     // streamed side (the r15 verdict's named join-form concern)
     val repPairs = mine(docs.join(
-      reps.select(col("__rep").as(idCol)), Seq(idCol), "left_semi"))
+      reps.select(col("__rep").as("doc_id")), Seq("doc_id"), "left_semi"))
     val losers = repPairs.select(col("b_id").as("__lrep")).distinct()
     fp.join(reps, Seq("fp"))
       .join(losers, col("__rep") === col("__lrep"), "left")
-      .select(col(idCol),
-        (col(idCol) === col("__rep") && col("__lrep").isNull).as("keep"))
-      .orderBy(col(idCol))
+      .select(col("doc_id"),
+        (col("doc_id") === col("__rep") && col("__lrep").isNull).as("keep"))
+      .orderBy(col("doc_id"))
   }
 
   /** [[bandKeyAudit]] over [[simhashNear]]'s sign-plane band keys — the
     * saturation probe for the EMBEDDING-space banded family (identical
     * vectors — duplicate docs embedded twice — share every band key, the
     * same replica mechanism as the text families). */
-  def simhashKeyAudit(embeddings: DataFrame, idCol: String = "vec_id",
-                      vecCol: String = "embedding", bits: Int = 24,
-                      bands: Int = 3, dim: Int = 64): DataFrame =
-    bandKeyAudit(simhashBandedKeys(embeddings, idCol, vecCol, bits, bands, dim), bands)
+  def simhashKeyAudit(embeddings: DataFrame, bits: Int = 24, bands: Int = 3,
+                      dim: Int = 64): DataFrame =
+    bandKeyAudit(simhashBandedKeys(embeddings, bits, bands, dim), bands)
 
   /** [[simhashNear]] with the audit-then-branch escape
     * ([[minhashNearAuto]]'s discipline for the embedding family): past
@@ -2068,14 +1996,12 @@ object Dedup {
     * representative and pairs reps only (cosine-verified on the real
     * vectors). Below the threshold the branch is [[simhashNear]]'s tail,
     * row-identical. Same declared rep-pair trade as the other autos. */
-  def simhashNearAuto(embeddings: DataFrame, idCol: String = "vec_id",
-                      vecCol: String = "embedding", bits: Int = 24,
-                      bands: Int = 3, dim: Int = 64,
+  def simhashNearAuto(embeddings: DataFrame, bits: Int = 24, bands: Int = 3, dim: Int = 64,
                       cosineThreshold: Double = 0.3,
                       fanoutMax: Double = 16.0): DataFrame = {
     val withBits = embeddings
-      .select(col(idCol).as("vec_id"), col(vecCol).as("v"),
-        LshFunctions.simhash_bits(col(vecCol), bits, dim).as("bs"))
+      .select(col("vec_id"), col("embedding").as("v"),
+        LshFunctions.simhash_bits(col("embedding"), bits, dim).as("bs"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def bandedOf(df: DataFrame): DataFrame =
       df.select(col("vec_id"),
@@ -2164,18 +2090,15 @@ object Dedup {
     * definition (N copies of one image = N²/2 pairs) — corpora with heavy
     * exact duplication should use [[imageDedup]], whose exact-collapse
     * pre-pass makes the output linear. */
-  def imageNear(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                idCol: String = "doc_id", blobCol: String = "blob",
+  def imageNear(spark: SparkSession, docs: DataFrame,
                 bands: Int = 8, maxHamming: Int = 6, agreeBands: Int = 2): DataFrame =
-    hammingPhashPairs(Multimodal.imagePHash(spark, docs, idCol, blobCol),
-      idCol, bands, maxHamming, agreeBands)
+    hammingPhashPairs(Multimodal.imagePHash(spark, docs), bands, maxHamming, agreeBands)
 
   /** The banded-Hamming pair chain of [[imageNear]] over an
-    * already-hashed `(idCol, phash)` table — shared with
+    * already-hashed `(doc_id, phash)` table — shared with
     * [[imageNearAuto]]'s unsaturated branch so auto ≡ explicit is the
     * same plan, not a lookalike. */
-  private def hammingPhashPairs(hashed: DataFrame, idCol: String,
-                                bands: Int, maxHamming: Int,
+  private def hammingPhashPairs(hashed: DataFrame, bands: Int, maxHamming: Int,
                                 agreeBands: Int): DataFrame = {
     require(56 % bands == 0, s"bands must divide 56, got $bands")
     require(agreeBands >= 0 && maxHamming >= 0 && maxHamming <= bands - math.max(agreeBands, 1),
@@ -2188,11 +2111,11 @@ object Dedup {
       autoAgreeBands(hashed.select(col("phash")).distinct().count(), bands, 56, maxHamming)
     else agreeBands
     val cand = candidatePairs(
-      bandSubsetKeys(hashed, "phash", idCol, bands, 56, t),
+      bandSubsetKeys(hashed, "phash", "doc_id", bands, 56, t),
       "band", "key", "doc_id")
     cand
-      .join(hashed.select(col(idCol).as("a_id"), col("phash").as("ha")), Seq("a_id"))
-      .join(hashed.select(col(idCol).as("b_id"), col("phash").as("hb")), Seq("b_id"))
+      .join(hashed.select(col("doc_id").as("a_id"), col("phash").as("ha")), Seq("a_id"))
+      .join(hashed.select(col("doc_id").as("b_id"), col("phash").as("hb")), Seq("b_id"))
       .select(col("a_id"), col("b_id"),
         expr("bit_count(ha ^ hb)").cast("bigint").as("hamming"))
       .where(col("hamming") <= maxHamming)
@@ -2231,17 +2154,16 @@ object Dedup {
     * [[imageDedup]]'s verdict join, which is where a saturated corpus
     * should be anyway (the [[imageNear]] scaladoc's standing caveat,
     * now enforced by measurement instead of prose). */
-  def imageNearAuto(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                    idCol: String = "doc_id", blobCol: String = "blob",
+  def imageNearAuto(spark: SparkSession, docs: DataFrame,
                     bands: Int = 8, maxHamming: Int = 6, agreeBands: Int = 2,
                     fanoutMax: Double = 16.0): DataFrame = {
-    val hashed = Multimodal.imagePHash(spark, docs, idCol, blobCol)
+    val hashed = Multimodal.imagePHash(spark, docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (saturated(phashKeyAudit(hashed), fanoutMax))
-      hammingPhashPairs(
-        hashed.groupBy(col("phash")).agg(min(col(idCol)).as(idCol)),
-        idCol, bands, maxHamming, agreeBands)
-    else hammingPhashPairs(hashed, idCol, bands, maxHamming, agreeBands)
+    hammingPhashPairs(
+      if (saturated(phashKeyAudit(hashed), fanoutMax))
+        hashed.groupBy(col("phash")).agg(min(col("doc_id")).as("doc_id"))
+      else hashed,
+      bands, maxHamming, agreeBands)
   }
 
   /** Incremental IMAGE dedup — [[semanticIncremental]]'s contract for the
@@ -2258,16 +2180,16 @@ object Dedup {
     * the three forms share one state contract). Output: one
     * (doc_id, phash, seen_in_corpus, matched_in_batch, keep) row per
     * incoming blob. */
-  def imageIncremental(spark: org.apache.spark.sql.SparkSession,
-                       incoming: DataFrame, reference: DataFrame,
-                       idCol: String = "doc_id", blobCol: String = "blob",
+  def imageIncremental(spark: SparkSession, incoming: DataFrame, reference: DataFrame,
                        bands: Int = 8, maxHamming: Int = 6,
                        agreeBands: Int = 2): DataFrame =
-    imageIncrementalFrom(
-      Multimodal.imagePHash(spark, incoming, idCol, blobCol),
-      Multimodal.imagePHash(spark, reference, idCol, blobCol)
-        .select(col("phash")).distinct(),
-      idCol, bands, maxHamming, agreeBands)
+    imageIncrementalFrom(Multimodal.imagePHash(spark, incoming),
+      phashState(spark, reference, Inline), bands, maxHamming, agreeBands)
+
+  /** The image family's seen-corpus state: the reference blobs' DISTINCT
+    * dHashes, one `phash` column at the index root. */
+  private def phashState(spark: SparkSession, blobs: DataFrame, tier: Tier): DataFrame =
+    tier("")(Multimodal.imagePHash(spark, blobs).select(col("phash")).distinct())
 
   /** [[imageIncremental]] against a CATALOG-MANAGED phash index — the
     * [[exactIncrementalIndexed]] shape for the image modality: the
@@ -2278,18 +2200,13 @@ object Dedup {
     * admission reads the stored signatures instead of re-hashing the
     * corpus. Admissions are byte-identical to the inline twin (DedupSpec
     * pins it; the driver oracle is the inline SQL verbatim). */
-  def imageIncrementalIndexed(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, incoming: DataFrame,
+  def imageIncrementalIndexed(spark: SparkSession, dir: String, incoming: DataFrame,
                               refBucketMax: Int = 50,
-                              idCol: String = "doc_id", blobCol: String = "blob",
                               bands: Int = 8, maxHamming: Int = 6,
                               agreeBands: Int = 2,
-                              policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame =
-    imageIncrementalFrom(
-      Multimodal.imagePHash(spark, incoming, idCol, blobCol),
-      Tables.read(spark,
-        documentsPhashIndex(spark, dir, refBucketMax, idCol, policy).path),
-      idCol, bands, maxHamming, agreeBands)
+                              policy: IndexPolicy = IndexPolicy.BuildIfMissing): DataFrame =
+    imageIncrementalFrom(Multimodal.imagePHash(spark, incoming),
+      documentsPhash(spark, dir, refBucketMax, policy), bands, maxHamming, agreeBands)
 
   /** The catalog-managed DISTINCT-phash index of the `dir` documents
     * table's bucket < `refBucketMax` slice (text-as-binary blobs,
@@ -2299,19 +2216,13 @@ object Dedup {
     * (the cross-modal still table): a still-hash index and an image-dedup
     * index ARE the same signature table, so the registry holds one copy
     * and both probes inherit its staleness/definition discipline. */
-  private def documentsPhashIndex(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String, refBucketMax: Int,
-                                  idCol: String,
-                                  policy: graft.core.IndexPolicy): graft.core.IndexMeta =
+  private def documentsPhash(spark: SparkSession, dir: String, refBucketMax: Int,
+                             policy: IndexPolicy): DataFrame =
     documentsIndex(spark, dir, s"documents-image-phash-b$refBucketMax", "image-phash",
       Map("refBucketMax" -> refBucketMax.toString, "algo" -> "dhash56",
-        "idCol" -> idCol, "blob" -> "text-as-binary"),
-      policy, Sampling.hashBucket(col(idCol)) < refBucketMax) { (ref, out) =>
-      Tables.write(Multimodal.imagePHash(spark,
-          ref.select(col(idCol), col("text").cast("binary").as("blob")),
-          idCol, "blob")
-        .select(col("phash")).distinct())
-        .mode("overwrite").parquet(out)
+        "idCol" -> "doc_id", "blob" -> "text-as-binary"),
+      policy, docBucket < refBucketMax) { (ref, tier) =>
+      phashState(spark, ref.select(col("doc_id"), col("text").cast("binary").as("blob")), tier)
     }
 
   /** The admission half of [[imageIncremental]], shared with the indexed
@@ -2321,41 +2232,40 @@ object Dedup {
     * lookups, the output projection). The corpus arm keys the reference
     * by ITS OWN HASH (the signature is the identity — there is no
     * reference doc id to carry, and none is needed). */
-  private[graft] def imageIncrementalFrom(incHashed: DataFrame,
-                                          refHashes: DataFrame, idCol: String,
-                                          bands: Int, maxHamming: Int,
-                                          agreeBands: Int): DataFrame = {
+  private def imageIncrementalFrom(incHashed: DataFrame, refHashes: DataFrame,
+                                   bands: Int, maxHamming: Int,
+                                   agreeBands: Int): DataFrame = {
     require(56 % bands == 0, s"bands must divide 56, got $bands")
     require(agreeBands >= 1 && maxHamming >= 0 && maxHamming <= bands - agreeBands,
       s"need maxHamming in [0, bands - agreeBands] for lossless band-subset keys, " +
         s"got maxHamming=$maxHamming agreeBands=$agreeBands bands=$bands")
     val inc = incHashed.localCheckpoint(false)
-    val incKeys = bandSubsetKeys(inc, "phash", idCol, bands, 56, agreeBands)
+    val incKeys = bandSubsetKeys(inc, "phash", "doc_id", bands, 56, agreeBands)
     val refKeys = bandSubsetKeys(
       refHashes.select(col("phash"), col("phash").as("rh")),
       "phash", "rh", bands, 56, agreeBands)
       .withColumnRenamed("doc_id", "rh")
     val ch = incKeys.join(refKeys, Seq("band", "key"))
       .select(col("doc_id"), col("rh")).distinct()
-      .join(inc.select(col(idCol).as("doc_id"), col("phash")), Seq("doc_id"))
+      .join(inc.select(col("doc_id"), col("phash")), Seq("doc_id"))
       .where(expr("bit_count(phash ^ rh)") <= maxHamming)
       .select(col("doc_id")).distinct()
     val cand = candidatePairs(incKeys, "band", "key", "doc_id")
     val bh = cand
-      .join(inc.select(col(idCol).as("a_id"), col("phash").as("ha")), Seq("a_id"))
-      .join(inc.select(col(idCol).as("b_id"), col("phash").as("hb")), Seq("b_id"))
+      .join(inc.select(col("doc_id").as("a_id"), col("phash").as("ha")), Seq("a_id"))
+      .join(inc.select(col("doc_id").as("b_id"), col("phash").as("hb")), Seq("b_id"))
       .where(expr("bit_count(ha ^ hb)") <= maxHamming)
       .select(col("b_id").as("doc_id")).distinct()
     val chF = ch.select(col("doc_id").as("__cid"), lit(true).as("__c"))
     val bhF = bh.select(col("doc_id").as("__bid"), lit(true).as("__m"))
-    inc.select(col(idCol), col("phash"))
-      .join(chF, col(idCol) === col("__cid"), "left")
-      .join(bhF, col(idCol) === col("__bid"), "left")
-      .select(col(idCol), col("phash"),
+    inc.select(col("doc_id"), col("phash"))
+      .join(chF, col("doc_id") === col("__cid"), "left")
+      .join(bhF, col("doc_id") === col("__bid"), "left")
+      .select(col("doc_id"), col("phash"),
         coalesce(col("__c"), lit(false)).as("seen_in_corpus"),
         coalesce(col("__m"), lit(false)).as("matched_in_batch"),
         (col("__c").isNull && col("__m").isNull).as("keep"))
-      .orderBy(col(idCol))
+      .orderBy(col("doc_id"))
   }
 
   /** X3h — AUDIO near-duplicate pairs by energy-envelope fingerprint: the
@@ -2367,15 +2277,14 @@ object Dedup {
     * chain. Per-doc state: `seeds` longs; nothing audio-sized shuffles.
     * Matches re-encodes/level-preserving copies; time-SHIFT robustness
     * would need spectral landmarks (documented out of scope). */
-  def audioNear(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                idCol: String = "doc_id", blobCol: String = "blob",
+  def audioNear(spark: SparkSession, docs: DataFrame,
                 windowSamples: Int = 16, maxBytes: Int = 1 << 20,
                 shingleSize: Int = 4, seeds: Int = 12, bands: Int = 6,
                 estThreshold: Double = 0.5): DataFrame =
     minhashNearApprox(
-      Multimodal.audioEnvelope(spark, docs, idCol, blobCol, windowSamples, maxBytes)
-        .select(col(idCol), col("env").as("text")),
-      idCol, "text", shingleSize, seeds, bands, estThreshold)
+      Multimodal.audioEnvelope(spark, docs, windowSamples, maxBytes)
+        .select(col("doc_id"), col("env").as("text")),
+      shingleSize, seeds, bands, estThreshold)
 
   /** X3i — TIME-SHIFT-robust audio near-duplicate pairs by landmark
     * voting: the step [[audioNear]]'s scaladoc declared out of scope, now
@@ -2407,14 +2316,13 @@ object Dedup {
     * offset vote is a two-level hash aggregation with map-side partial
     * collapse, never a sort. Pair OUTPUT is quadratic on identical-audio
     * groups like every pair form here — slice or threshold accordingly. */
-  def audioLandmarkNear(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                        idCol: String = "doc_id", blobCol: String = "blob",
+  def audioLandmarkNear(spark: SparkSession, docs: DataFrame,
                         windowSamples: Int = 16, hop: Int = 4,
                         maxBytes: Int = 1 << 20, maxDt: Int = 8,
                         fanout: Int = 3, minVotes: Int = 5,
                         keyPeaks: Int = 2): DataFrame =
-    landmarkVotes(Multimodal.audioLandmarks(spark, docs, idCol, blobCol,
-      windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks), idCol, minVotes)
+    landmarkVotes(Multimodal.audioLandmarks(spark, docs,
+      windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks), minVotes)
       .orderBy(col("a_id"), col("b_id"))
 
   /** The shift-invariant full 5-column landmark join key (`lc = dt2 = 0`
@@ -2424,18 +2332,17 @@ object Dedup {
   /** The landmark vote join shared by [[audioLandmarkNear]] and
     * [[audioDedup]]: [[offsetVotes]] on [[landmarkKey]], offsets in
     * landmark time `ta`. */
-  private def landmarkVotes(lm: DataFrame, idCol: String,
-                            minVotes: Int): DataFrame =
-    offsetVotes(lm, idCol, landmarkKey, "ta", minVotes)
+  private def landmarkVotes(lm: DataFrame, minVotes: Int): DataFrame =
+    offsetVotes(lm, landmarkKey, "ta", minVotes)
 
   /** The offset-vote self-join shared by the landmark, frame and bigram
     * mines: rows agreeing on `keyCols` pair up (a < b), and
     * [[maxOffsetVotes]] keeps pairs whose matches concentrate on one
     * `posCol` offset. */
-  private def offsetVotes(rows: DataFrame, idCol: String, keyCols: Seq[String],
+  private def offsetVotes(rows: DataFrame, keyCols: Seq[String],
                           posCol: String, minVotes: Int): DataFrame = {
     def side(id: String, pos: String) =
-      rows.select((col(idCol).as(id) +: keyCols.map(col)) :+ col(posCol).as(pos): _*)
+      rows.select((col("doc_id").as(id) +: keyCols.map(col)) :+ col(posCol).as(pos): _*)
     maxOffsetVotes(side("a_id", "__pa").join(side("b_id", "__pb"), keyCols)
       .where(col("a_id") < col("b_id"))
       .groupBy(col("a_id"), col("b_id"), (col("__pa") - col("__pb")).as("off")),
@@ -2484,14 +2391,13 @@ object Dedup {
     * alternative. The audit is one bounded row (a driver scalar decision,
     * like Lloyd's tol); the oracle re-derives the same rule and gates the
     * two vote chains on it. */
-  def audioLandmarkNearAuto(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                            idCol: String = "doc_id", blobCol: String = "blob",
+  def audioLandmarkNearAuto(spark: SparkSession, docs: DataFrame,
                             windowSamples: Int = 16, hop: Int = 4,
                             maxBytes: Int = 1 << 20, maxDt: Int = 8,
                             fanout: Int = 3, minVotes: Int = 5,
                             meanBucketMax: Double = 16.0): DataFrame =
-    landmarkVotes(auditedLandmarks(spark, docs, idCol, blobCol, windowSamples, hop,
-      maxBytes, maxDt, fanout, meanBucketMax), idCol, minVotes)
+    landmarkVotes(auditedLandmarks(spark, docs, windowSamples, hop,
+      maxBytes, maxDt, fanout, meanBucketMax), minVotes)
       .orderBy(col("a_id"), col("b_id"))
 
   /** The `keyPeaks` self-dial shared by [[audioLandmarkNearAuto]] and
@@ -2505,11 +2411,10 @@ object Dedup {
     * partition scanned); the kept branch's vote join then reads it back
     * instead of decoding the audio twice, and the triple branch frees it. */
   private def auditedLandmarks(spark: SparkSession, docs: DataFrame,
-                               idCol: String, blobCol: String,
                                windowSamples: Int, hop: Int, maxBytes: Int,
                                maxDt: Int, fanout: Int,
                                meanBucketMax: Double): DataFrame = {
-    def extract(keyPeaks: Int) = Multimodal.audioLandmarks(spark, docs, idCol, blobCol,
+    def extract(keyPeaks: Int) = Multimodal.audioLandmarks(spark, docs,
       windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks)
     val lmPairs = extract(2)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2536,15 +2441,13 @@ object Dedup {
     * < minVotes landmarks can only group through envelope identity — a
     * too-short or too-flat clip carries too little evidence for a
     * near-match verdict, stated rather than guessed. */
-  def audioDedup(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                 idCol: String = "doc_id", blobCol: String = "blob",
+  def audioDedup(spark: SparkSession, docs: DataFrame,
                  windowSamples: Int = 16, hop: Int = 4,
                  maxBytes: Int = 1 << 20, maxDt: Int = 8,
                  fanout: Int = 3, minVotes: Int = 5,
                  keyPeaks: Int = 2): DataFrame =
-    audioDedupFrom(spark, docs, idCol, blobCol, windowSamples, hop, maxBytes,
-      minVotes)(Multimodal.audioLandmarks(spark, _, idCol, blobCol,
-        windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks))
+    audioDedupFrom(spark, docs, windowSamples, hop, maxBytes, minVotes)(
+      Multimodal.audioLandmarks(spark, _, windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks))
 
   /** [[audioDedup]] with the `keyPeaks` dial SELF-DIALED from the measured
     * key saturation — [[audioLandmarkNearAuto]]'s audit-then-branch wired
@@ -2558,49 +2461,45 @@ object Dedup {
     * mine re-extracts triple landmarks (one extra linear decode pass
     * traded against a quadratic join; [[auditedLandmarks]]). Same body
     * as [[audioDedup]] ([[audioDedupFrom]]). */
-  def audioDedupAuto(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                     idCol: String = "doc_id", blobCol: String = "blob",
+  def audioDedupAuto(spark: SparkSession, docs: DataFrame,
                      windowSamples: Int = 16, hop: Int = 4,
                      maxBytes: Int = 1 << 20, maxDt: Int = 8,
                      fanout: Int = 3, minVotes: Int = 5,
                      meanBucketMax: Double = 16.0): DataFrame =
-    audioDedupFrom(spark, docs, idCol, blobCol, windowSamples, hop, maxBytes,
-      minVotes)(auditedLandmarks(spark, _, idCol, blobCol, windowSamples, hop,
-        maxBytes, maxDt, fanout, meanBucketMax))
+    audioDedupFrom(spark, docs, windowSamples, hop, maxBytes, minVotes)(
+      auditedLandmarks(spark, _, windowSamples, hop, maxBytes, maxDt, fanout, meanBucketMax))
 
   /** The body of [[audioDedup]] / [[audioDedupAuto]]: envelope collapse,
     * `landmarks` over the representatives' blobs, the landmark vote mine,
     * and [[repVerdicts]]. */
   private def audioDedupFrom(spark: SparkSession, docs: DataFrame,
-                             idCol: String, blobCol: String,
                              windowSamples: Int, hop: Int, maxBytes: Int,
                              minVotes: Int)
                             (landmarks: DataFrame => DataFrame): DataFrame = {
-    val env = Multimodal.audioEnvelope(spark, docs, idCol, blobCol,
-      windowSamples, maxBytes, hop)
-    val reps = env.groupBy(col("env")).agg(min(col(idCol)).as("rep"))
-    val repDocs = docs.select(col(idCol).cast("long").as(idCol), col(blobCol))
-      .join(reps.select(col("rep").as(idCol)), Seq(idCol), "left_semi")
-    val pairs = landmarkVotes(landmarks(repDocs), idCol, minVotes)
+    val env = Multimodal.audioEnvelope(spark, docs, windowSamples, maxBytes, hop)
+    val reps = env.groupBy(col("env")).agg(min(col("doc_id")).as("rep"))
+    val repDocs = docs.select(col("doc_id").cast("long").as("doc_id"), col("blob"))
+      .join(reps.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
+    val pairs = landmarkVotes(landmarks(repDocs), minVotes)
       .select(col("a_id"), col("b_id"))
-    repVerdicts(env, "env", reps, pairs, idCol)
+    repVerdicts(env, "env", reps, pairs)
   }
 
   /** The collapse-first verdict tail shared by [[audioDedup]],
     * [[videoDedup]] and [[imageDedup]] (and their autos): `reps` maps each
     * collapse fingerprint `fpCol` to its min-id `rep`; [[dedupGroups]]
     * components run over the rep pairs, and every row of `keyed` inherits
-    * its rep's root. Output: one `(idCol, group_id, keep)` row per keyed
+    * its rep's root. Output: one `(doc_id, group_id, keep)` row per keyed
     * row, `keep` = doc == root. */
   private def repVerdicts(keyed: DataFrame, fpCol: String, reps: DataFrame,
-                          pairs: DataFrame, idCol: String): DataFrame = {
-    val groups = dedupGroups(reps.select(col("rep").as(idCol)), pairs, idCol)
-      .withColumnRenamed(idCol, "rep").withColumnRenamed("group_id", "__gid")
+                          pairs: DataFrame): DataFrame = {
+    val groups = dedupGroups(reps.select(col("rep").as("doc_id")), pairs)
+      .withColumnRenamed("doc_id", "rep").withColumnRenamed("group_id", "__gid")
     keyed.join(reps, Seq(fpCol))
       .join(groups, Seq("rep"))
-      .select(col(idCol), col("__gid").as("group_id"),
-        (col(idCol) === col("__gid")).as("keep"))
-      .orderBy(col(idCol))
+      .select(col("doc_id"), col("__gid").as("group_id"),
+        (col("doc_id") === col("__gid")).as("keep"))
+      .orderBy(col("doc_id"))
   }
 
   /** Batch media docs whose signature rows agree on `keyCols` with
@@ -2612,23 +2511,23 @@ object Dedup {
     * `fhash` at `frame_no`, frame-hash fingerprint `fp`), and of
     * [[audioIncremental]] / [[videoIncremental]]. The exact arm covers
     * clips with too few rows to carry `minVotes` of vote evidence.
-    * `stateRows` needs `(idCol, keyCols…, posCol)`; `stateFps` one `fpCol`
+    * `stateRows` needs `(doc_id, keyCols…, posCol)`; `stateFps` one `fpCol`
     * column (distinct fingerprints). Both arms are equi-joins on bounded
     * per-doc state — nothing media-sized. */
   private[graft] def crossMatches(rows: DataFrame, fps: DataFrame,
                                   stateRows: DataFrame, stateFps: DataFrame,
-                                  idCol: String, keyCols: Seq[String], posCol: String,
+                                  keyCols: Seq[String], posCol: String,
                                   fpCol: String, minVotes: Int): DataFrame = {
     def side(df: DataFrame, id: Column, pos: String) =
       df.select((id +: keyCols.map(col)) :+ col(posCol).as(pos): _*)
-    val voteHits = side(rows, col(idCol), "__pa")
-      .join(side(stateRows, col(idCol).as("__sid"), "__pb"), keyCols)
-      .groupBy(col(idCol), col("__sid"), (col("__pa") - col("__pb")).as("off"))
+    val voteHits = side(rows, col("doc_id"), "__pa")
+      .join(side(stateRows, col("doc_id").as("__sid"), "__pb"), keyCols)
+      .groupBy(col("doc_id"), col("__sid"), (col("__pa") - col("__pb")).as("off"))
       .agg(count(lit(1)).as("v"))
       .where(col("v") >= minVotes)
-      .select(col(idCol))
+      .select(col("doc_id"))
     val fpHits = fps.join(stateFps.select(col(fpCol)), Seq(fpCol), "left_semi")
-      .select(col(idCol))
+      .select(col("doc_id"))
     voteHits.unionByName(fpHits).distinct()
   }
 
@@ -2650,28 +2549,32 @@ object Dedup {
     * the stream-constant contract, verbatim. Output: one
     * `(doc_id, is_audio, seen_in_corpus, matched_in_batch, keep)` row
     * per incoming row. */
-  def audioIncremental(spark: org.apache.spark.sql.SparkSession,
-                       incoming: DataFrame, reference: DataFrame,
-                       idCol: String = "doc_id", blobCol: String = "blob",
+  def audioIncremental(spark: SparkSession, incoming: DataFrame, reference: DataFrame,
                        windowSamples: Int = 16, hop: Int = 4,
                        maxBytes: Int = 1 << 20, maxDt: Int = 8,
                        fanout: Int = 3, minVotes: Int = 5,
-                       keyPeaks: Int = 2): DataFrame =
+                       keyPeaks: Int = 2): DataFrame = {
     // both reference extracts behind a materialization boundary (the
     // videoIncremental refFr discipline): unboundaried, the vote join's
     // planning re-reads the decode subtree and the inline form measured
     // 263 s at 250k clips where build(85 s) + probe(35 s) of the SAME
     // state costs 120 s through parquet — see the ScaleSmoke audio incr
     // rows
-    audioIncrementalFrom(spark, incoming,
-      Multimodal.audioLandmarks(spark, reference, idCol, blobCol,
-        windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks)
-        .localCheckpoint(false),
-      Multimodal.audioEnvelope(spark, reference, idCol, blobCol,
-        windowSamples, maxBytes, hop).select(col("env")).distinct()
-        .localCheckpoint(false),
-      idCol, blobCol, windowSamples, hop, maxBytes, maxDt, fanout,
-      minVotes, keyPeaks)
+    val (refLm, refEnv) = audioState(spark, reference, windowSamples, hop, maxBytes,
+      maxDt, fanout, keyPeaks, Checkpointed)
+    audioIncrementalFrom(spark, incoming, refLm, refEnv, windowSamples, hop, maxBytes,
+      maxDt, fanout, minVotes, keyPeaks)
+  }
+
+  /** The audio family's seen-corpus state: `(lm, env)` — the reference
+    * blobs' landmark rows and DISTINCT envelope strings. */
+  private[graft] def audioState(spark: SparkSession, blobs: DataFrame, windowSamples: Int,
+                                hop: Int, maxBytes: Int, maxDt: Int, fanout: Int,
+                                keyPeaks: Int, tier: Tier): (DataFrame, DataFrame) =
+    (tier("lm")(Multimodal.audioLandmarks(spark, blobs,
+      windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks)),
+      tier("env")(Multimodal.audioEnvelope(spark, blobs, windowSamples, maxBytes, hop)
+        .select(col("env")).distinct()))
 
   /** [[audioIncremental]] against a CATALOG-MANAGED landmark+envelope
     * index — the [[imageIncrementalIndexed]] shape for the audio
@@ -2682,40 +2585,29 @@ object Dedup {
     * registered content-fingerprinted in the manifest, and each batch
     * admission reads the stored signatures instead of re-decoding the
     * corpus. Admissions are byte-identical to the inline twin. */
-  def audioIncrementalIndexed(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, incoming: DataFrame,
+  def audioIncrementalIndexed(spark: SparkSession, dir: String, incoming: DataFrame,
                               refBucketMax: Int = 10,
-                              idCol: String = "doc_id", blobCol: String = "blob",
                               windowSamples: Int = 16, hop: Int = 4,
                               maxBytes: Int = 1 << 20, maxDt: Int = 8,
                               fanout: Int = 3, minVotes: Int = 5,
                               keyPeaks: Int = 2,
-                              policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val idx = documentsIndex(spark, dir, s"documents-audio-state-b$refBucketMax",
+                              policy: IndexPolicy = IndexPolicy.BuildIfMissing): DataFrame = {
+    val (refLm, refEnv) = documentsIndex(spark, dir, s"documents-audio-state-b$refBucketMax",
       "audio-landmarks",
       Map("refBucketMax" -> refBucketMax.toString,
         "windowSamples" -> windowSamples.toString, "hop" -> hop.toString,
         "maxBytes" -> maxBytes.toString, "maxDt" -> maxDt.toString,
         "fanout" -> fanout.toString, "keyPeaks" -> keyPeaks.toString,
-        "idCol" -> idCol, "blob" -> "wav-wrapped-text"),
+        "idCol" -> "doc_id", "blob" -> "wav-wrapped-text"),
       policy, octet_length(col("text")) === length(col("text")) &&
-        Sampling.hashBucket(col(idCol)) < refBucketMax) { (slice, out) =>
+        docBucket < refBucketMax) { (slice, tier) =>
       val header = Multimodal.pcmWavHeader(8000, 1, 0x7FFFFFFFL)
-      val ref = slice.select(col(idCol),
-        concat(lit(header), col("text").cast("binary")).as("blob"))
-      Tables.write(Multimodal.audioLandmarks(spark, ref, idCol, "blob",
-          windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks))
-        .mode("overwrite").parquet(s"$out/lm")
-      Tables.write(Multimodal.audioEnvelope(spark, ref, idCol, "blob",
-          windowSamples, maxBytes, hop)
-        .select(col("env")).distinct())
-        .mode("overwrite").parquet(s"$out/env")
+      audioState(spark,
+        slice.select(col("doc_id"), concat(lit(header), col("text").cast("binary")).as("blob")),
+        windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks, tier)
     }
-    audioIncrementalFrom(spark, incoming,
-      Tables.read(spark, s"${idx.path}/lm"),
-      Tables.read(spark, s"${idx.path}/env"),
-      idCol, blobCol, windowSamples, hop, maxBytes, maxDt, fanout,
-      minVotes, keyPeaks)
+    audioIncrementalFrom(spark, incoming, refLm, refEnv, windowSamples, hop, maxBytes,
+      maxDt, fanout, minVotes, keyPeaks)
   }
 
   /** The admission half of [[audioIncremental]], shared with the indexed
@@ -2725,29 +2617,24 @@ object Dedup {
     * (each has two+ consumers and the decode under them is the dominant
     * cost). Both arms are equi-joins on signature-sized rows — never
     * incoming × reference, nothing audio-sized shuffles. */
-  private[graft] def audioIncrementalFrom(spark: org.apache.spark.sql.SparkSession,
-                                          incoming: DataFrame,
+  private[graft] def audioIncrementalFrom(spark: SparkSession, incoming: DataFrame,
                                           refLm: DataFrame, refEnv: DataFrame,
-                                          idCol: String, blobCol: String,
                                           windowSamples: Int, hop: Int,
                                           maxBytes: Int, maxDt: Int,
                                           fanout: Int, minVotes: Int,
                                           keyPeaks: Int): DataFrame = {
-    val incLm = Multimodal.audioLandmarks(spark, incoming, idCol, blobCol,
+    val incLm = Multimodal.audioLandmarks(spark, incoming,
       windowSamples, hop, maxBytes, maxDt, fanout, keyPeaks)
       .localCheckpoint(false)
-    val incEnv = Multimodal.audioEnvelope(spark, incoming, idCol, blobCol,
-      windowSamples, maxBytes, hop)
-      .select(col(idCol), col("env")).localCheckpoint(false)
-    val seen = crossMatches(incLm, incEnv, refLm, refEnv, idCol, landmarkKey, "ta", "env",
-      minVotes)
-    val batchVote = landmarkVotes(incLm, idCol, minVotes)
-      .select(col("b_id").as(idCol))
-    val envReps = incEnv.groupBy(col("env")).agg(min(col(idCol)).as("__rep"))
+    val incEnv = Multimodal.audioEnvelope(spark, incoming, windowSamples, maxBytes, hop)
+      .select(col("doc_id"), col("env")).localCheckpoint(false)
+    val seen = crossMatches(incLm, incEnv, refLm, refEnv, landmarkKey, "ta", "env", minVotes)
+    val batchVote = landmarkVotes(incLm, minVotes).select(col("b_id").as("doc_id"))
+    val envReps = incEnv.groupBy(col("env")).agg(min(col("doc_id")).as("__rep"))
     val batchEnv = incEnv.join(envReps, Seq("env"))
-      .where(col(idCol) =!= col("__rep")).select(col(idCol))
-    incrementalVerdicts(incoming, incEnv.select(col(idCol)), seen,
-      batchVote.unionByName(batchEnv).distinct(), idCol, "is_audio")
+      .where(col("doc_id") =!= col("__rep")).select(col("doc_id"))
+    incrementalVerdicts(incoming, incEnv.select(col("doc_id")), seen,
+      batchVote.unionByName(batchEnv).distinct(), "is_audio")
   }
 
   /** The shared verdict tail of [[audioIncrementalFrom]] /
@@ -2757,20 +2644,20 @@ object Dedup {
     * neither arm hit. */
   private def incrementalVerdicts(incoming: DataFrame, modalityIds: DataFrame,
                                   seen: DataFrame, batchHit: DataFrame,
-                                  idCol: String, flagCol: String): DataFrame = {
-    val modF = modalityIds.distinct().select(col(idCol).as("__fid"), lit(true).as("__f"))
-    val seenF = seen.select(col(idCol).as("__sid"), lit(true).as("__c"))
-    val batchF = batchHit.select(col(idCol).as("__bid"), lit(true).as("__m"))
-    incoming.select(col(idCol).cast("long").as(idCol))
-      .join(modF, col(idCol) === col("__fid"), "left")
-      .join(seenF, col(idCol) === col("__sid"), "left")
-      .join(batchF, col(idCol) === col("__bid"), "left")
-      .select(col(idCol),
+                                  flagCol: String): DataFrame = {
+    val modF = modalityIds.distinct().select(col("doc_id").as("__fid"), lit(true).as("__f"))
+    val seenF = seen.select(col("doc_id").as("__sid"), lit(true).as("__c"))
+    val batchF = batchHit.select(col("doc_id").as("__bid"), lit(true).as("__m"))
+    incoming.select(col("doc_id").cast("long").as("doc_id"))
+      .join(modF, col("doc_id") === col("__fid"), "left")
+      .join(seenF, col("doc_id") === col("__sid"), "left")
+      .join(batchF, col("doc_id") === col("__bid"), "left")
+      .select(col("doc_id"),
         coalesce(col("__f"), lit(false)).as(flagCol),
         coalesce(col("__c"), lit(false)).as("seen_in_corpus"),
         coalesce(col("__m"), lit(false)).as("matched_in_batch"),
         (col("__c").isNull && col("__m").isNull).as("keep"))
-      .orderBy(col(idCol))
+      .orderBy(col("doc_id"))
   }
 
   /** Video near-dup pairs by FRAME-VOTE agreement — the multi-frame
@@ -2803,25 +2690,21 @@ object Dedup {
     * pixels drift pairs only if the dHash survives — the banded-Hamming
     * widening ([[imageNear]]'s bands) is the next rung if that regime
     * matters. */
-  def videoNear(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                idCol: String = "doc_id", blobCol: String = "blob",
+  def videoNear(spark: SparkSession, docs: DataFrame,
                 maxFrames: Int = 16, maxBytes: Int = 1 << 20,
                 minVotes: Int = 3): DataFrame =
     // persist: frameVotes self-joins fr (a and b sides), and the decode
     // pass under each side is the dominant cost — one cached fill instead
     // of relying on exchange reuse surviving plan changes
-    frameVotes(Multimodal.videoFrameHashes(spark, docs, idCol, blobCol,
-      maxFrames, maxBytes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      idCol, minVotes)
+    frameVotes(Multimodal.videoFrameHashes(spark, docs, maxFrames, maxBytes)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), minVotes)
       .orderBy(col("a_id"), col("b_id"))
 
   /** The exact-frame-hash offset vote shared by [[videoNear]] and
     * [[videoDedup]] — [[landmarkVotes]]' shape over (id, frame_no, fhash)
     * rows. */
-  private def frameVotes(fr: DataFrame, idCol: String,
-                         minVotes: Int): DataFrame =
-    offsetVotes(fr, idCol, Seq("fhash"), "frame_no", minVotes)
+  private def frameVotes(fr: DataFrame, minVotes: Int): DataFrame =
+    offsetVotes(fr, Seq("fhash"), "frame_no", minVotes)
 
   /** [[videoNear]]'s TREATMENT form with LINEAR output — the
     * [[audioDedup]] discipline for the video modality: videos whose
@@ -2837,12 +2720,10 @@ object Dedup {
     * input row that yields ≥ 1 frame (non-video rows get no verdict —
     * the [[audioDedup]] pass-through convention); `group_id` = the
     * smallest doc id in the duplicate cluster, `keep` = doc == root. */
-  def videoDedup(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                 idCol: String = "doc_id", blobCol: String = "blob",
+  def videoDedup(spark: SparkSession, docs: DataFrame,
                  maxFrames: Int = 16, maxBytes: Int = 1 << 20,
                  minVotes: Int = 3): DataFrame =
-    videoDedupFrom(spark, docs, idCol, blobCol, maxFrames, maxBytes)(
-      frameVotes(_, idCol, minVotes))
+    videoDedupFrom(spark, docs, maxFrames, maxBytes)(frameVotes(_, minVotes))
 
   /** [[videoDedup]] with the rep mine's key SELF-DIALED from the measured
     * frame-hash saturation — [[audioDedupAuto]]'s audit-then-branch for
@@ -2860,38 +2741,35 @@ object Dedup {
     * SCATTERED frames — a declared trade; contiguous shared runs, the
     * re-cut signature, carry m−1 bigram votes). The rule is
     * [[saturated]]; the body is [[videoDedup]]'s ([[videoDedupFrom]]). */
-  def videoDedupAuto(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                     idCol: String = "doc_id", blobCol: String = "blob",
+  def videoDedupAuto(spark: SparkSession, docs: DataFrame,
                      maxFrames: Int = 16, maxBytes: Int = 1 << 20,
                      minVotes: Int = 3, fanoutMax: Double = 16.0): DataFrame =
-    videoDedupFrom(spark, docs, idCol, blobCol, maxFrames, maxBytes) { rf =>
+    videoDedupFrom(spark, docs, maxFrames, maxBytes) { rf =>
       // the audit's global aggregate fills this cache; the chosen vote
       // chain reads the rep frames back instead of re-deriving the
       // semi-join (fr itself is already cached below the join)
       val repFrames = rf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (saturated(videoKeyAudit(repFrames), fanoutMax)) bigramVotes(repFrames, idCol, minVotes)
-      else frameVotes(repFrames, idCol, minVotes)
+      if (saturated(videoKeyAudit(repFrames), fanoutMax)) bigramVotes(repFrames, minVotes)
+      else frameVotes(repFrames, minVotes)
     }
 
   /** The body of [[videoDedup]] / [[videoDedupAuto]]: frame-hash
     * fingerprint collapse, `mine` over the representatives' frames, and
     * [[repVerdicts]]. */
   private def videoDedupFrom(spark: SparkSession, docs: DataFrame,
-                             idCol: String, blobCol: String,
                              maxFrames: Int, maxBytes: Int)
                             (mine: DataFrame => DataFrame): DataFrame = {
     // persist: fr feeds BOTH the fingerprint collapse and (via repFrames)
     // the vote mine — separate exchanges, so without a cache the blob
     // decode runs twice (the videoNearHamming persist discipline)
-    val fr = Multimodal.videoFrameHashes(spark, docs, idCol, blobCol,
-      maxFrames, maxBytes)
+    val fr = Multimodal.videoFrameHashes(spark, docs, maxFrames, maxBytes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // collapse fingerprint: frame hashes in frame order, one string per doc
-    val fp = videoFingerprints(fr, idCol)
-    val reps = fp.groupBy(col("fp")).agg(min(col(idCol)).as("rep"))
+    val fp = videoFingerprints(fr)
+    val reps = fp.groupBy(col("fp")).agg(min(col("doc_id")).as("rep"))
     val repFrames = fr
-      .join(reps.select(col("rep").as(idCol)), Seq(idCol), "left_semi")
-    repVerdicts(fp, "fp", reps, mine(repFrames).select(col("a_id"), col("b_id")), idCol)
+      .join(reps.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
+    repVerdicts(fp, "fp", reps, mine(repFrames).select(col("a_id"), col("b_id")))
   }
 
   /** [[videoNear]] with BANDED-HAMMING frame matching — the named
@@ -2951,8 +2829,7 @@ object Dedup {
     * brute-forces the Hamming vote chain (losslessness makes the banded
     * plan answer-equivalent; MultimodalSpec pins the recovery case exact
     * matching provably misses — one flipped gradient bit per frame). */
-  def videoNearHamming(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                       idCol: String = "doc_id", blobCol: String = "blob",
+  def videoNearHamming(spark: SparkSession, docs: DataFrame,
                        maxFrames: Int = 16, maxBytes: Int = 1 << 20,
                        minVotes: Int = 3, bands: Int = 8, maxHamming: Int = 3,
                        agreeBands: Int = 0, maxBucket: Int = 1024): DataFrame = {
@@ -2964,17 +2841,16 @@ object Dedup {
     // unpersist on the return path: the output is lazy, so the caller
     // materializes after we return; blocks are MEMORY_AND_DISK and freed
     // by LRU or session end (the audioLandmarkNearAuto discipline).
-    val fr0 = Multimodal.videoFrameHashes(spark, docs, idCol, blobCol,
-      maxFrames, maxBytes)
+    val fr0 = Multimodal.videoFrameHashes(spark, docs, maxFrames, maxBytes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hammingFrameVotes(fr0, idCol, minVotes, bands, maxHamming, agreeBands, maxBucket)
+    hammingFrameVotes(fr0, minVotes, bands, maxHamming, agreeBands, maxBucket)
   }
 
   /** The banded-Hamming vote chain of [[videoNearHamming]] over an
-    * already-decoded (persisted) `(idCol, frame_no, fhash)` frame table —
+    * already-decoded (persisted) `(doc_id, frame_no, fhash)` frame table —
     * shared with [[videoNearHammingAuto]]'s unsaturated branch so auto ≡
     * explicit is the same plan, not a lookalike. */
-  private def hammingFrameVotes(fr0: DataFrame, idCol: String, minVotes: Int,
+  private def hammingFrameVotes(fr0: DataFrame, minVotes: Int,
                                 bands: Int, maxHamming: Int, agreeBands: Int,
                                 maxBucket: Int): DataFrame = {
     require(56 % bands == 0, s"bands must divide 56, got $bands")
@@ -2984,8 +2860,8 @@ object Dedup {
     // one synthetic id per frame: frame_no < 64, so the packing is
     // order-preserving across docs and candidatePairs' a < b cut keeps
     // exactly one row per unordered frame pair
-    val fr = fr0.select((col(idCol) * 64 + col("frame_no")).as("fid"),
-      col(idCol).as("vid"), col("frame_no"), col("fhash"))
+    val fr = fr0.select((col("doc_id") * 64 + col("frame_no")).as("fid"),
+      col("doc_id").as("vid"), col("frame_no"), col("fhash"))
     // one action buys three scalars: the distinct-hash count for auto-t
     // AND the id range for the fid-packing guard (doc_id * 64 + frame_no
     // is only injective/order-preserving for 0 <= doc_id <= MaxValue/64 —
@@ -3049,31 +2925,26 @@ object Dedup {
     * escalation narrows which landmark evidence counts. A shared run of
     * m consecutive frames carries m−1 bigram votes (the re-intro twin's
     * votes drop by one vs the unigram form). */
-  def videoNearBigram(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                      idCol: String = "doc_id", blobCol: String = "blob",
+  def videoNearBigram(spark: SparkSession, docs: DataFrame,
                       maxFrames: Int = 16, maxBytes: Int = 1 << 20,
                       minVotes: Int = 3): DataFrame =
-    bigramVotes(Multimodal.videoFrameHashes(spark, docs, idCol, blobCol,
-      maxFrames, maxBytes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      idCol, minVotes)
+    bigramVotes(Multimodal.videoFrameHashes(spark, docs, maxFrames, maxBytes)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), minVotes)
       .orderBy(col("a_id"), col("b_id"))
 
   /** Consecutive-bigram rows over a frame table: one (id, frame_no,
     * fhash, nhash) row per adjacent frame pair — the linear window pass
     * of [[videoNearBigram]]. */
-  private def frameBigrams(fr: DataFrame, idCol: String): DataFrame =
-    fr.select(col(idCol), col("frame_no"), col("fhash"),
+  private def frameBigrams(fr: DataFrame): DataFrame =
+    fr.select(col("doc_id"), col("frame_no"), col("fhash"),
         lead(col("fhash"), 1).over(
-          Window.partitionBy(col(idCol)).orderBy(col("frame_no"))).as("nhash"))
+          Window.partitionBy(col("doc_id")).orderBy(col("frame_no"))).as("nhash"))
       .where(col("nhash").isNotNull)
 
   /** [[frameVotes]]' shape over bigram keys: equi-join on (fhash, nhash),
     * per-offset count, max-vote threshold. */
-  private def bigramVotes(fr: DataFrame, idCol: String,
-                          minVotes: Int): DataFrame =
-    offsetVotes(frameBigrams(fr, idCol), idCol, Seq("fhash", "nhash"), "frame_no",
-      minVotes)
+  private def bigramVotes(fr: DataFrame, minVotes: Int): DataFrame =
+    offsetVotes(frameBigrams(fr), Seq("fhash", "nhash"), "frame_no", minVotes)
 
   /** [[videoNearHamming]] with the saturation escape SELF-DIALED from the
     * measured key distribution — the round-13 weak mark closed in code:
@@ -3094,28 +2965,26 @@ object Dedup {
     * form). The oracle re-derives the same rule and gates the two vote
     * chains on it; MultimodalSpec pins that the branches genuinely differ
     * and auto ≡ explicit on both sides. */
-  def videoNearHammingAuto(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                           idCol: String = "doc_id", blobCol: String = "blob",
+  def videoNearHammingAuto(spark: SparkSession, docs: DataFrame,
                            maxFrames: Int = 16, maxBytes: Int = 1 << 20,
                            minVotes: Int = 3, bands: Int = 8, maxHamming: Int = 3,
                            agreeBands: Int = 0, maxBucket: Int = 1024,
                            fanoutMax: Double = 16.0): DataFrame = {
     require(maxFrames <= 64, s"maxFrames must be <= 64 (frame-id packing), got $maxFrames")
-    val fr0 = Multimodal.videoFrameHashes(spark, docs, idCol, blobCol,
-      maxFrames, maxBytes)
+    val fr0 = Multimodal.videoFrameHashes(spark, docs, maxFrames, maxBytes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the audit's global aggregate fills the cache; the chosen arm reads
     // the decoded frames back instead of re-running the blob decode
-    if (saturated(videoKeyAudit(fr0), fanoutMax)) bigramVotes(fr0, idCol, minVotes).orderBy(col("a_id"), col("b_id"))
-    else hammingFrameVotes(fr0, idCol, minVotes, bands, maxHamming, agreeBands, maxBucket)
+    if (saturated(videoKeyAudit(fr0), fanoutMax))
+      bigramVotes(fr0, minVotes).orderBy(col("a_id"), col("b_id"))
+    else hammingFrameVotes(fr0, minVotes, bands, maxHamming, agreeBands, maxBucket)
   }
 
   /** Per-video frame-hash fingerprint (ordered frame-hash list) — the
     * [[videoDedup]] collapse key, shared with the streaming gate's exact
     * arm. */
-  private[graft] def videoFingerprints(fr: DataFrame,
-                                       idCol: String = "doc_id"): DataFrame =
-    fr.groupBy(col(idCol))
+  private[graft] def videoFingerprints(fr: DataFrame): DataFrame =
+    fr.groupBy(col("doc_id"))
       .agg(array_join(transform(
         array_sort(collect_list(struct(col("frame_no"), col("fhash")))),
         s => concat(s.getField("frame_no").cast("string"), lit(":"),
@@ -3138,16 +3007,20 @@ object Dedup {
     * containers yielding no frame) are not videos and keep. Output: one
     * `(doc_id, is_video, seen_in_corpus, matched_in_batch, keep)` row per
     * incoming row. */
-  def videoIncremental(spark: org.apache.spark.sql.SparkSession,
-                       incoming: DataFrame, reference: DataFrame,
-                       idCol: String = "doc_id", blobCol: String = "blob",
+  def videoIncremental(spark: SparkSession, incoming: DataFrame, reference: DataFrame,
                        maxFrames: Int = 16, maxBytes: Int = 1 << 20,
                        minVotes: Int = 3): DataFrame = {
-    val refFr = Multimodal.videoFrameHashes(spark, reference, idCol, blobCol,
-      maxFrames, maxBytes).localCheckpoint(false)
-    videoIncrementalFrom(spark, incoming, refFr,
-      videoFingerprints(refFr, idCol).select(col("fp")).distinct(),
-      idCol, blobCol, maxFrames, maxBytes, minVotes)
+    val (refFr, refFp) = videoState(spark, reference, maxFrames, maxBytes, Checkpointed)
+    videoIncrementalFrom(spark, incoming, refFr, refFp, maxFrames, maxBytes, minVotes)
+  }
+
+  /** The video family's seen-corpus state: `(fr, fp)` — the reference
+    * blobs' frame-hash rows and their DISTINCT fingerprints, derived from
+    * the frame table (so the blobs decode once). */
+  private def videoState(spark: SparkSession, blobs: DataFrame, maxFrames: Int,
+                         maxBytes: Int, tier: Tier): (DataFrame, DataFrame) = {
+    val fr = tier("fr")(Multimodal.videoFrameHashes(spark, blobs, maxFrames, maxBytes))
+    (fr, tier("fp")(videoFingerprints(fr).select(col("fp")).distinct()))
   }
 
   /** [[videoIncremental]] against a CATALOG-MANAGED frame+fingerprint
@@ -3160,33 +3033,24 @@ object Dedup {
     * content-fingerprinted in the manifest, and each batch admission
     * reads the stored signatures instead of re-walking the corpus.
     * Admissions are byte-identical to the inline twin. */
-  def videoIncrementalIndexed(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, incoming: DataFrame,
+  def videoIncrementalIndexed(spark: SparkSession, dir: String, incoming: DataFrame,
                               refBucketMax: Int = 10,
-                              idCol: String = "doc_id", blobCol: String = "blob",
                               maxFrames: Int = 16, maxBytes: Int = 1 << 20,
                               minVotes: Int = 3,
-                              policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val idx = documentsIndex(spark, dir, s"documents-video-state-b$refBucketMax",
+                              policy: IndexPolicy = IndexPolicy.BuildIfMissing): DataFrame = {
+    val (refFr, refFp) = documentsIndex(spark, dir, s"documents-video-state-b$refBucketMax",
       "video-frames",
       Map("refBucketMax" -> refBucketMax.toString,
         "maxFrames" -> maxFrames.toString, "maxBytes" -> maxBytes.toString,
-        "idCol" -> idCol, "blob" -> "mp4-frames-wrapped-text"),
+        "idCol" -> "doc_id", "blob" -> "mp4-frames-wrapped-text"),
       policy, octet_length(col("text")) === length(col("text")) &&
-        Sampling.hashBucket(col(idCol)) < refBucketMax) { (slice, out) =>
+        docBucket < refBucketMax) { (slice, tier) =>
       val header = Multimodal.mp4VideoFramesHeader()
-      val ref = slice.select(col(idCol),
-        concat(lit(header), col("text").cast("binary")).as("blob"))
-      val fr = Multimodal.videoFrameHashes(spark, ref, idCol, "blob",
-        maxFrames, maxBytes).localCheckpoint(false)
-      Tables.write(fr).mode("overwrite").parquet(s"$out/fr")
-      Tables.write(videoFingerprints(fr, idCol).select(col("fp")).distinct())
-        .mode("overwrite").parquet(s"$out/fp")
+      videoState(spark,
+        slice.select(col("doc_id"), concat(lit(header), col("text").cast("binary")).as("blob")),
+        maxFrames, maxBytes, tier)
     }
-    videoIncrementalFrom(spark, incoming,
-      Tables.read(spark, s"${idx.path}/fr"),
-      Tables.read(spark, s"${idx.path}/fp"),
-      idCol, blobCol, maxFrames, maxBytes, minVotes)
+    videoIncrementalFrom(spark, incoming, refFr, refFp, maxFrames, maxBytes, minVotes)
   }
 
   /** The admission half of [[videoIncremental]], shared with the indexed
@@ -3196,24 +3060,20 @@ object Dedup {
     * in-batch vote, fingerprint derivation, modality flag all read it);
     * both arms are equi-joins on signature-sized rows — pixels never
     * shuffle, never incoming × reference. */
-  private[graft] def videoIncrementalFrom(spark: org.apache.spark.sql.SparkSession,
-                                          incoming: DataFrame,
-                                          refFr: DataFrame, refFp: DataFrame,
-                                          idCol: String, blobCol: String,
-                                          maxFrames: Int, maxBytes: Int,
-                                          minVotes: Int): DataFrame = {
-    val incFr = Multimodal.videoFrameHashes(spark, incoming, idCol, blobCol,
-      maxFrames, maxBytes).localCheckpoint(false)
-    val incFp = videoFingerprints(incFr, idCol).localCheckpoint(false)
-    val seen = crossMatches(incFr, incFp, refFr, refFp, idCol, Seq("fhash"), "frame_no", "fp",
-      minVotes)
-    val batchVote = frameVotes(incFr, idCol, minVotes)
-      .select(col("b_id").as(idCol))
-    val fpReps = incFp.groupBy(col("fp")).agg(min(col(idCol)).as("__rep"))
+  private def videoIncrementalFrom(spark: SparkSession, incoming: DataFrame,
+                                   refFr: DataFrame, refFp: DataFrame,
+                                   maxFrames: Int, maxBytes: Int,
+                                   minVotes: Int): DataFrame = {
+    val incFr = Multimodal.videoFrameHashes(spark, incoming, maxFrames, maxBytes)
+      .localCheckpoint(false)
+    val incFp = videoFingerprints(incFr).localCheckpoint(false)
+    val seen = crossMatches(incFr, incFp, refFr, refFp, Seq("fhash"), "frame_no", "fp", minVotes)
+    val batchVote = frameVotes(incFr, minVotes).select(col("b_id").as("doc_id"))
+    val fpReps = incFp.groupBy(col("fp")).agg(min(col("doc_id")).as("__rep"))
     val batchFp = incFp.join(fpReps, Seq("fp"))
-      .where(col(idCol) =!= col("__rep")).select(col(idCol))
-    incrementalVerdicts(incoming, incFr.select(col(idCol)), seen,
-      batchVote.unionByName(batchFp).distinct(), idCol, "is_video")
+      .where(col("doc_id") =!= col("__rep")).select(col("doc_id"))
+    incrementalVerdicts(incoming, incFr.select(col("doc_id")), seen,
+      batchVote.unionByName(batchFp).distinct(), "is_video")
   }
 
   /** X3j — CROSS-MODAL video ↔ image still match: which videos contain
@@ -3249,9 +3109,7 @@ object Dedup {
     * clamped t is lossless and the output is t-independent). Non-MP4
     * blobs on the video side yield no frames ([[Multimodal
     * .videoFrameHashes]]'s contract) and so no rows here. */
-  def videoStillMatches(spark: org.apache.spark.sql.SparkSession,
-                        videos: DataFrame, images: DataFrame,
-                        idCol: String = "doc_id", blobCol: String = "blob",
+  def videoStillMatches(spark: SparkSession, videos: DataFrame, images: DataFrame,
                         maxFrames: Int = 16, maxBytes: Int = 1 << 20,
                         bands: Int = 8, maxHamming: Int = 3,
                         agreeBands: Int = 0, minFrames: Int = 1): DataFrame = {
@@ -3266,15 +3124,14 @@ object Dedup {
     // unpersist on the return path (lazy output — the videoNearHamming
     // discipline); documented trade: repeated calls in one long session
     // accumulate cached hash tables until LRU eviction or session end
-    val fr = Multimodal.videoFrameHashes(spark, videos, idCol, blobCol,
-      maxFrames, maxBytes)
+    val fr = Multimodal.videoFrameHashes(spark, videos, maxFrames, maxBytes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ih = Multimodal.imagePHash(spark, images, idCol, blobCol)
-      .select(col(idCol).as("image_id"), col("phash"))
+    val ih = Multimodal.imagePHash(spark, images)
+      .select(col("doc_id").as("image_id"), col("phash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // member restore: frames collapse to (video, fhash, n) first so the
     // hash-keyed joins carry one row per distinct hash per video
-    val vf = fr.groupBy(col(idCol).as("video_id"), col("fhash"))
+    val vf = fr.groupBy(col("doc_id").as("video_id"), col("fhash"))
       .agg(count(lit(1)).as("__nf"))
     vf.join(crossHammingPairs(fr.select(col("fhash")).distinct(),
         ih.select(col("phash")).distinct(), bands, maxHamming, agreeBands),
@@ -3323,32 +3180,31 @@ object Dedup {
     * already maintains). Returns distinct matched video ids; no image
     * identities are restored because state carries none. */
   private[graft] def videoStillMatchesAgainst(fr: DataFrame, stillHashes: DataFrame,
-                                              idCol: String = "doc_id",
                                               bands: Int = 8, maxHamming: Int = 3,
                                               agreeBands: Int = 0,
                                               minFrames: Int = 1): DataFrame =
-    videoStillMatchCounts(fr, stillHashes, idCol, bands, maxHamming, agreeBands)
+    videoStillMatchCounts(fr, stillHashes, bands, maxHamming, agreeBands)
       .where(col("__fm") >= minFrames)
-      .select(col(idCol))
+      .select(col("doc_id"))
 
   /** The per-video matched-frame COUNTS behind [[videoStillMatchesAgainst]]
-    * and [[videoStillMatchesIndexed]] — one `(idCol, __fm)` row per video
+    * and [[videoStillMatchesIndexed]] — one `(doc_id, __fm)` row per video
     * with ≥ 1 frame within `maxHamming` of any still hash. */
   private def videoStillMatchCounts(fr: DataFrame, stillHashes: DataFrame,
-                                    idCol: String, bands: Int, maxHamming: Int,
+                                    bands: Int, maxHamming: Int,
                                     agreeBands: Int): DataFrame = {
     require(56 % bands == 0, s"bands must divide 56, got $bands")
     require(agreeBands >= 0 && maxHamming >= 0 &&
       maxHamming <= bands - math.max(agreeBands, 1),
       s"need maxHamming in [0, bands - agreeBands] for lossless band-subset keys, " +
         s"got maxHamming=$maxHamming agreeBands=$agreeBands bands=$bands")
-    fr.groupBy(col(idCol), col("fhash")).agg(count(lit(1)).as("__nf"))
+    fr.groupBy(col("doc_id"), col("fhash")).agg(count(lit(1)).as("__nf"))
       .join(crossHammingPairs(fr.select(col("fhash")).distinct(),
           stillHashes.select(col("phash")).distinct(),
           bands, maxHamming, agreeBands)
           .select(col("fhash")).distinct(),
         Seq("fhash"))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(sum(col("__nf")).as("__fm"))
   }
 
@@ -3365,7 +3221,7 @@ object Dedup {
     * blobs — a still-hash table and an image-signature table are the same
     * object, registered once.
     *
-    * Output: one `(idCol, frames_matched, keep)` row per input video —
+    * Output: one `(doc_id, frames_matched, keep)` row per input video —
     * `frames_matched` counts extracted samples within `maxHamming` of ANY
     * indexed still, `keep` = fewer than `minFrames` matched (the
     * admission reading: a kept video is NOT redundant with the indexed
@@ -3375,25 +3231,21 @@ object Dedup {
     * decode pass over the batch videos, distinct-hash band join against
     * the stored (signature-only) stills, per-video aggregation; the
     * restore join reads only ids, never blobs. */
-  def videoStillMatchesIndexed(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, videos: DataFrame,
+  def videoStillMatchesIndexed(spark: SparkSession, dir: String, videos: DataFrame,
                                refBucketMax: Int = 50,
-                               idCol: String = "doc_id", blobCol: String = "blob",
                                maxFrames: Int = 16, maxBytes: Int = 1 << 20,
                                bands: Int = 8, maxHamming: Int = 3,
                                agreeBands: Int = 0, minFrames: Int = 1,
-                               policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val stills = Tables.read(spark,
-      documentsPhashIndex(spark, dir, refBucketMax, idCol, policy).path)
+                               policy: IndexPolicy = IndexPolicy.BuildIfMissing): DataFrame = {
     val counts = videoStillMatchCounts(
-      Multimodal.videoFrameHashes(spark, videos, idCol, blobCol, maxFrames, maxBytes),
-      stills, idCol, bands, maxHamming, agreeBands)
-    videos.select(col(idCol))
-      .join(counts, Seq(idCol), "left")
-      .select(col(idCol),
+      Multimodal.videoFrameHashes(spark, videos, maxFrames, maxBytes),
+      documentsPhash(spark, dir, refBucketMax, policy), bands, maxHamming, agreeBands)
+    videos.select(col("doc_id"))
+      .join(counts, Seq("doc_id"), "left")
+      .select(col("doc_id"),
         coalesce(col("__fm"), lit(0L)).cast("bigint").as("frames_matched"),
         (coalesce(col("__fm"), lit(0L)) < minFrames).as("keep"))
-      .orderBy(col(idCol))
+      .orderBy(col("doc_id"))
   }
 
   /** [[imageNear]]'s TREATMENT form, and its 100 TB shape: per-doc
@@ -3408,15 +3260,14 @@ object Dedup {
     * components over rep pairs. Every doc then inherits its rep's
     * component root: `group_id` = the smallest doc id in its duplicate
     * cluster (exact-identical ∪ Hamming-chained), `keep` = doc == root. */
-  def imageDedup(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                 idCol: String = "doc_id", blobCol: String = "blob",
+  def imageDedup(spark: SparkSession, docs: DataFrame,
                  bands: Int = 8, maxHamming: Int = 6, agreeBands: Int = 2): DataFrame = {
     require(56 % bands == 0, s"bands must divide 56, got $bands")
     require(agreeBands >= 0 && maxHamming >= 0 && maxHamming <= bands - math.max(agreeBands, 1),
       s"need maxHamming in [0, bands - agreeBands] for lossless band-subset keys, " +
         s"got maxHamming=$maxHamming agreeBands=$agreeBands bands=$bands")
-    val hashed = Multimodal.imagePHash(spark, docs, idCol, blobCol)
-    val reps = hashed.groupBy(col("phash")).agg(min(col(idCol)).as("rep"))
+    val hashed = Multimodal.imagePHash(spark, docs)
+    val reps = hashed.groupBy(col("phash")).agg(min(col("doc_id")).as("rep"))
     // agreeBands = 0 → AUTO t; `reps` IS the distinct-hash set here, so
     // its count is the [[autoAgreeBands]] input for free
     val t = if (agreeBands == 0) autoAgreeBands(reps.count(), bands, 56, maxHamming)
@@ -3430,7 +3281,7 @@ object Dedup {
       .join(reps.select(col("rep").as("b_id"), col("phash").as("hb")), Seq("b_id"))
       .where(expr("bit_count(ha ^ hb)") <= maxHamming)
       .select(col("a_id"), col("b_id"))
-    repVerdicts(hashed, "phash", reps, repPairs, idCol)
+    repVerdicts(hashed, "phash", reps, repPairs)
   }
 
   /** Batch docs with ≥ 1 accumulated-state hash within `maxHamming` — the
@@ -3574,11 +3425,18 @@ object Dedup {
     * (vec_id, cell, seen_in_corpus, matched_in_batch, keep). */
   def semanticIncremental(incoming: DataFrame, reference: DataFrame,
                           nCells: Int = 16, tau: Double = 0.4): DataFrame = {
-    val cents = Ann.seedCentroids(reference, nCells)
-    semanticIncrementalAgainst(incoming, cents,
-      Ann.assignCells(reference.select(col("vec_id"), col("embedding")), cents)
-        .select(col("cell").cast("bigint").as("cell"), col("embedding")),
-      tau)
+    val (cents, refCells) = semanticState(reference, nCells, Inline)
+    semanticIncrementalAgainst(incoming, cents, refCells, tau)
+  }
+
+  /** The semantic family's seen-corpus state: `(cents, cells)` — the
+    * reference's seed centroids (`vec_id < nCells`) and its
+    * `(cell, embedding)` assignment under them. */
+  private def semanticState(ref: DataFrame, nCells: Int,
+                            tier: Tier): (Seq[Seq[Double]], DataFrame) = {
+    val cents = tier.seeds("cents")(Ann.seedCentroids(ref, nCells))
+    (cents, tier("cells")(Ann.assignCells(ref.select(col("vec_id"), col("embedding")), cents)
+      .select(col("cell").cast("bigint").as("cell"), col("embedding"))))
   }
 
   /** The admission half of [[semanticIncremental]], shared with the
@@ -3637,24 +3495,15 @@ object Dedup {
   def semanticIncrementalIndexed(spark: SparkSession, dir: String, incoming: DataFrame,
                                  refBucketMax: Int = 50, nCells: Int = 16,
                                  tau: Double = 0.4,
-                                 policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val idx = CatalogOps.indexRegistry(spark, dir).resolveIndex(
-      name = s"embeddings-semcells-b$refBucketMax-c$nCells", kind = "semantic-cells",
-      sourcePath = s"$dir/embeddings.parquet",
-      params = Map("refBucketMax" -> refBucketMax.toString,
+                                 policy: IndexPolicy = IndexPolicy.BuildIfMissing): DataFrame = {
+    val (cents, refCells) = documentsIndex(spark, dir,
+      s"embeddings-semcells-b$refBucketMax-c$nCells", "semantic-cells",
+      Map("refBucketMax" -> refBucketMax.toString,
         "nCells" -> nCells.toString, "seeding" -> "vec_id<nCells",
         "metric" -> "cosine6", "layout" -> "cents+cells"),
-      policy = policy) { out =>
-      val ref = graft.core.Tables.embeddings(spark, dir)
-        .where(Sampling.hashBucket(col("vec_id")) < refBucketMax)
-      val cents = Ann.seedCentroids(ref, nCells)
-      Ann.writeSeedList(spark, cents, s"$out/cents")
-      Tables.write(Ann.assignCells(ref.select(col("vec_id"), col("embedding")), cents)
-        .select(col("cell").cast("bigint").as("cell"), col("embedding")))
-        .mode("overwrite").parquet(s"$out/cells")
-    }
-    semanticIncrementalAgainst(incoming, Ann.readSeedList(spark, s"${idx.path}/cents"),
-      Tables.read(spark, s"${idx.path}/cells"), tau)
+      policy, Sampling.hashBucket(col("vec_id")) < refBucketMax,
+      table = "embeddings")(semanticState(_, nCells, _))
+    semanticIncrementalAgainst(incoming, cents, refCells, tau)
   }
 
   /** [[semanticDedup]] with the HOT-CELL RE-SPLIT the Σ|cell|² scale note

@@ -289,14 +289,13 @@ object Multimodal {
     * .audioDedup]] uses as its exact-collapse fingerprint, consistent with
     * the landmark metric over the same windows. */
   def audioEnvelope(spark: SparkSession, docs: DataFrame,
-                    idCol: String = "doc_id", blobCol: String = "blob",
                     windowSamples: Int = 16, maxBytes: Int = 1 << 20,
                     hop: Int = 0): DataFrame = {
     import spark.implicits._
     require(windowSamples >= 1, s"windowSamples must be >= 1, got $windowSamples")
     require(hop >= 0, s"hop must be >= 0 (0 = aligned), got $hop")
     val h = if (hop == 0) windowSamples else hop
-    docs.select(col(idCol).cast("long"), col(blobCol).cast("binary"))
+    docs.select(col("doc_id").cast("long"), col("blob").cast("binary"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, b) =>
         val bytes = Option(b).getOrElse(Array.emptyByteArray)
@@ -306,7 +305,7 @@ object Multimodal {
           Some((id, lv.mkString(" "), lv.length.toLong))
         }
       })
-      .toDF(idCol, "env", "n_windows")
+      .toDF("doc_id", "env", "n_windows")
   }
 
   /** Landmark-pair audio fingerprints — the standard shift-robust step up
@@ -348,7 +347,6 @@ object Multimodal {
     * unchanged. Schema is keyPeaks-independent (`lc = dt2 = 0` for pairs)
     * so every consumer joins on the full 5-column key. */
   def audioLandmarks(spark: SparkSession, docs: DataFrame,
-                     idCol: String = "doc_id", blobCol: String = "blob",
                      windowSamples: Int = 16, hop: Int = 4,
                      maxBytes: Int = 1 << 20,
                      maxDt: Int = 8, fanout: Int = 3,
@@ -357,7 +355,7 @@ object Multimodal {
     require(windowSamples >= 1 && hop >= 1, "windowSamples and hop must be >= 1")
     require(maxDt >= 1 && fanout >= 1, "maxDt and fanout must be >= 1")
     require(keyPeaks == 2 || keyPeaks == 3, s"keyPeaks must be 2 or 3, got $keyPeaks")
-    docs.select(col(idCol).cast("long"), col(blobCol).cast("binary"))
+    docs.select(col("doc_id").cast("long"), col("blob").cast("binary"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, b) =>
         val bytes = Option(b).getOrElse(Array.emptyByteArray)
@@ -386,7 +384,7 @@ object Multimodal {
             } yield (id, peaks(i)._2, peaks(j)._2, peaks(k)._2, dt, dt2, peaks(i)._1)
         }
       })
-      .toDF(idCol, "la", "lb", "lc", "dt", "dt2", "ta")
+      .toDF("doc_id", "la", "lb", "lc", "dt", "dt2", "ta")
   }
 
   /** 44-byte canonical PCM WAV header (RIFF + fmt + data chunk header),
@@ -411,11 +409,10 @@ object Multimodal {
     * partition-batched `mapPartitions` shape as [[decodeMeta]]; per-row
     * cost is capped by `maxBytes` regardless of blob size. */
   def audioStats(spark: SparkSession, docs: DataFrame,
-                 idCol: String = "doc_id", blobCol: String = "blob",
                  maxBytes: Int = 1 << 20): DataFrame = {
     import spark.implicits._
     require(maxBytes >= 2, s"maxBytes must be >= 2, got $maxBytes")
-    docs.select(col(idCol).cast("long"), col(blobCol).cast("binary"))
+    docs.select(col("doc_id").cast("long"), col("blob").cast("binary"))
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.flatMap { case (id, b) =>
@@ -427,7 +424,7 @@ object Multimodal {
           }
         }
       }
-      .toDF(idCol, "sample_rate", "channels", "n_samples", "peak", "rms",
+      .toDF("doc_id", "sample_rate", "channels", "n_samples", "peak", "rms",
         "clipping_share", "leading_silence_ms")
   }
 
@@ -772,11 +769,10 @@ object Multimodal {
     * fake byte-grid arm). Scale shape: one mapPartitions decode pass,
     * ≤ `maxFrames` signature-sized rows per doc, pixels never shuffle. */
   def videoFrameHashes(spark: SparkSession, docs: DataFrame,
-                       idCol: String = "doc_id", blobCol: String = "blob",
                        maxFrames: Int = 16,
                        maxBytes: Int = VideoSampleBytes): DataFrame = {
     import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(blobCol).cast("binary"))
+    docs.select(col("doc_id").cast("long"), col("blob").cast("binary"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, b) =>
         val bytes = Option(b).getOrElse(Array.emptyByteArray)
@@ -785,7 +781,7 @@ object Multimodal {
           case (i, sample) => (id, i, dhash56(gridOf(sample)))
         }
       })
-      .toDF(idCol, "frame_no", "fhash")
+      .toDF("doc_id", "frame_no", "fhash")
   }
 
   /** Header-only image dimension parse: ImageIO reader over an in-memory
@@ -817,10 +813,9 @@ object Multimodal {
     * oracle pins the fake arm; MultimodalSpec pins the image arm against
     * ImageIO-written PNG/JPEG fixtures and the audio arm against a
     * hand-assembled RIFF/WAVE header. */
-  def decodeMeta(spark: SparkSession, docs: DataFrame,
-                 idCol: String = "doc_id", blobCol: String = "blob"): DataFrame = {
+  def decodeMeta(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(blobCol).cast("binary")).as[(Long, Array[Byte])]
+    docs.select(col("doc_id").cast("long"), col("blob").cast("binary")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (id, b) =>
           val bytes = Option(b).getOrElse(Array.emptyByteArray)
@@ -946,27 +941,25 @@ object Multimodal {
   /** One (id, phash) row per blob — the perceptual-hash ingest pass
     * [[Dedup.imageNear]] bands. Same partition-batched shape as
     * [[decodeMeta]]. */
-  def imagePHash(spark: SparkSession, docs: DataFrame,
-                 idCol: String = "doc_id", blobCol: String = "blob"): DataFrame = {
+  def imagePHash(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(blobCol).cast("binary"))
+    docs.select(col("doc_id").cast("long"), col("blob").cast("binary"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, b) =>
         (id, dhash56(grayGrid(Option(b).getOrElse(Array.emptyByteArray))))
       })
-      .toDF(idCol, "phash")
+      .toDF("doc_id", "phash")
   }
 
   /** Frame/patch sampling: slice a blob into `n` evenly spaced fixed-size
     * byte windows (a video frame-sampler's access pattern). Pure built-in
     * expressions — `substring` works on BINARY — so the plan stays narrow
     * and codegen'd. */
-  def frameSample(docs: DataFrame, idCol: String = "doc_id", blobCol: String = "blob",
-                  n: Int = 4, frameBytes: Int = 32): DataFrame =
+  def frameSample(docs: DataFrame, n: Int = 4, frameBytes: Int = 32): DataFrame =
     docs
-      .select(col(idCol), col(blobCol).cast("binary").as("b"))
+      .select(col("doc_id"), col("blob").cast("binary").as("b"))
       .where(length(col("b")) >= frameBytes)
-      .select(col(idCol), posexplode(expr(
+      .select(col("doc_id"), posexplode(expr(
         // floor (not int-cast) so the stride math is identical in engines
         // where double→int casting rounds instead of truncating
         s"""transform(sequence(0, $n - 1),
@@ -976,14 +969,13 @@ object Multimodal {
   /** Batched feature extraction over blobs: same partition-batched shape as
     * text ingest ([[Ingest.makeRecords]]), keyed by an embedder id — the
     * multimodal analog of `MakeRecord`. */
-  def featurize(spark: SparkSession, docs: DataFrame, embedderId: String,
-                idCol: String = "doc_id", blobCol: String = "blob"): DataFrame = {
+  def featurize(spark: SparkSession, docs: DataFrame, embedderId: String): DataFrame = {
     import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(blobCol).cast("binary")).as[(Long, Array[Byte])]
+    docs.select(col("doc_id").cast("long"), col("blob").cast("binary")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         val fn = Embedders.get(embedderId)
         it.map { case (id, b) => (id, fn(b)) }
       }
-      .toDF(idCol, "feature")
+      .toDF("doc_id", "feature")
   }
 }

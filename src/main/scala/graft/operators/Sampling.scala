@@ -497,13 +497,12 @@ object Sampling {
     *
     * Scale shape: [[Dedup.dedupGroups]] over the pair graph only, then one
     * narrow split projection — no extra shuffle beyond the group join. */
-  def leakSafeSplit(docs: DataFrame, pairs: DataFrame, trainPct: Int = 80,
-                    idCol: String = "doc_id"): DataFrame =
-    Dedup.dedupGroups(docs, pairs, idCol)
-      .select(col(idCol), col("group_id"),
+  def leakSafeSplit(docs: DataFrame, pairs: DataFrame, trainPct: Int = 80): DataFrame =
+    Dedup.dedupGroups(docs, pairs)
+      .select(col("doc_id"), col("group_id"),
         when(hashBucket(col("group_id")) < trainPct, lit("train"))
           .otherwise(lit("test")).as("split"))
-      .orderBy(col(idCol))
+      .orderBy(col("doc_id"))
 
   /** Per-language split audit: row counts and token sums per (lang,
     * split) — the sanity check run before training that the split

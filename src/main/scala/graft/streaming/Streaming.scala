@@ -1264,7 +1264,7 @@ object Streaming {
         case (stLm, stEnv) => Some(Dedup.crossMatches(lm, env,
           stLm.getOrElse(lm.limit(0)),
           stEnv.getOrElse(env.select(col("env")).limit(0)),
-          "doc_id", Dedup.landmarkKey, "ta", "env", minVotes))
+          Dedup.landmarkKey, "ta", "env", minVotes))
       })
     // pass-through: rows with no envelope are not audio
     val admitted = keepers.unionByName(
@@ -1330,7 +1330,7 @@ object Streaming {
         case (stFr, stFp) => Some(Dedup.crossMatches(fr, fp,
           stFr.getOrElse(fr.limit(0)),
           stFp.getOrElse(fp.select(col("fp")).limit(0)),
-          "doc_id", Seq("fhash"), "frame_no", "fp", minVotes))
+          Seq("fhash"), "frame_no", "fp", minVotes))
       })
     // pass-through: rows with no extracted frame are not videos
     val admitted = keepers.unionByName(

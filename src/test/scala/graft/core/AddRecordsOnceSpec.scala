@@ -16,8 +16,8 @@ import graft.streaming.Streaming
   * embed batch calls the embedder once per record through the audit, the
   * duplicate-vs-existing semi-join and the write, on every caller's path,
   * and the one cache it takes is released on success and on each
-  * validation error. Error texts and their precedence, NULL ids and the
-  * empty batch behave as before the cache.
+  * validation error. Error texts and their precedence and the empty batch
+  * behave as before the cache; NULL ids are rejected.
   */
 class AddRecordsOnceSpec extends SparkSpec {
 
@@ -143,7 +143,13 @@ class AddRecordsOnceSpec extends SparkSpec {
     db.addRecords("c", records("a"))
     def nullEmb(df: DataFrame, id: String) =
       df.withColumn("embedding", when(col("id") === id, lit(null)).otherwise(col("embedding")))
-    // mismatch before null before in-batch duplicate before existing duplicate
+    // NULL id before mismatch before null embedding before in-batch
+    // duplicate before existing duplicate
+    failsWith("Record id is null for 1 records in batch") {
+      db.addRecords("c", nullEmb(records("a", "x", "n").union(records("x")), "x")
+        .withColumn("embedderId", when(col("id") === "a", lit("other"))
+          .otherwise(col("embedderId")))
+        .withColumn("id", when(col("id") === "n", lit(null)).otherwise(col("id")))) }
     failsWith(s"Record embedderId other != collection embedderId $embedder") {
       db.addRecords("c", nullEmb(records("a", "x").union(records("x")), "x")
         .withColumn("embedderId", when(col("id") === "a", lit("other"))
@@ -155,14 +161,17 @@ class AddRecordsOnceSpec extends SparkSpec {
     assert(db.records("c").count() == 1)
   }
 
-  test("NULL ids are appended unchecked and an empty batch writes one empty part file") {
+  test("NULL ids are rejected and an empty batch writes one empty part file") {
     val db = freshDb()
     val withNulls = records("a", "b", "c").withColumn("id",
       when(col("id") === "a", col("id")).otherwise(lit(null).cast("string")))
-    db.addRecords("c", withNulls)
-    db.addRecords("c", records("b").withColumn("id", lit(null).cast("string")))
-    val stored = db.records("c").select("id").collect().map(r => Option(r.getString(0)))
-    assert(stored.sortBy(_.getOrElse("")).toSeq == Seq(None, None, None, Some("a")))
+    failsWith("Record id is null for 2 records in batch") { db.addRecords("c", withNulls) }
+    failsWith("Record id is null for 1 records in batch") {
+      db.addRecords("c", records("b").withColumn("id", lit(null).cast("string"))) }
+    val single = Record(null, embedder, Array[Byte](1), hash8(Array[Byte](1)))
+    failsWith(s"Record id is null for ${PrettyPrint.record(single)}") {
+      db.addRecord("c", single) }
+    assert(db.records("c").count() == 0)
 
     val empty = freshDb()
     assert(embedCalls(empty.addRecords("c", records())) == 0)

@@ -92,7 +92,7 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, "a  b"), (2L, "x y"), (3L, "p q r s"))
       .toDF("doc_id", "text")
-    val got = Dedup.minhashShingled(df, "doc_id", "text", 3)
+    val got = Dedup.minhashShingled(df, 3)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).length).toMap
     assert(got.keySet == Set(1L, 3L), s"kept ${got.keySet}") // 2L: 2 tokens < 3
     assert(got(1L) == 1 && got(3L) == 2, got.toString)
@@ -573,9 +573,6 @@ class DedupSpec extends SparkSpec {
     // second probe serves the stored index: same version, no rebuild
     assert(rows(Dedup.exactIncrementalIndexed(spark, dir, incoming)) == inline)
     assert(CatalogOps.indexRegistry(spark, dir).getIndex(name).version == built.version)
-    // the batch-side Bloom prefilter is admission-invariant (no false
-    // negatives): disabled and enabled paths admit identically
-    assert(rows(Dedup.exactIncrementalIndexed(spark, dir, incoming, bloomFpp = 0)) == inline)
   }
 
   test("incremental image dedup: NEAR copies of the seen corpus dropped; indexed equals inline, build-once") {
@@ -1382,7 +1379,7 @@ class DedupSpec extends SparkSpec {
       graft.operators.Sampling.hashBucket(col("doc_id")) >= 90).count())
     assert(leak.collect().forall(r => r.getBoolean(3) == (r.getLong(1) > 0L)))
     // the report's INDEXED rung (r17): served from the same stored eval
-    // postings the audit probes — one evalPosIndex entry, three consumers
+    // postings the audit probes — one evalPos entry, three consumers
     // — byte-identical to the inline report, FailIfMissing honored
     assert(rows(Dedup.evalLeakReportIndexed(spark, dir, docs,
       policy = graft.core.IndexPolicy.FailIfMissing)) == rows(leak))
