@@ -9,11 +9,15 @@ import org.apache.spark.graft.CoreBridge
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructType}
 import graft.functions.VectorFunctions.as_double_array
 
 /** Loaders for the driver-generated parquet tables (`TESTDATA.md`).
-  * All math-facing loads normalize the embedding column to ARRAY<DOUBLE>.
+  * All math-facing loads normalize the embedding column to ARRAY<DOUBLE>
+  * ([[embeddings]]). The one exception is index storage: a catalog-managed
+  * index that stores a copy of the source vectors loads them through
+  * [[embeddingsAtSourceWidth]], so the copy keeps the source's element type
+  * and the expressions that read it widen.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -109,10 +113,35 @@ object Tables {
     conf
   }
 
-  /** `vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT` */
+  /** `vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT` — the load every
+    * math-facing operator starts from: [[embeddingsAtSourceWidth]] with the
+    * cast to ARRAY<DOUBLE>. */
   def embeddings(spark: SparkSession, dir: String): DataFrame =
-    table(spark, dir, "embeddings")
-      .select(col("vec_id"), as_double_array(col("embedding")).as("embedding"), col("label"))
+    loadEmbeddings(spark, dir, keepWidth = false)
+
+  /** `vec_id, embedding, label` with the embedding kept at the element type
+    * the table stores when that is FLOAT or DOUBLE; any other element type
+    * is widened to DOUBLE as [[embeddings]] widens it. The loader for index
+    * builds that store a copy of the vectors: a FLOAT source's copy takes
+    * half the bytes of a widened one, and every expression that reads a
+    * stored vector (`cosine_sim`, [[graft.functions.NearestCentroid]],
+    * [[graft.functions.SimHashBits]]) casts it to ARRAY<DOUBLE> itself.
+    * FLOAT → DOUBLE is exact, so scores, cells and band keys are the same
+    * bits either way. */
+  def embeddingsAtSourceWidth(spark: SparkSession, dir: String): DataFrame =
+    loadEmbeddings(spark, dir, keepWidth = true)
+
+  /** Both embedding loads as one select over the read: the cast is chosen
+    * per column rather than stacked as a second projection, which would
+    * cost every load one more analysis. */
+  private def loadEmbeddings(spark: SparkSession, dir: String, keepWidth: Boolean): DataFrame = {
+    val t = table(spark, dir, "embeddings")
+    val vec = t.schema("embedding").dataType match {
+      case ArrayType(FloatType | DoubleType, _) if keepWidth => col("embedding")
+      case _ => as_double_array(col("embedding")).as("embedding")
+    }
+    t.select(col("vec_id"), vec, col("label"))
+  }
 
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
 

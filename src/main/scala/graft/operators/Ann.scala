@@ -105,7 +105,7 @@ object Ann {
       params = Map("bits" -> bits.toString, "bands" -> bands.toString,
         "dim" -> dim.toString),
       policy = policy) { out =>
-      Tables.write(Tables.embeddings(spark, dir)
+      Tables.write(Tables.embeddingsAtSourceWidth(spark, dir)
         .select(col("vec_id"), col("label"), col("embedding"),
           explode(bandKeysCol(col("embedding"), bits, bands, dim)).as("key")))
         .mode("overwrite").partitionBy("key").parquet(out)
@@ -251,14 +251,18 @@ object Ann {
     * partitioned by cell id, so a probe's `cell IN (…)` filter becomes
     * real partition pruning — the scan never opens the other
     * (nCells − nProbe)/nCells of the data). Same centroids, same
-    * assignment, same rerank ⇒ same oracle as [[ivfTopk]].
+    * assignment, same rerank ⇒ same oracle as [[ivfTopk]]. The stored
+    * vectors keep the source's element type
+    * ([[Tables.embeddingsAtSourceWidth]]) — a FLOAT source's index holds
+    * half the vector bytes a widened copy would — and the rerank's
+    * `cosine_sim` widens them, so scores are the same bits.
     *
     * Index lifecycle contract as [[annTopkIndexed]] — catalog-owned entry,
     * source-fingerprinted, resolved under `policy`. */
   def ivfTopkIndexed(spark: SparkSession, dir: String, queryVecId: Long = 0L, k: Int = 10,
                      nCells: Int = 16, nProbe: Int = 4,
                      policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
+    val e = Tables.embeddingsAtSourceWidth(spark, dir)
     val cents = seedCentroids(e, nCells)
 
     val idx = CatalogOps.indexRegistry(spark, dir).resolveIndex(
@@ -783,7 +787,7 @@ object Ann {
         "tol" -> "0"),
       policy = policy) { out =>
       val (trained, _) = trainCentroids(Tables.embeddings(spark, dir), nCells, maxIters)
-      Tables.write(assignCells(Tables.embeddings(spark, dir), trained))
+      Tables.write(assignCells(Tables.embeddingsAtSourceWidth(spark, dir), trained))
         .mode("overwrite").partitionBy("cell").parquet(out)
       writeCentroids(spark, trained, s"$out/_centroids")
     }
@@ -1018,7 +1022,7 @@ object Ann {
       sourcePath = s"$dir/embeddings.parquet",
       params = Map("nFine" -> nFine.toString, "nCoarse" -> nCoarse.toString),
       policy = policy) { out =>
-      val e = Tables.embeddings(spark, dir)
+      val e = Tables.embeddingsAtSourceWidth(spark, dir)
       val coarse = seedCentroids(e, nCoarse)
       val fineTab = fineCentroids(e, coarse, nFine)
       Tables.write(assignCells2(e, coarse, fineTab))

@@ -259,7 +259,7 @@ object Bitext {
         "seeding" -> "lowest-tgt-id", "metric" -> "cosine6",
         "layout" -> "cents+cells"),
       policy = policy) { out =>
-      val y = tgtSide(spark, dir)
+      val y = tgtOf(Tables.embeddingsAtSourceWidth(spark, dir))
       val cents = tgtSeeds(y, nCells)
       Ann.writeSeedList(spark, cents, s"$out/cents")
       Tables.write(tgtCells(y, cents)).mode("overwrite").parquet(s"$out/cells")
@@ -316,7 +316,7 @@ object Bitext {
         "side" -> "vec_id%2=1", "seeding" -> "lowest-tgt-id",
         "metric" -> "cosine6", "layout" -> "coarse+fine+cells2"),
       policy = policy) { out =>
-      val y = tgtSide(spark, dir)
+      val y = tgtOf(Tables.embeddingsAtSourceWidth(spark, dir))
       val coarse = tgtSeeds(y, nCoarse)
       Ann.writeSeedList(spark, coarse, s"$out/coarse")
       val fineTab = Ann.lowestIdFineCentroids(y, "tgt_id", "tgt_vec", coarse, nFine)
@@ -383,8 +383,14 @@ object Bitext {
     * indexes. */
   private[graft] def tgtSide(spark: org.apache.spark.sql.SparkSession,
                              dir: String): DataFrame =
-    graft.core.Tables.embeddings(spark, dir)
-      .where(col("vec_id") % 2 === 1)
+    tgtOf(Tables.embeddings(spark, dir))
+
+  /** [[tgtSide]] over the loaded embeddings table `e`. The index builds
+    * pass [[Tables.embeddingsAtSourceWidth]], so the stored `tv` keeps the
+    * source's element type; [[candidatesAgainst]]' `cosine_sim` widens
+    * it. */
+  private def tgtOf(e: DataFrame): DataFrame =
+    e.where(col("vec_id") % 2 === 1)
       .select(col("vec_id").as("tgt_id"), col("embedding").as("tgt_vec"))
 
   private def requireFlat(nCells: Int, nProbe: Int): Unit =
@@ -426,7 +432,7 @@ object Bitext {
     * by the miners, persisted by [[minePairsIncrementalIndexed]]'s build. */
   private def tgtCells(y: DataFrame, cents: Seq[Seq[Double]]): DataFrame =
     Ann.assignCells(y.repartition(par(y), col("tgt_id")), cents, "tgt_vec")
-      .select(col("cell"), col("tgt_id"), col("tgt_vec").cast("array<double>").as("tv"))
+      .select(col("cell"), col("tgt_id"), col("tgt_vec").as("tv"))
 
   /** The src probe side over a two-level quantizer: `(src_id, qv, fcell)`
     * for the src's top `nProbe` fine cells under its top `wCoarse` coarse
@@ -442,7 +448,7 @@ object Bitext {
     * ([[Ann.assignCells2]]) — stored by [[minePairsIncrementalIndexed2]]. */
   private def tgtCells2(y: DataFrame, coarse: Seq[Seq[Double]], fineTab: DataFrame): DataFrame =
     Ann.assignCells2(y.repartition(par(y), col("tgt_id"))
-        .select(col("tgt_id"), col("tgt_vec").cast("array<double>").as("tv")),
+        .select(col("tgt_id"), col("tgt_vec").as("tv")),
       coarse, fineTab, "tgt_id", "tv", Seq("tv"))
       .select(col("fcell"), col("tgt_id"), col("tv"))
 

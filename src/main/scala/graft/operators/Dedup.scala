@@ -165,13 +165,15 @@ object Dedup {
     * registry fingerprints and the rows the build reads, so the two cannot
     * drift apart. `state` is the modality's state function; the resolver
     * builds its tables into the index when the registry asks for a build,
-    * then hands back the stored tables. */
+    * then hands back the stored tables. Embedding rows are read at the
+    * source's width ([[Tables.embeddingsAtSourceWidth]]), so a stored
+    * vector copy takes the source's element type. */
   private def documentsIndex[S](spark: SparkSession, dir: String, name: String,
                                 kind: String, params: Map[String, String],
                                 policy: IndexPolicy, slice: Column,
                                 table: String = "documents")
                                (state: (DataFrame, Tier) => S): S = {
-    val rows = (if (table == "embeddings") Tables.embeddings(spark, dir)
+    val rows = (if (table == "embeddings") Tables.embeddingsAtSourceWidth(spark, dir)
       else Tables.documents(spark, dir)).where(slice)
     val idx = CatalogOps.indexRegistry(spark, dir).resolveIndex(name = name, kind = kind,
       sourcePath = s"$dir/$table.parquet", params = params, policy = policy) { out =>

@@ -48,44 +48,37 @@ object SnapshotDiff {
     * there is nothing to merge WITHIN an id). Narrow by construction:
     * this is the frame worth storing per snapshot so the next diff never
     * re-reads this snapshot's text ([[corpusDiffFromHashes]]). */
-  def contentHashes(docs: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame =
-    docs.select(col(idCol), md5(col(textCol).cast("binary")).as("content_hash"))
+  def contentHashes(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), md5(col("text").cast("binary")).as("content_hash"))
 
   /** Full snapshot diff, both sides hashed inline — one row per id in
     * either snapshot: `(id, status, old_hash, new_hash)`. The batch rung;
     * [[corpusDiffFromHashes]] is what a pipeline actually pays once the
     * old snapshot's hashes are stored. */
-  def corpusDiff(oldDocs: DataFrame, newDocs: DataFrame,
-                 idCol: String = "doc_id",
-                 textCol: String = "text"): DataFrame =
-    corpusDiffFromHashes(contentHashes(oldDocs, idCol, textCol),
-      newDocs, idCol, textCol)
+  def corpusDiff(oldDocs: DataFrame, newDocs: DataFrame): DataFrame =
+    corpusDiffFromHashes(contentHashes(oldDocs), newDocs)
 
   /** The diff tail shared by every rung: old side an existing
     * `(id, content_hash)` table (inline-hashed, stored, or
     * registry-probed), new side hashed here. One narrow full-outer
     * equi-join on the id — the family's only shuffle. */
-  def corpusDiffFromHashes(oldHashes: DataFrame, newDocs: DataFrame,
-                           idCol: String = "doc_id",
-                           textCol: String = "text"): DataFrame = {
-    val o = oldHashes.select(col(idCol).as("__id"),
+  def corpusDiffFromHashes(oldHashes: DataFrame, newDocs: DataFrame): DataFrame = {
+    val o = oldHashes.select(col("doc_id").as("__id"),
       col("content_hash").as("old_hash"))
-    val n = contentHashes(newDocs, idCol, textCol)
-      .select(col(idCol).as("__id"), col("content_hash").as("new_hash"))
+    val n = contentHashes(newDocs)
+      .select(col("doc_id").as("__id"), col("content_hash").as("new_hash"))
     o.join(n, Seq("__id"), "full_outer")
-      .select(col("__id").as(idCol),
+      .select(col("__id").as("doc_id"),
         when(col("old_hash").isNull, lit("added"))
           .when(col("new_hash").isNull, lit("removed"))
           .when(col("old_hash") === col("new_hash"), lit("unchanged"))
           .otherwise(lit("changed")).as("status"),
         col("old_hash"), col("new_hash"))
-      .orderBy(col(idCol))
+      .orderBy(col("doc_id"))
   }
 
   /** Registry name of the catalog-managed content-hash table. */
-  private[graft] def contentHashIndexName(textCol: String): String =
-    s"documents-content-hash-$textCol"
+  private[graft] val ContentHashIndexName = "documents-content-hash-text"
 
   /** The stored snapshot's hash table as a FIRST-CLASS index: the dir's
     * documents scanned once at build, `(id, content_hash)` stored; the
@@ -93,16 +86,17 @@ object SnapshotDiff {
     * this" token (a changed source parquet marks the hashes stale — the
     * semantics a diff index wants for free). Same citizenship as every
     * indexed twin: definition params recorded, policy decides
-    * rebuild-vs-fail. */
+    * rebuild-vs-fail. The params keep the column names the index was
+    * first registered with, so a stored index still resolves as a hit. */
   private[graft] def contentHashIndex(spark: org.apache.spark.sql.SparkSession,
-                                      dir: String, idCol: String, textCol: String,
+                                      dir: String,
                                       policy: graft.core.IndexPolicy): graft.core.IndexMeta =
     CatalogOps.indexRegistry(spark, dir).resolveIndex(
-      name = contentHashIndexName(textCol), kind = "content-hash",
+      name = ContentHashIndexName, kind = "content-hash",
       sourcePath = s"$dir/documents.parquet",
-      params = Map("idCol" -> idCol, "textCol" -> textCol),
+      params = Map("idCol" -> "doc_id", "textCol" -> "text"),
       policy = policy) { out =>
-      Tables.write(contentHashes(graft.core.Tables.documents(spark, dir), idCol, textCol))
+      Tables.write(contentHashes(Tables.documents(spark, dir)))
         .mode("overwrite").parquet(s"$out/hashes")
     }
 
@@ -113,13 +107,10 @@ object SnapshotDiff {
     * form over the same snapshots (SnapshotDiffSpec pins it; the oracle
     * re-derives from raw text). */
   def corpusDiffIndexed(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        newDocs: DataFrame, idCol: String = "doc_id",
-                        textCol: String = "text",
+                        newDocs: DataFrame,
                         policy: graft.core.IndexPolicy = graft.core.IndexPolicy.BuildIfMissing): DataFrame =
     corpusDiffFromHashes(
-      Tables.read(spark,
-        s"${contentHashIndex(spark, dir, idCol, textCol, policy).path}/hashes"),
-      newDocs, idCol, textCol)
+      Tables.read(spark, s"${contentHashIndex(spark, dir, policy).path}/hashes"), newDocs)
 
   /** The CONSEQUENCE frame — the delta a curate pass consumes: the new
     * snapshot's rows whose content is new to the corpus (`added` ∪
@@ -129,18 +120,16 @@ object SnapshotDiff {
     * docs need none. The old side enters only as the narrow hash table —
     * a left join of the new snapshot against it, no full-outer, no old
     * text. */
-  def changedDocs(oldHashes: DataFrame, newDocs: DataFrame,
-                  idCol: String = "doc_id",
-                  textCol: String = "text"): DataFrame = {
-    val o = oldHashes.select(col(idCol), col("content_hash").as("old_hash"))
+  def changedDocs(oldHashes: DataFrame, newDocs: DataFrame): DataFrame = {
+    val o = oldHashes.select(col("doc_id"), col("content_hash").as("old_hash"))
     newDocs
-      .withColumn("__new_hash", md5(col(textCol).cast("binary")))
-      .join(o, Seq(idCol), "left")
+      .withColumn("__new_hash", md5(col("text").cast("binary")))
+      .join(o, Seq("doc_id"), "left")
       .where(col("old_hash").isNull || col("old_hash") =!= col("__new_hash"))
       .withColumn("status",
         when(col("old_hash").isNull, lit("added")).otherwise(lit("changed")))
       .drop("old_hash", "__new_hash")
-      .orderBy(col(idCol))
+      .orderBy(col("doc_id"))
   }
 
   /** The AUDIT — per-source turnover: how much of each host's slice was
@@ -152,20 +141,18 @@ object SnapshotDiff {
     * Counts are per-doc sums, so stats over disjoint id spaces merge
     * EXACTLY — the same mergeability contract as
     * [[SourceCurate.sourceStats]], spec-pinned. */
-  def diffStats(oldDocs: DataFrame, newDocs: DataFrame,
-                idCol: String = "doc_id", textCol: String = "text",
-                sourceCol: String = "source"): DataFrame = {
-    val o = oldDocs.select(col(idCol).as("__id"),
-      col(sourceCol).as("__osrc"), md5(col(textCol).cast("binary")).as("old_hash"))
-    val n = newDocs.select(col(idCol).as("__id"),
-      col(sourceCol).as("__nsrc"), md5(col(textCol).cast("binary")).as("new_hash"))
+  def diffStats(oldDocs: DataFrame, newDocs: DataFrame): DataFrame = {
+    val o = oldDocs.select(col("doc_id").as("__id"),
+      col("source").as("__osrc"), md5(col("text").cast("binary")).as("old_hash"))
+    val n = newDocs.select(col("doc_id").as("__id"),
+      col("source").as("__nsrc"), md5(col("text").cast("binary")).as("new_hash"))
     o.join(n, Seq("__id"), "full_outer")
-      .select(coalesce(col("__nsrc"), col("__osrc")).as(sourceCol),
+      .select(coalesce(col("__nsrc"), col("__osrc")).as("source"),
         when(col("old_hash").isNull, lit("added"))
           .when(col("new_hash").isNull, lit("removed"))
           .when(col("old_hash") === col("new_hash"), lit("unchanged"))
           .otherwise(lit("changed")).as("status"))
-      .groupBy(col(sourceCol))
+      .groupBy(col("source"))
       .agg(
         sum(when(col("status") === "added", 1L).otherwise(0L)).as("n_added"),
         sum(when(col("status") === "removed", 1L).otherwise(0L)).as("n_removed"),
@@ -175,6 +162,6 @@ object SnapshotDiff {
         round((col("n_added") + col("n_removed") + col("n_changed")).cast("double")
           / (col("n_added") + col("n_removed") + col("n_changed")
              + col("n_unchanged")), 6))
-      .orderBy(col(sourceCol))
+      .orderBy(col("source"))
   }
 }

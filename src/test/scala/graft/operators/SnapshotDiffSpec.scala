@@ -104,7 +104,7 @@ class SnapshotDiffSpec extends SparkSpec {
         .otherwise(col("text")))
     val inline = SnapshotDiff.corpusDiff(docs, neu).collect().toSeq
     val reg = CatalogOps.indexRegistry(spark, dir)
-    val name = SnapshotDiff.contentHashIndexName("text")
+    val name = SnapshotDiff.ContentHashIndexName
     if (reg.isIndexRegistered(name)) reg.dropIndex(name)
     intercept[graft.core.GraftException] {
       SnapshotDiff.corpusDiffIndexed(spark, dir, neu,
